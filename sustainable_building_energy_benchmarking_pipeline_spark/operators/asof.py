@@ -37,8 +37,10 @@ q44).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sustainable_building_energy_benchmarking_pipeline_spark.operators import windows as W
 
 
 def asof_join(
@@ -92,11 +94,6 @@ def asof_join(
         *[F.col(c).alias(out) for c, out in right_cols.items()],
     ).alias("_rv")
     left_side, right_side = (1, 0) if direction == "backward" else (0, 1)
-    # equal-(by, on) right duplicates resolve to the MAX payload struct
-    # in BOTH directions (the docstring contract): backward's last()
-    # takes the max of an ASCENDING _rv run, but forward's first() takes
-    # the min unless the run is DESCENDING — flip the tiebreak key.
-    rv_order = F.col("_rv") if direction == "backward" else F.desc("_rv")
     l = left.select(
         *by,
         F.col(on).alias("_ts"),
@@ -111,15 +108,14 @@ def asof_join(
         F.lit(None).cast(l.schema["_lv"].dataType).alias("_lv"),
         payload,
     )
-    w = Window.partitionBy(*by).orderBy("_ts", "_side", rv_order)
+    # equal-(by, on) right duplicates resolve to the MAX payload struct
+    # in BOTH directions (the docstring contract): backward's ffill
+    # takes the last of an ASCENDING _rv run, forward's bfill the first
+    # of a DESCENDING one.
     if direction == "backward":
-        fill = F.last("_rv", ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
+        fill = W.ffill("_rv", W.ordered_window(by, ["_ts", "_side", "_rv"]))
     else:
-        fill = F.first("_rv", ignorenulls=True).over(
-            w.rowsBetween(0, Window.unboundedFollowing)
-        )
+        fill = W.bfill("_rv", by, ["_ts", "_side", W.Desc("_rv")])
     matched = (
         l.unionByName(r).withColumn("_m", fill).filter(F.col("_side") == left_side)
     )
@@ -177,19 +173,13 @@ def _asof_nearest(
         F.lit(None).cast(l.schema["_lv"].dataType).alias("_lv"),
         payload,
     )
-    w = Window.partitionBy(*by).orderBy("_ts", "_side", "_rv")
-    back = F.last("_rv", ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # the forward fill orders the duplicate run DESCENDING so first()
-    # resolves equal-ts right duplicates to the MAX payload struct, same
-    # as the backward fill (last() over ascending) — one extra local
-    # sort inside the same exchange (both windows share the partition
-    # key), not an extra shuffle
-    w_fwd = Window.partitionBy(*by).orderBy("_ts", "_side", F.desc("_rv"))
-    fwd = F.first("_rv", ignorenulls=True).over(
-        w_fwd.rowsBetween(0, Window.unboundedFollowing)
-    )
+    back = W.ffill("_rv", W.ordered_window(by, ["_ts", "_side", "_rv"]))
+    # the forward fill orders the duplicate run DESCENDING so it resolves
+    # equal-ts right duplicates to the MAX payload struct, same as the
+    # backward fill (last of an ascending run) — one extra local sort
+    # inside the same exchange (both windows share the partition key),
+    # not an extra shuffle
+    fwd = W.bfill("_rv", by, ["_ts", "_side", W.Desc("_rv")])
     matched = (
         l.unionByName(r)
         .withColumn("_mb", back)

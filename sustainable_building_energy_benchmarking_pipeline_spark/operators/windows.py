@@ -17,11 +17,21 @@ unbounded ranks/cumsums over LOW-CARDINALITY strata use
 plan); bounded frames pre-split by adding a coarse bucket to the
 partition key with frame-width overlap (rolling frames ≤ N rows only
 need N rows of overlap — see q95's megabin ghost-row split).
+
+Cost note on frames: Spark evaluates a growing
+``(unboundedPreceding, currentRow)`` frame incrementally, O(n) per
+partition, but recomputes a ``(currentRow, unboundedFollowing)`` frame
+from scratch for every row — O(n²) per partition (SCALE.md §10 has the
+HVAC ETL's numbers). Look-ahead fills therefore run as a look-back over
+the exactly reversed order (``bfill``); no operator here or in the plans
+uses an unbounded-following row frame (``tests/test_plan_hygiene.py``
+gates it).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -75,12 +85,52 @@ def ffill(col: str | Column, w: WindowSpec) -> Column:
     )
 
 
-def bfill(col: str | Column, w: WindowSpec) -> Column:
+class Desc(NamedTuple):
+    """Marks an ``order_by`` key of :func:`bfill` descending (``DESC NULLS
+    LAST``); bare keys sort ``ASC NULLS FIRST``, Spark's default."""
+
+    key: str | Column
+
+
+OrderKey = str | Column | Desc
+
+
+def _reversed_order(order_by: OrderKey | Sequence[OrderKey]) -> list[Column]:
+    """The exact reverse of a sort order: every key flips its direction
+    AND its null placement (``ASC NULLS FIRST`` <-> ``DESC NULLS LAST``),
+    so NULL keys move to the other end too."""
+    keys = [order_by] if isinstance(order_by, (str, Column, Desc)) else order_by
+    out = []
+    for k in keys:
+        c = k.key if isinstance(k, Desc) else k
+        c = F.col(c) if isinstance(c, str) else c
+        out.append(c.asc_nulls_first() if isinstance(k, Desc) else c.desc_nulls_last())
+    return out
+
+
+def bfill(
+    col: str | Column,
+    partition_by: str | Sequence[str],
+    order_by: OrderKey | Sequence[OrderKey],
+) -> Column:
     """P12: per-group backward-fill (pandas ``groupby().bfill()``,
-    src/pipeline_batch.py:149) — first non-null from current row on."""
+    src/pipeline_batch.py:149) — the first non-null from the current row
+    on, in ``order_by`` order within ``partition_by``.
+
+    Cost: runs as ``last(ignorenulls)`` over the exactly reversed order
+    with a growing ``(unboundedPreceding, currentRow)`` frame, which Spark
+    updates incrementally — O(n) per partition. The direct look-ahead,
+    ``first`` over ``(currentRow, unboundedFollowing)``, is O(n²): Spark
+    re-aggregates the rest of the partition for every row. The reversed
+    window shares the partition key's exchange with any forward window
+    and adds one local sort. A ``WindowSpec`` cannot be reversed once
+    built, hence the keys rather than a spec. Rows tied on ``order_by``
+    fill in an arbitrary order, as with any row frame."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.first(c, ignorenulls=True).over(
-        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    parts = [partition_by] if isinstance(partition_by, str) else list(partition_by)
+    w = Window.partitionBy(*parts).orderBy(*_reversed_order(order_by))
+    return F.last(c, ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
 
 

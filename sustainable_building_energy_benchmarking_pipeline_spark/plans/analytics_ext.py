@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sustainable_building_energy_benchmarking_pipeline_spark.operators import windows as W
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import (
     Q50_SQL as _Q50_SQL,
 )
@@ -500,8 +501,9 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-union window (union output drops partitioning info, so the
     window re-shuffles regardless of branch keys — a Spark planner
     property, not a query choice). All three move linear data; row
-    count = events + user·hours — no quadratic term. Both window frames
-    (ffill + mirrored future) share the ONE WindowExec sort."""
+    count = events + user·hours — no quadratic term. The future side is
+    a bfill over the reversed order: one more local sort inside the same
+    exchange, and both frames grow incrementally."""
     ev = (
         _t(spark, sf_dir, "events")
         .groupBy("user_id", "ts")
@@ -537,10 +539,6 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("user_id").orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_future = (
-        Window.partitionBy("user_id").orderBy(*order)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
     ev_ts = F.when(F.col("is_grid") == 0, F.col("ts_us"))
     filled = unioned.select(
         "user_id",
@@ -548,8 +546,8 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_grid",
         F.last("value", ignorenulls=True).over(w_past).alias("pv"),
         F.last(ev_ts, ignorenulls=True).over(w_past).alias("pt"),
-        F.first("value", ignorenulls=True).over(w_future).alias("nv"),
-        F.first(ev_ts, ignorenulls=True).over(w_future).alias("nt"),
+        W.bfill("value", "user_id", order).alias("nv"),
+        W.bfill(ev_ts, "user_id", order).alias("nt"),
     )
     interp = (
         F.when(F.col("pv").isNull(), F.col("nv"))

@@ -93,7 +93,7 @@ def engineer_features(df: DataFrame) -> DataFrame:
         "temp_change_rate", "power_change_rate",
     ]
     out = out.withColumns(
-        {c: F.coalesce(W.bfill(c, w), F.lit(0.0)) for c in fill_targets}
+        {c: F.coalesce(W.bfill(c, "zone_id", "timestamp"), F.lit(0.0)) for c in fill_targets}
     )
 
     # round engineered cols to 4dp (src/pipeline_batch.py:157-158)

@@ -777,14 +777,18 @@ WITH ev AS (
   SELECT user_id, ts_us, is_grid,
          LAST_VALUE(value, true) OVER w_past AS pv,
          LAST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_past AS pt,
-         FIRST_VALUE(value, true) OVER w_future AS nv,
-         FIRST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_future AS nt
+         LAST_VALUE(value, true) OVER w_future AS nv,
+         LAST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_future AS nt
   FROM u
   WINDOW
     w_past AS (PARTITION BY user_id ORDER BY ts_us, is_grid, COALESCE(event_id, 4611686018427387904)
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    w_future AS (PARTITION BY user_id ORDER BY ts_us, is_grid, COALESCE(event_id, 4611686018427387904)
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    -- the look-ahead is a look-back over the exactly reversed order: Spark
+    -- recomputes an UNBOUNDED FOLLOWING frame per row, O(n^2) per user
+    w_future AS (PARTITION BY user_id
+                 ORDER BY ts_us DESC NULLS LAST, is_grid DESC NULLS LAST,
+                          COALESCE(event_id, 4611686018427387904) DESC NULLS LAST
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 )
 SELECT user_id, timestamp_micros(ts_us) AS grid_ts,
        ROUND(CASE WHEN pv IS NULL THEN nv

@@ -17,6 +17,8 @@ import re
 import pytest
 
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
+from sustainable_building_energy_benchmarking_pipeline_spark.plans.sql_frontend import SPARK_SQL
+from sustainable_building_energy_benchmarking_pipeline_spark.session import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -252,3 +254,77 @@ def test_no_quadratic_joins(spark, name):
             "decompose the predicate into an equi-join (banding, binning, "
             "deletion variants) or broadcast a true single-row frame"
         )
+
+
+# --- unbounded-following frame gate -------------------------------------
+#
+# Spark recomputes a frame that runs to UNBOUNDED FOLLOWING from each
+# row to the partition's end — O(n²) per window partition. The HVAC
+# ETL's backward fill once spent about 14 s of a 27 s pipeline run there
+# (30 days × 2 zones, 4 vCPUs). Look-ahead fills run as a growing frame
+# over the reversed order instead (operators.windows.bfill).
+
+_FOLLOWING_FRAME = "specifiedwindowframe(RowFrame, currentrow$(), unboundedfollowing$())"
+
+
+def _hvac_features(spark):
+    from sustainable_building_energy_benchmarking_pipeline_spark.plans.hvac import (
+        run_feature_pipeline,
+    )
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources.generators import (
+        generate_hvac_data,
+    )
+
+    return run_feature_pipeline(generate_hvac_data(spark, days=1, n_zones=2))
+
+
+def _asof(spark, direction):
+    from sustainable_building_energy_benchmarking_pipeline_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame([(1, "u", 10)], "lid INT, k STRING, ts INT")
+    right = spark.createDataFrame([(7, "u", 12)], "rid INT, k STRING, ts INT")
+    return asof_join(left, right, on="ts", by=["k"], direction=direction)
+
+
+# package operators whose look-ahead no registry query exercises
+_OPERATOR_PLANS = {
+    "run_feature_pipeline": _hvac_features,
+    "asof_join:forward": lambda spark: _asof(spark, "forward"),
+    "asof_join:nearest": lambda spark: _asof(spark, "nearest"),
+}
+
+
+@pytest.mark.parametrize(
+    "name", [*sorted(QUERIES), *_OPERATOR_PLANS, *(f"sql:{n}" for n in sorted(SPARK_SQL))]
+)
+def test_no_unbounded_following_row_frame(spark, name):
+    if name in _OPERATOR_PLANS:
+        df = _OPERATOR_PLANS[name](spark)
+    elif name.startswith("sql:"):
+        load_tables(spark, SF_DIR)
+        df = spark.sql(SPARK_SQL[name[4:]])
+    else:
+        df = QUERIES[name].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _FOLLOWING_FRAME not in plan, (
+        f"{name} plans a (currentRow, unboundedFollowing) row frame — "
+        "Spark re-aggregates it per row, O(n²) per partition; use "
+        "operators.windows.bfill (last(ignorenulls) over the reversed order)"
+    )
+
+
+def test_following_frame_gate_catches_first_over_following(spark):
+    """Seeded regression: the old bfill form — first(ignorenulls) over
+    rowsBetween(currentRow, unboundedFollowing) — must be flagged."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("zone_id").orderBy("timestamp")
+    bad = _hvac_features(spark).withColumn(
+        "_next",
+        F.first("power_kw", ignorenulls=True).over(
+            w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        ),
+    )
+    plan = bad._jdf.queryExecution().executedPlan().toString()
+    assert _FOLLOWING_FRAME in plan, "gate failed to flag the quadratic frame"

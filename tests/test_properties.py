@@ -7,7 +7,7 @@ Spark job per example)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
@@ -317,4 +317,74 @@ def test_exact_substr_cut_matches_reference(spark_session_prop, texts):
         if cut:
             clean = " ".join(w[i] for i in range(len(w)) if i not in cut)
             want.add((d, len(w), len(cut), clean))
+    assert got == want
+
+
+# ---- W.bfill / W.ffill vs pandas groupby().bfill() / .ffill() --------
+#
+# bfill runs as last(ignorenulls) over the REVERSED order (a growing
+# frame), so its null-key and null-run behaviour is exactly where it
+# could drift from the look-ahead definition. The shuffle is kept at
+# four partitions (AQE coalescing off) so groups land in different
+# tasks.
+
+
+@st.composite
+def _fill_rows(draw):
+    n = draw(st.integers(min_value=0, max_value=40))
+    keys = draw(st.lists(st.sampled_from(["a", "b", "c", None]), min_size=n, max_size=n))
+    vals = draw(
+        st.lists(
+            st.one_of(st.none(), st.none(), st.integers(-100, 100)),
+            min_size=n, max_size=n,
+        )
+    )
+    ts = draw(st.permutations(range(n)))
+    return list(zip(keys, ts, vals))
+
+
+@given(rows=_fill_rows(), n_parts=st.integers(min_value=1, max_value=3))
+@example(rows=[], n_parts=1)
+# leading and trailing NULL runs, an all-NULL group, a single-row
+# group, and a NULL group key
+@example(
+    rows=[("a", 0, None), ("a", 1, None), ("a", 2, 5), ("a", 3, None),
+          ("a", 4, 7), ("a", 5, None), ("b", 6, None), ("b", 7, None),
+          ("c", 8, 3), (None, 9, None), (None, 10, 4), (None, 11, None)],
+    n_parts=2,
+)
+@settings(
+    max_examples=12, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_bfill_ffill_match_pandas_groupby(spark_session_prop, rows, n_parts):
+    import math
+
+    from sustainable_building_energy_benchmarking_pipeline_spark.operators import windows as W
+
+    spark = spark_session_prop
+    df = spark.createDataFrame(rows, "g STRING, t INT, v INT").repartition(n_parts, "t")
+    filled = df.select(
+        "t",
+        W.ffill("v", W.ordered_window("g", "t")).alias("ff"),
+        W.bfill("v", "g", "t").alias("bf"),
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = {r.t: (r.ff, r.bf) for r in filled.collect()}
+    finally:
+        spark.conf.set(key, prior)
+
+    pdf = df.toPandas().sort_values("t")
+    groups = pdf.groupby("g", dropna=False)["v"]
+
+    def py(x):
+        return None if x is None or math.isnan(x) else int(x)
+
+    want = {
+        int(t): (py(f), py(b))
+        for t, f, b in zip(pdf["t"], groups.ffill(), groups.bfill())
+    }
     assert got == want
