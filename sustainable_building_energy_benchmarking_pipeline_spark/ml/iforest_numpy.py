@@ -115,27 +115,24 @@ class NumpyIsolationForest:
         return self
 
     def _path_lengths(self, X: np.ndarray) -> np.ndarray:
+        """Mean leaf-adjusted depth over the trees. Each tree walks all rows
+        ``_max_depth`` steps over child arrays in which a leaf is its own
+        child, so rows that reach a leaf early stay there with no masks.
+        NaN features compare False and go right, as in fit's split."""
         m = X.shape[0]
+        node_id = np.arange(self._feat.shape[1])
+        internal = self._feat >= 0
+        feat = np.where(internal, self._feat, 0)
+        left = np.where(internal, 2 * node_id + 1, node_id)
+        right = np.where(internal, 2 * node_id + 2, node_id)
+        rows = np.arange(m)
         total = np.zeros(m, dtype=np.float64)
         for t in range(self.n_estimators):
+            f, thr, lt, rt = feat[t], self._thresh[t], left[t], right[t]
             node = np.zeros(m, dtype=np.int64)
-            active = self._feat[t, 0] >= 0
-            if not active:
-                total += self._leaf_adj[t, 0]
-                continue
-            live = np.ones(m, dtype=bool)
-            depths = np.zeros(m, dtype=np.float64)
-            for _ in range(self._max_depth + 1):
-                feats = self._feat[t, node]
-                internal = live & (feats >= 0)
-                if not internal.any():
-                    break
-                f = feats[internal]
-                go_left = X[internal, f] < self._thresh[t, node[internal]]
-                nxt = np.where(go_left, 2 * node[internal] + 1, 2 * node[internal] + 2)
-                node[internal] = nxt
-            depths = self._leaf_adj[t, node]
-            total += depths
+            for _ in range(self._max_depth):
+                node = np.where(X[rows, f[node]] < thr[node], lt[node], rt[node])
+            total += self._leaf_adj[t, node]
         return total / self.n_estimators
 
     def _anomaly_score(self, X: np.ndarray) -> np.ndarray:

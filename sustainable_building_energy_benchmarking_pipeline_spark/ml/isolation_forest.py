@@ -41,6 +41,18 @@ _SCORE_SCHEMA = T.StructType([
 ])
 
 
+def _outlier_mask(model, scores):
+    """``model.predict(X) == -1`` from precomputed ``score_samples(X)``,
+    by predict's own rule: sklearn flags scores below ``offset_``; the
+    bundled forests flag −scores (their s(x)) above ``threshold_``."""
+    offset = getattr(model, "offset_", None)
+    if offset is not None:
+        return scores < offset
+    if model.threshold_ is None:
+        raise ValueError("threshold_ not set — train_distributed sets it")
+    return -scores > model.threshold_
+
+
 class IsolationForestDetector:
     """Driver-trained, executor-scored IF detector (M4/M5)."""
 
@@ -213,7 +225,8 @@ class IsolationForestDetector:
     def detect(self, features: DataFrame) -> DataFrame:
         """Distributed scoring via mapInPandas (src/models.py:297-358):
         predict==−1 → anomaly; score=|score_samples| rounded 4dp; severity
-        cut at 0.5/0.3."""
+        cut at 0.5/0.3. The forest is walked once per batch: the anomaly
+        mask comes from the same scores (``_outlier_mask``)."""
         if self.model is None:
             raise ValueError("Model must be trained before detection")
         payload = pickle.dumps(
@@ -229,12 +242,12 @@ class IsolationForestDetector:
                 if pdf.empty:
                     continue
                 X = scaler.transform(pdf[cols].values)
-                pred = model.predict(X)
                 scores = model.score_samples(X)
-                hits = pdf[pred == -1]
+                hit = _outlier_mask(model, scores)
+                hits = pdf[hit]
                 if hits.empty:
                     continue
-                s = pd.Series(scores[pred == -1]).abs().round(4).values
+                s = pd.Series(scores[hit]).abs().round(4).values
                 yield pd.DataFrame(
                     {
                         "timestamp": hits["timestamp"].values,

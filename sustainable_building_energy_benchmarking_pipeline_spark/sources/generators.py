@@ -11,6 +11,14 @@ the generator scales linearly with no driver bottleneck: the 86,400-row
 reference workload and a 52.6M-row year×100-zones×1-min workload
 (HVAC_README.md:554-557) run the same plan.
 
+Plan shape: the HVAC table is one narrow plan over ``spark.range`` — the
+(tick, zone) grid is decoded from the row id, so there is no explode, no
+shuffle and no join, and writing it is one Spark job. Every column is a
+SQL expression string passed through ``selectExpr``: a projection costs
+one parse and one analysis on the driver, however many fault episodes it
+folds in. Timestamps are session-time-zone ``TIMESTAMP`` literals, so the
+output never depends on the driver process's ``TZ``.
+
 Distribution parity, not bit parity: the reference's numpy RNG stream
 cannot (and need not) be reproduced; tests assert the reference's own
 invariants (FIXTURES.md: shapes, domains, return>supply, |temp−setpoint|<2).
@@ -23,26 +31,33 @@ import random
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-TWO_63 = float(2**63)
 
 BUILDING_TYPES = ["office", "residential", "retail", "industrial", "educational"]
 FAULT_TYPES = ["clogged_filter", "compressor_failure", "temp_drift", "oscillating_control"]
 
 
-def _u(salt: str, *cols) -> F.Column:
-    """Deterministic uniform [0,1) from a hash of (cols, salt)."""
-    h = F.xxhash64(*cols, F.lit(salt))
-    return (h.cast("double") / F.lit(TWO_63 * 2)) + F.lit(0.5)
+def _d(x: float) -> str:
+    """A Python float as an exact SQL DOUBLE literal (a bare ``0.3`` would
+    parse as DECIMAL)."""
+    return f"{float(x)!r}D"
 
 
-def _randn(salt: str, *cols) -> F.Column:
-    """Deterministic standard normal via Box-Muller on two hash uniforms."""
-    u1 = _u(salt + ":u1", *cols)
-    u2 = _u(salt + ":u2", *cols)
-    # 1-u1 ∈ (0,1] keeps the log finite
-    return F.sqrt(-2.0 * F.log(1.0 - u1)) * F.cos(2.0 * math.pi * u2)
+def _ts(dt: datetime) -> str:
+    """A session-time-zone TIMESTAMP literal (an aware datetime keeps its
+    offset)."""
+    return f"TIMESTAMP '{dt.isoformat(sep=' ')}'"
+
+
+def _u(salt: str, *cols: str) -> str:
+    """SQL text: deterministic uniform [0,1) from a hash of (cols, salt)."""
+    return f"(CAST(xxhash64({', '.join(cols)}, '{salt}') AS DOUBLE) / {_d(2.0**64)} + 0.5D)"
+
+
+def _randn(salt: str, *cols: str) -> str:
+    """SQL text: deterministic standard normal via Box-Muller on two hash
+    uniforms; 1-u1 ∈ (0,1] keeps the log finite."""
+    u1, u2 = _u(salt + ":u1", *cols), _u(salt + ":u2", *cols)
+    return f"(sqrt(-2.0D * ln(1.0D - {u1})) * cos({_d(2.0 * math.pi)} * {u2}))"
 
 
 # ---------------------------------------------------------------------------
@@ -53,23 +68,22 @@ def generate_buildings(spark: SparkSession, n: int = 100, seed: int = 42) -> Dat
     """Synthetic building portfolio with the reference's distributions:
     B%03d ids, 5 uniform types, area U(500,10000), year randint(1970,2023),
     energy U(10000,500000), occupancy randint(10,500), hvac Bern(0.5),
-    solar Bern(0.3)."""
+    solar Bern(0.3). One projection over ``spark.range``, hash-keyed by id."""
     salt = f"buildings:{seed}"
-    i = F.col("id")
-    type_idx = F.floor(_u(salt + ":type", i) * len(BUILDING_TYPES)).cast("int")
-    type_expr = F.array(*[F.lit(t) for t in BUILDING_TYPES])[type_idx]
-    return (
-        spark.range(1, n + 1)
-        .select(
-            F.format_string("B%03d", i.cast("int")).alias("building_id"),
-            type_expr.alias("building_type"),
-            F.round(_u(salt + ":area", i) * 9500 + 500, 2).alias("area"),
-            (F.floor(_u(salt + ":year", i) * 54) + 1970).cast("int").alias("year_built"),
-            F.round(_u(salt + ":energy", i) * 490000 + 10000, 2).alias("energy_consumption"),
-            (F.floor(_u(salt + ":occ", i) * 491) + 10).cast("int").alias("occupancy"),
-            (_u(salt + ":hvac", i) < 0.5).alias("has_hvac"),
-            (_u(salt + ":solar", i) < 0.3).alias("has_solar"),
-        )
+
+    def u(tag: str) -> str:
+        return _u(f"{salt}:{tag}", "id")
+
+    types = ", ".join(f"'{t}'" for t in BUILDING_TYPES)
+    return spark.range(1, n + 1).selectExpr(
+        "format_string('B%03d', CAST(id AS INT)) AS building_id",
+        f"array({types})[CAST(floor({u('type')} * {len(BUILDING_TYPES)}) AS INT)] AS building_type",
+        f"round({u('area')} * 9500 + 500, 2) AS area",
+        f"CAST(floor({u('year')} * 54) + 1970 AS INT) AS year_built",
+        f"round({u('energy')} * 490000 + 10000, 2) AS energy_consumption",
+        f"CAST(floor({u('occ')} * 491) + 10 AS INT) AS occupancy",
+        f"{u('hvac')} < 0.5D AS has_hvac",
+        f"{u('solar')} < 0.3D AS has_solar",
     )
 
 
@@ -87,66 +101,60 @@ def generate_hvac_base(
 ) -> DataFrame:
     """Dense 5-min sensor grid × zones, fully distributed.
 
-    Grid = F.sequence + explode (F7); zones broadcast-joined; all noise
-    hash-keyed by (zone, ts). Matches the reference profile: business-hour
-    (8-18h, weekend ×0.6) day_factor drives temp/power/fan; return air ≈
-    temp + N(1.0, 0.3); inclusive end bound like pd.date_range.
+    Grid = ``spark.range(ticks × zones)`` (F7): tick = ``id div n_zones``,
+    zone index = ``id % n_zones``, timestamp = the session-zone ``start``
+    literal + tick × freq minutes. All noise is hash-keyed by (zone, ts).
+    Matches the reference profile: business-hour (8-18h, weekend ×0.6)
+    day_factor drives temp/power/fan; return air ≈ temp + N(1.0, 0.3);
+    last tick at start + days − freq, like pd.date_range's inclusive end.
     """
     salt = f"hvac:{seed}"
     start_dt = datetime.fromisoformat(start)
-    # last tick at start + days − freq: the reference generates
-    # "2024-01-01 00:00".."2024-01-30 23:55" inclusive = days × 288 ticks
-    end_dt = start_dt + timedelta(days=days) - timedelta(minutes=freq_minutes)
+    # the reference generates "2024-01-01 00:00".."2024-01-30 23:55"
+    # inclusive = days × 288 ticks
+    step = timedelta(minutes=freq_minutes)
+    n_ticks = (timedelta(days=days) - step) // step + 1
 
-    zones = spark.range(n_zones).select(
-        F.format_string("Z%d", (F.col("id") + 1).cast("int")).alias("zone_id"),
-        F.round(22.0 + _randn(salt + ":zoff", F.col("id")) * 0.5, 2).alias("setpoint_c"),
+    def n(tag: str) -> str:
+        return _randn(f"{salt}:{tag}", "zone_id", "timestamp")
+
+    grid = spark.range(
+        n_ticks * n_zones, numPartitions=spark.sparkContext.defaultParallelism
+    ).selectExpr(
+        f"{_ts(start_dt)} + make_dt_interval(0, 0, (id DIV {n_zones}) * {freq_minutes}) AS timestamp",
+        f"id % {n_zones} AS z",
     )
-    grid = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(start_dt).cast("timestamp"),
-                F.lit(end_dt).cast("timestamp"),
-                F.expr(f"INTERVAL {freq_minutes} MINUTES"),
-            )
-        ).alias("timestamp")
+    calendar = grid.selectExpr(
+        "timestamp",
+        "format_string('Z%d', CAST(z + 1 AS INT)) AS zone_id",
+        f"round(22.0D + {_randn(salt + ':zoff', 'z')} * 0.5D, 2) AS setpoint_c",
+        "hour(timestamp) + minute(timestamp) / 60.0D BETWEEN 8 AND 18 AS business",
+        "weekday(timestamp) >= 5 AS weekend",
+    ).selectExpr(
+        "*",
+        "CASE WHEN business THEN 1.5D ELSE 0.5D END"
+        " * CASE WHEN weekend THEN 0.6D ELSE 1.0D END AS day_factor",
     )
-    # repartition the exploded grid so downstream generation parallelizes
-    grid = grid.repartition(max(spark.sparkContext.defaultParallelism, 8))
-
-    df = grid.crossJoin(F.broadcast(zones))
-    ts, z = F.col("timestamp"), F.col("zone_id")
-    hour_frac = F.hour(ts) + F.minute(ts) / 60.0
-    business = (hour_frac >= 8) & (hour_frac <= 18)
-    weekend = F.weekday(ts) >= 5
-    day_factor = F.when(business, 1.5).otherwise(0.5) * F.when(weekend, 0.6).otherwise(1.0)
-    mode = F.when(business, "cooling").otherwise("off")
-
-    def n(tag: str) -> F.Column:
-        return _randn(f"{salt}:{tag}", z, ts)
-
-    temp = F.col("setpoint_c") + n("temp") * 0.3 + (day_factor - 1.0) * 1.0
-    return (
-        df.withColumn("ahu_id", F.lit("AHU1"))
-        .withColumn("mode", mode)
-        .withColumn("temp_zone_c", F.round(temp, 2))
-        .withColumn("rh_zone_pct", F.round(F.least(F.greatest(45 + n("rh") * 5, F.lit(30.0)), F.lit(60.0)), 2))
-        .withColumn(
-            "supply_air_temp_c",
-            F.round(F.when(business, 14.0).otherwise(18.0) + n("supply") * 0.5, 2),
-        )
-        .withColumn("return_air_temp_c", F.round(F.col("temp_zone_c") + 1.0 + n("ret") * 0.3, 2))
-        .withColumn("power_kw", F.round(F.greatest(F.lit(0.0), 5.0 * day_factor + n("power") * 0.3), 2))
-        .withColumn(
-            "fan_speed_pct",
-            F.round(F.least(F.greatest(40.0 * day_factor + n("fan") * 5, F.lit(10.0)), F.lit(90.0)), 2),
-        )
-        .withColumn("fault_type", F.lit("none"))
-        .select(
-            "timestamp", "zone_id", "ahu_id", "temp_zone_c", "rh_zone_pct",
-            "supply_air_temp_c", "return_air_temp_c", "power_kw",
-            "fan_speed_pct", "setpoint_c", "mode", "fault_type",
-        )
+    profile = calendar.selectExpr(
+        "timestamp",
+        "zone_id",
+        "'AHU1' AS ahu_id",
+        f"round(setpoint_c + {n('temp')} * 0.3D + (day_factor - 1.0D) * 1.0D, 2) AS temp_zone_c",
+        f"round(least(greatest(45 + {n('rh')} * 5, 30.0D), 60.0D), 2) AS rh_zone_pct",
+        f"round(CASE WHEN business THEN 14.0D ELSE 18.0D END + {n('supply')} * 0.5D, 2)"
+        " AS supply_air_temp_c",
+        f"round(greatest(0.0D, 5.0D * day_factor + {n('power')} * 0.3D), 2) AS power_kw",
+        f"round(least(greatest(40.0D * day_factor + {n('fan')} * 5, 10.0D), 90.0D), 2)"
+        " AS fan_speed_pct",
+        "setpoint_c",
+        "CASE WHEN business THEN 'cooling' ELSE 'off' END AS mode",
+        "'none' AS fault_type",
+    )
+    return profile.selectExpr(
+        "timestamp", "zone_id", "ahu_id", "temp_zone_c", "rh_zone_pct",
+        "supply_air_temp_c",
+        f"round(temp_zone_c + 1.0D + {n('ret')} * 0.3D, 2) AS return_air_temp_c",
+        "power_kw", "fan_speed_pct", "setpoint_c", "mode", "fault_type",
     )
 
 
@@ -162,7 +170,11 @@ def fault_episodes(
 ) -> list[dict]:
     """Deterministic fault-episode schedule (driver-side metadata only —
     a handful of literals, not data). Mirrors the reference's layout:
-    episodes spread across the month, per-fault day offsets/hours."""
+    episodes spread across the month, per-fault day offsets/hours.
+
+    Episodes never overlap: the four faults start on days ≡ 5, 3, 4, 2
+    (mod 6) and every window ends on its start day, so ``inject_faults``
+    accepts any schedule this returns."""
     rng = random.Random(seed)
     zones = [f"Z{i + 1}" for i in range(n_zones)]
     start_dt = datetime.fromisoformat(start)
@@ -188,68 +200,84 @@ def fault_episodes(
     return episodes
 
 
+def _check_disjoint(episodes: list[dict]) -> None:
+    """Raise if two episodes share a zone and their closed [start, end]
+    windows intersect: a row would then match both, and the one-CASE fold
+    applies only the first."""
+    by_zone: dict[str, list[tuple[int, dict]]] = {}
+    for i, ep in enumerate(episodes):
+        if ep["fault"] in FAULT_TYPES:
+            by_zone.setdefault(ep["zone"], []).append((i, ep))
+    for eps in by_zone.values():
+        eps.sort(key=lambda p: p[1]["start"])
+        for (i, a), (j, b) in zip(eps, eps[1:]):
+            if b["start"] <= a["end"]:
+                raise ValueError(
+                    f"fault episodes overlap in zone {a['zone']}: #{i} {a['fault']} "
+                    f"[{a['start']}, {a['end']}] and #{j} {b['fault']} "
+                    f"[{b['start']}, {b['end']}]"
+                )
+
+
 def inject_faults(df: DataFrame, episodes: list[dict]) -> DataFrame:
     """Masked conditional updates (P17): each episode modifies its
     (zone, time-window) slice. Progression ramps use the time fraction
     through the window — the continuous form of the reference's
     ``np.linspace(0, 1, n_points)`` over a regular grid. Oscillation is
-    2·sin over 0..4π of the window (F18). All pure column expressions —
-    the 16 episode masks fold into one projection, zero extra passes.
+    2·sin over 0..4π of the window (F18).
+
+    One projection: every episode folds into one ``CASE`` per affected
+    column, with the reference's clamps and the 2-dp rounding
+    (src/generate_hvac_data.py:215-222) in the same expression. Episodes
+    must be disjoint per zone (``ValueError`` otherwise); other columns of
+    ``df`` pass through in place.
     """
-    ts, z = F.col("timestamp"), F.col("zone_id")
-
-    def mask(ep: dict) -> F.Column:
-        m = (z == ep["zone"]) & (ts >= F.lit(ep["start"])) & (ts <= F.lit(ep["end"]))
-        if ep["fault"] == "compressor_failure":
-            m = m & (F.col("mode") == "cooling")
-        return m
-
-    def frac(ep: dict) -> F.Column:
+    _check_disjoint(episodes)
+    cases: dict[str, list[str]] = {
+        c: [] for c in ("temp_zone_c", "supply_air_temp_c", "return_air_temp_c",
+                        "power_kw", "fan_speed_pct", "fault_type")
+    }
+    for ep in (e for e in episodes if e["fault"] in FAULT_TYPES):
+        m = (f"zone_id = '{ep['zone']}' AND timestamp >= {_ts(ep['start'])}"
+             f" AND timestamp <= {_ts(ep['end'])}")
         span = (ep["end"] - ep["start"]).total_seconds()
-        return (ts.cast("double") - F.lit(ep["start"]).cast("timestamp").cast("double")) / span
+        p = f"((CAST(timestamp AS DOUBLE) - CAST({_ts(ep['start'])} AS DOUBLE)) / {_d(span)})"
+        fault = ep["fault"]
+        if fault == "clogged_filter":
+            upd = {"fan_speed_pct": f"fan_speed_pct + {p} * 20",
+                   "power_kw": f"power_kw + {p} * 2",
+                   "return_air_temp_c": f"return_air_temp_c + {p} * 1.5D"}
+        elif fault == "compressor_failure":
+            m += " AND mode = 'cooling'"
+            upd = {"power_kw": "power_kw * 0.3D",
+                   "supply_air_temp_c": "supply_air_temp_c + 5",
+                   "temp_zone_c": f"temp_zone_c + {p} * 4"}
+        elif fault == "temp_drift":
+            upd = {"temp_zone_c": f"temp_zone_c + {_d(ep['drift'])}"}
+        else:  # oscillating_control
+            osc = f"(2.0D * sin({p} * 4 * {_d(math.pi)}))"
+            upd = {"temp_zone_c": f"temp_zone_c + {osc}",
+                   "fan_speed_pct": f"fan_speed_pct + {osc} * 5"}
+        upd["fault_type"] = f"'{fault}'"
+        for col, expr in upd.items():
+            cases[col].append(f"WHEN {m} THEN {expr}")
 
-    out = df
-    for ep in [e for e in episodes if e["fault"] == "clogged_filter"]:
-        m, p = mask(ep), frac(ep)
-        out = (
-            out.withColumn("fan_speed_pct", F.when(m, F.col("fan_speed_pct") + p * 20).otherwise(F.col("fan_speed_pct")))
-            .withColumn("power_kw", F.when(m, F.col("power_kw") + p * 2).otherwise(F.col("power_kw")))
-            .withColumn("return_air_temp_c", F.when(m, F.col("return_air_temp_c") + p * 1.5).otherwise(F.col("return_air_temp_c")))
-            .withColumn("fault_type", F.when(m, "clogged_filter").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "compressor_failure"]:
-        m, p = mask(ep), frac(ep)
-        out = (
-            out.withColumn("power_kw", F.when(m, F.col("power_kw") * 0.3).otherwise(F.col("power_kw")))
-            .withColumn("supply_air_temp_c", F.when(m, F.col("supply_air_temp_c") + 5).otherwise(F.col("supply_air_temp_c")))
-            .withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + p * 4).otherwise(F.col("temp_zone_c")))
-            .withColumn("fault_type", F.when(m, "compressor_failure").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "temp_drift"]:
-        m = mask(ep)
-        out = (
-            out.withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + ep["drift"]).otherwise(F.col("temp_zone_c")))
-            .withColumn("fault_type", F.when(m, "temp_drift").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "oscillating_control"]:
-        m, p = mask(ep), frac(ep)
-        osc = 2.0 * F.sin(p * 4 * math.pi)
-        out = (
-            out.withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + osc).otherwise(F.col("temp_zone_c")))
-            .withColumn("fan_speed_pct", F.when(m, F.col("fan_speed_pct") + osc * 5).otherwise(F.col("fan_speed_pct")))
-            .withColumn("fault_type", F.when(m, "oscillating_control").otherwise(F.col("fault_type")))
-        )
+    def case(col: str) -> str:
+        return f"CASE {' '.join(cases[col])} ELSE {col} END" if cases[col] else col
 
-    # final bounds + rounding (src/generate_hvac_data.py:215-222)
-    out = (
-        out.withColumn("fan_speed_pct", F.least(F.greatest(F.col("fan_speed_pct"), F.lit(0.0)), F.lit(100.0)))
-        .withColumn("power_kw", F.greatest(F.col("power_kw"), F.lit(0.0)))
-        .withColumn("temp_zone_c", F.least(F.greatest(F.col("temp_zone_c"), F.lit(15.0)), F.lit(35.0)))
-        .withColumn("supply_air_temp_c", F.least(F.greatest(F.col("supply_air_temp_c"), F.lit(10.0)), F.lit(25.0)))
+    final = {
+        "temp_zone_c": f"round(least(greatest({case('temp_zone_c')}, 15.0D), 35.0D), 2)",
+        "rh_zone_pct": "round(rh_zone_pct, 2)",
+        "supply_air_temp_c": f"round(least(greatest({case('supply_air_temp_c')}, 10.0D), 25.0D), 2)",
+        "return_air_temp_c": f"round({case('return_air_temp_c')}, 2)",
+        "power_kw": f"round(greatest({case('power_kw')}, 0.0D), 2)",
+        "fan_speed_pct": f"round(least(greatest({case('fan_speed_pct')}, 0.0D), 100.0D), 2)",
+        "setpoint_c": "round(setpoint_c, 2)",
+        "fault_type": case("fault_type"),
+    }
+    return df.selectExpr(
+        *[f"{final[c]} AS {c}" if c in final else f"`{c}`" for c in df.columns]
     )
-    numeric = ["temp_zone_c", "rh_zone_pct", "supply_air_temp_c",
-               "return_air_temp_c", "power_kw", "fan_speed_pct", "setpoint_c"]
-    return out.withColumns({c: F.round(c, 2) for c in numeric})
 
 
 def generate_hvac_data(
@@ -261,7 +289,8 @@ def generate_hvac_data(
     with_faults: bool = True,
 ) -> DataFrame:
     """Full generator: base profile + fault episodes (the `make sample-data`
-    stage 1, src/generate_hvac_data.py:228-295)."""
+    stage 1, src/generate_hvac_data.py:228-295) — one narrow plan over
+    ``spark.range``, written by a single job with no shuffle."""
     base = generate_hvac_base(spark, start=start, days=days, n_zones=n_zones, seed=seed)
     if not with_faults:
         return base

@@ -99,6 +99,108 @@ def test_determinism_partition_invariant(spark):
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
+def _fingerprint(df) -> tuple[int, int]:
+    """Order-independent content hash: row count and the sum of a per-row
+    xxhash64 over every column."""
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    r = df.selectExpr(f"CAST(xxhash64({cols}) AS DECIMAL(20, 0)) AS h").agg(
+        F.count("*"), F.sum("h")
+    ).first()
+    return r[0], int(r[1])
+
+
+# pinned from the withColumn-chain generator this one replaced, in a UTC
+# driver with the session zone UTC
+@pytest.mark.parametrize(
+    "build, want",
+    [
+        (lambda s: generators.generate_hvac_data(s, days=5, n_zones=3, seed=42),
+         (4320, 271914811675210526863)),
+        (lambda s: generators.generate_hvac_data(s, days=1, n_zones=2, seed=7),
+         (576, 69505630525644937468)),
+        (lambda s: generators.generate_buildings(s, 100, seed=42),
+         (100, 44512180136338548320)),
+    ],
+    ids=["hvac_5d_3z_s42", "hvac_1d_2z_s7", "buildings_100_s42"],
+)
+def test_generator_fingerprint_pinned(spark, build, want):
+    assert _fingerprint(build(spark)) == want
+
+
+def test_generator_ignores_driver_tz(spark, monkeypatch):
+    """Timestamps are session-zone literals: a driver process in another
+    zone builds the same table (first tick 00:00, episode windows at their
+    scheduled session-time hours)."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        df = generators.generate_hvac_data(spark, days=6, n_zones=2, seed=42)
+        first = df.agg(F.date_format(F.min("timestamp"), "yyyy-MM-dd HH:mm")).first()[0]
+        windows = {
+            (r.fault_type, r.zone_id): (r.lo, r.hi)
+            for r in df.filter(F.col("fault_type") != "none")
+            .groupBy("fault_type", "zone_id")
+            .agg(
+                F.date_format(F.min("timestamp"), "yyyy-MM-dd HH:mm").alias("lo"),
+                F.date_format(F.max("timestamp"), "yyyy-MM-dd HH:mm").alias("hi"),
+            )
+            .collect()
+        }
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert first == "2024-01-01 00:00"
+    fmt = "%Y-%m-%d %H:%M"
+    want = {
+        (ep["fault"], ep["zone"]): (ep["start"].strftime(fmt), ep["end"].strftime(fmt))
+        for ep in generators.fault_episodes(n_zones=2, seed=42)
+        if ep["end"] < dt.datetime(2024, 1, 7)
+    }
+    assert len(want) == 4 and windows == want
+
+
+def _overlapping_pairs(episodes):
+    return [
+        (i, j)
+        for i, a in enumerate(episodes)
+        for j, b in enumerate(episodes[i + 1:], i + 1)
+        if a["zone"] == b["zone"] and a["start"] <= b["end"] and b["start"] <= a["end"]
+    ]
+
+
+def test_fault_episodes_never_overlap():
+    """The schedule is disjoint per zone for every size inject_faults may
+    be handed: starts fall on distinct days mod 6, windows end same-day."""
+    for n_eps in range(1, 11):
+        for n_zones in range(1, 13):
+            for seed in (1, 42):
+                eps = generators.fault_episodes(
+                    n_zones=n_zones, n_episodes_per_fault=n_eps, seed=seed
+                )
+                assert len(eps) == 4 * n_eps
+                assert _overlapping_pairs(eps) == [], (n_eps, n_zones, seed)
+
+
+def test_inject_faults_refuses_overlap(hvac_small):
+    """One CASE per column applies only the first matching episode, so
+    two episodes sharing a zone and a moment are refused, not merged."""
+    t0 = dt.datetime(2024, 1, 1, 8)
+    a = {"fault": "temp_drift", "zone": "Z1", "start": t0,
+         "end": t0 + dt.timedelta(hours=4), "drift": 4.0}
+    touching = dict(a, fault="clogged_filter", start=a["end"], end=a["end"] + dt.timedelta(hours=2))
+    other_zone = dict(touching, zone="Z2")
+    later = dict(touching, start=touching["end"] + dt.timedelta(minutes=5),
+                 end=touching["end"] + dt.timedelta(hours=1))
+    with pytest.raises(ValueError, match=r"zone Z1: #0 temp_drift .* and #1 clogged_filter"):
+        generators.inject_faults(hvac_small, [a, touching])
+    with pytest.raises(ValueError, match=r"#0 temp_drift .* and #2 clogged_filter"):
+        generators.inject_faults(hvac_small, [a, other_zone, touching])
+    out = generators.inject_faults(hvac_small, [a, other_zone, later])
+    assert out.columns == hvac_small.columns
+
+
 def test_features_28_columns(features):
     assert set(HVAC_FEATURE_COLS) <= set(features.columns)
     assert len(features.columns) == 28

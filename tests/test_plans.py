@@ -75,6 +75,16 @@ def test_hvac_features_single_shuffle(spark):
     assert plan.count("Arguments: hashpartitioning(zone_id") == 1
 
 
+def test_hvac_generator_is_one_narrow_plan(spark):
+    """The generator is a projection over spark.range: no exchange, no
+    join against the zone list and no exploded timestamp sequence."""
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources.generators import generate_hvac_data
+
+    plan = plan_of(generate_hvac_data(spark, days=2, n_zones=3))
+    for op in ("Exchange", "Join", "Generate"):
+        assert op not in plan, op
+
+
 def test_aggregates_are_partial_final(spark):
     """Group-bys must map-side combine (two HashAggregate levels)."""
     plan = plan_of(QUERIES["q05_region_rollup"].fn(spark, SF_DIR))
