@@ -6,71 +6,52 @@ DataFrame`` and ``sql`` is ANSI SQL DuckDB runs on the same parquet (views
 pre-registered by the driver). ``sql=None`` marks non-SQL-expressible ops
 (weaker rows-only check).
 
+Two kinds of ``fn``:
+- a DataFrame body, kept where the query calls an ``operators/``,
+  ``functions/`` or ``ml/`` routine, runs a Python/Arrow kernel,
+  persists, pins a shuffle width, or where its SQL form measured slower;
+  the oracle then checks two implementations against each other;
+- ``partial(run_sql, text)`` (``sql_frontend.run_sql``) for the 49
+  queries whose body said nothing the SQL text does not. The text is the
+  oracle string itself for 28 ANSI-portable queries, so the oracle check
+  is one text run by two engines; for 21 it is the query's
+  ``sql_frontend.SPARK_SQL`` translation of the DuckDB dialect. The
+  text is ``QUERIES[name].fn.args[0]``.
+
 Determinism rules (driver hash-compares values order-insensitively):
 - every LIMIT/top-k has a unique tiebreaker in its ordering;
 - every float column is rounded identically on both sides;
 - count-like columns are BIGINT on both sides (DuckDB ``SUM(int)`` returns
   HUGEINT — always ``CAST(... AS BIGINT)`` in the oracle).
 
-Scale notes are in each query's docstring: what shuffles, what broadcasts,
+Scale notes are in each body's docstring: what shuffles, what broadcasts,
 what prunes. Run ``.explain()`` via ``tests/test_plans.py`` to verify.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
-from typing import Callable, Optional
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators import windows as W
 from sustainable_building_energy_benchmarking_pipeline_spark.operators import aggregates as A
+from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics_ext import EXT_QUERIES
+from sustainable_building_energy_benchmarking_pipeline_spark.plans.sql_frontend import (
+    Q50_SQL,
+    SPARK_SQL,
+    QuerySpec,
+    run_sql,
+)
 from sustainable_building_energy_benchmarking_pipeline_spark.session import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-@dataclass(frozen=True)
-class QuerySpec:
-    fn: Callable[[SparkSession, str], DataFrame]
-    sql: Optional[str]
 
 
 # ---------------------------------------------------------------------------
 # Relational core (scan / filter / project / agg / sort — SURVEY §2.1-2.4,2.6)
 # ---------------------------------------------------------------------------
 
-def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: filter → groupBy(2) → 8 aggregates → sort.
-
-    Scale: single shuffle on (returnflag, linestatus) — 6 distinct groups,
-    partial agg map-side reduces each partition to ≤6 rows before shuffle.
-    Filter + 7-column projection push to the parquet scan.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
+# TPC-H Q1 shape: filter → groupBy(2) → 8 aggregates → sort.
 Q01_SQL = """
 SELECT l_returnflag, l_linestatus,
        ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -88,28 +69,8 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-def q02_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k (O2/O3): ORDER BY o_totalprice DESC LIMIT 10, unique
-    tiebreaker o_orderkey. Reference shape: the alerts endpoint's
-    ``ORDER BY ... DESC LIMIT ?`` (src/db.py:161-163).
-
-    Scale: must plan as TakeOrderedAndProject — each task keeps a 10-row
-    heap, the driver merges P heaps; no global sort, no full shuffle.
-    A plan-hygiene test asserts the physical operator.
-    """
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select(
-            "o_orderkey",
-            "o_custkey",
-            F.round("o_totalprice", 2).alias("total_price"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("total_price").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
+# Global top-k (O2/O3) with a unique tiebreaker — the alerts endpoint's
+# ORDER BY ... DESC LIMIT ?; plans as TakeOrderedAndProject.
 Q02_SQL = """
 SELECT o_orderkey, o_custkey,
        ROUND(o_totalprice, 2) AS total_price,
@@ -120,30 +81,7 @@ LIMIT 10
 """
 
 
-def q04_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS correlated subquery — count orders per
-    priority where at least one lineitem shipped late-window with a big
-    quantity. Spark expresses EXISTS as LEFT SEMI join (J3).
-
-    Scale: semi join shuffles only (orderkey) pairs, and the lineitem
-    side is filtered+projected to one column before the exchange; the
-    final agg is a 5-group partial/final pair.
-    """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    big = li.filter(F.col("l_quantity") > 45).select("l_orderkey")
-    return (
-        o.filter(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .join(big, F.col("o_orderkey") == big["l_orderkey"], "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
+# TPC-H Q4 shape: EXISTS subquery, planned as a LEFT SEMI join (J3).
 Q04_SQL = """
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders o
@@ -156,27 +94,7 @@ ORDER BY o_orderpriority
 """
 
 
-def q06_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: tight multi-predicate filter → global agg (A4).
-
-    Scale: all three predicates reach the parquet scan (PushedFilters);
-    result is a single row — no shuffle beyond the final partial-agg merge.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount").between(0.03, 0.07))
-            & (F.col("l_quantity") < 25)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
+# TPC-H Q6 shape: multi-predicate filter (pushed to the scan) → global agg (A4).
 Q06_SQL = """
 SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
        COUNT(*) AS n_rows
@@ -186,31 +104,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 """
 
 
-def q03_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join → agg → top-10 (J2, O3, W8).
-
-    Scale: customer (filtered to one segment) broadcasts into orders;
-    orders⋈lineitem is the one real shuffle (both sides hashed on
-    l_orderkey/o_orderkey). Top-10 plans as TakeOrderedAndProject — no
-    global sort materialization. Tiebreaker: o_orderkey.
-    """
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
+# TPC-H Q3 shape: 3-way join → agg → top-10 (J2, O3, W8); customer broadcasts.
 Q03_SQL = """
 SELECT l_orderkey, o_orderdate, o_orderpriority,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -226,27 +120,7 @@ LIMIT 10
 """
 
 
-def q05_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dim-chain join region⋈nation⋈customer with broadcast dims (J2).
-
-    Scale: region (5 rows) and nation (25 rows) broadcast — zero shuffle on
-    the fact side until the final 2-key agg.
-    """
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
+# Dim-chain join region⋈nation⋈customer with broadcast dims (J2).
 Q05_SQL = """
 SELECT r_name, n_name,
        COUNT(*) AS n_customers,
@@ -259,27 +133,7 @@ ORDER BY r_name, n_name
 """
 
 
-def q07_case_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE WHEN banding (P6) — the EUI-rating ladder pattern
-    (notebooks/benchmarking_medallion.py:159-165) applied to order value."""
-    orders = _t(spark, sf_dir, "orders")
-    band = (
-        F.when(F.col("o_totalprice") < 50000, "small")
-        .when(F.col("o_totalprice") < 150000, "medium")
-        .when(F.col("o_totalprice") < 300000, "large")
-        .otherwise("jumbo")
-    )
-    return (
-        orders.withColumn("price_band", band)
-        .groupBy("price_band")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.avg("o_totalprice"), 2).alias("avg_price"),
-        )
-        .orderBy("price_band")
-    )
-
-
+# CASE WHEN banding (P6): the EUI-rating ladder applied to order value.
 Q07_SQL = """
 SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
             WHEN o_totalprice < 150000 THEN 'medium'
@@ -296,7 +150,7 @@ ORDER BY price_band
 def q08_conditional_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation + share-of-group KPIs (A3, A9 — the
     hvac/solar-count and rating-share pattern)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_mktsegment")
         .agg(
@@ -322,7 +176,7 @@ ORDER BY c_mktsegment
 def q09_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted average (A8): discount weighted by extended price — the
     area-weighted-EUI pattern (src/export_json.py:157-158)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -350,7 +204,7 @@ def q10_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     /alerts/summary by-severity/by-rule/by-zone pattern (src/db.py:171-236).
     The inactive dimension per set coalesces to 'ALL' (q45's convention):
     the driver contract disallows NULLs in registry output."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         A.multi_dim_summary(
             orders,
@@ -381,20 +235,7 @@ ORDER BY o_orderstatus, o_orderpriority
 """
 
 
-def q11_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct count per group (A11). At 100 TB swap in
-    approx_count_distinct — exact here because the oracle is exact."""
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_distinct_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
+# Exact distinct count per group (A11).
 Q11_SQL = """
 SELECT o_orderpriority,
        COUNT(DISTINCT o_custkey) AS n_distinct_customers,
@@ -409,26 +250,7 @@ ORDER BY o_orderpriority
 # Joins beyond inner (SURVEY §2.3)
 # ---------------------------------------------------------------------------
 
-def q12_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (J3 — the NOT-IN representative-building exclusion,
-    src/export_demo_json.py:213-221): customers with no orders since 2000
-    (the date filter keeps the result non-degenerate at every SF).
-
-    Scale: anti-join shuffles both sides on the key; if the right side is
-    small, Catalyst broadcasts it (BroadcastHashJoin LeftAnti).
-    """
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_orderless"))
-        .orderBy("c_mktsegment")
-    )
-
-
+# Left-anti join (J3): customers with no orders since 2000.
 Q12_SQL = """
 SELECT c_mktsegment, COUNT(*) AS n_orderless
 FROM customer
@@ -440,20 +262,7 @@ ORDER BY c_mktsegment
 """
 
 
-def q13_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join: customers with ≥1 finished order, per nation."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("n_name")
-    )
-
-
+# Left-semi join: customers with ≥1 finished order, per nation.
 Q13_SQL = """
 SELECT n_name, COUNT(*) AS n_customers
 FROM customer
@@ -464,22 +273,7 @@ ORDER BY n_name
 """
 
 
-def q14_union_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagged union of heterogeneous tables (U1/U2,
-    notebooks/benchmarking_medallion.py:379-395)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"),
-        F.round(F.col("c_acctbal"), 2).alias("acctbal"),
-        F.lit("customer").alias("entity"),
-    )
-    supp = _t(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"),
-        F.round(F.col("s_acctbal"), 2).alias("acctbal"),
-        F.lit("supplier").alias("entity"),
-    )
-    return cust.unionByName(supp)
-
-
+# Tagged union of heterogeneous tables (U1/U2).
 Q14_SQL = """
 SELECT c_name AS name, ROUND(c_acctbal, 2) AS acctbal, 'customer' AS entity FROM customer
 UNION ALL
@@ -493,7 +287,7 @@ SELECT s_name AS name, ROUND(s_acctbal, 2) AS acctbal, 'supplier' AS entity FROM
 
 def q15_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via row_number (W8). Tiebreaker: o_orderkey."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return W.top_k_per_group(
         orders,
         "o_orderpriority",
@@ -522,7 +316,7 @@ def q16_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic key-dedup (P14): first order per customer by
     (orderdate, orderkey). dropDuplicates keeps an arbitrary row — this is
     the deterministic form the medallion dedup should use at scale."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return W.top_k_per_group(
         orders, "o_custkey", [F.asc("o_orderdate"), F.asc("o_orderkey")], k=1
     ).select("o_custkey", "o_orderkey", "o_orderdate")
@@ -552,7 +346,7 @@ def q17_rolling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     in registry output — the bfill+fillna(0) convention the reference
     itself applies to its lag features (src/pipeline_batch.py:149).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.ordered_window("user_id", ["ts", "event_id"])
     return ev.select(
         "event_id",
@@ -580,7 +374,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
 def q18_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands consecutive-run detection (W6) — the temp-drift
     rule pattern (src/models.py:66-127): runs of value>50 lasting ≥3 rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return W.detect_runs(
         ev,
         F.col("value") > 50,
@@ -614,7 +408,7 @@ FROM l WHERE cond = 1 AND run_len >= 3
 def q19_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group forward-fill of nulls (P11 — pandas groupby().ffill(),
     src/pipeline_batch.py:55-59). Nulls synthesized on 'error' events."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.ordered_window("user_id", ["ts", "event_id"])
     gapped = ev.withColumn(
         "v", F.when(F.col("event_type") != "error", F.col("value"))
@@ -645,7 +439,7 @@ def q20_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets, operators.windows.distributed_percent_rank) — NOT the
     no-partition window, which funnels the whole table through one task
     and dies at 100× scale."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     ranked = W.distributed_percent_rank(
         cust, ["c_acctbal", "c_custkey"], out_col="_pct", scale=100.0
     )
@@ -669,7 +463,7 @@ def q21_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gap boundary is ``>=`` (a gap of exactly 30 min starts a new session)
     to match Spark's session_window half-open [t, t+gap) semantics — so
     q21 and q43 agree with each other and with the streaming path."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.ordered_window("user_id", ["ts", "event_id"])
     gap = F.when(
         (F.col("ts") - F.lag("ts").over(w)) >= F.expr("INTERVAL 30 MINUTES"), 1
@@ -705,20 +499,7 @@ ORDER BY user_id
 # Temporal scalar functions (SURVEY §2.8) + semi-structured
 # ---------------------------------------------------------------------------
 
-def q22_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-truncated daily rollup (A13/F4 — dashboard daily anomaly
-    counts, src/dashboard_app.py:406-416)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.to_date("ts").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .orderBy("day")
-    )
-
-
+# Date-truncated daily rollup (A13/F4: the dashboard's daily counts).
 Q22_SQL = """
 SELECT CAST(ts AS DATE) AS day,
        COUNT(*) AS n_events,
@@ -729,37 +510,9 @@ ORDER BY day
 """
 
 
-def q23_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day extraction + 2-key agg (F1 — the business-hours mode
-    logic, src/generate_hvac_data.py:38-46).
-
-    The average is computed in INTEGER arithmetic end-to-end: double
-    SUM accumulates in partition order, which differs by an ulp between
-    engines, and ROUND(x, 4) amplifies that into a visible mismatch
-    whenever a group's mean lands on a rounding boundary (observed at
-    sf0.001: mean 54.77875 → 54.7787 vs 54.7788 — DuckDB rounds the
-    double's binary value, Spark HALF_UPs its shortest decimal repr).
-    ``value`` is exact cents (verified ≤4e-12 from value*100 across all
-    SFs, non-negative), so cents→bigint is lossless and
-    (200·Σcents + n) ÷ (2n) is the HALF_UP mean in 1e-4 units —
-    bit-identical on any engine."""
-    ev = _t(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    return (
-        ev.groupBy(F.hour("ts").alias("hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("_s"))
-        .select(
-            "hour",
-            "event_type",
-            "n",
-            (
-                F.expr("(200 * _s + n) DIV (2 * n)").cast("double") / 10000.0
-            ).alias("avg_value"),
-        )
-        .orderBy("hour", "event_type")
-    )
-
-
+# Hour-of-day extraction + 2-key agg (F1). The mean is integer arithmetic
+# end-to-end — (200·Σcents + n) DIV (2n) is the HALF_UP mean in 1e-4 units —
+# so no engine's double rounding can flip the 4th decimal.
 Q23_SQL = """
 WITH g AS (
   SELECT CAST(HOUR(ts) AS INTEGER) AS hour, event_type,
@@ -775,23 +528,7 @@ ORDER BY hour, event_type
 """
 
 
-def q24_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: JSON props field → typed column (F22
-    inverse; the props column is the engine's JSON-ingestion surface)."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(
-            F.round(F.avg("k"), 4).alias("avg_k"),
-            F.max("k").alias("max_k"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("event_type")
-    )
-
-
+# Semi-structured extraction: JSON props field → typed column.
 Q24_SQL = """
 SELECT event_type,
        ROUND(AVG(CAST(props->>'k' AS BIGINT)), 4) AS avg_k,
@@ -807,23 +544,7 @@ ORDER BY event_type
 # Text analysis / dedup / similarity (training-data pipeline operators)
 # ---------------------------------------------------------------------------
 
-def q25_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text statistics per language: token counting + length profile
-    (LLM-pipeline text analysis; JVM-side split, no UDF)."""
-    docs = _t(spark, sf_dir, "documents")
-    tokens = F.size(F.split(F.col("text"), " ")).cast("bigint")
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.round(F.avg(tokens), 4).alias("avg_tokens"),
-            F.max(tokens).alias("max_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
+# Text statistics per language: token counts + length profile.
 Q25_SQL = """
 SELECT lang,
        COUNT(*) AS n_docs,
@@ -836,26 +557,8 @@ ORDER BY lang
 """
 
 
-def q26_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via content hash (F20 + P14): keep min doc_id per
-    sha256(text). At 100 TB this is THE first dedup pass — hash-groupBy
-    shuffles 32-byte digests, not documents."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.withColumn("content_hash", F.sha2(F.col("text"), 256))
-        .groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).alias("n_unique"),
-            F.sum(F.col("n_copies") - 1).cast("bigint").alias("n_duplicates_removed"),
-        )
-    )
-
-
+# Exact dedup via content hash (F20 + P14): the exchange carries sha256
+# digests, not documents.
 Q26_SQL = """
 WITH h AS (
   SELECT sha256(text) AS content_hash, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
@@ -879,7 +582,7 @@ def q27_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         brute_force_topk_kernel,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]]
     return brute_force_topk_kernel(emb.filter(F.col("vec_id") != 0), qv, k=10).select(
         F.col("id").alias("vec_id"),
@@ -914,7 +617,7 @@ def q28_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp_extract_all, no UDF."""
     from sustainable_building_energy_benchmarking_pipeline_spark.functions.text import bpe_token_count
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n = bpe_token_count(F.col("text"))
     return (
         docs.groupBy("source")
@@ -962,7 +665,7 @@ def q29_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         language_pred_kernel,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("lang", F.lower(F.col("text")).alias("_lt"))
         .select("lang", language_pred_kernel(F.col("_lt")).alias("lang_pred"))
@@ -1019,7 +722,7 @@ def q30_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toked = docs.select(
         "source",
         "text",
@@ -1090,7 +793,7 @@ def q31_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         content_fingerprint,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.withColumn("fp", content_fingerprint(F.col("text")))
         .groupBy()
@@ -1116,7 +819,7 @@ def q32_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocked_jaccard_pairs,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = blocked_jaccard_pairs(
         docs,
         block_cols=[F.col("lang"), (F.col("n_chars") / 100).cast("bigint")],
@@ -1176,7 +879,7 @@ def q33_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_near_duplicates,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # persist_shingles=True (round-12): the size-adaptive posture — the
     # sizing count doubles as the cache barrier that keeps AQE's
     # parallel consumer stages from racing the kernel (measured 3x
@@ -1229,7 +932,7 @@ def q34_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_near_duplicates,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = simhash_near_duplicates(docs, max_hamming=3)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -1269,7 +972,7 @@ def q35_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_near_duplicates,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
         embedding_near_duplicates(emb, threshold=0.4, dim=64)
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
@@ -1310,7 +1013,7 @@ def q36_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_lsh_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     return ann_lsh_topk(
         emb.filter(F.col("vec_id") != 0), qv, k=10, n_planes=3, n_tables=24
@@ -1342,7 +1045,7 @@ def q37_knn_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairwise_topk_per_label,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return pairwise_topk_per_label(emb, k=3, dim=64).select(
         "id", "label", "neighbor_id", F.round("cosine_sim", 4).alias("cosine_sim")
     )
@@ -1373,7 +1076,7 @@ def _media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload, kind from doc_id, metadata struct derived from n_chars. The
     deterministic stand-in corpus for the multimodal plumbing queries
     (this container has no codecs — see operators.multimodal)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.element_at(
@@ -1391,24 +1094,8 @@ def _media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q38_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload + typed metadata struct per
-    media row, aggregated per kind (payload bytes via octet length of the
-    binary column, dims from the struct). Exercises the opaque-binary
-    representation end-to-end without any codec."""
-    media = _media_from_documents(spark, sf_dir)
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.sum(F.octet_length("content")).alias("total_bytes"),
-            F.round(F.avg("meta.width"), 4).alias("avg_width"),
-            F.round(F.avg("meta.height"), 4).alias("avg_height"),
-        )
-        .orderBy("kind")
-    )
-
-
+# Multimodal plumbing: binary payload + typed metadata struct per media row,
+# aggregated per kind.
 Q38_SQL = """
 WITH m AS (
   SELECT doc_id AS media_id,
@@ -1463,7 +1150,7 @@ def q40_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact quartiles per numeric column, unpivoted to one row per column.
     Exact percentile (not approx) so DuckDB can oracle it; at 100 TB use
     percentile_approx and drop the oracle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     # string-expression form (round-12): the Column-builder form spent
     # ~0.3 s of DRIVER time per run constructing 24 aggregate + 27
@@ -1530,29 +1217,7 @@ GROUP BY col ORDER BY col
 """
 
 
-def q41_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left equi-join enrichment (J1, src/dashboard_app.py:147-152 shape):
-    every left row survives; unmatched right side nulls → coalesced 0.
-    Scale: aggregate-then-join keeps the join input one row per key;
-    the small side broadcasts."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_spent"),
-    )
-    return (
-        cust.join(per_cust, cust["c_custkey"] == per_cust["o_custkey"], "left")
-        .select(
-            "c_custkey",
-            "c_name",
-            F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
-            F.coalesce("total_spent", F.lit(0.0)).alias("total_spent"),
-        )
-        .orderBy("c_custkey")
-    )
-
-
+# Left equi-join enrichment (J1): aggregate-then-join, unmatched keys → 0.
 Q41_SQL = """
 SELECT c_custkey, c_name,
        COALESCE(o.n_orders, 0) AS n_orders,
@@ -1566,33 +1231,7 @@ ORDER BY c_custkey
 """
 
 
-def q42_union_missing_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union of heterogeneous tables with a tag column and missing-column
-    null padding (U2, notebooks/benchmarking_medallion.py:379-395 —
-    the reference attempted this and aborted on schema mismatch;
-    ``unionByName(allowMissingColumns=True)`` is the fix)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"),
-        F.round(F.col("c_acctbal"), 2).alias("acctbal"),
-        F.lit("customer").alias("entity"),
-    )
-    nat = _t(spark, sf_dir, "nation").select(
-        F.col("n_name").alias("name"),
-        F.col("n_regionkey").alias("regionkey"),
-        F.lit("nation").alias("entity"),
-    )
-    unioned = cust.unionByName(nat, allowMissingColumns=True)
-    # null-padded columns are the operator's point; the -1 sentinel is
-    # only for the value-hash compare (the harness sorts rows and NULLs
-    # don't order)
-    return unioned.select(
-        "name",
-        F.coalesce("acctbal", F.lit(-1.0)).alias("acctbal"),
-        "entity",
-        F.coalesce("regionkey", F.lit(-1)).alias("regionkey"),
-    ).orderBy("entity", "name")
-
-
+# Union with a tag column and missing-column NULL padding (U2).
 Q42_SQL = """
 SELECT c_name AS name, ROUND(c_acctbal, 2) AS acctbal, 'customer' AS entity,
        CAST(-1 AS BIGINT) AS regionkey
@@ -1605,31 +1244,8 @@ ORDER BY entity, name
 """
 
 
-def q43_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window sessionization (the event-time form of q21's
-    lag+cumsum): per (user, session) start/end/size. Streaming-ready —
-    the same expression runs under a watermark in
-    streaming/events_stream.py. One shuffle on user_id. Windows are
-    half-open [t, t+gap): an event exactly 30 min after the last starts
-    a NEW session — the oracle (and q21) use the same ``>=`` boundary."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-        .orderBy("user_id", "session_start")
-    )
-
-
+# Per-(user, session) start/end/size with a 30-minute gap: the batch form of
+# streaming/events_stream.py's watermarked session_window.
 Q43_SQL = """
 WITH g AS (
   SELECT user_id, ts, value,
@@ -1667,7 +1283,7 @@ def q44_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload struct; deduping both sides pins the same candidate."""
     from sustainable_building_energy_benchmarking_pipeline_spark.operators.asof import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "ts", "user_id", "value"
     )
@@ -1710,39 +1326,8 @@ ORDER BY purchase_id
 """
 
 
-def q45_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical ROLLUP (region → nation → grand total) in ONE pass —
-    the A7 family's ordered-hierarchy form (q10 is the flat GROUPING SETS
-    form). Dimension joins broadcast (nation/region are tiny; customer
-    under the broadcast threshold at bench SF — at 100 TB customer
-    becomes a shuffle join on o_custkey and the rollup still aggregates
-    partially map-side). Subtotal labels coalesce to 'ALL' so the output
-    carries no NULLs (driver contract)."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    df = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return (
-        df.rollup("r_name", "n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-        .select(
-            F.coalesce("r_name", F.lit("ALL")).alias("region"),
-            F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("region", "nation")
-    )
-
-
+# Hierarchical ROLLUP (region → nation → total) in one pass; subtotal labels
+# coalesce to 'ALL'.
 Q45_SQL = """
 SELECT COALESCE(r_name, 'ALL') AS region,
        COALESCE(n_name, 'ALL') AS nation,
@@ -1757,22 +1342,7 @@ ORDER BY region, nation
 """
 
 
-def q46_pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT: daily event counts, one column per event type. The pivot
-    values are PINNED — an unpinned pivot runs an extra distinct-scan
-    job to discover them and leaves the output schema data-dependent
-    (non-negotiable at 100 TB). Missing (day, type) cells fill 0."""
-    types = ["click", "error", "purchase", "signup", "view"]
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.to_date("ts").alias("day"))
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, types)
-        .orderBy("day")
-    )
-
-
+# PIVOT with pinned values: daily event counts, one column per event type.
 Q46_SQL = """
 SELECT CAST(ts AS DATE) AS day,
        CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
@@ -1796,7 +1366,7 @@ def q47_oscillation_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frame sum. Indicators are 0/1 (never NULL — first-row pairs with
     a NULL lag count 0 via the CASE), so the output is NULL-free.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.ordered_window("user_id", ["ts", "event_id"])
     with_dv = ev.withColumn("_dv", W.diff_col("value", w, 1))
     osc = W.sliding_sign_change_count("_dv", w, 12)
@@ -1827,28 +1397,7 @@ FROM s WHERE osc > 6
 """
 
 
-def q48_custom_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom categorical sort key (W10 — the Excellent→Good→Average→Poor
-    CASE ordering, reference notebooks/benchmarking_medallion.py:239-244),
-    over event types with a business-priority order. The rank column is
-    part of the output so the custom ordering is observable to the
-    order-insensitive differential compare."""
-    ev = _t(spark, sf_dir, "events")
-    rank = (
-        F.when(F.col("event_type") == "purchase", 1)
-        .when(F.col("event_type") == "signup", 2)
-        .when(F.col("event_type") == "click", 3)
-        .when(F.col("event_type") == "view", 4)
-        .otherwise(5)
-    )
-    return (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .withColumn("sort_rank", rank.cast("int"))
-        .orderBy("sort_rank")
-    )
-
-
+# Custom categorical sort key (W10); the rank column is part of the output.
 Q48_SQL = """
 WITH a AS (SELECT event_type, COUNT(*) AS n_events FROM events GROUP BY event_type)
 SELECT event_type, n_events,
@@ -1870,7 +1419,7 @@ def q49_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_exact,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     # nlist/max_iter sized for the test corpora (a few k vectors): exact
     # output is unconditional, so the only tuning criterion is train
@@ -1921,48 +1470,8 @@ def q50_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_clusters,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return dedup_clusters(docs, threshold=0.5, num_hashes=32, bands=16)
-
-
-Q50_SQL = r"""
-WITH RECURSIVE
-d AS (
-  SELECT doc_id, list_filter(string_split_regex(TRIM(LOWER(text)), '\s+'), t -> t <> '') AS toks
-  FROM documents
-), s AS (
-  SELECT doc_id,
-         CASE WHEN LEN(toks) >= 3 THEN
-           list_distinct(list_transform(range(1, LEN(toks) - 1), i -> array_to_string(toks[i:i+2], ' ')))
-         WHEN LEN(toks) > 0 THEN [array_to_string(toks, ' ')]
-         ELSE [] END AS sh
-  FROM d
-), z AS (
-  SELECT doc_id, LEN(sh) AS n, UNNEST(sh) AS g FROM s
-), i AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         COUNT(*) AS inter, ANY_VALUE(a.n) AS na, ANY_VALUE(b.n) AS nb
-  FROM z a JOIN z b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), p AS (
-  SELECT id_a, id_b FROM i
-  WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.5
-), e AS (
-  SELECT id_a AS u, id_b AS v FROM p
-  UNION
-  SELECT id_b, id_a FROM p
-), closure(u, v) AS (
-  SELECT u, v FROM e
-  UNION
-  SELECT c.u, e2.v FROM closure c JOIN e e2 ON c.v = e2.u
-), m AS (
-  SELECT u, LEAST(u, MIN(v)) AS rep FROM closure GROUP BY u
-)
-SELECT doc_id,
-       COALESCE(m.rep, doc_id) AS cluster_rep,
-       doc_id = COALESCE(m.rep, doc_id) AS is_rep
-FROM documents LEFT JOIN m ON documents.doc_id = m.u
-"""
 
 
 def q51_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1973,7 +1482,7 @@ def q51_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_scores,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # top-k on the UNROUNDED score (rounding after the limit) so the
     # boundary can't flip between engines when two scores round equal
     return (
@@ -2013,27 +1522,8 @@ LIMIT 10
 """
 
 
-def q52_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-sequence assembly: each user's full event-type sequence
-    in (ts, event_id) order, fingerprinted. collect_list of (ts,
-    event_id, type) structs + array_sort gives a deterministic order
-    WITHOUT a per-group sort shuffle beyond the groupBy itself (struct
-    sort is lexicographic on the leading fields); the sequence ships as
-    a sha256 fingerprint so the compare covers exact order without
-    hashing megabyte rows."""
-    ev = _t(spark, sf_dir, "events")
-    seq = F.transform(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "event_type"))
-        ),
-        lambda x: x["event_type"],
-    )
-    return ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sha2(F.array_join(seq, ","), 256).alias("seq_sha"),
-    )
-
-
+# Training-sequence assembly: each user's ordered event-type sequence,
+# fingerprinted.
 Q52_SQL = """
 SELECT user_id,
        COUNT(*) AS n_events,
@@ -2043,39 +1533,9 @@ GROUP BY user_id
 """
 
 
-def q53_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified downsample: 20 docs per language by
-    sha256(doc_id) rank — the class-balancing step of a training-data
-    pipeline, with hash-rank standing in for a seeded RNG so the sample
-    is reproducible across engines, partitionings, and reruns (F.rand
-    is partitioning-dependent; a hash of the key is not).
-
-    Skew analysis (round 6): the stratum key is a fixed enum, which is
-    normally the single-task window anti-pattern — but a CONSTANT
-    ``row_number() <= k`` filter plans a PARTIAL ``WindowGroupLimit``
-    (Spark's rank-limit pushdown, plan-asserted in
-    tests/test_sampling_deskew.py): each map task locally sorts and
-    forwards only its own top-20 per lang, so the reduce-side window
-    input is ≤ 20 × map-partitions per stratum — bounded regardless of
-    skew, with the map-side cost a balanced local sort. This beats both
-    alternatives: the q92 agg-top-k shape shuffles EVERY row of a
-    stratum into one collect_list reducer (partial agg does not
-    truncate), and a candidate-band prefilter pays two extra driver
-    jobs per call (measured 0.23 s → 2.1 s at sf0.1). z05 — whose limit
-    is data-DEPENDENT, so pushdown cannot apply — uses
-    ``stratified_rank`` instead. The plan-hygiene skew gate encodes
-    exactly this distinction (Partial WindowGroupLimit ⇒ exempt)."""
-    docs = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        F.sha2(F.col("doc_id").cast("string"), 256), F.asc("doc_id")
-    )
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 20)
-        .select("doc_id", "lang", F.col("_rk").cast("int").alias("sample_rank"))
-    )
-
-
+# Deterministic stratified sample: 20 docs per language by sha256(doc_id) rank.
+# The constant row_number() <= 20 plans a Partial WindowGroupLimit, so each map
+# task forwards at most 20 rows per language (tests/test_sampling_deskew.py).
 Q53_SQL = """
 WITH r AS (
   SELECT doc_id, lang,
@@ -2099,7 +1559,7 @@ def q54_sketch_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the sketch's error — rsd 0.05 made the flag a coin flip (it
     actually came up False at sf0.1: estimate off by >5% is an
     EXPECTED event at 1σ). Quantile accuracy 10⁴."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     agg = ev.agg(
         F.countDistinct("user_id").alias("n_users_exact"),
         F.approx_count_distinct("user_id", 0.01).alias("_au"),
@@ -2143,7 +1603,7 @@ def q55_latest_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest_state_per_key,
     )
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
     latest = latest_state_per_key(ev, "user_id", ["ts", "event_id"])
@@ -2169,26 +1629,7 @@ FROM r WHERE rn = 1
 """
 
 
-def q56_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (F.window, the batch form of the
-    streaming window aggregate): 6-hour buckets per event type. One
-    groupBy shuffle; window bounds are computed per row, no join."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
+# Tumbling event-time windows: 6-hour buckets per event type.
 Q56_SQL = """
 SELECT time_bucket(INTERVAL '6 hours', ts) AS window_start,
        event_type,
@@ -2199,21 +1640,7 @@ GROUP BY 1, 2
 """
 
 
-def q57_hopping_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) event-time windows: 6-hour windows advancing
-    every 2 hours — each event lands in 3 overlapping windows. Spark
-    expands the row into its windows inside the aggregate (no explicit
-    join); the oracle reproduces the expansion with a 3-offset
-    generate_series cross join, which is exactly what the operator
-    computes."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours", "2 hours").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
+# Hopping windows: 6-hour windows every 2 hours (3 windows per event).
 Q57_SQL = """
 WITH expanded AS (
   SELECT time_bucket(INTERVAL '2 hours', ts) - (o.off * INTERVAL '2 hours') AS window_start
@@ -2225,26 +1652,7 @@ GROUP BY window_start
 """
 
 
-def q58_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot/melt (the inverse of q46's pivot): orders' numeric
-    facets to long (key, metric, value) form via the stack expression —
-    one projection, rows × n_metrics output, no shuffle at all."""
-    o = _t(spark, sf_dir, "orders")
-    wide = o.select(
-        "o_orderkey",
-        F.col("o_totalprice").alias("total_price"),
-        F.year("o_orderdate").cast("double").alias("order_year"),
-        F.length("o_orderpriority").cast("double").alias("priority_len"),
-    )
-    return wide.select(
-        "o_orderkey",
-        F.expr(
-            "stack(3, 'total_price', total_price, 'order_year', order_year,"
-            " 'priority_len', priority_len) AS (metric, value)"
-        ),
-    ).select("o_orderkey", "metric", F.round("value", 4).alias("value"))
-
-
+# Unpivot/melt (the inverse of q46): orders' numeric facets to long form.
 Q58_SQL = """
 SELECT o_orderkey, metric, ROUND(value, 4) AS value FROM (
   SELECT o_orderkey, 'total_price' AS metric, o_totalprice AS value FROM orders
@@ -2286,7 +1694,7 @@ def q59_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_cumsum,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     budget = 50_000
     toks = docs.select(
         "doc_id", "lang", ws_token_count(F.col("text")).alias("n_tok")
@@ -2328,7 +1736,7 @@ def q60_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", ws_tokens(F.lower(F.col("text"))).alias("_t")
     )
@@ -2380,7 +1788,7 @@ def q61_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
         ngram_decontaminate,
     )
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # round-12 A/B: round-robin-parallelizing the corpus side ahead of
     # the gram explode (ensure_min_partitions) measured 1.23 → 3.84 s
     # min-of-5 at sf0.1 — the text exchange + 32-task scheduling costs
@@ -2429,7 +1837,7 @@ def q62_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select("doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -2479,7 +1887,7 @@ def q63_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale swap in ``percentile_approx`` (t-digest, mergeable
     sketches) — exact percentile must collect each group's values; the
     approx form is the 100 TB default, kept exact here for the oracle."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     pct = F.percentile("value", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
     return (
         ev.groupBy("event_type")
@@ -2518,7 +1926,7 @@ def q64_range_join_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         binned_range_join,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     epoch = F.lit("1970-01-01").cast("date")
     windows = (
         orders.agg(F.min(F.to_date("o_orderdate")).alias("_mn"))
@@ -2568,31 +1976,7 @@ ORDER BY window_id
 """
 
 
-def q65_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split by content-independent id
-    hash — the split must be stable across runs, partitionings, and
-    engines, which ``F.rand`` is not. First hex char of sha256(doc_id):
-    0-b → train (12/16), c-d → val (2/16), e-f → test (2/16). Pure JVM
-    expressions, one partial-agg shuffle on the 3 split keys; sha256
-    hex is identical in Spark and DuckDB so the oracle reproduces the
-    exact assignment."""
-    docs = _t(spark, sf_dir, "documents")
-    h = F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 1)
-    split = (
-        F.when(h <= "b", "train").when(h <= "d", "val").otherwise("test")
-    )
-    return (
-        docs.select(split.alias("split"), "doc_id", "n_chars")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_id").cast("bigint").alias("id_checksum"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-        .orderBy("split")
-    )
-
-
+# Deterministic train/val/test split by the first hex char of sha256(doc_id).
 Q65_SQL = """
 WITH s AS (
   SELECT CASE WHEN SUBSTR(sha256(CAST(doc_id AS VARCHAR)), 1, 1) <= 'b' THEN 'train'
@@ -2627,7 +2011,7 @@ def q66_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         redact_pii,
     )
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     contact = F.concat(
         F.col("c_name"),
         F.lit(" <"),
@@ -2687,7 +2071,7 @@ def q67_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         fuzzy_join_ed1,
     )
 
-    names = _t(spark, sf_dir, "customer").select("c_name")
+    names = load_table(spark, sf_dir, "customer").select("c_name")
     pairs = fuzzy_join_ed1(names, names, "c_name", "c_name", self_join=True).filter(
         F.col("left_key") != F.col("right_key")
     )
@@ -2712,32 +2096,7 @@ ORDER BY c_name
 """
 
 
-def q68_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of event values per event type — 20 buckets
-    over the global [min, max]. Two passes: a 1-row global-stats agg
-    broadcast back onto the scan (no driver round-trip, no collect),
-    then one partial-agg shuffle on (event_type, bucket). The bucket
-    arithmetic keeps the IDENTICAL operation order in both engines so
-    IEEE-754 floor boundaries agree exactly; rounding happens only on
-    the displayed bucket floor, never the bucket id."""
-    ev = _t(spark, sf_dir, "events")
-    stats = ev.agg(F.min("value").alias("_mn"), F.max("value").alias("_mx"))
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(20.0)
-    bucket = F.least(
-        F.floor((F.col("value") - F.col("_mn")) / width), F.lit(19)
-    ).cast("int")
-    return (
-        ev.crossJoin(F.broadcast(stats))
-        .select("event_type", bucket.alias("bucket"), (F.col("_mn") + bucket * width).alias("_lo"))
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("_lo"), 4).alias("bucket_lo"),
-        )
-        .orderBy("event_type", "bucket")
-    )
-
-
+# Equi-width 20-bucket histogram of event values per type over the global range.
 Q68_SQL = """
 WITH s AS (
   SELECT MIN(value) AS mn, MAX(value) AS mx FROM events
@@ -2756,30 +2115,7 @@ ORDER BY event_type, bucket
 """
 
 
-def q69_trailing_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-RANGE rolling aggregate — trailing 1-hour count and sum per
-    user, a RANGE frame over event-time micros (the row-count windows
-    of W1-W5 can't express \"last hour\" under irregular event spacing).
-    One window shuffle on user_id; the frame is
-    rangeBetween(-3.6e9 µs, 0) over unix_micros so tie rows (same user,
-    same timestamp) are frame peers in both engines."""
-    ev = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros(F.col("ts")))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.count(F.lit(1)).over(w).alias("n_trailing"),
-            F.round(F.sum("value").over(w), 4).alias("sum_trailing"),
-        )
-        .orderBy("event_id")
-    )
-
-
+# Time-RANGE rolling aggregate: trailing 1-hour count and sum per user.
 Q69_SQL = """
 SELECT event_id, user_id,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing,
@@ -2796,20 +2132,20 @@ ORDER BY event_id
 # ---------------------------------------------------------------------------
 
 QUERIES: dict[str, QuerySpec] = {
-    "q01_pricing_summary": QuerySpec(q01_pricing_summary, Q01_SQL),
-    "q02_top_revenue_orders": QuerySpec(q02_top_revenue_orders, Q02_SQL),
-    "q03_segment_revenue": QuerySpec(q03_segment_revenue, Q03_SQL),
-    "q04_priority_exists": QuerySpec(q04_priority_exists, Q04_SQL),
-    "q05_region_rollup": QuerySpec(q05_region_rollup, Q05_SQL),
-    "q06_revenue_delta": QuerySpec(q06_revenue_delta, Q06_SQL),
-    "q07_case_bands": QuerySpec(q07_case_bands, Q07_SQL),
+    "q01_pricing_summary": QuerySpec(partial(run_sql, Q01_SQL), Q01_SQL),
+    "q02_top_revenue_orders": QuerySpec(partial(run_sql, Q02_SQL), Q02_SQL),
+    "q03_segment_revenue": QuerySpec(partial(run_sql, Q03_SQL), Q03_SQL),
+    "q04_priority_exists": QuerySpec(partial(run_sql, Q04_SQL), Q04_SQL),
+    "q05_region_rollup": QuerySpec(partial(run_sql, Q05_SQL), Q05_SQL),
+    "q06_revenue_delta": QuerySpec(partial(run_sql, Q06_SQL), Q06_SQL),
+    "q07_case_bands": QuerySpec(partial(run_sql, Q07_SQL), Q07_SQL),
     "q08_conditional_share": QuerySpec(q08_conditional_share, Q08_SQL),
     "q09_weighted_avg": QuerySpec(q09_weighted_avg, Q09_SQL),
     "q10_grouping_sets": QuerySpec(q10_grouping_sets, Q10_SQL),
-    "q11_distinct_count": QuerySpec(q11_distinct_count, Q11_SQL),
-    "q12_anti_join": QuerySpec(q12_anti_join, Q12_SQL),
-    "q13_semi_join": QuerySpec(q13_semi_join, Q13_SQL),
-    "q14_union_tag": QuerySpec(q14_union_tag, Q14_SQL),
+    "q11_distinct_count": QuerySpec(partial(run_sql, Q11_SQL), Q11_SQL),
+    "q12_anti_join": QuerySpec(partial(run_sql, Q12_SQL), Q12_SQL),
+    "q13_semi_join": QuerySpec(partial(run_sql, Q13_SQL), Q13_SQL),
+    "q14_union_tag": QuerySpec(partial(run_sql, Q14_SQL), Q14_SQL),
     "q15_topk_per_group": QuerySpec(q15_topk_per_group, Q15_SQL),
     "q16_dedup_first": QuerySpec(q16_dedup_first, Q16_SQL),
     "q17_rolling_events": QuerySpec(q17_rolling_events, Q17_SQL),
@@ -2817,11 +2153,11 @@ QUERIES: dict[str, QuerySpec] = {
     "q19_ffill": QuerySpec(q19_ffill, Q19_SQL),
     "q20_percent_rank": QuerySpec(q20_percent_rank, Q20_SQL),
     "q21_sessionize": QuerySpec(q21_sessionize, Q21_SQL),
-    "q22_daily_counts": QuerySpec(q22_daily_counts, Q22_SQL),
-    "q23_hourly_profile": QuerySpec(q23_hourly_profile, Q23_SQL),
-    "q24_json_extract": QuerySpec(q24_json_extract, Q24_SQL),
-    "q25_text_stats": QuerySpec(q25_text_stats, Q25_SQL),
-    "q26_exact_dedup": QuerySpec(q26_exact_dedup, Q26_SQL),
+    "q22_daily_counts": QuerySpec(partial(run_sql, Q22_SQL), Q22_SQL),
+    "q23_hourly_profile": QuerySpec(partial(run_sql, SPARK_SQL["q23_hourly_profile"]), Q23_SQL),
+    "q24_json_extract": QuerySpec(partial(run_sql, SPARK_SQL["q24_json_extract"]), Q24_SQL),
+    "q25_text_stats": QuerySpec(partial(run_sql, SPARK_SQL["q25_text_stats"]), Q25_SQL),
+    "q26_exact_dedup": QuerySpec(partial(run_sql, SPARK_SQL["q26_exact_dedup"]), Q26_SQL),
     "q27_embedding_topk": QuerySpec(q27_embedding_topk, Q27_SQL),
     "q28_bpe_tokens": QuerySpec(q28_bpe_tokens, Q28_SQL),
     "q29_language_id": QuerySpec(q29_language_id, _lang_id_sql()),
@@ -2833,44 +2169,37 @@ QUERIES: dict[str, QuerySpec] = {
     "q35_embedding_neardup": QuerySpec(q35_embedding_neardup, Q35_SQL),
     "q36_ann_lsh_topk": QuerySpec(q36_ann_lsh_topk, Q36_SQL),
     "q37_knn_per_label": QuerySpec(q37_knn_per_label, Q37_SQL),
-    "q38_media_metadata": QuerySpec(q38_media_metadata, Q38_SQL),
+    "q38_media_metadata": QuerySpec(partial(run_sql, SPARK_SQL["q38_media_metadata"]), Q38_SQL),
     "q39_frame_sample": QuerySpec(q39_frame_sample, Q39_SQL),
     "q40_numeric_profile": QuerySpec(q40_numeric_profile, Q40_SQL),
-    "q41_left_enrich": QuerySpec(q41_left_enrich, Q41_SQL),
-    "q42_union_missing_columns": QuerySpec(q42_union_missing_columns, Q42_SQL),
-    "q43_session_windows": QuerySpec(q43_session_windows, Q43_SQL),
+    "q41_left_enrich": QuerySpec(partial(run_sql, Q41_SQL), Q41_SQL),
+    "q42_union_missing_columns": QuerySpec(partial(run_sql, Q42_SQL), Q42_SQL),
+    "q43_session_windows": QuerySpec(partial(run_sql, Q43_SQL), Q43_SQL),
     "q44_asof_attribution": QuerySpec(q44_asof_attribution, Q44_SQL),
-    "q45_rollup_revenue": QuerySpec(q45_rollup_revenue, Q45_SQL),
-    "q46_pivot_event_types": QuerySpec(q46_pivot_event_types, Q46_SQL),
+    "q45_rollup_revenue": QuerySpec(partial(run_sql, Q45_SQL), Q45_SQL),
+    "q46_pivot_event_types": QuerySpec(partial(run_sql, Q46_SQL), Q46_SQL),
     "q47_oscillation_window": QuerySpec(q47_oscillation_window, Q47_SQL),
-    "q48_custom_sort": QuerySpec(q48_custom_sort, Q48_SQL),
+    "q48_custom_sort": QuerySpec(partial(run_sql, Q48_SQL), Q48_SQL),
     "q49_ivf_topk": QuerySpec(q49_ivf_topk, Q49_SQL),
     "q50_dedup_clusters": QuerySpec(q50_dedup_clusters, Q50_SQL),
     "q51_bm25_search": QuerySpec(q51_bm25_search, Q51_SQL),
-    "q52_event_sequences": QuerySpec(q52_event_sequences, Q52_SQL),
-    "q53_stratified_sample": QuerySpec(q53_stratified_sample, Q53_SQL),
+    "q52_event_sequences": QuerySpec(partial(run_sql, SPARK_SQL["q52_event_sequences"]), Q52_SQL),
+    "q53_stratified_sample": QuerySpec(partial(run_sql, SPARK_SQL["q53_stratified_sample"]), Q53_SQL),
     "q54_sketch_aggregates": QuerySpec(q54_sketch_aggregates, Q54_SQL),
     "q55_latest_state_upsert": QuerySpec(q55_latest_state_upsert, Q55_SQL),
-    "q56_tumbling_windows": QuerySpec(q56_tumbling_windows, Q56_SQL),
-    "q57_hopping_windows": QuerySpec(q57_hopping_windows, Q57_SQL),
-    "q58_unpivot_melt": QuerySpec(q58_unpivot_melt, Q58_SQL),
+    "q56_tumbling_windows": QuerySpec(partial(run_sql, SPARK_SQL["q56_tumbling_windows"]), Q56_SQL),
+    "q57_hopping_windows": QuerySpec(partial(run_sql, SPARK_SQL["q57_hopping_windows"]), Q57_SQL),
+    "q58_unpivot_melt": QuerySpec(partial(run_sql, Q58_SQL), Q58_SQL),
     "q59_shard_packing": QuerySpec(q59_shard_packing, Q59_SQL),
     "q60_top_bigrams": QuerySpec(q60_top_bigrams, Q60_SQL),
     "q61_decontaminate": QuerySpec(q61_decontaminate, Q61_SQL),
     "q62_repetition_quality": QuerySpec(q62_repetition_quality, Q62_SQL),
     "q63_value_percentiles": QuerySpec(q63_value_percentiles, Q63_SQL),
     "q64_range_join_windows": QuerySpec(q64_range_join_windows, Q64_SQL),
-    "q65_hash_split": QuerySpec(q65_hash_split, Q65_SQL),
+    "q65_hash_split": QuerySpec(partial(run_sql, SPARK_SQL["q65_hash_split"]), Q65_SQL),
     "q66_pii_redaction": QuerySpec(q66_pii_redaction, Q66_SQL),
     "q67_fuzzy_name_match": QuerySpec(q67_fuzzy_name_match, Q67_SQL),
-    "q68_value_histogram": QuerySpec(q68_value_histogram, Q68_SQL),
-    "q69_trailing_hour": QuerySpec(q69_trailing_hour, Q69_SQL),
+    "q68_value_histogram": QuerySpec(partial(run_sql, Q68_SQL), Q68_SQL),
+    "q69_trailing_hour": QuerySpec(partial(run_sql, SPARK_SQL["q69_trailing_hour"]), Q69_SQL),
+    **EXT_QUERIES,
 }
-
-# q70+ live in analytics_ext (import must follow QuerySpec/_t definitions
-# above — analytics_ext imports them back from this module).
-from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics_ext import (  # noqa: E402
-    EXT_QUERIES,
-)
-
-QUERIES.update(EXT_QUERIES)

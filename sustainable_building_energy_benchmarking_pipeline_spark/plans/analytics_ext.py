@@ -2,8 +2,10 @@
 cohort analytics, statistical profiling, and time-series interpolation.
 
 Same contract as ``plans/analytics.py`` (each query paired with a DuckDB
-oracle); split into a second module purely to keep file sizes sane. The
-registry in ``analytics.py`` merges ``EXT_QUERIES`` at import time.
+oracle; a body or one Spark SQL text run by ``run_sql``); split into a
+second module purely to keep file sizes sane. ``analytics.py`` imports
+``EXT_QUERIES`` and merges it into the registry; this module imports
+nothing from ``analytics``.
 
 Determinism rules are identical: unique tiebreakers under every LIMIT /
 top-k, floats rounded the same on both sides, count-likes BIGINT.
@@ -11,16 +13,21 @@ top-k, floats rounded the same on both sides, count-likes BIGINT.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators import windows as W
-from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import (
-    Q50_SQL as _Q50_SQL,
+from sustainable_building_energy_benchmarking_pipeline_spark.plans.sql_frontend import (
+    Q50_SQL,
+    SPARK_SQL,
+    QuerySpec,
+    run_sql,
 )
-from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QuerySpec, _t
+from sustainable_building_energy_benchmarking_pipeline_spark.session import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -30,37 +37,7 @@ from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics imp
 CHUNK_CHARS = 200
 
 
-def q70_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size character chunking — the training-sequence prep step
-    that turns a document corpus into bounded-length chunks (cf. the
-    reference's row-window feature framing; here the LLM-corpus analog).
-
-    Scale: pure JVM ``sequence``/``posexplode``/``substring`` — narrow,
-    no shuffle at all; output partitioning inherits the scan. The
-    ``length > 0`` guard matters because ``sequence(0, -1)`` counts
-    DOWN instead of producing an empty sequence.
-    """
-    docs = _t(spark, sf_dir, "documents").where(F.length("text") > 0)
-    n_chunks = F.ceil(F.length("text") / F.lit(float(CHUNK_CHARS))).cast("int")
-    chunk = F.col("text").substr(
-        F.col("chunk_id") * CHUNK_CHARS + 1, F.lit(CHUNK_CHARS)
-    )
-    return (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id", "_i"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "chunk_id",
-            F.length(chunk).alias("chunk_chars"),
-            F.sha2(chunk, 256).alias("chunk_sha"),
-        )
-        .orderBy("doc_id", "chunk_id")
-    )
-
-
+# Fixed-size character chunking of documents (training-sequence prep).
 Q70_SQL = f"""
 WITH e AS (
   SELECT doc_id, text,
@@ -79,48 +56,7 @@ ORDER BY doc_id, chunk_id
 # Event analytics: funnel / cohorts / mode
 # ---------------------------------------------------------------------------
 
-def q71_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict-order funnel (view → click after it → purchase after that):
-    per-stage distinct-user counts. Classic product-analytics sequence
-    query the reference's per-zone rule chain approximates.
-
-    Scale: three grouped-min aggregations, each shuffled on user_id; the
-    stage tables shrink monotonically, and each join is on the same
-    user_id key so AQE coalesces to the same partitioning. No window, no
-    collect."""
-    ev = _t(spark, sf_dir, "events")
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("stage"), F.count(F.lit(1)).alias("users")
-        )
-
-    return (
-        stage("view", v)
-        .unionByName(stage("view>click", c))
-        .unionByName(stage("view>click>purchase", p))
-    )
-
-
+# Strict-order funnel (view → click → purchase): per-stage distinct users.
 Q71_SQL = """
 WITH v AS (
   SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
@@ -143,32 +79,7 @@ SELECT 'view>click>purchase', CAST((SELECT COUNT(*) FROM p) AS BIGINT)
 """
 
 
-def q72_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention: users grouped by first-seen week, distinct
-    active users per (cohort_week, week_offset).
-
-    Scale: two aggregations and one join, all keyed on user_id — one
-    shuffle partitioning serves all three (AQE reuses it); the final
-    (cohort, offset) agg is tiny. date_trunc('week') is Monday-based in
-    both engines."""
-    ev = _t(spark, sf_dir, "events")
-    first = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
-    )
-    active = ev.select(
-        "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("wk")
-    ).distinct()
-    return (
-        active.join(first, "user_id")
-        .groupBy(
-            "cohort_week",
-            (F.datediff("wk", "cohort_week") / 7).cast("int").alias("week_offset"),
-        )
-        .agg(F.count(F.lit(1)).alias("users"))
-        .orderBy("cohort_week", "week_offset")
-    )
-
-
+# Weekly cohort retention: active users per (cohort_week, week_offset).
 Q72_SQL = """
 WITH first AS (
   SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS DATE) AS cohort_week
@@ -186,31 +97,7 @@ ORDER BY cohort_week, week_offset
 """
 
 
-def q73_mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mode per group — each user's most frequent event type, ties broken
-    alphabetically. The grouped-argmax shape (A6's top-N cousin with a
-    deterministic tiebreak).
-
-    Scale: count agg shuffles on (user, type); the argmax is
-    ``max_by`` over a sort-key struct in a second agg on user — no
-    window, no row_number, both aggs partial-combine map-side."""
-    ev = _t(spark, sf_dir, "events")
-    cnt = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    # max_by with an orderable struct: highest n, then lexicographically
-    # SMALLEST type — negate by using reversed string is ugly; instead
-    # min_by on (-n, type).
-    pick = cnt.groupBy("user_id").agg(
-        F.min_by(
-            F.struct(F.col("event_type"), F.col("n")), F.struct(-F.col("n"), F.col("event_type"))
-        ).alias("_m")
-    )
-    return pick.select(
-        "user_id",
-        F.col("_m.event_type").alias("mode_type"),
-        F.col("_m.n").alias("n"),
-    ).orderBy("user_id")
-
-
+# Mode per user: the most frequent event type, ties broken alphabetically.
 Q73_SQL = """
 WITH cnt AS (
   SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
@@ -244,7 +131,7 @@ def q74_ntile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         distributed_ntile,
     )
 
-    cust = _t(spark, sf_dir, "customer").select("c_acctbal", "c_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_acctbal", "c_custkey")
     return (
         distributed_ntile(cust, ["c_acctbal", "c_custkey"], 4, out_col="bucket")
         .groupBy("bucket")
@@ -271,26 +158,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-def q75_numeric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation / sample covariance between lineitem measures,
-    per return flag — the feature-correlation profile step of an ML prep
-    pipeline.
-
-    Scale: one shuffle on l_returnflag (3 groups); corr/covar are
-    single-pass partial-aggregable moments (JVM ImperativeAggregate), so
-    map-side combine reduces each partition to 3 moment tuples."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.round(F.corr("l_quantity", "l_discount"), 6).alias("corr_qty_disc"),
-            F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias("covar_qty_price"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
+# Pearson correlation / sample covariance of lineitem measures per return flag.
 Q75_SQL = """
 SELECT l_returnflag,
        ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
@@ -312,7 +180,7 @@ def q76_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins of 5-row dims back to the fact — the fact table is
     scanned twice but never shuffled wide (percentile shuffles 5 groups).
     ``percentile`` ≡ DuckDB ``quantile_cont`` (q63 precedent)."""
-    ev = _t(spark, sf_dir, "events").select("event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
@@ -380,7 +248,7 @@ def q77_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join at corpus scale (stopword terms are hot keys; AQE skew
     split handles it, and a min-df/stopword prune is the knob). The N
     scalar joins as a broadcast literal-row, not a collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = (
         docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
@@ -435,33 +303,7 @@ ORDER BY doc_id, rank
 """
 
 
-def q80_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-distribution Shannon entropy per document — the
-    information-density quality signal complementing q62's repetition
-    ratios (low entropy ⇒ repetitive/templated text).
-
-    Scale: explode → (doc, term) count → per-doc moment agg. Uses the
-    identity H = log2(n) − (Σ c·log2 c)/n so the second agg is a plain
-    sum (partial-aggregable), not a collect_list."""
-    docs = _t(spark, sf_dir, "documents")
-    cnt = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        cnt.groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            (
-                F.log2(F.sum("c")) - F.sum(F.col("c") * F.log2("c")) / F.sum("c")
-            ).alias("_h"),
-        )
-        .select("doc_id", "n_tokens", F.round("_h", 6).alias("entropy"))
-        .orderBy("doc_id")
-    )
-
-
+# Unigram Shannon entropy per document (H = log2 n − Σ c·log2 c / n).
 Q80_SQL = r"""
 WITH toks AS (
   SELECT doc_id,
@@ -505,7 +347,7 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bfill over the reversed order: one more local sort inside the same
     exchange, and both frames grow incrementally."""
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id", "ts")
         .agg(F.avg("value").alias("value"), F.min("event_id").alias("event_id"))
     )
@@ -609,27 +451,7 @@ ORDER BY user_id, grid_ts
 """
 
 
-def q79_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregate over (orderstatus, order year) — all four grouping
-    combinations in one pass, completing the grouping-sets family (q10
-    GROUPING SETS, q45 ROLLUP).
-
-    Scale: Spark expands CUBE to a 4× row replication before one
-    shuffle — same single-shuffle story as q10; grouping_id
-    disambiguates subtotal NULLs from data NULLs."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderstatus", F.year("o_orderdate").alias("o_year"), "o_totalprice")
-        .cube("o_orderstatus", "o_year")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-        .orderBy("gid", "o_orderstatus", "o_year")
-    )
-
-
+# CUBE over (orderstatus, order year): all four grouping combinations at once.
 Q79_SQL = """
 SELECT o_orderstatus,
        CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
@@ -653,7 +475,7 @@ def q81_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces each partition to 5 moment rows. Hours-since-epoch keeps the
     x scale small enough that both engines' double accumulation agrees
     to the rounding tolerance."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     x = (F.unix_micros("ts") / F.lit(3_600_000_000.0)).alias("x")
     return (
         ev.select("event_type", x, F.col("value").alias("y"))
@@ -695,7 +517,7 @@ def q82_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT/EXCEPT — this is the plan the optimizer should have
     found). The combined year filter still pushes to the parquet scan,
     and the dim join stays broadcast-able."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     y = F.year("o_orderdate")
     both = (
         o.where(y.isin(1995, 1996, 1997))
@@ -708,7 +530,7 @@ def q82_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("_y95") == 1) & (F.col("_y96") == 1) & (F.col("_y97") == 0))
         .select("o_custkey")
     )
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     return (
         both.join(cust, both["o_custkey"] == cust["c_custkey"])
         .groupBy("c_mktsegment")
@@ -732,36 +554,8 @@ ORDER BY c_mktsegment
 """
 
 
-def q83_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-type transition matrix per user stream (Markov
-    prep for behavioral sequence modeling): count and row-normalized
-    probability of each prev→curr pair.
-
-    Scale: one window shuffle on user_id (lag over event-time order,
-    event_id tiebreak for same-ts determinism), then a tiny (5×5 max)
-    aggregation; the probability normalizer is a window over prev_type —
-    25 rows, negligible. No self-join: lag IS the transition operator."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select(
-            "user_id",
-            F.lag("event_type").over(w).alias("prev_type"),
-            F.col("event_type").alias("curr_type"),
-        )
-        .where(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "curr_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wn = Window.partitionBy("prev_type")
-    return trans.select(
-        "prev_type",
-        "curr_type",
-        "n",
-        F.round(F.col("n") / F.sum("n").over(wn), 6).alias("p"),
-    ).orderBy("prev_type", "curr_type")
-
-
+# Event-type transition matrix per user stream. The normalizing window runs
+# over the ≤25-row (prev, curr) aggregate, never the fact.
 Q83_SQL = """
 WITH t AS (
   SELECT user_id,
@@ -790,7 +584,7 @@ def q84_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the fact, bucket index = how many cut points lie
     strictly below the value (sum of three comparisons — no per-row
     search). The fact shuffles only for the final (type, bucket) count."""
-    ev = _t(spark, sf_dir, "events").select("event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     cuts = ev.groupBy("event_type").agg(
         F.expr("percentile(value, array(0.25, 0.5, 0.75))").alias("qs")
     )
@@ -826,30 +620,7 @@ ORDER BY e.event_type, bucket
 """
 
 
-def q85_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group z-score standardization as a declarative plan — the
-    registry-facing form of ml/isolation_forest's StandardScaler step:
-    (value − μ_type)/σ_type for every event, no Python in the loop.
-
-    Scale: grouped moments (5 rows) broadcast back onto the fact — the
-    fact table never shuffles at all (scan → broadcast-join → project);
-    contrast the window form (sum over partition) which would shuffle
-    the full table on event_type — 5 hot keys, the skew trap."""
-    ev = _t(spark, sf_dir, "events")
-    stats = ev.groupBy("event_type").agg(
-        F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
-    )
-    return (
-        ev.join(F.broadcast(stats), "event_type")
-        .select(
-            "event_id",
-            "event_type",
-            F.round((F.col("value") - F.col("mu")) / F.col("sigma"), 6).alias("z"),
-        )
-        .orderBy("event_id")
-    )
-
-
+# Per-type z-score: grouped moments (5 rows) join back onto the fact.
 Q85_SQL = """
 WITH stats AS (
   SELECT event_type, AVG(value) AS mu, STDDEV_SAMP(value) AS sigma
@@ -861,38 +632,7 @@ ORDER BY e.event_id
 """
 
 
-def q86_trailing_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional rolling window: per event, the error count and rate
-    over the user's trailing 10 events — the sliding health signal a
-    rule engine thresholds on (the ROWS-frame cousin of q69's RANGE
-    frame, with a CASE-conditioned aggregate instead of a plain count).
-
-    Scale: one window shuffle on user_id; the conditional sum rides the
-    same frame as the row count — one WindowExec, two aggregates."""
-    ev = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-9, 0)
-    )
-    is_err = F.when(F.col("event_type") == "error", 1).otherwise(0)
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.sum(is_err).over(w).alias("n_errors_10"),
-            F.count(F.lit(1)).over(w).alias("n_window"),
-        )
-        .select(
-            "event_id",
-            "user_id",
-            "n_errors_10",
-            F.round(F.col("n_errors_10") / F.col("n_window"), 6).alias("err_rate"),
-        )
-        .orderBy("event_id")
-    )
-
-
+# Per event, the error count and rate over the user's trailing 10 events.
 Q86_SQL = """
 SELECT event_id, user_id,
        CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) OVER w AS BIGINT) AS n_errors_10,
@@ -905,35 +645,8 @@ ORDER BY event_id
 """
 
 
-def q87_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week growth per event type: weekly value sums, then lag
-    over the week sequence — the trend-report shape (aggregate first,
-    window over the TINY aggregate, never over the fact).
-
-    Scale: the fact shuffles once into (type, week) partial-agg; the lag
-    window runs over ~5×5 rows. Ordering the window by the week column
-    itself keeps missing weeks as true gaps (lag is previous OBSERVED
-    week — documented, matches the oracle)."""
-    ev = _t(spark, sf_dir, "events")
-    weekly = (
-        ev.groupBy(
-            "event_type", F.date_trunc("week", F.col("ts")).cast("date").alias("wk")
-        )
-        .agg(F.round(F.sum("value"), 4).alias("total"))
-    )
-    w = Window.partitionBy("event_type").orderBy("wk")
-    prev = F.lag("total").over(w)
-    return (
-        weekly.select(
-            "event_type",
-            "wk",
-            "total",
-            F.round((F.col("total") - prev) / prev, 6).alias("wow_pct"),
-        )
-        .orderBy("event_type", "wk")
-    )
-
-
+# Week-over-week growth per event type: lag over the tiny (type, week)
+# aggregate, never the fact.
 Q87_SQL = """
 WITH weekly AS (
   SELECT event_type, CAST(date_trunc('week', ts) AS DATE) AS wk,
@@ -948,44 +661,7 @@ ORDER BY event_type, wk
 """
 
 
-def q88_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Funnel completion latency: for users finishing the strict
-    view → click → purchase sequence (q71's stage table), distribution
-    stats of end-to-end seconds — the "how long does conversion take"
-    follow-up every funnel count invites.
-
-    Scale: same three shrinking user_id-keyed aggregations as q71, then
-    ONE global single-row aggregate over the completed-user table (tiny
-    by construction — aggregate of an aggregate, never the fact)."""
-    ev = _t(spark, sf_dir, "events")
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"), F.first("t1").alias("t1"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"), F.first("t1").alias("t1"))
-    )
-    secs = (F.unix_micros("t3") - F.unix_micros("t1")) / 1_000_000.0
-    return p.select(secs.alias("latency_s")).agg(
-        F.count(F.lit(1)).alias("n_converted"),
-        F.round(F.avg("latency_s"), 4).alias("avg_s"),
-        F.round(F.expr("percentile(latency_s, 0.5)"), 4).alias("median_s"),
-        F.round(F.max("latency_s"), 4).alias("max_s"),
-    )
-
-
+# Funnel completion latency: stats of view → purchase seconds (q71's stages).
 Q88_SQL = """
 WITH v AS (
   SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
@@ -1028,7 +704,7 @@ def q89_ivf_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     # max_iter=5: recall depends on cell quality only marginally past a
     # few Lloyd iterations (the rerank is exact within probed cells)
@@ -1048,7 +724,7 @@ def q90_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: narrow projection (no explode — the array never flattens to
     rows), one shuffle on label for the 4-group aggregate."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     sq_norm = F.aggregate(
         "embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
@@ -1090,7 +766,7 @@ def q91_outer_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: narrow generate — no shuffle at all; output order restored by
     sort keys, not by generation order."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     long_toks = F.filter(_tokens(F.col("text")), lambda t: F.length(t) > 8)
     return (
         docs.select("doc_id", F.posexplode_outer(long_toks).alias("pos", "token"))
@@ -1116,44 +792,7 @@ ORDER BY t.doc_id, pos
 """
 
 
-def q92_agg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped top-3 WITHOUT a window: collect_list of (value, id)
-    structs → array_sort → slice → posexplode. The aggregation-based
-    alternative to q15's row_number form — one pass with partial
-    aggregation instead of a full sort of every group (the right shape
-    when k ≪ group size and groups are few; the window form wins when
-    per-group state must stay bounded).
-
-    Scale caveat (docstring IS the contract): collect_list state is
-    O(group size) per key — safe here (struct is 16 bytes, groups are
-    users), but for unbounded groups use the window form or an
-    aggregator with a bounded heap."""
-    ev = _t(spark, sf_dir, "events")
-    sorted_arr = F.array_sort(
-        F.collect_list(F.struct(F.col("value"), F.col("event_id"))),
-        # comparator: value DESC, event_id ASC (unique tiebreak)
-        lambda a, b: F.when(a["value"] > b["value"], -1)
-        .when(a["value"] < b["value"], 1)
-        .otherwise(
-            F.when(a["event_id"] < b["event_id"], -1)
-            .when(a["event_id"] > b["event_id"], 1)
-            .otherwise(0)
-        ),
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(F.slice(sorted_arr, 1, 3).alias("_top"))
-        .select("user_id", F.posexplode("_top").alias("pos", "_s"))
-        .select(
-            "user_id",
-            (F.col("pos") + 1).alias("rank"),
-            F.col("_s.event_id").alias("event_id"),
-            F.round(F.col("_s.value"), 4).alias("value"),
-        )
-        .orderBy("user_id", "rank")
-    )
-
-
+# Grouped top-3 per user by value, with a unique tiebreaker.
 Q92_SQL = """
 WITH r AS (
   SELECT user_id, event_id, value,
@@ -1166,56 +805,8 @@ ORDER BY user_id, rank
 """
 
 
-def q93_dense_rank_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leaderboard with TIES KEPT: dense_rank over rounded value bands
-    per event type, all rows of the top-2 bands — the rank-semantics
-    member (row_number < rank < dense_rank) the top-k family needs for
-    'best N scores including every holder'.
-
-    Scale (round-6 de-skew): dense_rank ≤ 2 needs only the top TWO
-    distinct bands per type, so no window at all — one map-side-
-    combinable collect_set over the DISTINCT bands (state bounded by
-    the band domain, ~10³ rounded values, not by row count), sorted and
-    sliced, broadcast back onto the fact. A ``Window.partitionBy
-    ("event_type")`` over the full fact would rank each enum value in
-    ONE task at scale. NULL bands (none in this data, but the rewrite
-    must not change semantics): both engines' ``ORDER BY band DESC``
-    defaults to NULLS LAST, so the null group dense-ranks at
-    n_distinct_nonnull + 1 — emitted only when an event_type has ≤ 1
-    distinct non-null band. collect_set drops nulls, so that rank is
-    reconstructed explicitly from the set size (a bare equality test
-    would silently drop the null rows the window form keeps)."""
-    ev = _t(spark, sf_dir, "events")
-    band = F.round(F.col("value"), 0)
-    banded = ev.select("event_type", "event_id", band.alias("band"))
-    tops = (
-        banded.groupBy("event_type")
-        .agg(F.sort_array(F.collect_set("band"), False).alias("_bs"))
-        .select(
-            "event_type",
-            # get(): _bs[i] out of bounds is a runtime error under ANSI
-            # mode (an event_type with < 2 distinct non-null bands),
-            # get() yields NULL like the pre-ANSI subscript did
-            F.get("_bs", 0).alias("_b1"),
-            F.get("_bs", 1).alias("_b2"),
-            F.size("_bs").alias("_nb"),
-        )
-    )
-    return (
-        banded.join(F.broadcast(tops), "event_type")
-        .withColumn(
-            "band_rank",
-            F.when(F.col("band") == F.col("_b1"), 1)
-            .when(F.col("band") == F.col("_b2"), 2)
-            .when(F.col("band").isNull() & (F.col("_nb") <= 1), F.col("_nb") + 1)
-            .cast("int"),
-        )
-        .where(F.col("band_rank").isNotNull())
-        .select("event_type", "band_rank", "band", "event_id")
-        .orderBy("event_type", "band_rank", "event_id")
-    )
-
-
+# Leaderboard with ties kept: every row of the top-2 dense-ranked value bands
+# per event type.
 Q93_SQL = """
 WITH r AS (
   SELECT event_type, event_id, ROUND(value, 0) AS band,
@@ -1249,7 +840,7 @@ def q94_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     def geo_mean(v: pd.Series) -> float:
         return float(np.exp(np.log(v[v > 0]).mean()))
 
-    ev = _t(spark, sf_dir, "events").where(F.col("value") > 0)
+    ev = load_table(spark, sf_dir, "events").where(F.col("value") > 0)
     return (
         ev.groupBy("event_type")
         .agg(F.round(geo_mean("value"), 6).alias("geo_mean_value"))
@@ -1288,7 +879,7 @@ def q95_value_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter → explode), not a 3-branch union that would read the fact
     three times."""
     SPAN, MEGA = 100, 2000
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.select("o_orderkey", "o_orderstatus", "o_totalprice")
     mb = F.floor(F.col("o_totalprice") / MEGA).cast("long")
     price = F.col("o_totalprice")
@@ -1348,42 +939,7 @@ ORDER BY o_orderkey
 """
 
 
-def q96_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISCRETE percentiles (quantile_disc semantics): the smallest
-    actual value whose cumulative distribution reaches p — always a
-    value PRESENT in the data, versus q63's interpolated percentile
-    (the two differ on every even-count group; both belong in a complete
-    engine because sketches/optimizer stats use disc and metrics use
-    cont).
-
-    Shape (round-7 re-tune of the round-6 de-skew): Spark's built-in
-    EXACT ``percentile_disc(p) WITHIN GROUP (ORDER BY value)``
-    aggregate — ONE hash exchange, two stage waves, map-side
-    partial_percentile_disc (the plan's ObjectHashAggregate). The
-    round-6 version hand-built the cume_dist from a distinct-value
-    frame + ``stratified_cumsum`` (range exchange + stats self-join +
-    broadcast join ≈ 5 sequential stage waves, 0.94 s at sf0.1); the
-    built-in is 0.07 s for identical results. Skew-safety argument
-    carries over: percentile_disc's aggregation buffer is a counts map
-    over DISTINCT values, so per-task memory is bounded by the value
-    column's domain (cents in a bounded range), not by corpus rows —
-    the dominant event_type costs one merge of value-domain-bounded
-    maps, never a per-row window task."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            *[
-                F.expr(
-                    f"percentile_disc({p}) WITHIN GROUP (ORDER BY value)"
-                ).alias(f"p{int(p * 100):02d}")
-                for p in (0.25, 0.5, 0.9)
-            ]
-        )
-        .orderBy("event_type")
-    )
-
-
+# Discrete percentiles (percentile_disc): always a value present in the data.
 Q96_SQL = """
 SELECT event_type,
        quantile_disc(value, 0.25) AS p25,
@@ -1414,7 +970,7 @@ def q97_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks")
     )
@@ -1497,7 +1053,7 @@ def q98_source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_token_count,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pw = F.pow(F.col("n_tokens").cast("double"), 0.7)
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1548,7 +1104,7 @@ def q99_lexical_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         "lang", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
@@ -1615,7 +1171,7 @@ def z01_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_incremental_dedup,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     history = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     # expected_items is the capacity plan (production incremental dedup
@@ -1673,7 +1229,7 @@ def z02_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         heavy_hitters,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(ws_tokens(F.lower(F.col("text")))).alias("token")
     )
@@ -1705,7 +1261,7 @@ def z03_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         deterministic_shuffle,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return deterministic_shuffle(docs, "doc_id", seed=42).orderBy("doc_id")
 
 
@@ -1733,7 +1289,7 @@ def z04_sharded_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_sharded_bloom,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     history = docs.filter(F.col("doc_id") % 4 != 1)
     batch = docs.filter(F.col("doc_id") % 2 == 0)
     sharded = build_sharded_bloom(
@@ -1796,7 +1352,7 @@ def z05_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result is bit-identical to the window form (same total order per
     stratum, unique doc_id tiebreak) — pinned by
     tests/test_sampling_deskew.py."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     sq = F.sqrt(F.col("n_docs").cast("double"))
     norm = per.agg(
@@ -1873,7 +1429,7 @@ def z06_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         hard_negative_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
         hard_negative_topk(emb, k=1)
         .select(
@@ -1930,7 +1486,7 @@ def z07_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", ws_tokens(F.col("text")).alias("_t")
     ).select(
@@ -2018,47 +1574,8 @@ ORDER BY doc_id
 """
 
 
-def z08_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document caps — the anti-dominance step of corpus
-    curation (no single domain/source may contribute more than C docs):
-    keep each source's 15 lowest sha256(doc_id) ranks (deterministic
-    stand-in for a seeded draw, as in q53) and report kept/dropped
-    counts plus an id checksum of the kept set.
-
-    Scale: the keep-set uses the constant-k window that plans a Partial
-    WindowGroupLimit (bounded at k·maps per source — q53's analysis);
-    totals are one map-side-combinable count. Two scans of the corpus,
-    nothing skew-bound."""
-    docs = _t(spark, sf_dir, "documents")
-    cap = 15
-    w = Window.partitionBy("source").orderBy(
-        F.sha2(F.col("doc_id").cast("string"), 256), F.asc("doc_id")
-    )
-    kept = (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= cap)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-            F.sum("doc_id").cast("bigint").alias("kept_id_checksum"),
-        )
-    )
-    totals = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    return (
-        totals.join(kept, "source")
-        .select(
-            "source",
-            "n_docs",
-            "n_kept",
-            (F.col("n_docs") - F.col("n_kept")).cast("bigint").alias("n_dropped"),
-            "kept_id_checksum",
-        )
-        .orderBy("source")
-    )
-
-
+# Per-source document cap: keep each source's 15 lowest sha256(doc_id) ranks
+# and report kept/dropped counts.
 Z08_SQL = """
 WITH r AS (
   SELECT source, doc_id,
@@ -2100,7 +1617,7 @@ def z09_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         curate_documents,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     capped = curate_documents(docs, dup_frac_max=0.55, source_cap=15)
     return (
         capped.groupBy("lang")
@@ -2203,7 +1720,7 @@ def z10_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # gated: parallelizes single-file corpora ahead of the hash kernel
-    docs = ensure_min_partitions(_t(spark, sf_dir, "documents"))
+    docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     max_df = 50
     posts = (
         winnowing_postings(docs, "text", "doc_id", k=4, w=5)
@@ -2327,7 +1844,7 @@ def z11_lm_perplexity_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle map work repeats). Measured FASTER than the persisted form
     (1.18 s vs 1.66 s at sf0.1: skips MEMORY_AND_DISK serde) and
     ``getPersistentRDDs`` stays untouched."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = (
         docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -2433,7 +1950,7 @@ def z12_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: frames entering the tok join are df-compressed (vocab-sized,
     not corpus-sized); the final aggregate is per-source (tiny). No
     windows, no collects."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     st = (
         docs.select("source", F.explode(_tokens(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")
@@ -2507,7 +2024,7 @@ def z13_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality key, no window, no skew. At 100 TB: the only wide
     exchanges are the two hash aggregations; bytes shuffled are
     O(docs·256·24B) not O(corpus text)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", _tokens(F.col("text")).alias("t"))
     bg = toks.select(
         "doc_id",
@@ -2641,7 +2158,7 @@ def z14_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     combiner cell, not a single-task rank. Both per-doc aggregates are
     doc_id-keyed. At 100 TB this is the same shape as exact dedup
     (q26) one level down: gram-keyed hash agg, integer outputs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", _tokens(F.col("text")).alias("t"))
     tri = (
         toks.select(
@@ -2725,7 +2242,7 @@ def z15_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_prune,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return semdedup_prune(
         emb, threshold=0.35, n_clusters=None, vec_col="embedding",
         id_col="vec_id",
@@ -2804,7 +2321,7 @@ def z16_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         sequence_pack,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.greatest(
@@ -2866,7 +2383,7 @@ def z17_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         leakage_safe_split,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return leakage_safe_split(
         docs, threshold=0.5, num_hashes=32, bands=16
     ).orderBy("doc_id")
@@ -2874,7 +2391,7 @@ def z17_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Z17_SQL = f"""
 WITH q50 AS (
-{_Q50_SQL}
+{Q50_SQL}
 )
 SELECT doc_id, cluster_rep,
        CASE WHEN cluster_rep % 10 < 8 THEN 'train' ELSE 'holdout' END
@@ -2900,7 +2417,7 @@ def z18_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_ngram_spans,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return dup_ngram_spans(docs, k=13).orderBy("doc_id", "span_start")
 
 
@@ -2959,7 +2476,7 @@ def z19_exact_substr_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_substr_cut,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return exact_substr_cut(docs, k=13).orderBy("doc_id")
 
 
@@ -3022,7 +2539,7 @@ def z20_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_documents,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(docs, width=32, stride=24).orderBy(
         "doc_id", "chunk_idx"
     )
@@ -3047,29 +2564,8 @@ ORDER BY doc_id, chunk_idx
 """
 
 
-def z21_unimax_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax language-budget allocation (round-12; Chung et al. 2023):
-    split a 3/4-of-corpus token budget across languages as evenly as
-    the 1-epoch repeat cap allows — the data-mixing decision a
-    multilingual pretraining pipeline makes before sampling. On this
-    corpus the four tail languages are capped at one epoch and English
-    (the head) absorbs the remaining budget as the pivot's even share,
-    exercising both branches of the waterfall. Exact integer
-    arithmetic end-to-end (floor division, basis-point epochs), so the
-    DuckDB oracle replays the closed form bit-for-bit. Scale shape
-    (see plans/curation.unimax_allocation): ONE map-side-combined
-    corpus aggregate; all windows/attaches operate on the
-    #languages-row frame."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.plans.curation import (
-        unimax_allocation,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return unimax_allocation(
-        docs, epoch_cap=1, budget_num=3, budget_den=4
-    ).orderBy("lang")
-
-
+# UniMax language-budget allocation (Chung et al. 2023) in exact integer
+# arithmetic; its windows run over the per-language aggregate.
 Z21_SQL = r"""
 WITH toks AS (
   SELECT lang,
@@ -3134,7 +2630,7 @@ def z22_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_ngram_overlap,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return source_ngram_overlap(docs, k=13).orderBy("source_a", "source_b")
 
 
@@ -3171,70 +2667,8 @@ ORDER BY s.source_a, s.source_b
 """
 
 
-def z23_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-LENGTH distribution drift (round-12): the
-    two-sample Kolmogorov–Smirnov statistic between each source's
-    doc-length CDF and the whole corpus's (source included — the
-    standard drift-monitor framing), in exact-integer basis points:
-    ks_bp = 10000·max_l |cum_src(l)·n_all − cum_all(l)·n_src| div
-    (n_src·n_all). Complements z12's unigram KL: a source whose WORDS
-    look normal but whose documents are suspiciously short/long (truncation
-    bugs, boilerplate stubs, concatenation errors) lights up here.
-
-    Scale shape: the corpus is consumed by ONE (source, length)
-    aggregate; everything after runs on domain-bounded frames — the
-    support grid is |sources| × |distinct lengths| rows, the
-    per-source/global cumulative windows and the two broadcast
-    attaches are all annotated tiny-aggregate shapes. Integer
-    cross-multiplication avoids float CDF subtraction, so the DuckDB
-    oracle replays bit-for-bit."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    lens = docs.where(F.length(F.trim(F.col("text"))) > 0).select(
-        "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("l"),
-    )
-    cnt = lens.groupBy("source", "l").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    support = cnt.select("l").distinct()
-    srcs = cnt.groupBy("source").agg(F.sum("c").alias("n"))
-    grid = (
-        srcs.crossJoin(F.broadcast(support))
-        .join(cnt, ["source", "l"], "left")
-        .fillna(0, ["c"])
-    )
-    cums = grid.withColumn(
-        "cum", F.sum("c").over(Window.partitionBy("source").orderBy("l"))
-    )
-    tot = cnt.groupBy("l").agg(F.sum("c").alias("c_all"))
-    n_all = cnt.agg(F.sum("c").alias("n_all"))
-    tcum = tot.crossJoin(F.broadcast(n_all)).withColumn(
-        "cum_all", F.sum("c_all").over(Window.orderBy("l"))
-    )
-    return (
-        cums.join(tcum.select("l", "cum_all", "n_all"), "l")
-        .groupBy("source", "n", "n_all")
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cum") * F.col("n_all")
-                    - F.col("cum_all") * F.col("n")
-                )
-            ).alias("m")
-        )
-        .select(
-            "source",
-            F.col("n").cast("long").alias("n_docs"),
-            F.expr("(m * 10000) div (n * n_all)")
-            .cast("long")
-            .alias("ks_bp"),
-        )
-        .orderBy("source")
-    )
-
-
+# Per-source KS drift of the token-length distribution in integer basis
+# points; its windows run over the (source, length) aggregate.
 Z23_SQL = r"""
 WITH lens AS (
   SELECT source, LEN(regexp_split_to_array(trim(text), '\s+')) AS l
@@ -3275,33 +2709,33 @@ ORDER BY c.source
 
 
 EXT_QUERIES: dict[str, QuerySpec] = {
-    "q70_doc_chunks": QuerySpec(q70_doc_chunks, Q70_SQL),
-    "q71_funnel_stages": QuerySpec(q71_funnel_stages, Q71_SQL),
-    "q72_cohort_retention": QuerySpec(q72_cohort_retention, Q72_SQL),
-    "q73_mode_event_type": QuerySpec(q73_mode_event_type, Q73_SQL),
+    "q70_doc_chunks": QuerySpec(partial(run_sql, SPARK_SQL["q70_doc_chunks"]), Q70_SQL),
+    "q71_funnel_stages": QuerySpec(partial(run_sql, Q71_SQL), Q71_SQL),
+    "q72_cohort_retention": QuerySpec(partial(run_sql, SPARK_SQL["q72_cohort_retention"]), Q72_SQL),
+    "q73_mode_event_type": QuerySpec(partial(run_sql, Q73_SQL), Q73_SQL),
     "q74_ntile_buckets": QuerySpec(q74_ntile_buckets, Q74_SQL),
-    "q75_numeric_correlation": QuerySpec(q75_numeric_correlation, Q75_SQL),
+    "q75_numeric_correlation": QuerySpec(partial(run_sql, Q75_SQL), Q75_SQL),
     "q76_mad_outliers": QuerySpec(q76_mad_outliers, Q76_SQL),
     "q77_tfidf_terms": QuerySpec(q77_tfidf_terms, Q77_SQL),
     "q78_grid_interpolation": QuerySpec(q78_grid_interpolation, Q78_SQL),
-    "q79_cube_orders": QuerySpec(q79_cube_orders, Q79_SQL),
-    "q80_token_entropy": QuerySpec(q80_token_entropy, Q80_SQL),
+    "q79_cube_orders": QuerySpec(partial(run_sql, Q79_SQL), Q79_SQL),
+    "q80_token_entropy": QuerySpec(partial(run_sql, SPARK_SQL["q80_token_entropy"]), Q80_SQL),
     "q81_linear_trend": QuerySpec(q81_linear_trend, Q81_SQL),
     "q82_intersect_except": QuerySpec(q82_intersect_except, Q82_SQL),
-    "q83_event_transitions": QuerySpec(q83_event_transitions, Q83_SQL),
+    "q83_event_transitions": QuerySpec(partial(run_sql, SPARK_SQL["q83_event_transitions"]), Q83_SQL),
     "q84_equidepth_histogram": QuerySpec(q84_equidepth_histogram, Q84_SQL),
-    "q85_zscore_normalize": QuerySpec(q85_zscore_normalize, Q85_SQL),
-    "q86_trailing_error_rate": QuerySpec(q86_trailing_error_rate, Q86_SQL),
-    "q87_wow_growth": QuerySpec(q87_wow_growth, Q87_SQL),
-    "q88_funnel_latency": QuerySpec(q88_funnel_latency, Q88_SQL),
+    "q85_zscore_normalize": QuerySpec(partial(run_sql, Q85_SQL), Q85_SQL),
+    "q86_trailing_error_rate": QuerySpec(partial(run_sql, SPARK_SQL["q86_trailing_error_rate"]), Q86_SQL),
+    "q87_wow_growth": QuerySpec(partial(run_sql, Q87_SQL), Q87_SQL),
+    "q88_funnel_latency": QuerySpec(partial(run_sql, SPARK_SQL["q88_funnel_latency"]), Q88_SQL),
     "q89_ivf_approx_topk": QuerySpec(q89_ivf_approx_topk, None),
     "q90_embedding_stats": QuerySpec(q90_embedding_stats, Q90_SQL),
     "q91_outer_explode": QuerySpec(q91_outer_explode, Q91_SQL),
-    "q92_agg_topk": QuerySpec(q92_agg_topk, Q92_SQL),
-    "q93_dense_rank_ties": QuerySpec(q93_dense_rank_ties, Q93_SQL),
+    "q92_agg_topk": QuerySpec(partial(run_sql, Q92_SQL), Q92_SQL),
+    "q93_dense_rank_ties": QuerySpec(partial(run_sql, Q93_SQL), Q93_SQL),
     "q94_grouped_agg_udaf": QuerySpec(q94_grouped_agg_udaf, Q94_SQL),
     "q95_value_range_frame": QuerySpec(q95_value_range_frame, Q95_SQL),
-    "q96_percentile_disc": QuerySpec(q96_percentile_disc, Q96_SQL),
+    "q96_percentile_disc": QuerySpec(partial(run_sql, SPARK_SQL["q96_percentile_disc"]), Q96_SQL),
     "q97_boilerplate_ngrams": QuerySpec(q97_boilerplate_ngrams, Q97_SQL),
     "q98_source_mix_weights": QuerySpec(q98_source_mix_weights, Q98_SQL),
     "q99_lexical_richness": QuerySpec(q99_lexical_richness, Q99_SQL),
@@ -3312,7 +2746,7 @@ EXT_QUERIES: dict[str, QuerySpec] = {
     "z05_temperature_sample": QuerySpec(z05_temperature_sample, Z05_SQL),
     "z06_hard_negatives": QuerySpec(z06_hard_negatives, Z06_SQL),
     "z07_repetition_filter": QuerySpec(z07_repetition_filter, Z07_SQL),
-    "z08_source_cap": QuerySpec(z08_source_cap, Z08_SQL),
+    "z08_source_cap": QuerySpec(partial(run_sql, SPARK_SQL["z08_source_cap"]), Z08_SQL),
     "z09_curation_pipeline": QuerySpec(z09_curation_pipeline, Z09_SQL),
     "z10_winnowing_pairs": QuerySpec(z10_winnowing_pairs, Z10_SQL),
     "z11_lm_perplexity_tiers": QuerySpec(z11_lm_perplexity_tiers, Z11_SQL),
@@ -3325,7 +2759,7 @@ EXT_QUERIES: dict[str, QuerySpec] = {
     "z18_dup_ngram_spans": QuerySpec(z18_dup_ngram_spans, Z18_SQL),
     "z19_exact_substr_cut": QuerySpec(z19_exact_substr_cut, Z19_SQL),
     "z20_chunk_overlap": QuerySpec(z20_chunk_overlap, Z20_SQL),
-    "z21_unimax_budget": QuerySpec(z21_unimax_budget, Z21_SQL),
+    "z21_unimax_budget": QuerySpec(partial(run_sql, SPARK_SQL["z21_unimax_budget"]), Z21_SQL),
     "z22_source_overlap": QuerySpec(z22_source_overlap, Z22_SQL),
-    "z23_length_drift": QuerySpec(z23_length_drift, Z23_SQL),
+    "z23_length_drift": QuerySpec(partial(run_sql, SPARK_SQL["z23_length_drift"]), Z23_SQL),
 }

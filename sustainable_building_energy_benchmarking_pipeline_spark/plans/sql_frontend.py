@@ -5,9 +5,15 @@ slicing, ``quantile_cont``, ``ASOF JOIN`` ...).
 The reference drives its store exclusively through SQL strings
 (reference src/db.py:138-163), so SQL-string parity is product surface,
 not test scaffolding: a user porting reference SQL must be able to run
-every query shape through ``spark.sql(...)`` and get the DataFrame
-plan's answer. ``tests/test_sql_surface.py`` asserts exactly that for
-every entry here plus the ANSI-portable oracles at sf0.001.
+every query shape through ``spark.sql(...)``.
+
+For 21 queries the text here IS the implementation: their registry entry
+is ``QuerySpec(partial(run_sql, SPARK_SQL[name]), oracle)``, and the
+DuckDB oracle checks the translation. For the queries that keep a
+DataFrame body, ``tests/test_sql_surface.py`` asserts the text gives the
+body's answer at sf0.001. ``run_sql`` and ``QuerySpec`` live here too,
+since both registry modules import them and this module imports nothing
+from ``plans``.
 
 Dialect translation notes (DuckDB → Spark):
 - ``string_split_regex``→``split``, ``list_filter``→``filter``,
@@ -25,6 +31,47 @@ Dialect translation notes (DuckDB → Spark):
 """
 
 from __future__ import annotations
+
+import re
+from dataclasses import dataclass
+from typing import Callable, Optional
+
+from pyspark.sql import DataFrame, SparkSession
+
+from sustainable_building_energy_benchmarking_pipeline_spark.session import (
+    EXPECTED_TESTDATA_COLUMNS,
+    load_table,
+)
+
+
+@dataclass(frozen=True)
+class QuerySpec:
+    """One registry query: ``fn(spark, sf_dir) -> DataFrame`` and its
+    DuckDB oracle text (``None``: rows-only check)."""
+
+    fn: Callable[[SparkSession, str], DataFrame]
+    sql: Optional[str]
+
+
+# A testdata table named as a whole word. On the registry's texts this
+# finds exactly their FROM/JOIN tables: no CTE, alias or column is
+# spelled like one.
+_TABLE_NAME = re.compile(r"\b(" + "|".join(EXPECTED_TESTDATA_COLUMNS) + r")\b")
+
+
+def run_sql(text: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run a registry SQL text over the tables in ``sf_dir``.
+
+    Each testdata table the text names is bound to a temp view of that
+    name through ``session.load_table``, so a table missing from
+    ``sf_dir`` raises there, and a view left by an earlier ``sf_dir`` is
+    never read. ``spark.sql`` analyzes at once, so the returned frame
+    keeps reading ``sf_dir`` after a later call rebinds the views.
+    """
+    for name in dict.fromkeys(_TABLE_NAME.findall(text)):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(text)
+
 
 # Shared fragments -----------------------------------------------------------
 
@@ -1664,4 +1711,47 @@ SELECT c.source, c.n AS n_docs,
 FROM cums c JOIN tcum t USING (l)
 GROUP BY c.source, c.n, t.n_all
 ORDER BY c.source
+"""
+
+
+# DuckDB oracle of q50, which z17's oracle (analytics_ext) wraps as a CTE.
+# It lives here because analytics imports analytics_ext: the one module
+# both import is the one that can hold it.
+Q50_SQL = r"""
+WITH RECURSIVE
+d AS (
+  SELECT doc_id, list_filter(string_split_regex(TRIM(LOWER(text)), '\s+'), t -> t <> '') AS toks
+  FROM documents
+), s AS (
+  SELECT doc_id,
+         CASE WHEN LEN(toks) >= 3 THEN
+           list_distinct(list_transform(range(1, LEN(toks) - 1), i -> array_to_string(toks[i:i+2], ' ')))
+         WHEN LEN(toks) > 0 THEN [array_to_string(toks, ' ')]
+         ELSE [] END AS sh
+  FROM d
+), z AS (
+  SELECT doc_id, LEN(sh) AS n, UNNEST(sh) AS g FROM s
+), i AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         COUNT(*) AS inter, ANY_VALUE(a.n) AS na, ANY_VALUE(b.n) AS nb
+  FROM z a JOIN z b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+), p AS (
+  SELECT id_a, id_b FROM i
+  WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.5
+), e AS (
+  SELECT id_a AS u, id_b AS v FROM p
+  UNION
+  SELECT id_b, id_a FROM p
+), closure(u, v) AS (
+  SELECT u, v FROM e
+  UNION
+  SELECT c.u, e2.v FROM closure c JOIN e e2 ON c.v = e2.u
+), m AS (
+  SELECT u, LEAST(u, MIN(v)) AS rep FROM closure GROUP BY u
+)
+SELECT doc_id,
+       COALESCE(m.rep, doc_id) AS cluster_rep,
+       doc_id = COALESCE(m.rep, doc_id) AS is_rep
+FROM documents LEFT JOIN m ON documents.doc_id = m.u
 """

@@ -254,12 +254,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     """Load the driver testdata parquet tables as a dict of DataFrames and
     register each as a temp view (so ``spark.sql`` works symmetrically with
     the DuckDB oracle)."""
-    all_names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
     out = {}
-    for name in names or all_names:
+    for name in names or EXPECTED_TESTDATA_COLUMNS:
         if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
             df = load_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)

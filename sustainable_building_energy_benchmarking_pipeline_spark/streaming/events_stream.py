@@ -1,11 +1,11 @@
 """Structured Streaming sessionization over the events stream.
 
-The streaming counterpart of plans.analytics.q43_session_windows: the
-SAME ``session_window`` aggregation under an event-time watermark. In
+The streaming counterpart of the registry query q43_session_windows:
+``session_window`` aggregation under an event-time watermark. In
 append mode a (user, session) row emits once the watermark passes the
 session's close (last event + gap) — Spark merges/extends open sessions
-in state until then, which is exactly the semantics the batch
-gaps-and-islands form computes in one pass.
+in state until then, which is exactly the semantics q43's batch
+gaps-and-islands SQL computes in one pass.
 
 Scale: state is keyed by (user_id, open session) — the hash shuffle on
 user_id bounds per-executor state to its user subset, and the watermark

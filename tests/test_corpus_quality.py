@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-# via the merged registry: importing analytics_ext directly would hit
-# the analytics ↔ analytics_ext import cycle before it resolves
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
 
 z11_lm_perplexity_tiers = QUERIES["z11_lm_perplexity_tiers"].fn

@@ -301,8 +301,11 @@ def test_no_unbounded_following_row_frame(spark, name):
     if name in _OPERATOR_PLANS:
         df = _OPERATOR_PLANS[name](spark)
     elif name.startswith("sql:"):
+        text = SPARK_SQL[name[4:]]
+        if getattr(QUERIES[name[4:]].fn, "args", (None,))[0] is text:
+            return  # the registry runs this very text: its QUERIES case plans it
         load_tables(spark, SF_DIR)
-        df = spark.sql(SPARK_SQL[name[4:]])
+        df = spark.sql(text)
     else:
         df = QUERIES[name].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -37,3 +37,26 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(mod.oracle_sql()) <= set(mod.queries())
+
+
+def test_sql_query_raises_on_missing_table(spark, sf_dir, tmp_path):
+    """A text query reads only ``sf_dir``: a table missing there raises
+    and names the table, even when an earlier call bound its view."""
+    fn = QUERIES["q01_pricing_summary"].fn
+    fn(spark, sf_dir).collect()
+    with pytest.raises(Exception, match="lineitem"):
+        fn(spark, str(tmp_path)).collect()
+
+
+def test_sql_query_frame_stays_bound_to_its_dir(spark, sf_dir, tmp_path):
+    """A frame built for one ``sf_dir`` keeps returning that dir's rows
+    after the same query is built for another (its views rebound)."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
+        "l_returnflag = 'R'"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    fn = QUERIES["q01_pricing_summary"].fn
+    first = fn(spark, sf_dir)
+    want = sorted(map(tuple, first.collect()))
+    other = sorted(map(tuple, fn(spark, str(tmp_path)).collect()))
+    assert other and other != want
+    assert sorted(map(tuple, first.collect())) == want

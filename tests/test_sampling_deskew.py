@@ -13,10 +13,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators.windows import stratified_rank
-from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import (
-    QUERIES,
-    q53_stratified_sample,
-)
+from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
+
+q53_stratified_sample = QUERIES["q53_stratified_sample"].fn
 
 
 def test_q53_plans_partial_window_group_limit(spark):
