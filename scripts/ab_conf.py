@@ -13,15 +13,12 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import warm
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
 from sustainable_building_energy_benchmarking_pipeline_spark.session import (
-    get_spark,
-    load_tables,
+    SessionMemo,
     clear_query_cache,
-)
-from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
-    _CLUSTER_LABEL_CACHE,
-    _GRAM_FRAME_CACHE,
+    get_spark,
 )
 
 
@@ -34,28 +31,15 @@ def main():
     key, val_a, val_b, *names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ab-conf")
-    spark.range(1).count()
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-
-    def _identity(it):
-        yield from it
-
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
+    warm(spark, sf_dir)
 
     def run_one(name):
-        pre = set(_CLUSTER_LABEL_CACHE)
-        gpre = set(_GRAM_FRAME_CACHE)
+        snap = SessionMemo.snapshot()
         t0 = time.perf_counter()
         df = QUERIES[name].fn(spark, sf_dir)
         df.count()
         dt = time.perf_counter() - t0
-        for k in [k for k in _CLUSTER_LABEL_CACHE if k not in pre]:
-            _CLUSTER_LABEL_CACHE.pop(k, None)
-        for k in [k for k in _GRAM_FRAME_CACHE if k not in gpre]:
-            entry = _GRAM_FRAME_CACHE.pop(k, None)
-            if entry is not None:
-                entry[1].unpersist(blocking=False)
+        SessionMemo.restore(snap)
         clear_query_cache(spark)
         return dt
 

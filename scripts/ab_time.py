@@ -9,15 +9,12 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import warm
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
 from sustainable_building_energy_benchmarking_pipeline_spark.session import (
-    get_spark,
-    load_tables,
+    SessionMemo,
     clear_query_cache,
-)
-from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
-    _CLUSTER_LABEL_CACHE,
-    _GRAM_FRAME_CACHE,
+    get_spark,
 )
 
 
@@ -30,45 +27,11 @@ def main():
     names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ab-time")
-    spark.range(1).count()
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-
-    def _identity(it):
-        yield from it
-
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
-    # bench-equivalent codegen warmup (abridged)
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    base = spark.range(100_000).select(
-        _F.col("id"), (_F.col("id") % 97).alias("k"), _F.rand(7).alias("x"),
-        _F.concat(_F.lit("s"), (_F.col("id") % 1000).cast("string")).alias("s"),
-    )
-    small = spark.range(97).select(_F.col("id").alias("k"), _F.lit("d").alias("d"))
-    (base.join(_F.broadcast(small), "k").groupBy("k")
-     .agg(_F.sum("x").alias("sx"), _F.count(_F.lit(1)).alias("n"))
-     .orderBy(_F.desc("sx")).limit(5).count())
-    base.join(base.select("id", _F.col("x").alias("y")), "id").groupBy("k").count().count()
-    (base.select("id", "k",
-                 _F.avg("x").over(_W.partitionBy("k").orderBy("id").rowsBetween(-2, 0)).alias("m"),
-                 _F.lag("x", 1).over(_W.partitionBy("k").orderBy("id")).alias("l"))
-     .where(_F.col("m") > 0).count())
-    (base.select("k", _F.explode(_F.split(_F.repeat(_F.col("s"), 3), "s")).alias("t"))
-     .groupBy("k", "t").count().count())
-
-    cache_pre, gram_pre = {}, {}
+    warm(spark, sf_dir)
+    snaps = {}
 
     def run_one(name):
-        pre = cache_pre.setdefault(name, set(_CLUSTER_LABEL_CACHE))
-        for k in [k for k in _CLUSTER_LABEL_CACHE if k not in pre]:
-            _CLUSTER_LABEL_CACHE.pop(k, None)
-        gpre = gram_pre.setdefault(name, set(_GRAM_FRAME_CACHE))
-        for k in [k for k in _GRAM_FRAME_CACHE if k not in gpre]:
-            entry = _GRAM_FRAME_CACHE.pop(k, None)
-            if entry is not None:
-                entry[1].unpersist(blocking=False)
+        SessionMemo.restore(snaps.setdefault(name, SessionMemo.snapshot()))
         t0 = time.perf_counter()
         df = QUERIES[name].fn(spark, sf_dir)
         df.count()

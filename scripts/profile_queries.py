@@ -17,11 +17,11 @@ import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import warm
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
 from sustainable_building_energy_benchmarking_pipeline_spark.session import (
-    get_spark,
-    load_tables,
     clear_query_cache,
+    get_spark,
 )
 
 
@@ -34,14 +34,7 @@ def main():
     names = sys.argv[1:] or sorted(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile-queries")
-    spark.range(1).count()
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-
-    def _identity(it):
-        yield from it
-
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
+    warm(spark, sf_dir)
 
     app_id = api("applications")[0]["id"]
 

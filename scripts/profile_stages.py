@@ -9,11 +9,11 @@ import sys
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import warm
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
 from sustainable_building_energy_benchmarking_pipeline_spark.session import (
-    get_spark,
-    load_tables,
     clear_query_cache,
+    get_spark,
 )
 
 
@@ -26,14 +26,7 @@ def main():
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile-stages")
-    spark.range(1).count()
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-
-    def _identity(it):
-        yield from it
-
-    spark.range(256).repartition(32).mapInPandas(_identity, "id long").count()
+    warm(spark, sf_dir)
     app_id = api("applications")[0]["id"]
 
     for name in names:

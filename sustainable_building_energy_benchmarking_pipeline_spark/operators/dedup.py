@@ -10,13 +10,19 @@ Scale design — the whole point of these shapes at 100 TB:
   within explicit blocking keys;
 - embedding near-dup has a brute-force (exact, oracle-able) form and a
   random-hyperplane-LSH form whose bucket join is the 100 TB path.
+
+Two derived artifacts are reused within a session through the memo
+owner in ``session.py``: ``dedup_clusters``' driver-side label maps
+(``CLUSTER_LABELS``) and the persisted k-gram frame the ExactSubstr
+family shares (``GRAM_FRAMES``). Both are keyed by the input's
+canonical plan, its file signature and every knob;
+``clear_cluster_label_cache`` / ``clear_gram_frame_cache`` drop them.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import threading
 
 import numpy as np
 import pandas as pd
@@ -29,6 +35,11 @@ from sustainable_building_energy_benchmarking_pipeline_spark.functions.text impo
 from sustainable_building_energy_benchmarking_pipeline_spark.operators.partitioning import (
     ensure_min_partitions,
     pin_shuffle_width,
+)
+from sustainable_building_energy_benchmarking_pipeline_spark.session import (
+    CLUSTER_LABELS,
+    GRAM_FRAMES,
+    register_query_cache,
 )
 
 
@@ -584,8 +595,6 @@ def minhash_near_duplicates(
     )
     use_broadcast = False
     from pyspark import StorageLevel
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.session import register_query_cache
 
     combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
     register_query_cache(combined)  # outlives the call: release handle
@@ -1177,87 +1186,40 @@ def _union_find_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
-#: Session-scoped memo of driver-side cluster label maps, keyed by
-#: (analyzed-plan semanticHash of the input, every clustering knob).
-#: Near-dup clustering is the single most expensive derived artifact a
-#: curation session computes (q50's LSH + verify + union-find), and
-#: real pipelines consume the SAME labels several times — cluster-level
-#: dedup, then the leakage-safe split, then per-cluster stats. The memo
-#: makes the second and later consumers pay one projection instead of
-#: re-running the pipeline (VERDICT r10 directive #6). Staleness
-#: semantics match ``spark.catalog.cacheTable``: labels reflect the
-#: input AS READ when first computed — after mutating the underlying
-#: files in place, call :func:`clear_cluster_label_cache`. Bounded: at
-#: most ``_CLUSTER_CACHE_MAX`` entries (true LRU — hits refresh
-#: recency), each a (canonical-plan string, labels dict) pair (the
-#: driver already held the labels transiently; no DataFrames are
-#: pinned, and the canonical string confirms a hit so a 32-bit
-#: semanticHash collision can never cross corpora).
-_CLUSTER_LABEL_CACHE: "dict[tuple, dict]" = {}
-_CLUSTER_CACHE_MAX = 4
-_CLUSTER_CACHE_LOCK = threading.Lock()
-
-
 def clear_cluster_label_cache() -> None:
-    """Drop every memoized cluster label map (see
-    ``_CLUSTER_LABEL_CACHE``). Call after rewriting the files a cached
-    clustering was computed from — same contract as un-caching a table
-    Spark has cached. (Round-12: plain file rewrites are already caught
-    by the input signature in the key; this remains for mutations the
-    file listing cannot see.)"""
-    with _CLUSTER_CACHE_LOCK:
-        _CLUSTER_LABEL_CACHE.clear()
-
-
-#: Session-scoped memo of the PERSISTED positional-gram frame the
-#: ExactSubstr family shares (round-12, VERDICT r11 #6): z18
-#: (dup_ngram_spans) and z19 (exact_substr_cut) over the same corpus
-#: otherwise each build and persist an identical tokenize+hash frame —
-#: the dominant CPU of both plans (~3.4 s combined at sf0.1). Keyed
-#: like the label memo: (plan semanticHash, input signature, knobs),
-#: canonical-plan string confirming each hit. Entries hold persisted
-#: DataFrames, so the LRU bound doubles as the unpersist discipline —
-#: eviction and clear_gram_frame_cache() unpersist, closing the
-#: unbounded-persist leak (ADVICE r11 #4). A hit whose frame was
-#: un-cached externally (spark.catalog.clearCache) re-persists: the
-#: lineage is still valid, the next action just rebuilds the cache.
-_GRAM_FRAME_CACHE: "dict[tuple, tuple]" = {}
-_GRAM_CACHE_MAX = 2
+    """Drop every memoized cluster label map. Call after mutating the
+    files a cached clustering was computed from in a way the file
+    listing cannot see (plain rewrites already change the input
+    signature in the key) — same contract as un-caching a table Spark
+    has cached."""
+    CLUSTER_LABELS.clear()
 
 
 def clear_gram_frame_cache() -> None:
-    """Unpersist and drop every memoized gram frame (see
-    ``_GRAM_FRAME_CACHE``)."""
-    with _CLUSTER_CACHE_LOCK:
-        for _canon, frame in _GRAM_FRAME_CACHE.values():
-            frame.unpersist(blocking=False)
-        _GRAM_FRAME_CACHE.clear()
+    """Unpersist and drop every memoized gram frame."""
+    GRAM_FRAMES.clear()
 
 
 def _shared_gram_frame(
     corpus: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
     """The persisted (doc_id, p, h) positional k-gram-hash frame both
-    ExactSubstr operators consume — memoized per (corpus plan, input
-    signature, k, columns) so detect (z18) and cut (z19) over the same
-    corpus pay the tokenize + hash explode once per session, not once
-    per operator."""
+    ExactSubstr operators consume — memoized so detect (z18) and cut
+    (z19) over the same corpus pay the tokenize + hash explode once per
+    session, not once per operator."""
     from pyspark import StorageLevel
 
-    fp, canon = _plan_fingerprint(corpus)
+    fp = _plan_fingerprint(corpus)
+    # the input signature makes an in-place rewrite of the files a miss
     key = (fp, _input_signature(corpus), k, text_col, id_col)
-    if fp is not None:
-        with _CLUSTER_CACHE_LOCK:
-            entry = _GRAM_FRAME_CACHE.get(key)
-            if entry is not None and entry[0] == canon:
-                _GRAM_FRAME_CACHE.pop(key)
-                _GRAM_FRAME_CACHE[key] = entry  # LRU refresh
-                frame = entry[1]
-                if frame.storageLevel == StorageLevel.NONE:
-                    # externally un-cached (clearCache): re-arm — the
-                    # lineage is intact, the next action refills
-                    frame.persist(StorageLevel.MEMORY_AND_DISK)
-                return frame
+    app = corpus.sparkSession.sparkContext.applicationId
+    frame = GRAM_FRAMES.get(key, app=app) if fp is not None else None
+    if frame is not None:
+        if frame.storageLevel == StorageLevel.NONE:
+            # externally un-cached (clearCache): re-arm — the lineage
+            # is intact, the next action refills
+            frame.persist(StorageLevel.MEMORY_AND_DISK)
+        return frame
     grams = _pos_gram_hashes(_ws_words(corpus, text_col, id_col), k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -1269,13 +1231,7 @@ def _shared_gram_frame(
     # post-cache count is columnar-batch row counts.
     grams.count()
     if fp is not None:
-        with _CLUSTER_CACHE_LOCK:
-            if len(_GRAM_FRAME_CACHE) >= _GRAM_CACHE_MAX:
-                _old, old_frame = _GRAM_FRAME_CACHE.pop(
-                    next(iter(_GRAM_FRAME_CACHE))
-                )
-                old_frame.unpersist(blocking=False)
-            _GRAM_FRAME_CACHE[key] = (canon, grams)
+        GRAM_FRAMES.put(key, grams, app=app)
     return grams
 
 
@@ -1288,7 +1244,7 @@ def _input_signature(df: DataFrame) -> str | None:
     Spark change the part-file NAMES, in-place edits change mtime/size;
     either flips the signature. Cost is one driver-side listing the
     scan already performed plus a stat per local file — bounded by
-    file count, paid only by ``use_cache`` callers. Returns None when
+    file count, paid only by the memoized operators. Returns None when
     the listing is unavailable (Connect-only sessions); callers fold
     the None in (memo still keyed by plan, documented cacheTable
     staleness semantics apply)."""
@@ -1313,22 +1269,20 @@ def _input_signature(df: DataFrame) -> str | None:
     return h.hexdigest()
 
 
-def _plan_fingerprint(df: DataFrame):
+def _plan_fingerprint(df: DataFrame) -> tuple[int, str] | None:
     """(semanticHash, canonicalized-plan string) of a DataFrame's
     ANALYZED logical plan — Catalyst's own expression-id-agnostic
     identity, so two reads of the same path with the same projection
-    collide, which is exactly the memo-hit we want. The canonical
-    string rides along because semanticHash is a 32-bit bucket, not an
-    identity: Spark itself confirms bucket hits with sameResult, and
-    the memo does the equivalent string compare so a hash collision
-    can never return the wrong corpus's labels. Returns (None, None)
-    when the JVM plan is unreachable (Connect-only sessions); callers
-    skip the memo then."""
+    collide, which is exactly the memo hit we want. Both halves go into
+    memo keys: semanticHash covers a LocalRelation's rows (the string
+    does not), and the string rules out a 32-bit hash collision across
+    corpora. None when the JVM plan is unreachable (Connect-only
+    sessions); callers skip the memo then."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         return plan.semanticHash(), plan.canonicalized().toString()
     except Exception:
-        return None, None
+        return None
 
 
 def _labels_frame(spark, labels: dict) -> DataFrame:
@@ -1413,7 +1367,6 @@ def dedup_clusters(
     shingle_k: int = 3,
     seed: int = 42,
     driver_max_pairs: int = 5_000_000,
-    use_cache: bool = True,
 ) -> DataFrame:
     """Cluster near-duplicate documents and pick a representative: the
     full LLM-corpus dedup endgame (pairs alone under-remove — three
@@ -1436,43 +1389,26 @@ def dedup_clusters(
     distributed min-label propagation in ``connected_components``. The
     collect is bounded by the gate, not the corpus.
 
-    ``use_cache`` (round-11, VERDICT r10 #6): memoize the driver-side
-    label map per (input plan semanticHash, input file signature, every
-    knob) so a session that consumes the same clustering more than once
-    — cluster dedup, then ``leakage_safe_split``, then per-cluster
-    stats — pays the LSH pipeline ONCE and a projection thereafter.
-    Staleness (round-12, ADVICE r11): rewriting the underlying files
-    flips the file-list/size/mtime signature in the key, so the next
-    call recomputes instead of serving stale labels;
-    ``clear_cluster_label_cache`` remains for mutations the listing
-    cannot see. The over-gate distributed path is never memoized."""
-    if use_cache:
-        fp, canon = _plan_fingerprint(df)
-        # driver_max_pairs is in the key although it never changes the
-        # LABELS (both strategies produce identical components): callers
-        # pinning it are choosing an execution strategy, and a memo hit
-        # from a different strategy's run would silently undo that.
-        # The input signature (file list + size/mtime, round-12) makes
-        # an in-place rewrite of the underlying files a MISS instead of
-        # a stale hit — clear_cluster_label_cache stays for exotic
-        # mutations the listing cannot see.
-        cache_key = (
-            fp, _input_signature(df), threshold, text_col, id_col,
-            num_hashes, bands, shingle_k, seed, driver_max_pairs,
-        )
-        if fp is not None:
-            with _CLUSTER_CACHE_LOCK:
-                entry = _CLUSTER_LABEL_CACHE.get(cache_key)
-                if entry is not None and entry[0] == canon:
-                    # true LRU: a hit refreshes recency so the hottest
-                    # clustering is evicted last, and the canonical-plan
-                    # compare rules out a semanticHash bucket collision
-                    _CLUSTER_LABEL_CACHE.pop(cache_key)
-                    _CLUSTER_LABEL_CACHE[cache_key] = entry
-                else:
-                    entry = None
-            if entry is not None:
-                return _attach_cluster_labels(df, entry[1], id_col)
+    The driver-side label map is memoized (``session.CLUSTER_LABELS``),
+    so a session that consumes the same clustering more than once —
+    cluster dedup, then ``leakage_safe_split``, then per-cluster stats —
+    pays the LSH pipeline ONCE and a projection thereafter. Rewriting
+    the input files changes the key, so the next call recomputes;
+    ``clear_cluster_label_cache`` is the opt-out and covers mutations
+    the file listing cannot see. The over-gate distributed path is
+    never memoized."""
+    fp = _plan_fingerprint(df)
+    # driver_max_pairs is in the key although it never changes the
+    # LABELS (both strategies produce identical components): callers
+    # pinning it are choosing an execution strategy, and a memo hit from
+    # a different strategy's run would silently undo that.
+    cache_key = (
+        fp, _input_signature(df), threshold, text_col, id_col,
+        num_hashes, bands, shingle_k, seed, driver_max_pairs,
+    )
+    labels = CLUSTER_LABELS.get(cache_key) if fp is not None else None
+    if labels is not None:
+        return _attach_cluster_labels(df, labels, id_col)
     # persist_shingles=True (round-12): the pair-frame persist below
     # does NOT stop the upstream kernel from running once per consumer
     # branch — AQE materializes the band and verify stages in parallel
@@ -1505,13 +1441,8 @@ def dedup_clusters(
         labels = _union_find_components(
             zip(probe["id_a"].tolist(), probe["id_b"].tolist())
         )
-        if use_cache and fp is not None:
-            with _CLUSTER_CACHE_LOCK:
-                if len(_CLUSTER_LABEL_CACHE) >= _CLUSTER_CACHE_MAX:
-                    # evict the LEAST-RECENTLY-USED entry (hits re-append,
-                    # so iteration order IS recency order)
-                    _CLUSTER_LABEL_CACHE.pop(next(iter(_CLUSTER_LABEL_CACHE)))
-                _CLUSTER_LABEL_CACHE[cache_key] = (canon, labels)
+        if fp is not None:
+            CLUSTER_LABELS.put(cache_key, labels)
         # map-literal attach (≤4096 labels): near-dup labels cover a
         # sliver of the corpus, so skip the join entirely — one
         # projection over the scan, no broadcast build/exchange (same

@@ -29,6 +29,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sustainable_building_energy_benchmarking_pipeline_spark.session import (
+    BLOOM_BROADCASTS,
+    register_query_cache,
+)
+
 # two fixed xxhash64 seeds -> double hashing h_i = h1 + i*h2 (Kirsch &
 # Mitzenmacher: k independent-enough probe positions from two hashes)
 _SEED_A = 0x51_7CC1B7
@@ -347,29 +352,19 @@ def sharded_bloom_membership(
     )
 
 
-# Broadcast-handle cache: one Spark broadcast per (filter content,
-# application), so repeated membership calls in a long-lived session
-# (per-micro-batch incremental dedup) reuse ONE broadcast instead of
-# pinning a fresh megabyte-scale copy each call. Keys are the filter's
-# precomputed sha256 digest — an O(1) lookup, never re-hashing the
-# multi-MB bits — plus the applicationId; entries from stopped
-# SparkContexts are dropped on the next insert (their py4j handles are
-# dead weight once the app is gone), and the cache is size-capped.
-_BC_CACHE: dict[tuple[str, str], object] = {}
-_BC_CACHE_MAX = 64
-
-
 def _bloom_broadcast(df: DataFrame, bloom: BloomFilter):
+    """One Spark broadcast per filter content, so repeated membership
+    calls in a long-lived session (per-micro-batch incremental dedup)
+    reuse ONE broadcast instead of pinning a fresh megabyte-scale copy
+    each call. Keyed by the filter's precomputed sha256 digest — an
+    O(1) lookup, never re-hashing the multi-MB bits."""
     sc = df.sparkSession.sparkContext
-    key = (bloom.digest, sc.applicationId)
-    bc = _BC_CACHE.get(key)
+    bc = BLOOM_BROADCASTS.get(bloom.digest, app=sc.applicationId)
     if bc is None:
-        for stale in [k for k in _BC_CACHE if k[1] != sc.applicationId]:
-            _BC_CACHE.pop(stale, None)
-        if len(_BC_CACHE) >= _BC_CACHE_MAX:
-            _BC_CACHE.pop(next(iter(_BC_CACHE)))
-        bc = sc.broadcast((bloom.bits, bloom.m, bloom.k))
-        _BC_CACHE[key] = bc
+        bc = BLOOM_BROADCASTS.put(
+            bloom.digest, sc.broadcast((bloom.bits, bloom.m, bloom.k)),
+            app=sc.applicationId,
+        )
     return bc
 
 
@@ -458,10 +453,6 @@ def bloom_incremental_dedup(
             # release registry so clear_query_cache() (the bench
             # harness's per-query hygiene) still releases it — callers
             # never leak an unreachable persisted frame (ADVICE r11 #4)
-            from sustainable_building_energy_benchmarking_pipeline_spark.session import (
-                register_query_cache,
-            )
-
             register_query_cache(flagged)
     definitely_new = flagged.filter(~F.col("_bloom_hit")).drop("_bloom_hit")
     maybe_dup = flagged.filter(F.col("_bloom_hit")).drop("_bloom_hit")

@@ -10,11 +10,20 @@ the same code runs unchanged on a multi-executor cluster at 100 TB:
 - shuffle partitions sized from the env (local) — on a real cluster AQE
   coalesces from a high initial number, so we set the initial high and let
   AQE shrink rather than hand-tuning per job.
+
+It also owns all session-scoped reuse: ``SessionMemo`` is one bounded,
+locked, app-scoped LRU type, and the engine's memos (loaded tables,
+persisted query intermediates, cluster labels, gram frames, Bloom
+broadcasts, parsed Delta log actions) are the namespaces declared
+below.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -112,40 +121,140 @@ EXPECTED_TESTDATA_COLUMNS: dict[str, set[str]] = {
     "embeddings": {"vec_id", "embedding", "label"},
 }
 
-# Loaded-table cache keyed by (spark app id, sf_dir, table, source mtime).
-# DataFrames are immutable logical plans, so reuse across queries is safe;
-# this removes the repeated footer-read/analysis cost when the driver sweeps
-# 90+ registry queries in one session. The mtime in the key invalidates
-# naturally when a testdata path is regenerated in-place (several tests
-# rewrite derived dirs); the size bound keeps many-sf_dir sessions from
-# growing without limit.
-_TABLE_CACHE: dict[tuple[str, str, str, float], object] = {}
-_TABLE_CACHE_MAX = 256
+class SessionMemo:
+    """One named namespace of session-derived state: a bounded LRU with
+    its own lock and an optional ``release`` hook run on every value it
+    drops (eviction, replacement, ``clear``, ``restore``).
+
+    Namespaces holding Spark handles are ``app_scoped``: every key is
+    qualified by the caller's ``sparkContext.applicationId`` (``app=``),
+    so a restarted session is never handed a stopped one's frame, and
+    the next insert drops the entries of any other application. An
+    entry reflects its input as read when computed (the
+    ``spark.catalog.cacheTable`` contract), so keys carry whatever input
+    signature (mtime, file list) the call site can see.
+
+    ``snapshot()``/``restore()`` cover every namespace at once, so a
+    harness that re-runs a query can pin the memo state its first run
+    saw."""
+
+    _all: "dict[str, SessionMemo]" = {}
+
+    def __init__(self, name: str, maxsize: int | None = None,
+                 release=None, app_scoped: bool = False) -> None:
+        self.name, self.maxsize = name, maxsize
+        self._release, self._app_scoped = release, app_scoped
+        self._lock = threading.Lock()
+        self._entries: OrderedDict = OrderedDict()
+        SessionMemo._all[name] = self
+
+    def _key(self, key, app):
+        if not self._app_scoped:
+            return key
+        if app is None:
+            raise TypeError(f"memo {self.name!r} is app-scoped: pass app=")
+        return (app, key)
+
+    def get(self, key, app: str | None = None):
+        """The value under ``key`` (refreshing its recency), or None."""
+        k = self._key(key, app)
+        with self._lock:
+            value = self._entries.get(k)
+            if value is not None:
+                self._entries.move_to_end(k)
+            return value
+
+    def put(self, key, value, app: str | None = None):
+        """Store ``value`` as the most recent entry and return it."""
+        k = self._key(key, app)
+        with self._lock:
+            old = self._entries.pop(k, None)
+            dropped = [] if old is None or old is value else [old]
+            if self._app_scoped:
+                dropped += self._pop(lambda d: d[0] != app)
+            self._entries[k] = value
+            while self.maxsize is not None and len(self._entries) > self.maxsize:
+                dropped.append(self._entries.popitem(last=False)[1])
+        self._release_all(dropped)
+        return value
+
+    def clear(self) -> int:
+        """Drop every entry; returns how many were released."""
+        with self._lock:
+            dropped = self._pop(lambda k: True)
+        return self._release_all(dropped)
+
+    def keys(self) -> list:
+        """Entry keys, least recent first; ``(app, key)`` when app-scoped."""
+        with self._lock:
+            return list(self._entries)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def _pop(self, doomed) -> list:
+        """Remove the entries whose key ``doomed`` selects (lock held)."""
+        return [self._entries.pop(k) for k in list(self._entries) if doomed(k)]
+
+    def _release_all(self, values) -> int:
+        n = 0
+        for v in values:
+            try:
+                if self._release is not None:
+                    self._release(v)
+                n += 1
+            except Exception:
+                pass  # owning session already stopped: nothing to release
+        return n
+
+    @classmethod
+    def snapshot(cls) -> dict[str, frozenset]:
+        """The keys every namespace holds, for ``restore``."""
+        return {name: frozenset(m.keys()) for name, m in cls._all.items()}
+
+    @classmethod
+    def restore(cls, snap: dict[str, frozenset]) -> None:
+        """Drop (and release) every entry added since ``snap``. Entries
+        evicted since then stay gone."""
+        for name, m in cls._all.items():
+            keep = snap.get(name, frozenset())
+            with m._lock:
+                dropped = m._pop(lambda k: k not in keep)
+            m._release_all(dropped)
+
+
+def _unpersist(df) -> None:
+    df.unpersist(blocking=False)
+
+
+# The engine's namespaces; those holding Spark handles are app-scoped.
+# tables: load_table's plans (footer reads and analysis paid once per
+# table in a registry sweep). query_handles: frames a query persisted,
+# unbounded — clear_query_cache(spark) must release them all.
+# cluster_labels: dedup_clusters' driver-side label maps. gram_frames:
+# the persisted k-gram frame z18/z19 share. bloom_broadcasts: one
+# broadcast per filter content. delta_actions: parsed Delta log files.
+TABLES = SessionMemo("tables", maxsize=256, app_scoped=True)
+QUERY_HANDLES = SessionMemo("query_handles", release=_unpersist)
+CLUSTER_LABELS = SessionMemo("cluster_labels", maxsize=4)
+GRAM_FRAMES = SessionMemo("gram_frames", maxsize=2, release=_unpersist, app_scoped=True)
+BLOOM_BROADCASTS = SessionMemo("bloom_broadcasts", maxsize=64, app_scoped=True)
+DELTA_ACTIONS = SessionMemo("delta_actions", maxsize=8192)
+
+_handle_ids = itertools.count()
 
 
 def clear_table_cache() -> None:
     """Drop all memoized table plans (for tests that rewrite testdata and
     need the new file listing picked up immediately)."""
-    _TABLE_CACHE.clear()
-
-
-# Release-handle registry for queries that persist an intermediate
-# (z01/z04's bloom-flagged batch — the single-scan posture documented in
-# operators/sketches.bloom_incremental_dedup). The CONTRACT: a registry
-# query may persist only through register_query_cache(); a library user
-# looping such queries over corpus shards calls clear_query_cache(spark)
-# between shards (or relies on spark.catalog.clearCache(), which is a
-# superset) and the storage cache returns to its pre-call baseline —
-# asserted by tests/test_cache_lifecycle.py. Entries are unpersisted
-# lazily and the list never grows past the few frames of one run loop.
-_QUERY_CACHES: list = []
+    TABLES.clear()
 
 
 def register_query_cache(df) -> None:
     """Record a persisted DataFrame so ``clear_query_cache`` can release
-    it deterministically (the cache_out release-handle pattern of
-    ``bloom_incremental_dedup``, lifted to the query registry layer)."""
-    _QUERY_CACHES.append(df)
+    it deterministically: a registry query persists only through this,
+    so the storage cache returns to its pre-call baseline."""
+    QUERY_HANDLES.put(next(_handle_ids), df)
 
 
 def clear_query_cache(spark: SparkSession | None = None) -> int:
@@ -153,15 +262,7 @@ def clear_query_cache(spark: SparkSession | None = None) -> int:
     call; returns how many were released. Safe to call at any time —
     released plans recompute from source on the next action (correctness
     is unaffected; only the single-scan cost posture is)."""
-    n = 0
-    while _QUERY_CACHES:
-        df = _QUERY_CACHES.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing left to release
-    return n
+    return QUERY_HANDLES.clear()
 
 
 def _path_mtime(path: str) -> float:
@@ -196,13 +297,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     from pyspark.sql import functions as F
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    cache_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        _path_mtime(path),
-    )
-    cached = _TABLE_CACHE.get(cache_key)
+    # the mtime picks up a testdata dir regenerated in place
+    cache_key = (os.path.abspath(sf_dir), name, _path_mtime(path))
+    app = spark.sparkContext.applicationId
+    cached = TABLES.get(cache_key, app=app)
     if cached is not None:
         return cached
     if name == "events":
@@ -244,10 +342,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
                 f"{df.columns}. Update session.EXPECTED_TESTDATA_COLUMNS and "
                 f"the affected queries together."
             )
-    if len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:
-        _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
-    _TABLE_CACHE[cache_key] = df
-    return df
+    return TABLES.put(cache_key, df, app=app)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):

@@ -51,6 +51,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from sustainable_building_energy_benchmarking_pipeline_spark.session import DELTA_ACTIONS
+
 _LOG_DIR = "_delta_log"
 
 
@@ -76,20 +78,13 @@ def _list_versions(path: str) -> list[int]:
     return sorted(out)
 
 
-# Parsed-commit cache. Commit JSONs are immutable once published (the
-# put-if-absent ``_commit``), so parse results are cached keyed by
-# (abspath, mtime_ns, size) — a table recreated at the same path gets a
-# different key. Without this, every streaming micro-batch re-opens and
-# re-parses the WHOLE log twice (last_txn_version + write_delta's
-# schema-enforcement replay): O(V) file reads per batch, O(V²) over a
-# stream's lifetime. With it, replay after the first is dict lookups +
-# one stat per commit. Callers get a two-level shallow COPY (the action
-# dicts and their nested payload dicts are fresh per call) so a caller
-# annotating an add action cannot corrupt every later replay — the copy
-# is cheap relative to re-parsing and removes the docstring-only
-# convention the cache used to rely on.
-_ACTION_CACHE: dict[tuple[str, int, int], list[dict[str, Any]]] = {}
-_ACTION_CACHE_MAX = 8192
+# Parsed commits and checkpoints are memoized (``session.DELTA_ACTIONS``)
+# so streaming micro-batches do not re-parse the whole log twice per
+# batch (O(V²) over a stream's lifetime). Log files are immutable once
+# published (the put-if-absent ``_commit``), so keys are (abspath,
+# mtime_ns, size): a table recreated at the same path gets a different
+# key. Callers get a two-level shallow COPY (``_copy_actions``) so one
+# that annotates an action cannot corrupt every later replay.
 
 
 def _copy_actions(actions: list[dict[str, Any]]) -> list[dict[str, Any]]:
@@ -103,13 +98,10 @@ def _read_actions(path: str, version: int) -> list[dict[str, Any]]:
     f = _commit_file(path, version)
     st = os.stat(f)
     key = (os.path.abspath(f), st.st_mtime_ns, st.st_size)
-    hit = _ACTION_CACHE.get(key)
+    hit = DELTA_ACTIONS.get(key)
     if hit is None:
         with open(f) as fh:
-            hit = [json.loads(line) for line in fh if line.strip()]
-        if len(_ACTION_CACHE) >= _ACTION_CACHE_MAX:
-            _ACTION_CACHE.pop(next(iter(_ACTION_CACHE)))
-        _ACTION_CACHE[key] = hit
+            hit = DELTA_ACTIONS.put(key, [json.loads(line) for line in fh if line.strip()])
     return _copy_actions(hit)
 
 
@@ -416,7 +408,7 @@ def _read_checkpoint_actions(path: str, version: int) -> list[dict[str, Any]]:
         (os.path.abspath(f), os.stat(f).st_mtime_ns, os.stat(f).st_size)
         for f in files
     )
-    hit = _ACTION_CACHE.get(key)
+    hit = DELTA_ACTIONS.get(key)
     if hit is None:
 
         def _rows_to_actions(tbl) -> tuple[list[dict], list[str]]:
@@ -486,9 +478,7 @@ def _read_checkpoint_actions(path: str, version: int) -> list[dict[str, Any]]:
                     "further sidecars — not a legal v2 checkpoint"
                 )
             hit.extend(side_actions)
-        if len(_ACTION_CACHE) >= _ACTION_CACHE_MAX:
-            _ACTION_CACHE.pop(next(iter(_ACTION_CACHE)))
-        _ACTION_CACHE[key] = hit
+        DELTA_ACTIONS.put(key, hit)
     return _copy_actions(hit)
 
 

@@ -11,6 +11,7 @@ from sustainable_building_energy_benchmarking_pipeline_spark.operators import (
     multimodal,
     similarity,
 )
+from sustainable_building_energy_benchmarking_pipeline_spark.session import CLUSTER_LABELS
 
 
 @pytest.fixture(scope="module")
@@ -755,16 +756,10 @@ def test_cluster_label_cache_hit_and_invalidate(corpus, monkeypatch):
     dedup.dedup_clusters(corpus, threshold=0.4, num_hashes=32, bands=8).collect()
     assert calls["n"] == 1
 
-    # use_cache=False bypasses both lookup and store
-    dedup.dedup_clusters(
-        corpus, threshold=0.4, num_hashes=32, bands=16, use_cache=False
-    ).collect()
-    assert calls["n"] == 2
-
     # invalidation forgets everything
     dedup.clear_cluster_label_cache()
     dedup.dedup_clusters(corpus, threshold=0.4, num_hashes=32, bands=16).collect()
-    assert calls["n"] == 3
+    assert calls["n"] == 2
 
 
 def test_cluster_label_cache_distinguishes_data(spark):
@@ -789,11 +784,11 @@ def test_cluster_label_cache_distinguishes_data(spark):
 
 
 def test_cluster_label_cache_lru_bound(corpus):
-    """The memo never grows past _CLUSTER_CACHE_MAX entries."""
+    """The memo never grows past its bound."""
     dedup.clear_cluster_label_cache()
     for t in (0.30, 0.35, 0.40, 0.45, 0.50, 0.55):
         dedup.dedup_clusters(corpus, threshold=t, num_hashes=32, bands=16).collect()
-    assert len(dedup._CLUSTER_LABEL_CACHE) <= dedup._CLUSTER_CACHE_MAX
+    assert len(CLUSTER_LABELS) <= CLUSTER_LABELS.maxsize
 
 
 # ---- round-11: substring-level dedup (z18 detect / z19 cut) ----------

@@ -12,6 +12,7 @@ from tests.conftest import long_suite
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sustainable_building_energy_benchmarking_pipeline_spark.session import DELTA_ACTIONS
 from sustainable_building_energy_benchmarking_pipeline_spark.sources import io as sio
 
 SCHEMA = T.StructType([
@@ -493,7 +494,7 @@ def test_deltalog_checkpoint_bounds_replay(spark, tmp_path, monkeypatch):
         assert _json.load(f)["version"] == 20
 
     # count JSON commit parses during a cold replay of the latest snapshot
-    dl._ACTION_CACHE.clear()
+    DELTA_ACTIONS.clear()
     real_read = dl._read_actions
     calls: list[int] = []
 
@@ -536,7 +537,7 @@ def test_deltalog_log_cleanup_retention(spark, tmp_path):
     assert f"{0:020d}.json" in deleted and f"{19:020d}.json" in deleted
     assert dl._list_versions(path) == list(range(20, 25))
     # current snapshot identical; time travel inside retention works
-    dl._ACTION_CACHE.clear()
+    DELTA_ACTIONS.clear()
     assert sorted(r.id for r in dl.read_delta(spark, path).collect()) == before
     assert dl.read_delta(spark, path, version=21).count() == 22
     # below the boundary: descriptive error, not partial data
@@ -571,14 +572,14 @@ def test_deltalog_checkpoint_txn_and_partitions(spark, tmp_path):
     dl.write_delta_txn(df, path, "appX", 7, mode="append")
     dl.write_checkpoint(path)  # manual checkpoint at version 0
     # cold cache: watermark must come from the checkpoint rows
-    dl._ACTION_CACHE.clear()
+    DELTA_ACTIONS.clear()
     assert dl.last_txn_version(path, "appX") == 7
     assert dl.last_txn_version(path, "other") == -1
 
     path2 = str(tmp_path / "dckpt3")
     dl.write_delta(df, path2, partition_by=["lang"])
     dl.write_checkpoint(path2)
-    dl._ACTION_CACHE.clear()
+    DELTA_ACTIONS.clear()
     got = {r.id for r in dl.read_delta(spark, path2, partition_filter={"lang": "en"}).collect()}
     assert got == {1}
     got_null = {r.id for r in dl.read_delta(spark, path2, partition_filter={"lang": None}).collect()}

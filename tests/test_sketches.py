@@ -293,6 +293,7 @@ def test_bloom_broadcast_cached_per_digest(spark):
     broadcast (keyed by precomputed digest — no per-call rehash of the
     bits), and stale-application entries are evicted on insert."""
     from sustainable_building_energy_benchmarking_pipeline_spark.operators import sketches as sk
+    from sustainable_building_energy_benchmarking_pipeline_spark.session import BLOOM_BROADCASTS
 
     df = spark.range(100).selectExpr("CAST(id AS STRING) AS k")
     bloom = sk.build_bloom(df, "k", expected_items=100)
@@ -301,6 +302,6 @@ def test_bloom_broadcast_cached_per_digest(spark):
     bc2 = sk._bloom_broadcast(df, clone)
     assert bc1 is bc2
     app = spark.sparkContext.applicationId
-    sk._BC_CACHE[("deadbeef", "stopped-app-123")] = object()
+    BLOOM_BROADCASTS.put("deadbeef", object(), app="stopped-app-123")
     sk._bloom_broadcast(df, sk.build_bloom(df.limit(50), "k", expected_items=50))
-    assert all(k[1] == app for k in sk._BC_CACHE)
+    assert all(k[0] == app for k in BLOOM_BROADCASTS.keys())
