@@ -1039,8 +1039,7 @@ def make_column_mapping_nested_table() -> None:
     """Name-mode column mapping with NESTED renames (round-10): the
     physicalName indirection applies at EVERY nesting level — struct
     fields and array-of-struct element fields all carry col-xxxx names
-    on disk. Exercises read_delta's recursive _physical_type resolution
-    AND the data source's executor-side _to_logical_arrow rebuild."""
+    on disk. Exercises read_delta's recursive _physical_type resolution."""
     root = os.path.join(DATA_DIR, "golden_delta_cm_nested")
     if os.path.isdir(root):
         shutil.rmtree(root)
@@ -1066,8 +1065,7 @@ def make_column_mapping_nested_table() -> None:
                 [[{"col-nc06": 1.5}, {"col-nc06": 2.5}], None, []],
                 arr_type,
             ),
-            # round-11: renames INSIDE a map's value type — the last
-            # nested-CM shape the data source refused
+            # round-11: renames INSIDE a map's value type
             "col-mp07": pa.array(
                 [
                     [("k1", {"col-nd08": 7}), ("k2", {"col-nd08": 8})],

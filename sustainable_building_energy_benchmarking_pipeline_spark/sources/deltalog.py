@@ -1,7 +1,7 @@
-"""Minimal Delta Lake protocol reader/writer — pure Python, no jar.
+"""Delta Lake protocol reader/writer — pure Python, no jar.
 
-``versioned.py`` provides the engine's own commit-log tables; this module
-speaks the actual **Delta transaction-log protocol** (the open spec:
+This module is the engine's one table format. It speaks the
+**Delta transaction-log protocol** (the open spec:
 ``_delta_log/%020d.json`` commits containing ``protocol`` / ``metaData``
 / ``add`` / ``remove`` actions), so tables written here are readable by
 real Delta implementations (delta-spark, delta-rs) and vice versa for
@@ -11,14 +11,19 @@ Delta jar on this classpath, this is the engine-native way to still
 produce/consume protocol-conformant tables.
 
 Supported subset (documented, test-asserted):
-- unpartitioned parquet tables, JSON commits PLUS parquet checkpoints
+- parquet tables, unpartitioned or hive-partitioned
+  (``write_delta(partition_by=...)``; reads open partitioned layouts
+  through ``_partitioned_scan``), JSON commits PLUS parquet checkpoints
   (``%020d.checkpoint.parquet`` + ``_last_checkpoint``, written every
   ``CHECKPOINT_INTERVAL`` commits like real Delta's default-10): a
   snapshot read parses the newest checkpoint at-or-below the target
   version and only the JSON commits after it — O(interval) per read
   instead of O(V) at long table histories;
 - append / overwrite writes, snapshot-isolated reads, time travel by
-  version, history listing;
+  version or timestamp, history listing;
+- an exactly-once streaming sink (``stream_to_delta`` /
+  ``write_delta_txn``) and incremental commit consumption
+  (``table_changes`` / ``delta_changes``);
 - schema evolution (``write_delta(merge_schema=True)`` — Delta's
   mergeSchema: new columns append via a fresh metaData action, old
   files read back with typed nulls), file-targeted ``delete_delta``
@@ -2235,10 +2240,9 @@ def _assign_cm_fields(
     through _merge_schemas). New NESTED columns (round-12): every
     struct field at every depth gets its own fresh id + uuid
     physicalName, recursively — the spec assigns per StructField, and
-    the read paths (``_to_logical_columns`` / ``_to_logical_arrow``)
-    already resolve nested physical names. Array elements and map
-    keys/values are unnamed (no physicalName); struct fields INSIDE
-    them stamp like any other."""
+    the read path (``_to_logical_columns``) already resolves nested
+    physical names. Array elements and map keys/values are unnamed (no
+    physicalName); struct fields INSIDE them stamp like any other."""
     tbl_names = {f.name for f in table_schema.fields}
     max_id = int(config.get("delta.columnMapping.maxColumnId", 0))
 
@@ -3863,17 +3867,15 @@ def _parse_interval_ms(s: str | None) -> int | None:
 
 def _ts_ms(ts: int | float | str) -> int:
     """Epoch milliseconds from an int/float (already ms), a NUMERIC
-    string (data-source options arrive stringified — "1723800000000"
-    is epoch ms, not a date), or an ISO-8601 string (naive = UTC,
-    Delta's convention)."""
+    string ("1723800000000" is epoch ms, not a date), or an ISO-8601
+    string (naive = UTC, Delta's convention)."""
     if isinstance(ts, (int, float)):
         return int(ts)
     from datetime import datetime, timezone
 
     # ISO-8601 first: compact forms like "20240816" are valid dates AND
-    # valid floats — the date reading preserves the pre-round-11
-    # behavior of every timestamp API; only non-date numerals (epoch ms
-    # arriving stringified through data-source options) fall through
+    # valid floats — the date reading wins; only non-date numerals
+    # (epoch ms as a string) fall through
     try:
         dt = datetime.fromisoformat(str(ts))
     except ValueError:
@@ -3910,17 +3912,14 @@ def _adjusted_commit_timestamps(
     return adj
 
 
-def version_before_timestamp(
-    path: str, ts: int | float | str, label: str = "since_timestamp"
-) -> int:
+def version_before_timestamp(path: str, ts: int | float | str) -> int:
     """The exclusive version lower bound for a timestamp-addressed
     change window: the version just BEFORE the first commit whose
     monotonized clock is >= the target, so a (start, end] window begins
-    AT that commit. The single resolution rule behind
-    ``table_changes(since_timestamp=...)`` and the data source's
-    ``startingTimestamp`` — a target past the latest commit raises like
-    delta-spark (an empty window would read as "no changes" and let a
-    mistyped cursor silently skip real ones)."""
+    AT that commit: delta-spark's ``startingTimestamp`` rule behind
+    ``table_changes(since_timestamp=...)``. A target past the latest
+    commit raises like delta-spark (an empty window would read as "no
+    changes" and let a mistyped cursor silently skip real ones)."""
     versions = _list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no Delta log at {path}")
@@ -3929,7 +3928,7 @@ def version_before_timestamp(
     latest_clock = adj[versions[-1]]
     if latest_clock >= 0 and target > latest_clock:
         raise ValueError(
-            f"{label} {target} is after the latest commit of {path} "
+            f"since_timestamp {target} is after the latest commit of {path} "
             f"(version {versions[-1]} at {latest_clock})"
         )
     prior = [v for v in versions if 0 <= adj[v] < target]
@@ -7363,8 +7362,8 @@ def table_changes(
             "pass exactly one of since_version / since_timestamp"
         )
     if since_timestamp is not None:
-        # delta-spark's startingTimestamp rule, shared with the data
-        # source — see version_before_timestamp
+        # delta-spark's startingTimestamp rule — see
+        # version_before_timestamp
         since_version = version_before_timestamp(path, since_timestamp)
     if to_timestamp is not None:
         if to_version is not None:

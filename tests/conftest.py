@@ -15,7 +15,7 @@ ORACLE_SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 # run must finish inside the driver's verify window (~15 min; the full
 # 1207-test suite takes ~29 min and was killed mid-run in round 12 —
 # tests_ok=false with zero failures). The guarded tail — Delta
-# conformance/source/DML, the SQL-frontend execution-equivalence sweep,
+# conformance/DML, the SQL-frontend execution-equivalence sweep,
 # scaling tripwires, CLI subprocess end-to-end, the longest property/
 # model-based tests — still runs green with SPARK_GRAFT_FULL_SUITE=1
 # (same pattern as the SPARK_GRAFT_STRESS 10× suite). The default path

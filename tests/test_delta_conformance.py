@@ -2932,21 +2932,6 @@ def test_generated_columns_update_recomputes(spark, tmp_path):
     assert dl.read_delta(spark, path).count() == 1
 
 
-def test_generated_columns_data_source_writer_refuses(spark, tmp_path):
-    """The registered data-source writer does NOT validate generation
-    expressions — it must keep refusing these tables."""
-    path = str(tmp_path / "gen")
-    _make_generated_table(spark, path)
-    batch = spark.createDataFrame([(5, 1.0, 2.0)], "id long, v double, v2 double")
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources.delta_stream_source import (
-        DeltaLogDataSource,
-    )
-
-    spark.dataSource.register(DeltaLogDataSource)
-    with pytest.raises(Exception, match="generatedColumns|minWriterVersion"):
-        batch.write.format("deltalog").mode("append").save(path)
-
-
 def test_clustered_table_writes_preserve_domain(spark, tmp_path):
     """Round-10: liquid-clustering tables (writer v7 + clustering +
     domainMetadata, default-on in newer DBR) accept the full write
@@ -4235,9 +4220,8 @@ def test_vacuum_keeps_in_root_absolute_and_uri_adds(spark, tmp_path):
     assert [(r["id"], r["v"]) for r in dl.read_delta(spark, t).collect()] == [(5, 5.0)]
 
 
-def test_uri_adds_read_via_data_source_and_cdf(spark, tmp_path):
-    """Review fix: the registered data source and table_changes resolve
-    file:// URI adds like read_delta does."""
+def test_uri_adds_read_and_cdf(spark, tmp_path):
+    """read_delta and table_changes resolve file:// URI adds."""
     from urllib.parse import quote
 
     src = str(tmp_path / "src")
@@ -4255,12 +4239,7 @@ def test_uri_adds_read_via_data_source_and_cdf(spark, tmp_path):
             {"add": add2},
         ):
             f.write(json.dumps(a) + "\n")
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources.delta_stream_source import (
-        DeltaLogDataSource,
-    )
-
-    spark.dataSource.register(DeltaLogDataSource)
-    got = spark.read.format("deltalog").load(t).collect()
+    got = dl.read_delta(spark, t).collect()
     assert [(r["id"], r["v"]) for r in got] == [(5, 5.0)]
     ch = dl.table_changes(spark, t, since_version=-1).collect()
     assert [(r["id"], r["_change_type"]) for r in ch] == [(5, "insert")]
@@ -4341,7 +4320,7 @@ def test_interval_and_ts_parsers_properties(spark):
     @given(st.integers(0, 2**53))
     def epoch_roundtrip(ms):
         assert dl._ts_ms(ms) == ms
-        assert dl._ts_ms(str(ms)) == ms  # stringified option form
+        assert dl._ts_ms(str(ms)) == ms  # epoch ms as a string
 
     epoch_roundtrip()
 
@@ -4886,8 +4865,7 @@ def test_optimize_where_prunes_partitions(spark, tmp_path):
 def test_data_skipping_num_indexed_cols(spark, tmp_path):
     """delta.dataSkippingNumIndexedCols (round-12): stats land for the
     first N schema columns only (-1 = all; default 32 = all on narrow
-    tables); numRecords always survives. Applies to write_delta and the
-    registered data-source writer alike, and a stats-less column simply
+    tables); numRecords always survives, and a stats-less column simply
     stops pruning (absent stats are already 'unknown' to skipping)."""
     tbl = str(tmp_path / "idx")
     df = spark.range(20).selectExpr(
@@ -4924,16 +4902,11 @@ def test_data_skipping_num_indexed_cols(spark, tmp_path):
         assert set(json.loads(a["stats"])["minValues"]) == {
             "a", "b", "c", "d",
         }
-    # data-source writer honors the table's property too
+    # a narrower window takes effect on the next write
     dl.set_table_properties(
         tbl, {"delta.dataSkippingNumIndexedCols": "1"}
     )
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources.delta_stream_source import (
-        DeltaLogDataSource,
-    )
-
-    spark.dataSource.register(DeltaLogDataSource)
-    df.write.format("deltalog").mode("append").save(tbl)
+    dl.write_delta(df, tbl, mode="append")
     v = dl._list_versions(tbl)[-1]
     for a in (x["add"] for x in dl._read_actions(tbl, v) if "add" in x):
         st = json.loads(a["stats"])

@@ -180,30 +180,31 @@ def test_jdbc_roundtrip_derby(spark, tmp_path):
 
 
 def test_versioned_table_time_travel(spark, tmp_path):
-    """S3/S11 substitute: versioned writes, time travel, append chains,
-    and snapshot isolation via the commit-log visibility point."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources import versioned as V
+    """Versioned writes on the Delta log: time travel across an append
+    chain between overwrites, and snapshot isolation — data files no
+    commit names are invisible to readers."""
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
 
     path = str(tmp_path / "tbl")
-    v0 = V.write_versioned(spark.range(5), path)                      # overwrite
-    v1 = V.write_versioned(spark.range(5, 8), path, mode="append")    # +3
-    v2 = V.write_versioned(spark.range(100, 102), path)               # overwrite
+    v0 = dl.write_delta(spark.range(5), path, mode="overwrite")
+    v1 = dl.write_delta(spark.range(5, 8), path, mode="append")       # +3
+    v2 = dl.write_delta(spark.range(100, 102), path, mode="overwrite")
     assert (v0, v1, v2) == (0, 1, 2)
 
-    assert V.read_versioned(spark, path).count() == 2                  # latest
-    assert V.read_versioned(spark, path, version=0).count() == 5
-    assert V.read_versioned(spark, path, version=1).count() == 8
-    got = {r.id for r in V.read_versioned(spark, path, version=1).collect()}
+    assert dl.read_delta(spark, path).count() == 2                     # latest
+    assert dl.read_delta(spark, path, version=0).count() == 5
+    assert dl.read_delta(spark, path, version=1).count() == 8
+    got = {r.id for r in dl.read_delta(spark, path, version=1).collect()}
     assert got == set(range(8))
 
-    hist = V.table_history(path)
+    hist = dl.delta_history(path)
     assert [e["version"] for e in hist] == [0, 1, 2]
-    assert hist[2]["mode"] == "overwrite"
+    assert hist[2]["mode"] == "OVERWRITE"
 
-    # an orphan snapshot dir without a log entry is invisible to readers
-    import os as _os
-    _os.makedirs(_os.path.join(path, "_v99"))
-    assert V.read_versioned(spark, path).count() == 2
+    # parquet files written into the table dir without a commit are
+    # invisible to readers
+    spark.range(50).coalesce(1).write.mode("append").parquet(path)
+    assert dl.read_delta(spark, path).count() == 2
 
 
 def test_orc_roundtrip(spark, tmp_path, small_df):
@@ -263,33 +264,28 @@ def test_csv_malformed_row_handling(spark, tmp_path_factory):
 
 
 def test_versioned_merge_upsert(spark, tmp_path):
-    """merge_versioned: matched keys update, unmatched insert, one new
-    overwrite version per merge, and time travel still reaches the
-    pre-merge state."""
+    """merge_delta: matched keys update, unmatched insert, one new
+    version per merge, and time travel still reaches the pre-merge
+    state."""
     from pyspark.sql import Row
 
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources.versioned import (
-        merge_versioned,
-        read_versioned,
-        table_history,
-        write_versioned,
-    )
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
 
     path = str(tmp_path / "vt")
     base = spark.createDataFrame(
         [Row(k=1, v="a"), Row(k=2, v="b"), Row(k=3, v="c")]
     )
-    v0 = write_versioned(base, path)
+    v0 = dl.write_delta(base, path, mode="overwrite")
     updates = spark.createDataFrame([Row(k=2, v="B2"), Row(k=9, v="NEW")])
-    v1 = merge_versioned(spark, path, updates, "k")
+    v1 = dl.merge_delta(spark, path, updates, "k")
     assert v1 == v0 + 1
 
-    got = {(r.k, r.v) for r in read_versioned(spark, path).collect()}
+    got = {(r.k, r.v) for r in dl.read_delta(spark, path).collect()}
     assert got == {(1, "a"), (2, "B2"), (3, "c"), (9, "NEW")}
     # pre-merge snapshot intact via time travel
-    before = {(r.k, r.v) for r in read_versioned(spark, path, version=v0).collect()}
+    before = {(r.k, r.v) for r in dl.read_delta(spark, path, version=v0).collect()}
     assert before == {(1, "a"), (2, "b"), (3, "c")}
-    assert table_history(path)[-1]["metadata"]["op"] == "merge"
+    assert dl.delta_history(path)[-1]["operation"] == "MERGE"
 
 
 # ---------------------------------------------------------------------------

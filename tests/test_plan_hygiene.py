@@ -8,10 +8,15 @@ Exchange SinglePartition → Window, funneling the entire input through
 ONE task. Global aggregates and final LIMIT merges legitimately use
 SinglePartition (their reduced input is tiny); a Window over it is the
 anti-pattern.
+
+One structural gate rides along: every package module must have an
+importer outside ``tests/``, or an allowlisted reason to be kept.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -331,3 +336,78 @@ def test_following_frame_gate_catches_first_over_following(spark):
     )
     plan = bad._jdf.queryExecution().executedPlan().toString()
     assert _FOLLOWING_FRAME in plan, "gate failed to flag the quadratic frame"
+
+
+# ---------------------------------------------------------------------------
+# Structural gate: no package module whose only importers are tests
+# ---------------------------------------------------------------------------
+
+_PKG = "sustainable_building_energy_benchmarking_pipeline_spark"
+
+# Modules kept without a non-test importer, each with its reason.
+_TEST_ONLY_MODULE_OK = {
+    # PAPER.md: the reference has no streams and Structured Streaming is
+    # an extension, so the streaming modules are library surface that
+    # no batch entry point calls: curation, stateful operators, the
+    # watermarked event sessions and the streaming HVAC detector
+    "streaming.curation_stream",
+    "streaming.state_stream",
+    "streaming.events_stream",
+    "streaming.hvac_stream",
+    # bucketed tables are a storage-layout option (write once, join
+    # without a shuffle) that no pipeline stage writes yet
+    "sources.bucketed",
+}
+
+
+def _imported_modules(tree, modules: set[str]) -> set[str]:
+    """Dotted package modules named by the imports in ``tree`` at any
+    nesting depth: ``import a.b.c``, ``from a.b import c`` (a submodule)
+    and ``from a.b.c import name``."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            out.add(node.module)
+            out.update(f"{node.module}.{a.name}" for a in node.names)
+    return out & modules
+
+
+def _non_test_importers() -> dict[str, set[str]]:
+    """Every package module (package ``__init__``/``__main__`` aside)
+    mapped to the non-test files that import it."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / _PKG
+    modules = {
+        ".".join(p.relative_to(root).with_suffix("").parts)
+        for p in pkg.rglob("*.py")
+        if p.stem not in ("__init__", "__main__")
+    }
+    sources = [
+        *pkg.rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *(root / "scripts").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+    ]
+    importers: dict[str, set[str]] = {m: set() for m in modules}
+    for src in sources:
+        name = ".".join(src.relative_to(root).with_suffix("").parts)
+        for mod in _imported_modules(ast.parse(src.read_text()), modules):
+            if mod != name:
+                importers[mod].add(name)
+    return importers
+
+
+def test_every_package_module_has_a_non_test_importer():
+    """A package module that only tests import is dead weight: it costs
+    reading and upkeep and serves no entry point (the package, its CLI,
+    bench.py, __spark_entry__, scripts/ or perfbench/)."""
+    importers = _non_test_importers()
+    allowed = {f"{_PKG}.{m}" for m in _TEST_ONLY_MODULE_OK}
+    assert allowed <= importers.keys(), "allowlist names a missing module"
+    orphans = sorted(m for m, by in importers.items() if not by and m not in allowed)
+    assert not orphans, f"package modules with no non-test importer: {orphans}"
+    stale = sorted(m for m in allowed if importers[m])
+    assert not stale, f"allowlisted modules that now have importers: {stale}"

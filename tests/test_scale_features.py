@@ -1,6 +1,6 @@
 """Cluster-scale machinery proofs: dynamic partition pruning on a
-partitioned fact table, and the streaming → versioned-table foreachBatch
-sink pattern (each micro-batch an atomic commit, exactly-once per batch)."""
+partitioned fact table, and the streaming → Delta foreachBatch sink
+pattern (each micro-batch an atomic commit, exactly-once per batch)."""
 
 from __future__ import annotations
 
@@ -39,14 +39,11 @@ def test_dynamic_partition_pruning(spark, tmp_path_factory):
 
 
 def test_foreachbatch_versioned_sink(spark, tmp_path_factory):
-    """Streaming events upserted into a versioned table via foreachBatch:
-    each micro-batch commits atomically (one version per batch), and the
-    final latest-state read equals the batch compaction of all input."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources.versioned import (
-        read_versioned,
-        table_history,
-        write_versioned,
-    )
+    """Streaming events upserted into a Delta table via foreachBatch:
+    each micro-batch commits atomically (one version per batch, its
+    batch id recorded as the txn version), and the final latest-state
+    read equals the batch compaction of all input."""
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
     from sustainable_building_energy_benchmarking_pipeline_spark.streaming.events_stream import (
         event_stream,
     )
@@ -69,7 +66,7 @@ def test_foreachbatch_versioned_sink(spark, tmp_path_factory):
         latest = batch_df.groupBy("user_id").agg(
             F.max_by(F.struct("ts", "value"), "ts").alias("_s")
         ).select("user_id", F.col("_s.ts").alias("ts"), F.col("_s.value").alias("value"))
-        write_versioned(latest, table_dir, mode="append", metadata={"batch": batch_id})
+        dl.write_delta_txn(latest, table_dir, "events_latest", batch_id)
 
     q = (
         event_stream(spark, input_dir, max_files_per_trigger=1)
@@ -80,13 +77,14 @@ def test_foreachbatch_versioned_sink(spark, tmp_path_factory):
     )
     q.awaitTermination(300)
 
-    history = table_history(table_dir)
+    history = dl.delta_history(table_dir)
     assert len(history) >= 2, "expected one commit per micro-batch"
+    assert dl.last_txn_version(table_dir, "events_latest") == len(history) - 1
 
     # compact the appended changelog to latest-per-user and compare with
     # the batch answer over the full input
     got = (
-        read_versioned(spark, table_dir)
+        dl.read_delta(spark, table_dir)
         .groupBy("user_id")
         .agg(F.max_by(F.struct("ts", "value"), "ts").alias("_s"))
         .select("user_id", F.col("_s.value").alias("value"))
