@@ -53,7 +53,7 @@ def _records(d: dict[str, int], key: str) -> list[dict[str, Any]]:
     """{value: n} → reference record shape, count DESC (src/db.py:204-229)."""
     return [
         {key: v, "count": n}
-        for v, n in sorted(d.items(), key=lambda kv: (-kv[1], kv[0] if kv[0] is not None else ""))
+        for v, n in sorted(d.items(), key=serving.count_order)
     ]
 
 

@@ -12,17 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def guarded_div(num: Column, den: Column, default: Column | None = None) -> Column:
-    """P8: divide with a zero-denominator guard.
-
-    Reference variants: ``area>0`` guard → 0 (benchmarking/model.py:46) and
-    ``occupancy>0`` → NULL (notebooks/benchmarking_medallion.py:151-155).
-    Pass ``default=F.lit(0.0)`` for the first, ``None`` for the second.
-    """
-    safe = F.when(den != 0, num / den)
-    return safe.otherwise(default) if default is not None else safe
-
-
 def clip(col: Column, lo: float | None = None, hi: float | None = None) -> Column:
     """P15: clamp to [lo, hi] (pandas ``.clip``, src/generate_hvac_data.py:215-218).
 
@@ -36,21 +25,6 @@ def clip(col: Column, lo: float | None = None, hi: float | None = None) -> Colum
     if hi is not None:
         c = F.least(c, F.lit(float(hi)))
     return F.when(col.isNull(), col).otherwise(c)
-
-
-def case_map(col: Column, thresholds: Sequence[tuple[float, str]], default: str) -> Column:
-    """P6: ascending-threshold CASE WHEN chain.
-
-    ``thresholds=[(100,'Excellent'),(150,'Good'),(200,'Average')],
-    default='Poor'`` reproduces the EUI rating ladder
-    (generate_sample_data.py:71-81, notebooks/benchmarking_medallion.py:159-165).
-    """
-    expr: Column | None = None
-    for bound, label in thresholds:
-        clause = (col < F.lit(bound), F.lit(label))
-        expr = F.when(*clause) if expr is None else expr.when(*clause)
-    assert expr is not None
-    return expr.otherwise(F.lit(default))
 
 
 def coalesce_aliases(
@@ -68,25 +42,9 @@ def coalesce_aliases(
     return F.coalesce(*args) if len(args) > 1 else args[0]
 
 
-def zero_pad_id(prefix: str, n: Column, width: int = 3) -> Column:
-    """F11: ``B001``-style id formatting (generate_sample_data.py:34)."""
-    return F.format_string(f"{prefix}%0{width}d", n.cast("int"))
-
-
 def split_trim(col: Column, sep: str = ",") -> Column:
     """F12: CSV-in-cell → trimmed string array (src/export_json.py:135-136)."""
     return F.transform(F.split(col, sep), lambda x: F.trim(x))
-
-
-def iso_format(ts: Column) -> Column:
-    """F5: ISO-8601 minute-resolution formatting (src/dashboard_app.py:335)."""
-    return F.date_format(ts, "yyyy-MM-dd HH:mm")
-
-
-def is_iso_timestamp(col: Column) -> Column:
-    """F6: ISO-8601 validity predicate — parse-null test
-    (src/api.py:146-163 semantics, engine-side)."""
-    return F.try_to_timestamp(col).isNotNull()
 
 
 def weekday(ts: Column) -> Column:
@@ -94,9 +52,3 @@ def weekday(ts: Column) -> Column:
     (src/generate_hvac_data.py:49; SURVEY flags Spark's dayofweek
     Sunday=1 offset trap — use this instead)."""
     return F.weekday(ts)
-
-
-def timestamp_grid(start: Column, end: Column, interval_expr: str = "interval 5 minutes") -> Column:
-    """F7: dense timestamp sequence (pd.date_range equivalent,
-    src/generate_hvac_data.py:28). Explode the result to get the grid rows."""
-    return F.sequence(start, end, F.expr(interval_expr))

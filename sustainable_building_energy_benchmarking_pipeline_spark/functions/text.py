@@ -49,33 +49,12 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(bpe_tokens(text)).cast("bigint")
 
 
-def avg_token_length(text: Column) -> Column:
-    toks = ws_tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(0.0)
-
-
 def punct_ratio(text: Column) -> Column:
     """Share of non-alphanumeric, non-space characters."""
     stripped = F.regexp_replace(text, r"[a-zA-Z0-9\s]", "")
     return F.when(
         F.length(text) > 0, F.length(stripped).cast("double") / F.length(text)
     ).otherwise(0.0)
-
-
-def digit_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[^0-9]", "")
-    return F.when(
-        F.length(text) > 0, F.length(stripped).cast("double") / F.length(text)
-    ).otherwise(0.0)
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = ws_tokens(F.lower(text))
-    hits = F.size(
-        F.filter(toks, lambda t: t.isin(*LANG_PROFILES[lang]))
-    )
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks)).otherwise(0.0)
 
 
 def quality_score_from_tokens(
@@ -164,22 +143,6 @@ def language_argmax(scores: dict[str, Column]) -> Column:
     for lang in LANG_PROFILES:
         expr = expr.when(scores[lang] == best, F.lit(lang))
     return expr.otherwise(F.lit("und"))
-
-
-def language_id_from_tokens(toks: Column, text: Column) -> Column:
-    """Single-column form of language_scores→language_argmax. Convenient,
-    but on hot paths materialize the scores in their own projection and
-    call language_argmax over the column refs instead."""
-    return language_argmax(language_scores(toks, text))
-
-
-def language_id(text: Column) -> Column:
-    """Single-expression convenience form of ``language_id_from_tokens``.
-
-    Prefer the two-projection form (materialize ``ws_tokens(lower(text))``
-    first) on hot paths — the inline tokenizer re-runs per language score.
-    """
-    return language_id_from_tokens(ws_tokens(F.lower(text)), text)
 
 
 def language_pred_kernel(lower_text: Column) -> Column:

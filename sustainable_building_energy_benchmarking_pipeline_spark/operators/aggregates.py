@@ -57,13 +57,6 @@ def multi_dim_summary(
     return gs.agg(F.grouping_id().alias(grouping_id_col), *measures)
 
 
-def describe_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """A10: describe()-style numeric profile (src/pipeline_batch.py:186-189)."""
-    return df.select(*cols).summary(
-        "count", "mean", "stddev", "min", "25%", "50%", "75%", "max"
-    )
-
-
 def grouped_top_n(
     df: DataFrame, group_col: str, n: int, count_alias: str = "n"
 ) -> DataFrame:

@@ -525,18 +525,6 @@ def _jaccard_of_pairs_from_shingles(
     )
 
 
-def jaccard_of_pairs(
-    pairs: DataFrame, docs: DataFrame, text_col: str = "text",
-    id_col: str = "doc_id", shingle_k: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (the verify step
-    after LSH), recomputing shingles from the documents. When the caller
-    already holds the hashed-shingle frame, prefer the shared-scan path
-    (see minhash_near_duplicates)."""
-    sh = _hashed_shingles(docs, text_col, id_col, shingle_k)
-    return _jaccard_of_pairs_from_shingles(pairs, sh)
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     threshold: float = 0.7,

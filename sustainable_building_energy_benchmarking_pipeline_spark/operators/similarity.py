@@ -264,23 +264,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def rp_lsh_signature(
-    vec: Column, planes: list[list[float]], dim: int | None = None
-) -> Column:
-    """Random-hyperplane signature: one bit per plane (sign of dot),
-    packed into a bigint. SimHash-for-vectors (Charikar 2002)."""
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(float(x)) for x in p]), dim) >= 0, F.lit(1)
-        ).otherwise(F.lit(0))
-        for p in planes
-    ]
-    sig = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        sig = sig + (b.cast("long") * F.lit(2**i).cast("long"))
-    return sig
-
-
 def ann_lsh_topk(
     corpus: DataFrame,
     query_vec: list[float],

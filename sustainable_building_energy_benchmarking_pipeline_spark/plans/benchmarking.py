@@ -3,9 +3,10 @@ reference ``notebooks/benchmarking_medallion.py`` — the reference's own
 statement of the Spark-native design — and ``benchmarking/model.py``).
 
 Bronze→Silver→Gold as pure DataFrame→DataFrame functions; storage is the
-caller's choice (sources.writers). Delta isn't on the classpath in this
-runtime, so layer writes default to parquet — the transformations are
-storage-agnostic.
+caller's choice. The ``medallion`` CLI commits each layer as a Delta table
+with ``sources.deltalog.write_delta`` by default (``--format parquet``
+writes plain parquet through ``sources.io.write_table``) — the
+transformations are storage-agnostic.
 
 Scale: silver is a narrow projection+filter (no shuffle); every gold table
 is a single partial-aggregated groupBy on a low-cardinality key. The whole

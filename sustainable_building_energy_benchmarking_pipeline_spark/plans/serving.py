@@ -4,11 +4,15 @@ reference ``src/db.py:113-236``, ``src/api.py:105-261``).
 The reference builds SQL strings incrementally against PostgreSQL; here the
 dynamic predicate builder (P5) composes DataFrame filters over the anomaly
 table, and the 4-statement summary becomes ONE grouping-sets pass (A7) —
-one scan, one shuffle, versus four round-trips.
+one scan, one shuffle, one action, versus four round-trips.
 
-At scale the anomaly table is parquet partitioned by date (see
-sources.writers.write_anomalies); the timestamp predicates prune
-partitions, replacing the reference's PostgreSQL indexes (SURVEY §4).
+The anomaly table is whatever DataFrame the caller serves: the ``detect``
+CLI writes parquet with ``sources.io.write_table`` (whose ``partition_by``
+can lay it out by date), and the pipeline commits it with
+``sources.deltalog.write_delta``. The predicates push down into the
+parquet scan (partition pruning on a partitioned layout, row-group
+min/max otherwise), replacing the reference's PostgreSQL indexes
+(SURVEY §4).
 """
 
 from __future__ import annotations
@@ -19,10 +23,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sustainable_building_energy_benchmarking_pipeline_spark.operators.aggregates import (
-    multi_dim_summary,
-)
-
 MAX_LIMIT = 5000  # src/api.py:127-132
 DEFAULT_LIMIT = 500
 # ceiling on the daily-trend series the dashboard endpoints collect:
@@ -30,6 +30,13 @@ DEFAULT_LIMIT = 500
 # request must narrow start/end (422), keeping the driver-side list
 # bounded by contract rather than by the data (round-5 directive #6)
 MAX_DAILY_POINTS = 1000
+
+
+def count_order(kv: tuple[str | None, int]) -> tuple[int, bool, str]:
+    """Sort key for ``(value, count)`` pairs: count DESC, then value ASC
+    with NULL first. A total order, so the top-10 cut and every response
+    order are independent of collect order (NULL and '' tie otherwise)."""
+    return (-kv[1], kv[0] is not None, kv[0] or "")
 
 
 def _apply_filters(
@@ -73,43 +80,46 @@ def query_anomalies(
 
 def anomaly_summary(anomalies: DataFrame, **filters: Any) -> dict[str, Any]:
     """GET /alerts/summary: total + by-severity + by-rule + by-zone-top-10
-    (src/db.py:171-236) in one grouping-sets job instead of four queries."""
-    base = _apply_filters(anomalies, **filters).cache()
-    try:
-        total = base.count()
-        rows = multi_dim_summary(
-            base,
-            ["severity", "rule_name", "zone_id"],
-            [F.count(F.lit(1)).alias("n")],
-            grouping_id_col="_gid",
-        ).collect()
-        by_severity: dict[str, int] = {}
-        by_rule: dict[str, int] = {}
-        by_zone: dict[str, int] = {}
-        # classify rows by grouping_id, NOT value-nullness: a NULL dim
-        # value (null-severity anomaly) is a legitimate group whose row
-        # a nullness chain would drop — total would then exceed every
-        # breakdown's sum. gid bit = 1 means aggregated-out; dims are
-        # MSB-first, so the (severity)/(rule)/(zone) sets are 011/101/110.
-        for r in rows:
-            gid = r["_gid"]
-            if gid == 0b011:
-                by_severity[r["severity"]] = r["n"]
-            elif gid == 0b101:
-                by_rule[r["rule_name"]] = r["n"]
-            elif gid == 0b110:
-                by_zone[r["zone_id"]] = r["n"]
-        top_zones = dict(
-            sorted(by_zone.items(), key=lambda kv: (-kv[1], kv[0] if kv[0] is not None else ""))[:10]
-        )  # ORDER BY count DESC LIMIT 10 (src/db.py:222-229)
-        return {
-            "total_anomalies": total,
-            "by_severity": by_severity,
-            "by_rule": by_rule,
-            "by_zone": top_zones,
-        }
-    finally:
-        base.unpersist()
+    (src/db.py:171-236) as one action over the filtered table:
+    ``GROUPING SETS ((severity),(rule_name),(zone_id),())``. With AQE
+    that is two jobs, the shuffle map stage and the result stage; the
+    base is neither cached nor counted separately."""
+    dims = [F.col(d) for d in ("severity", "rule_name", "zone_id")]
+    rows = (
+        _apply_filters(anomalies, **filters)
+        .groupingSets([[d] for d in dims] + [[]], *dims)
+        .agg(F.grouping_id().alias("_gid"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    # empty input yields no rows at all, the () set's included
+    total = 0
+    by_severity: dict[str, int] = {}
+    by_rule: dict[str, int] = {}
+    by_zone: dict[str, int] = {}
+    # classify rows by grouping_id, NOT value-nullness: a NULL dim
+    # value (null-severity anomaly) is a legitimate group whose row
+    # a nullness chain would drop — total would then exceed every
+    # breakdown's sum. gid bit = 1 means aggregated-out; dims are
+    # MSB-first, so the (severity)/(rule)/(zone)/() sets are
+    # 011/101/110/111.
+    for r in rows:
+        gid = r["_gid"]
+        if gid == 0b111:
+            total = r["n"]
+        elif gid == 0b011:
+            by_severity[r["severity"]] = r["n"]
+        elif gid == 0b101:
+            by_rule[r["rule_name"]] = r["n"]
+        elif gid == 0b110:
+            by_zone[r["zone_id"]] = r["n"]
+    # ORDER BY count DESC LIMIT 10 (src/db.py:222-229)
+    top_zones = dict(sorted(by_zone.items(), key=count_order)[:10])
+    return {
+        "total_anomalies": total,
+        "by_severity": by_severity,
+        "by_rule": by_rule,
+        "by_zone": top_zones,
+    }
 
 
 def stat_tiles(
@@ -134,7 +144,7 @@ def stat_tiles(
     def _top1(counts: dict[str, int]) -> dict[str, Any] | None:
         if not counts:
             return None
-        name, n = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0] if kv[0] is not None else ""))[0]
+        name, n = min(counts.items(), key=count_order)
         return {"name": name, "count": n}
 
     return {

@@ -244,12 +244,6 @@ DELTA_ACTIONS = SessionMemo("delta_actions", maxsize=8192)
 _handle_ids = itertools.count()
 
 
-def clear_table_cache() -> None:
-    """Drop all memoized table plans (for tests that rewrite testdata and
-    need the new file listing picked up immediately)."""
-    TABLES.clear()
-
-
 def register_query_cache(df) -> None:
     """Record a persisted DataFrame so ``clear_query_cache`` can release
     it deterministically: a registry query persists only through this,

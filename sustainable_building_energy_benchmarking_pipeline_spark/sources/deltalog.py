@@ -3530,26 +3530,12 @@ def _compute_version_checksum(path: str, version: int) -> dict[str, Any]:
     return crc
 
 
-def write_version_checksum(path: str, version: int) -> str:
-    """Write ``_delta_log/<version>.crc`` — the per-version state
-    checksum delta-spark emits alongside every commit (VersionChecksum:
-    active-file count and bytes, the governing metadata/protocol, DV
-    totals, txn high-water marks, domain metadata, the commit's
-    inCommitTimestamp). External delta-spark readers use it to
-    short-circuit state reconstruction and to cross-check replay;
-    :func:`verify_version_checksum` is this engine's read-side check.
-    Racing writers of the SAME version compute identical content, so
-    the temp + rename publish keeps concurrent re-writes harmless.
-    Cost: one checkpoint-accelerated log replay per commit — the same
-    bound as the auto-checkpoint cadence. Returns the file path."""
-    return _publish_version_checksum(
-        path, version, _compute_version_checksum(path, version)
-    )
-
-
 def _publish_version_checksum(
     path: str, version: int, crc: dict[str, Any]
 ) -> str:
+    """Write ``_delta_log/<version>.crc``. Racing writers of the SAME
+    version compute identical content, so the temp + rename publish
+    keeps concurrent re-writes harmless."""
     target = _checksum_file(path, version)
     tmp = f"{target}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:

@@ -9,8 +9,9 @@ ONE task. Global aggregates and final LIMIT merges legitimately use
 SinglePartition (their reduced input is tiny); a Window over it is the
 anti-pattern.
 
-One structural gate rides along: every package module must have an
-importer outside ``tests/``, or an allowlisted reason to be kept.
+Two more gates ride along: ``/alerts/summary`` runs as one uncached
+action, and every package module must have an importer outside
+``tests/``, or an allowlisted reason to be kept.
 """
 
 from __future__ import annotations
@@ -336,6 +337,51 @@ def test_following_frame_gate_catches_first_over_following(spark):
     )
     plan = bad._jdf.queryExecution().executedPlan().toString()
     assert _FOLLOWING_FRAME in plan, "gate failed to flag the quadratic frame"
+
+
+# ---------------------------------------------------------------------------
+# /alerts/summary: one uncached action per request
+# ---------------------------------------------------------------------------
+
+
+def test_anomaly_summary_is_one_uncached_action(spark, tmp_path, monkeypatch):
+    """The summary's GROUPING SETS, grand total included, is ONE action:
+    with AQE that is the shuffle map stage's job plus the result job. A
+    per-request ``cache()`` of the filtered base costs a build job pair
+    and a global CacheManager edit on every request, so caching fails
+    the gate whether or not it is released afterwards."""
+    import uuid
+
+    from sustainable_building_energy_benchmarking_pipeline_spark.plans import serving
+
+    rows = [
+        (h % 24, f"Z{h % 12}", ("temp_drift", "clogged_filter")[h % 2], ("low", "medium", "high", None)[h % 4])
+        for h in range(96)
+    ]
+    path = str(tmp_path / "anomalies")
+    spark.createDataFrame(rows, "h INT, zone_id STRING, rule_name STRING, severity STRING").selectExpr(
+        "TIMESTAMP'2024-01-01 00:00:00' + make_dt_interval(0, h) AS timestamp", "*"
+    ).repartition(3).write.parquet(path)
+    anomalies = spark.read.parquet(path)  # uncached, as ``serve`` passes it
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("anomaly_summary cached a DataFrame")
+
+    monkeypatch.setattr(type(anomalies), "cache", refuse)
+    monkeypatch.setattr(type(anomalies), "persist", refuse)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = f"summary-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "anomaly_summary plan-shape gate")
+    try:
+        s = serving.anomaly_summary(anomalies, start_time="2024-01-01 06:00:00")
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert s["total_anomalies"] == 72
+    assert sum(s["by_severity"].values()) == 72
+    assert len(jobs) <= 2, f"anomaly_summary ran {len(jobs)} jobs: {sorted(jobs)}"
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 # ---------------------------------------------------------------------------
