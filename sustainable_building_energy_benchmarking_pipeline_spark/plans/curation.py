@@ -57,7 +57,8 @@ def dedup_min_id(
     plus an extra aggregate. The window form is the minimum-pass shape;
     the way to make the shuffle cheap at 100 TB is upstream — bucket or
     pre-partition the corpus by the fingerprint so the exchange is
-    already satisfied (sources.bucketed), or run the Bloom ledger path
+    already satisfied (``DataFrameWriter.bucketBy`` + ``saveAsTable``
+    on the fingerprint), or run the Bloom ledger path
     (z01/z04) that moves digests only for the INCREMENTAL case."""
     keep_w = Window.partitionBy(fp_col)
     return (

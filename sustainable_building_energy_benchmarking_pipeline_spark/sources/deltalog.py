@@ -26,12 +26,21 @@ Supported subset (documented, test-asserted):
   (``table_changes`` / ``delta_changes``);
 - schema evolution (``write_delta(merge_schema=True)`` — Delta's
   mergeSchema: new columns append via a fresh metaData action, old
-  files read back with typed nulls), file-targeted ``delete_delta``
-  (DELETE WHERE), log-only ``restore_delta`` (RESTORE VERSION AS OF),
-  TBLPROPERTIES (``set_table_properties``), CHECK constraints
-  (``add_constraint`` / ``drop_constraint`` stored as
+  files read back with typed nulls), log-only ``restore_delta``
+  (RESTORE VERSION AS OF), TBLPROPERTIES (``set_table_properties``),
+  CHECK constraints (``add_constraint`` / ``drop_constraint`` stored as
   ``delta.constraints.*`` with the protocol gate raised to writer v3,
-  enforced on every write/MERGE) and ``delta.appendOnly``;
+  enforced on every write/MERGE/UPDATE) and ``delta.appendOnly``;
+- file-targeted copy-on-write DML: ``merge_delta`` (MERGE upsert),
+  ``delete_delta`` (DELETE WHERE, or a deletion vector with
+  ``use_dv=True``), ``update_delta`` (UPDATE SET WHERE) and
+  ``optimize_delta`` (OPTIMIZE bin-packing / ZORDER BY / clustering).
+  They and ``write_delta`` share ONE rewrite path — ``_open_for_rewrite``
+  (snapshot + write gate), ``_find_hit_files`` (DELETE/UPDATE phase 1),
+  ``_read_logical`` (files → logical rows, DVs applied, row ids kept)
+  and ``_stage_and_commit`` (stage → validate → change data → commit) —
+  so column mapping, row tracking, deletion vectors and CDF ordering
+  are each handled in one place;
 - optimistic concurrency: commit N+1 is created with O_CREAT|O_EXCL;
   a losing writer RETRIES at the next version after a disjointness
   check (its read/remove set vs the rival's removes), raising
@@ -50,7 +59,7 @@ import os
 import re
 import time
 import uuid
-from typing import Any
+from typing import Any, NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1694,22 +1703,6 @@ _MATERIALIZED_ROW_TRACKING_KEYS = (
 )
 
 
-def _row_tracking_dml_features(proto: dict[str, Any]) -> frozenset[str]:
-    """The feature grants a file-rewriting DML verb declares on a
-    rowTracking table (round-10): fresh ``baseRowId``/
-    ``defaultRowCommitVersion`` re-assignment via
-    ``_commit_row_tracking`` plus the ``delta.rowTracking``
-    domainMetadata high-water-mark bump. Empty when the protocol does
-    not list rowTracking (the grant would be meaningless noise in the
-    gate's error message). Callers that rewrite EXISTING rows must also
-    consult ``_row_tracking_rewrite_mode`` before staging — when the
-    table reserves materialized column names the rewrite must PRESERVE
-    stable ids by stamping them into those columns."""
-    if "rowTracking" not in set(proto.get("writerFeatures") or []):
-        return frozenset()
-    return frozenset({"rowTracking", "domainMetadata"})
-
-
 def _row_tracking_rewrite_mode(
     path: str,
     config: dict[str, str],
@@ -2620,8 +2613,9 @@ def _move_staged_adds(
 ) -> list[dict[str, Any]]:
     """Move every staged parquet out of ``staging`` into the table root
     (preserving hive partition subdirectories) and return their add
-    actions — the one walk every rewriting op (write/MERGE/DELETE/
-    OPTIMIZE) shares. Hive dirs like ``lang=en`` become the add's
+    actions — the one walk every writer (write/MERGE/DELETE/UPDATE/
+    OPTIMIZE) reaches through ``_stage_and_commit``. Hive dirs like
+    ``lang=en`` become the add's
     ``partitionValues``: Spark %-escapes special chars in dir names
     (``lang=pt:BR`` → ``lang=pt%3ABR``) and writes nulls as
     ``__HIVE_DEFAULT_PARTITION__``, but the log must store the LOGICAL
@@ -2630,9 +2624,35 @@ def _move_staged_adds(
     nothing. Zero-row parts (empty shuffle partitions, over-provisioned
     range partitions) are skipped — committing them would permanently
     add files every read lists and opens. The staging dir is removed."""
+    adds: list[dict[str, Any]] = []
+    for src, rel, pvals in _staged_parts(staging):
+        stats = _file_stats(
+            src, skip_minmax=skip_minmax, stats_cols=stats_cols
+        )
+        if stats and json.loads(stats).get("numRecords") == 0:
+            continue
+        dest = os.path.join(path, rel)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(src, dest)  # part names UUID-unique
+        add: dict[str, Any] = {
+            "path": rel,
+            "partitionValues": pvals,
+            "size": os.path.getsize(dest),
+            "modificationTime": now_ms,
+            "dataChange": data_change,
+        }
+        if stats:
+            add["stats"] = stats
+        adds.append({"add": add})
+    return adds
+
+
+def _staged_parts(staging: str):
+    """Yield ``(file, rel path, partitionValues)`` for every parquet part
+    a Spark write left under ``staging``, then remove the staging dir —
+    the walk data files and change data files share."""
     import shutil
 
-    adds: list[dict[str, Any]] = []
     for root, _dirs, files_ in os.walk(staging):
         for name in sorted(files_):
             if not name.endswith(".parquet"):
@@ -2647,27 +2667,8 @@ def _move_staged_adds(
                     if "=" in part
                 )
             }
-            src = os.path.join(root, name)
-            stats = _file_stats(
-                src, skip_minmax=skip_minmax, stats_cols=stats_cols
-            )
-            if stats and json.loads(stats).get("numRecords") == 0:
-                continue
-            dest = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(src, dest)  # part names UUID-unique
-            add: dict[str, Any] = {
-                "path": rel,
-                "partitionValues": pvals,
-                "size": os.path.getsize(dest),
-                "modificationTime": now_ms,
-                "dataChange": data_change,
-            }
-            if stats:
-                add["stats"] = stats
-            adds.append({"add": add})
+            yield os.path.join(root, name), rel, pvals
     shutil.rmtree(staging)
-    return adds
 
 
 def _cdf_enabled(config: dict[str, str]) -> bool:
@@ -2699,70 +2700,378 @@ def _stage_cdc_actions(
     Reference precedent: the reference repo's medallion notebook relies
     on delta-spark's CDF (notebooks/benchmarking_medallion.py) — this
     is the write half our ``table_changes`` reader already consumes."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    cm = cm_mode in ("name", "id")
-    phys_of = {
-        f.name: (_physical_name(f) if cm else f.name) for f in schema.fields
-    }
     staging = os.path.join(path, f"_staging-cdc-{uuid.uuid4().hex}")
-    writer = _physical_frame(
-        change_df, schema, cm_mode, extras=("_change_type",)
-    ).write.mode("errorifexists")
-    if partition_cols:
-        writer = writer.partitionBy(*[phys_of[p] for p in partition_cols])
-    writer.parquet(staging)
+    _write_staged(
+        change_df, staging, schema, partition_cols, cm_mode, ("_change_type",)
+    )
     actions: list[dict[str, Any]] = []
-    for root, _dirs, files_ in os.walk(staging):
-        for name in sorted(files_):
-            if not name.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            rel = name if rel_dir == "." else os.path.join(rel_dir, name)
-            pvals = {
-                k: (None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw))
-                for k, raw in (
-                    part.split("=", 1)
-                    for part in rel.split(os.sep)[:-1]
-                    if "=" in part
-                )
-            }
-            src = os.path.join(root, name)
-            stats = _file_stats(src)
-            if stats and json.loads(stats).get("numRecords") == 0:
-                continue
-            dest = os.path.join(path, "_change_data", rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(src, dest)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": "/".join(["_change_data"] + rel.split(os.sep)),
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(dest),
-                        "dataChange": False,
-                    }
+    for src, rel, pvals in _staged_parts(staging):
+        stats = _file_stats(src)
+        if stats and json.loads(stats).get("numRecords") == 0:
+            continue
+        dest = os.path.join(path, "_change_data", rel)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(src, dest)
+        actions.append(
+            {
+                "cdc": {
+                    "path": "/".join(["_change_data"] + rel.split(os.sep)),
+                    "partitionValues": pvals,
+                    "size": os.path.getsize(dest),
+                    "dataChange": False,
                 }
-            )
-    shutil.rmtree(staging)
+            }
+        )
     return actions
 
 
-def _discard_cdc_files(
-    path: str, cdc_actions: list[dict[str, Any]]
+def _write_staged(
+    df: DataFrame,
+    staging: str,
+    schema: T.StructType,
+    partition_cols: list[str],
+    cm_mode: str,
+    extras: tuple = (),
 ) -> None:
-    """Best-effort removal of staged _change_data files after a FAILED
-    operation — without it every post-staging validation failure
-    orphans change files until vacuum's retention clock reclaims them.
-    (Commit-retry exhaustion keeps the shared orphan posture data files
-    have: invisible to readers, vacuum-reclaimable.)"""
-    for a in cdc_actions:
-        try:
-            os.remove(os.path.join(path, a["cdc"]["path"]))
-        except OSError:
-            pass
+    """Write LOGICAL rows (plus ``extras`` columns) under ``staging`` as
+    the table's parquet: physical column names (``_physical_frame``)
+    and hive dirs named after the physical partition columns."""
+    cm = cm_mode in ("name", "id")
+    by_name = {f.name: f for f in schema.fields}
+    writer = _physical_frame(df, schema, cm_mode, extras).write.mode(
+        "errorifexists"
+    )
+    if partition_cols:
+        writer = writer.partitionBy(
+            *[_physical_name(by_name[p]) if cm else p for p in partition_cols]
+        )
+    writer.parquet(staging)
+
+
+# ---------------------------------------------------------------------------
+# The one copy-on-write rewrite path. write_delta, MERGE, DELETE, UPDATE and
+# OPTIMIZE share four stages, each behind one helper:
+#   _open_for_rewrite  snapshot + feature grants + fail-fast write gate
+#   _find_hit_files    DELETE/UPDATE phase 1: the files holding matched rows
+#   _read_logical      files -> logical rows (DVs applied, row ids kept)
+#   _stage_and_commit  stage parquet -> validate -> stage CDC -> adds -> commit
+# Each verb keeps only its own logic: MERGE its key-range targeting,
+# identity attach and anti-join/union; DELETE its deletion-vector arm;
+# UPDATE its SET projection; OPTIMIZE its bin packing and clustering.
+# ---------------------------------------------------------------------------
+
+
+class _Snapshot(NamedTuple):
+    """A table snapshot as a writer sees it: the ``_replay`` fields plus
+    what every writer derives from them. ``version`` is -1 before the
+    table's first commit; ``grants`` are the features the write upholds
+    (forwarded to the commit gate)."""
+
+    version: int
+    active: dict[str, dict]
+    schema: T.StructType
+    partition_cols: list[str]
+    meta: dict[str, Any]
+    proto: dict[str, Any]
+    cm_mode: str
+    config: dict[str, str]
+    grants: frozenset[str]
+    row_tracking: bool
+
+    @property
+    def phys_of(self) -> dict[str, str]:
+        """Logical → physical column name (identity without mapping)."""
+        cm = self.cm_mode in ("name", "id")
+        return {
+            f.name: (_physical_name(f) if cm else f.name)
+            for f in self.schema.fields
+        }
+
+
+def _open_for_rewrite(spark: SparkSession, path: str, version: int) -> _Snapshot:
+    """Replay the log once at ``version`` and gate a file-rewriting verb
+    (MERGE/DELETE/UPDATE/OPTIMIZE) on the table's write protocol up
+    front — the commit gate re-checks after staging, but staging
+    against a feature-gated table is wasted IO.
+
+    The grants every rewrite upholds: ``columnMapping`` (rewrites read
+    physical parquet, present logical rows and write physical names);
+    ``rowTracking``/``domainMetadata`` when the protocol lists
+    rowTracking (fresh ``baseRowId``/``defaultRowCommitVersion`` plus a
+    high-water-mark bump via ``_commit_row_tracking``, materialized ids
+    preserved per ``_row_tracking_rewrite_mode``); ``changeDataFeed``
+    (MERGE/DELETE/UPDATE emit ``cdc`` actions when the feed is on;
+    OPTIMIZE's dataChange=false commits are skipped by CDF readers);
+    ``generatedColumns`` (MERGE/UPDATE validate the staged output,
+    UPDATE recomputes untouched generated columns; DELETE/OPTIMIZE copy
+    rows verbatim); ``identityColumns`` (MERGE assigns from the
+    high-water mark and advances it in the same commit, UPDATE refuses
+    SET on identity columns, DELETE/OPTIMIZE copy)."""
+    active, schema, partition_cols, meta = _replay(path, version)
+    cm_mode = _column_mapping_mode(meta)
+    proto = _latest_protocol(path, version)
+    row_tracking = "rowTracking" in set(proto.get("writerFeatures") or [])
+    grants = frozenset({"changeDataFeed", "generatedColumns", "identityColumns"})
+    if cm_mode in ("name", "id"):
+        grants |= {"columnMapping"}
+    if row_tracking:
+        grants |= {"rowTracking", "domainMetadata"}
+    _check_write_protocol(proto, path, extra_features=grants, meta=meta)
+    if cm_mode == "id":
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    return _Snapshot(
+        version,
+        active,
+        schema,
+        partition_cols,
+        meta,
+        proto,
+        cm_mode,
+        dict(meta.get("configuration", {})),
+        grants,
+        row_tracking,
+    )
+
+
+def _read_logical(
+    spark: SparkSession,
+    path: str,
+    snap: _Snapshot,
+    files: dict[str, dict],
+    operation: str | None = None,
+    on_scan=None,
+    extras: tuple = (),
+) -> tuple[DataFrame, tuple]:
+    """The rows of ``files`` (rel → add action) as LOGICAL columns in
+    schema order, deletion vectors applied: a DV-bearing file yields
+    only its surviving rows, so a rewrite commits them DV-free and can
+    never resurrect deleted rows (apply-and-rewrite).
+
+    ``operation`` names a rewrite of these files: on a rowTracking
+    table whose configuration reserves the materialized columns
+    (``_row_tracking_rewrite_mode``), each row then carries its STABLE
+    row id and commit version in those two columns, returned as the
+    second element for the writer to stage; otherwise that element is
+    ``()``. ``on_scan`` transforms the raw scan while ``_metadata`` is
+    still defined (DELETE/UPDATE's file key, OPTIMIZE's bin id);
+    ``extras`` are the columns it adds that must survive the logical
+    projection."""
+    mat = (
+        _row_tracking_rewrite_mode(path, snap.config, set(files), operation)
+        if operation and snap.row_tracking
+        else None
+    )
+    rels = sorted(files)
+    read_schema = _reader_schema(snap.schema, snap.cm_mode)
+    if mat:
+        read_schema = _rt_read_schema(read_schema, mat)
+    df, pv_finish = _partitioned_scan(
+        spark,
+        path,
+        read_schema,
+        rels,
+        {r: files[r].get("partitionValues") or {} for r in rels},
+        snap.schema,
+        snap.partition_cols,
+        snap.cm_mode,
+    )
+    if on_scan is not None:
+        df = on_scan(df)
+    if mat:
+        depth = _rt_suffix_depth(rels, path)
+        df = _rt_capture(df, depth)
+    dvs = {
+        rel: a["deletionVector"]
+        for rel, a in files.items()
+        if a.get("deletionVector")
+    }
+    if dvs:
+        df = _apply_deletion_vectors(spark, path, df, dvs, all_rels=rels)
+    if mat:
+        df = _rt_stamp_stable(spark, df, rels, files, mat, depth)
+    rt_extras = tuple(mat or ())
+    df = _present_logical(
+        pv_finish(df), snap.schema, snap.cm_mode, extras=(*rt_extras, *extras)
+    )
+    return df, rt_extras
+
+
+def _find_hit_files(
+    spark: SparkSession,
+    path: str,
+    snap: _Snapshot,
+    pred,
+    prune: tuple[str, str, Any] | None,
+) -> tuple[DataFrame | None, dict[str, dict]]:
+    """Phase 1 of DELETE/UPDATE: the files holding at least one row
+    that ``pred`` matches, as ``(phase1, hits)``. ``prune`` drops files
+    by footer stats or partitionValues first (``_may_satisfy``; off for
+    collated columns, whose binary bounds cannot prune collated
+    comparisons). ``phase1`` is the LOGICAL content of the candidates —
+    DV-deleted rows excluded, so a predicate matching only those never
+    flags a file — with each row's scanned file (``_f``) and physical
+    row index (``_ridx``, DELETE's deletion-vector arm). The collect is
+    bounded: at most one row per candidate file. ``hits`` maps each hit
+    file to its add action, in path order; ``(None, {})`` when no file
+    is a candidate."""
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
+
+    if prune and any(
+        f.name == prune[0] and _is_collated_string(f.dataType)
+        for f in snap.schema.fields
+    ):
+        prune = None
+    phys_of = snap.phys_of
+    phys_prune = (
+        (phys_of.get(prune[0], prune[0]), prune[1], prune[2]) if prune else None
+    )
+    cand = {
+        rel: a
+        for rel, a in snap.active.items()
+        if phys_prune is None or _may_satisfy(a, phys_prune)
+    }
+    if not cand:
+        return None, {}
+    # `_metadata.file_path` rather than input_file_name(): the DV
+    # anti-join sits between the scan and the projection, and
+    # input_file_name is undefined after a join
+    phase1, _ = _read_logical(
+        spark,
+        path,
+        snap,
+        cand,
+        on_scan=lambda d: d.withColumn(
+            "_f", F.col("_metadata.file_path")
+        ).withColumn("_ridx", F.col("_metadata.row_index")),
+        extras=("_f", "_ridx"),
+    )
+    hit_rows = phase1.filter(pred).select("_f").distinct().collect()
+    key_of = _scanned_key_map(path, cand)
+    hits = {
+        key_of[os.path.abspath(unquote(urlparse(r["_f"]).path))] for r in hit_rows
+    }
+    return phase1, {rel: cand[rel] for rel in sorted(hits)}
+
+
+def _stage_and_commit(
+    snap: _Snapshot,
+    path: str,
+    frame: DataFrame,
+    operation: str,
+    parameters: dict[str, Any],
+    removed: dict[str, dict] | None = None,
+    *,
+    head: list[dict[str, Any]] | None = None,
+    extra_actions: list[dict[str, Any]] | None = None,
+    change_df: DataFrame | None = None,
+    refusal: tuple[str, str] | None = None,
+    extras: tuple = (),
+    data_change: bool = True,
+    evolved_meta: dict[str, Any] | None = None,
+    idents: list[tuple[str, int, int, int | None, bool]] | None = None,
+    read_metadata: bool = True,
+    mode: str = "mutate",
+    max_retries: int = 5,
+) -> int:
+    """Stage ``frame`` (LOGICAL rows plus ``extras`` columns) as the
+    table's parquet and commit it in ONE transaction with a remove for
+    every file in ``removed``; returns the committed version.
+
+    One order for every writer: write the staged files → validate them
+    (``refusal`` = the two message tails naming the operation; None for
+    verbatim copies, which have nothing to validate) → stage the change
+    data files of ``change_df`` → move the staged files into the table
+    → commit. Change data therefore stages only after every validation,
+    and a failed commit orphans it exactly like its data files
+    (invisible to readers, vacuum-reclaimable).
+
+    The commit is ``head`` + metaData (``evolved_meta``, with the
+    identity high-water marks of ``idents`` advanced from the staged
+    footer stats) + removes + adds + ``extra_actions`` + cdc +
+    commitInfo. On a rowTracking table ``_commit_row_tracking`` stamps
+    the adds and re-stamps on a lost race; otherwise
+    ``_commit_with_retry`` retries disjoint races — a rival removing a
+    file this commit removes (which it read) raises
+    ``DeltaConcurrentModification``, as does a rival metaData/protocol
+    commit when ``read_metadata`` (the write derived schema, constraints
+    or appendOnly from its snapshot)."""
+    spark = frame.sparkSession
+    schema, cm_mode, config = snap.schema, snap.cm_mode, snap.config
+    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
+    _write_staged(frame, staging, schema, snap.partition_cols, cm_mode, extras)
+    if refusal is not None:
+        viol = _violated_constraint(spark, staging, schema, config, cm_mode)
+        gviol = None if viol else _violated_generated(
+            spark, staging, schema, cm_mode, _generated_exprs(schema)
+        )
+        if viol or gviol:
+            import shutil
+
+            shutil.rmtree(staging)
+            raise ValueError(
+                f"{viol[0]} ({viol[1]}) violated by {refusal[0]}"
+                if viol
+                else f"generated column {gviol[0]} must equal ({gviol[1]})"
+                f"{refusal[1]}"
+            )
+    cdc_actions = (
+        _stage_cdc_actions(
+            path, change_df, schema, snap.partition_cols, cm_mode
+        )
+        if change_df is not None
+        else []
+    )
+    now_ms = int(time.time() * 1000)
+    adds = _move_staged_adds(
+        staging,
+        path,
+        now_ms,
+        data_change=data_change,
+        skip_minmax=_collated_top_columns(schema, cm_mode),
+        stats_cols=_indexed_stats_columns(schema, config, cm_mode),
+    )
+    new_meta = evolved_meta
+    if idents:
+        # identity allocation state lives in the schema field metadata:
+        # an assigning (or mark-advancing explicit) write ships a
+        # metaData action with the bumped highWaterMark in this commit
+        marks = _identity_marks_from_adds(adds, idents, phys_of=snap.phys_of)
+        if marks:
+            new_meta = _identity_stamped_meta(new_meta or snap.meta, marks)
+    head = list(head or [])
+    if new_meta is not None:
+        head.append({"metaData": new_meta})
+    head += [
+        _remove_action(rel, a, now_ms, data_change)
+        for rel, a in (removed or {}).items()
+    ]
+    tail = list(extra_actions or []) + cdc_actions
+    tail.append(
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": operation,
+                "operationParameters": parameters,
+            }
+        }
+    )
+    if snap.row_tracking:
+        return _commit_row_tracking(
+            path, head, adds, tail, mode, max_retries, snap.grants
+        )
+    return _commit_with_retry(
+        path,
+        snap.version + 1,
+        head + adds + tail,
+        max_retries=max_retries,
+        read_metadata=read_metadata,
+        # blind appends qualify for the append-only protocol relaxation
+        # (deletionVectors tables accept them); everything else mutates
+        commit_operation="append" if mode == "append" else "mutate",
+        extra_features=snap.grants,
+    )
 
 
 def write_delta(
@@ -2828,10 +3137,11 @@ def write_delta(
                 "(nested clustering columns are not supported — "
                 "pass zorder_by to optimize_delta explicitly instead)"
             )
+    active: dict[str, dict] = {}
+    meta: dict[str, Any] = {}
     config: dict[str, str] = {}
     evolved_meta: dict[str, Any] | None = None
     cm_mode = "none"
-    cm_schema: T.StructType | None = None
     gens_schema = df.schema
     row_tracking = False
     idents: list[tuple[str, int, int, int | None, bool]] = []
@@ -2847,7 +3157,7 @@ def write_delta(
         # construction paths (spark.range yields non-null,
         # createDataFrame yields nullable) and a nullable/non-null flip
         # is not a data-incompatibility here.
-        _, table_schema, table_pcols, meta = _replay(path, versions[-1])
+        active, table_schema, table_pcols, meta = _replay(path, versions[-1])
         gens_schema = table_schema
         config = dict(meta.get("configuration", {}))
         cm_mode = _column_mapping_mode(meta)
@@ -2878,7 +3188,6 @@ def write_delta(
                     "with nested columns — nested field-id writes are "
                     "not supported"
                 )
-            cm_schema = table_schema
         idents = _identity_fields(table_schema)
         if idents:
             # identity columns (round-11, writer v6 / identityColumns
@@ -2962,7 +3271,6 @@ def write_delta(
                     merged_schema, config = _assign_cm_fields(
                         merged_schema, table_schema, config, path
                     )
-                    cm_schema = merged_schema
                     gens_schema = merged_schema
                     evolved_meta["configuration"] = config
                 evolved_meta["schemaString"] = merged_schema.json()
@@ -2976,65 +3284,6 @@ def write_delta(
                 f"partition columns fixed at table creation: "
                 f"table={table_pcols} write={list(partition_by)}"
             )
-
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    staged_df = df
-    staged_partition_by = list(partition_by or [])
-    if cm_schema is not None:
-        # logical → physical rename; hive dirs must carry physical
-        # partition-column names (the spec's on-disk convention)
-        staged_df = _physical_frame(df, cm_schema, cm_mode)
-        phys_by_logical = {f.name: _physical_name(f) for f in cm_schema.fields}
-        staged_partition_by = [
-            phys_by_logical[p] for p in staged_partition_by
-        ]
-    writer = staged_df.write.mode("errorifexists")
-    if staged_partition_by:
-        writer = writer.partitionBy(*staged_partition_by)
-    writer.parquet(staging)
-    viol = _violated_constraint(
-        df.sparkSession,
-        staging,
-        # the TABLE-authoritative schema (not df.schema): an append's
-        # incoming frame does not carry the table's delta.invariants
-        # field metadata, and a reader-schema column the batch omitted
-        # reads as NULL — exactly the value the rule must judge
-        cm_schema if cm_schema is not None else gens_schema,
-        config,
-        cm_mode,
-    )
-    if viol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"{viol[0]} ({viol[1]}) violated by write "
-            f"to Delta table at {path}"
-        )
-    gviol = _violated_generated(
-        df.sparkSession,
-        staging,
-        cm_schema if cm_schema is not None else df.schema,
-        cm_mode,
-        _generated_exprs(gens_schema),
-    )
-    if gviol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"generated column {gviol[0]} must equal ({gviol[1]}) on "
-            f"every row written to Delta table at {path} — supplied "
-            "values diverge"
-        )
-    now_ms = int(time.time() * 1000)
-    adds = _move_staged_adds(
-        staging,
-        path,
-        now_ms,
-        skip_minmax=_collated_top_columns(gens_schema, cm_mode),
-        stats_cols=_indexed_stats_columns(gens_schema, config, cm_mode),
-    )
 
     actions: list[dict[str, Any]] = []
     if version == 0:
@@ -3089,7 +3338,7 @@ def write_delta(
                     "schemaString": df.schema.json(),
                     "partitionColumns": list(partition_by or []),
                     "configuration": {},
-                    "createdTime": now_ms,
+                    "createdTime": int(time.time() * 1000),
                 }
             }
         )
@@ -3112,108 +3361,85 @@ def write_delta(
                     }
                 }
             )
-    meta_to_ship = evolved_meta
-    if idents:
-        # identity allocation state lives in the schema field metadata:
-        # an assigning (or mark-advancing explicit) write ships a
-        # metaData action with the bumped highWaterMark in this commit
-        ident_marks = _identity_marks_from_adds(
-            adds,
-            idents,
-            phys_of=(
-                {f.name: _physical_name(f) for f in cm_schema.fields}
-                if cm_schema is not None
-                else None
-            ),
-        )
-        if ident_marks:
-            meta_to_ship = _identity_stamped_meta(
-                meta_to_ship if meta_to_ship is not None else meta,
-                ident_marks,
-            )
-    if meta_to_ship is not None:
-        actions.append({"metaData": meta_to_ship})
-    cdc_actions: list[dict[str, Any]] = []
-    if mode == "overwrite" and version > 0:
-        prior_active, _, _, _ = _replay(path, versions[-1])
-        for rel, prior_add in prior_active.items():
-            actions.append(_remove_action(rel, prior_add, now_ms))
-        if _cdf_enabled(config):
-            # CDF write contract (round-10): an overwrite commit carries
-            # BOTH dataChange adds and removes, which no CDF reader can
-            # derive — the change rows (every prior row as delete, every
-            # new row as insert) must ride in _change_data files
-            # referenced by cdc actions. Costs one extra pass over old +
-            # new rows; appends stay cdc-free (derived as inserts).
-            from pyspark.sql import functions as F
+    change_df = None
+    if mode == "overwrite" and version > 0 and _cdf_enabled(config):
+        # CDF write contract (round-10): an overwrite commit carries
+        # BOTH dataChange adds and removes, which no CDF reader can
+        # derive — the change rows (every prior row as delete, every
+        # new row as insert) must ride in _change_data files
+        # referenced by cdc actions. Costs one extra pass over old +
+        # new rows; appends stay cdc-free (derived as inserts).
+        from pyspark.sql import functions as F
 
-            out_schema = cm_schema if cm_schema is not None else df.schema
-            prior_rows = read_delta(df.sparkSession, path, version=versions[-1])
-            for f in out_schema.fields:
-                if f.name not in prior_rows.columns:
-                    prior_rows = prior_rows.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-            names = [f.name for f in out_schema.fields]
-            change_df = (
-                prior_rows.select(*names)
-                .withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    df.select(*names).withColumn(
-                        "_change_type", F.lit("insert")
-                    )
+        prior_rows = read_delta(df.sparkSession, path, version=versions[-1])
+        for f in gens_schema.fields:
+            if f.name not in prior_rows.columns:
+                prior_rows = prior_rows.withColumn(
+                    f.name, F.lit(None).cast(f.dataType)
                 )
+        names = gens_schema.fieldNames()
+        change_df = (
+            prior_rows.select(*names)
+            .withColumn("_change_type", F.lit("delete"))
+            .unionByName(
+                df.select(*names).withColumn("_change_type", F.lit("insert"))
             )
-            cdc_actions = _stage_cdc_actions(
-                path, change_df, out_schema, list(partition_by or []), cm_mode
-            )
-    tail: list[dict[str, Any]] = list(extra_actions or []) + cdc_actions
-    tail.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper()},
-            }
-        }
-    )
-    extra_feats = set()
-    if cm_mode in ("name", "id"):
-        # this write renamed its columns to the table's physical names,
-        # so it upholds the columnMapping writer requirement (the DML
-        # verbs pass it too since round 9 — their rewrite paths read
-        # physical parquet and present logical)
-        extra_feats.add("columnMapping")
-    if version > 0:
-        # changeDataFeed is upheld by construction: appends are add-only
-        # commits (CDF readers derive them as inserts, no cdc action
-        # required by the spec) and overwrites emitted cdc actions above
-        # when the feed is enabled
-        extra_feats.add("changeDataFeed")
-        # generatedColumns is upheld by the staged-data validation above
-        extra_feats.add("generatedColumns")
-    if idents:
-        # upheld: values assigned from (and mark advanced past) the
-        # schema's high-water mark in this very commit
-        extra_feats.add("identityColumns")
-    if row_tracking:
-        extra_feats.update({"rowTracking", "domainMetadata"})
-        return _commit_row_tracking(
-            path, actions, adds, tail, mode, max_retries, frozenset(extra_feats)
         )
-    return _commit_with_retry(
+    # granted features this write upholds: columnMapping (columns
+    # renamed to the table's physical names); changeDataFeed (appends
+    # are add-only commits CDF readers derive as inserts, overwrites
+    # emit cdc actions when the feed is on); generatedColumns (the
+    # staged-data validation); identityColumns (values assigned from,
+    # and the mark advanced past, the schema's high-water mark in this
+    # very commit); rowTracking/domainMetadata (_commit_row_tracking)
+    grants = set()
+    if cm_mode in ("name", "id"):
+        grants.add("columnMapping")
+    if version > 0:
+        grants |= {"changeDataFeed", "generatedColumns"}
+    if idents:
+        grants.add("identityColumns")
+    if row_tracking:
+        grants |= {"rowTracking", "domainMetadata"}
+    snap = _Snapshot(
+        version - 1,
+        active,
+        # the TABLE-authoritative schema (not df.schema): an append's
+        # incoming frame does not carry the table's delta.invariants
+        # field metadata, and a reader-schema column the batch omitted
+        # reads as NULL — exactly the value a rule must judge
+        gens_schema,
+        list(partition_by or []),
+        meta,
+        {},
+        cm_mode,
+        config,
+        frozenset(grants),
+        row_tracking,
+    )
+    return _stage_and_commit(
+        snap,
         path,
-        version,
-        actions + adds + tail,
-        max_retries=max_retries,
-        # blind appends qualify for the append-only protocol relaxation
-        # (deletionVectors tables accept them); everything else mutates
-        commit_operation="append" if mode == "append" else "mutate",
+        df,
+        "WRITE",
+        {"mode": mode.upper()},
+        removed=active if mode == "overwrite" else None,
+        head=actions,
+        extra_actions=extra_actions,
+        change_df=change_df,
+        refusal=(
+            f"write to Delta table at {path}",
+            f" on every row written to Delta table at {path} — supplied "
+            "values diverge",
+        ),
+        evolved_meta=evolved_meta,
+        idents=idents,
         # version>0 means this write enforced the snapshot's schema,
         # CHECK constraints, and appendOnly gate — a rival metaData/
         # protocol commit invalidates that derivation
         read_metadata=version > 0,
-        extra_features=frozenset(extra_feats),
+        mode=mode,
+        max_retries=max_retries,
     )
 
 
@@ -4171,23 +4397,13 @@ def merge_delta(
     ``_identity_marks_from_adds``). GENERATED ALWAYS columns refuse
     explicit values (delta-spark parity); BY DEFAULT columns supplied
     explicitly pass through with the mark advancing past them."""
+    from pyspark.sql import functions as F
+
     versions = _list_versions(path)
     if not versions:
         return write_delta(updates, path, mode="append")
-    active, schema, partition_cols, _meta = _replay(path, versions[-1])
-    cm_mode = _column_mapping_mode(_meta)
-    cm = cm_mode in ("name", "id")
-    proto = _latest_protocol(path, versions[-1])
-    cm_feats = frozenset({"columnMapping"}) if cm else frozenset()
-    rt_feats = _row_tracking_dml_features(proto)
-    # generatedColumns: the staged output (kept rows verbatim + update
-    # rows supplied whole) is validated against the generation
-    # expressions before commit. identityColumns (round-12): inserts
-    # are assigned from the high-water mark and the mark advances in
-    # this commit — the same obligations write_delta upholds.
-    grants = cm_feats | rt_feats | frozenset(
-        {"changeDataFeed", "generatedColumns", "identityColumns"}
-    )
+    snap = _open_for_rewrite(spark, path, versions[-1])
+    active, schema = snap.active, snap.schema
     idents = _identity_fields(schema)
     upd_cols = set(updates.columns)
     explicit_always = sorted(
@@ -4226,12 +4442,6 @@ def merge_delta(
             if f.name not in {n for n, *_ in omitted_idents}
         ]
     )
-    # fail fast: the commit gate re-checks after staging, but staging a
-    # MERGE against a feature-gated table is pure wasted IO
-    _check_write_protocol(proto, path, extra_features=grants, meta=_meta)
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    phys_of = {f.name: (_physical_name(f) if cm else f.name) for f in schema.fields}
     # the same name+type enforcement write_delta applies: an updates
     # frame whose schema drifts would otherwise be staged and committed
     # VERBATIM (the no-affected-files arm writes it directly), leaving a
@@ -4253,13 +4463,9 @@ def merge_delta(
         # joining a plain string against a collated column is an
         # INDETERMINATE_COLLATION analysis error; delta-spark casts the
         # source to the target schema the same way
-        from pyspark.sql import functions as F
-
         updates = updates.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-
-    from pyspark.sql import functions as F
 
     n_upd, n_keyed, n_distinct, lo, hi = updates.agg(
         F.count(F.lit(1)),
@@ -4302,101 +4508,50 @@ def merge_delta(
         # rewrites only true matches' files
         affected = dict(active)
     else:
-        phys_key = phys_of.get(key, key)
+        phys_key = snap.phys_of.get(key, key)
         affected = {
             rel: a
             for rel, a in active.items()
             if _may_satisfy(a, (phys_key, ">=", lo))
             and _may_satisfy(a, (phys_key, "<=", hi))
         }
-
-    config = dict(
-        _latest_metadata(path, versions[-1]).get("configuration", {})
-    )
-    if affected and config.get("delta.appendOnly") == "true":
+    if affected and snap.config.get("delta.appendOnly") == "true":
         raise ValueError(
             f"Delta table at {path} is delta.appendOnly=true: MERGE "
             "would rewrite files holding matched keys; only pure-insert "
             "merges (no key overlap) are allowed"
         )
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        _remove_action(rel, a, now_ms) for rel, a in affected.items()
-    ]
-    rt_mat = (
-        _row_tracking_rewrite_mode(path, config, set(affected), "MERGE")
-        if (rt_feats and affected)
-        else None
-    )
+    names = schema.fieldNames()
     rt_extras: tuple = ()
     if affected:
-        rels_sorted = sorted(affected)
-        old_schema = _reader_schema(schema, cm_mode)
-        if rt_mat:
-            old_schema = _rt_read_schema(old_schema, rt_mat)
-        old, pv_finish = _partitioned_scan(
-            spark,
-            path,
-            old_schema,
-            rels_sorted,
-            {r: affected[r].get("partitionValues") or {} for r in rels_sorted},
-            schema,
-            partition_cols,
-            cm_mode,
-        )
-        if rt_mat:
-            rt_depth = _rt_suffix_depth(rels_sorted, path)
-            old = _rt_capture(old, rt_depth)
-        # apply-and-rewrite: a DV-bearing affected file is read WITHOUT
-        # its deleted rows and rewritten DV-free — rewriting the raw
-        # parquet would resurrect them
-        dv_affected = {
-            rel: a["deletionVector"]
-            for rel, a in affected.items()
-            if a.get("deletionVector")
-        }
-        if dv_affected:
-            old = _apply_deletion_vectors(
-                spark, path, old, dv_affected, all_rels=sorted(affected)
-            )
-        if rt_mat:
-            old = _rt_stamp_stable(
-                spark, old, rels_sorted, affected, rt_mat, rt_depth
-            )
-            rt_extras = rt_mat
-        old = pv_finish(old)
-        old = _present_logical(old, schema, cm_mode, extras=rt_extras)
+        old, rt_extras = _read_logical(spark, path, snap, affected, "MERGE")
         if omitted_idents:
             updates = _merge_attach_identity(
                 updates, old, key, omitted_idents, schema
             )
         kept = old.join(updates.select(key), on=key, how="left_anti")
-        if rt_mat:
+        if rt_extras:
             # identity across the upsert: a matched source row REPLACES
             # its target row(s) and inherits the stable row id (min() of
             # the replaced set — deterministic when a key legally repeats
             # in the target); its commit version nulls out so the new
             # add's defaultRowCommitVersion (this commit) applies.
             # Unmatched source rows are true inserts: both null → fresh.
-            mid_c, mcv_c = rt_mat
+            mid_c, mcv_c = rt_extras
             surv_ids = old.groupBy(key).agg(
                 F.min(F.col(f"`{mid_c}`")).alias(mid_c)
             )
             upd = (
-                updates.select(*schema.fieldNames())
+                updates.select(*names)
                 .join(surv_ids, on=key, how="left")
                 .withColumn(mcv_c, F.lit(None).cast("long"))
             )
             new_data = kept.unionByName(
-                upd.select(
-                    *schema.fieldNames(),
-                    F.col(f"`{mid_c}`"),
-                    F.col(f"`{mcv_c}`"),
-                )
+                upd.select(*names, F.col(f"`{mid_c}`"), F.col(f"`{mcv_c}`"))
             )
         else:
-            new_data = kept.unionByName(updates.select(*schema.fieldNames()))
+            new_data = kept.unionByName(updates.select(*names))
     else:
         if omitted_idents:
             # no files affected = every update row is an insert: all
@@ -4406,42 +4561,13 @@ def merge_delta(
             )
         new_data = updates
 
-    # stage+move exactly like write_delta, then commit removes+adds in one
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    writer = _physical_frame(
-        new_data, schema, cm_mode, extras=rt_extras
-    ).write.mode("errorifexists")
-    if partition_cols:
-        writer = writer.partitionBy(*[phys_of[p] for p in partition_cols])
-    writer.parquet(staging)
-    viol = _violated_constraint(spark, staging, schema, config, cm_mode)
-    if viol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"{viol[0]} ({viol[1]}) violated by MERGE "
-            f"into Delta table at {path}"
-        )
-    gviol = _violated_generated(
-        spark, staging, schema, cm_mode, _generated_exprs(schema)
-    )
-    if gviol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"generated column {gviol[0]} must equal ({gviol[1]}) on "
-            f"every row MERGEd into Delta table at {path}"
-        )
-    cdc_actions: list[dict[str, Any]] = []
-    if _cdf_enabled(config):
+    change_df = None
+    if _cdf_enabled(snap.config):
         # CDF write contract: matched keys render as an update_preimage/
         # update_postimage pair (every replaced target row is a
         # preimage; the one source row its key maps to is the
         # postimage), unmatched source rows as inserts — exactly the
         # change classes delta-spark's MERGE emits; cost ∝ changed rows
-        names = schema.fieldNames()
         if affected:
             old_keys = old.select(key).distinct()
             change_df = (
@@ -4463,63 +4589,23 @@ def merge_delta(
             change_df = updates.select(*names).withColumn(
                 "_change_type", F.lit("insert")
             )
-        cdc_actions = _stage_cdc_actions(
-            path, change_df, schema, partition_cols, cm_mode
-        )
-    adds = _move_staged_adds(
-        staging,
+    # with materialized row-tracking columns reserved, kept rows carry
+    # their preserved id+version, updated rows a preserved id (version
+    # defaults to this commit), inserts derive fresh
+    return _stage_and_commit(
+        snap,
         path,
-        now_ms,
-        skip_minmax=_collated_top_columns(schema, cm_mode),
-        stats_cols=_indexed_stats_columns(schema, config, cm_mode),
-    )
-    tail = cdc_actions + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "MERGE",
-                "operationParameters": {"key": key},
-            }
-        }
-    ]
-    if idents:
-        # identity allocation state lives in the schema field metadata:
-        # a mark-advancing MERGE ships a metaData action with the bumped
-        # highWaterMark in the same commit, exactly as write_delta does
-        # (kept rows' values are ≤ the prior mark, so the staged-stats
-        # max only moves when inserts or explicit BY DEFAULT values do)
-        ident_marks = _identity_marks_from_adds(
-            adds,
-            idents,
-            phys_of=(
-                {f.name: _physical_name(f) for f in schema.fields}
-                if cm
-                else None
-            ),
-        )
-        if ident_marks:
-            tail.append(
-                {"metaData": _identity_stamped_meta(_meta, ident_marks)}
-            )
-    if rt_feats:
-        # adds get fresh baseRowId/defaultRowCommitVersion above the
-        # bumped high-water mark; with materialized columns reserved,
-        # kept rows carry preserved id+version, updated rows a preserved
-        # id (version defaults to this commit), inserts derive fresh
-        return _commit_row_tracking(
-            path, actions, adds, tail, "mutate", 5, grants
-        )
-    # depends_on = the files this merge READ (affected set): a rival
-    # removing any of them means our rewrite was derived from a stale
-    # snapshot → DeltaConcurrentModification; disjoint rivals (appends,
-    # merges over other key ranges) retry cleanly
-    return _commit_with_retry(
-        path,
-        versions[-1] + 1,
-        actions + adds + tail,
-        depends_on=set(affected),
-        read_metadata=True,  # merge derived schema + constraints from its snapshot
-        extra_features=grants,
+        new_data,
+        "MERGE",
+        {"key": key},
+        removed=affected,
+        change_df=change_df,
+        refusal=(
+            f"MERGE into Delta table at {path}",
+            f" on every row MERGEd into Delta table at {path}",
+        ),
+        extras=rt_extras,
+        idents=idents,
     )
 
 
@@ -5038,46 +5124,38 @@ DV_WRITE_MAX = 1_000_000
 def _delete_emit_dv(
     spark: SparkSession,
     path: str,
-    latest: int,
-    cand: dict[str, dict],
+    snap: _Snapshot,
+    hits: dict[str, dict],
     phase1: DataFrame,
     pred,
     condition: str,
-    config: dict[str, str],
-    proto: dict[str, Any],
-    extra_features: frozenset[str] = frozenset(),
-    cdc_actions: list[dict[str, Any]] | None = None,
+    change_df: DataFrame | None,
 ) -> int | None:
     """DELETE as a copy-on-write deletion vector (see delete_delta's
     ``use_dv``). Returns the committed version, or None when the match
-    volume exceeds DV_WRITE_MAX and the caller should rewrite.
-    ``extra_features`` forwards the caller's already-validated feature
-    grants (columnMapping on CM tables) so the commit-time write gate
-    agrees with the entry gate — without it a CM+DV table passed entry
-    but failed at commit, after the DV .bin was already written.
-    ``cdc_actions`` (round-10) are the caller's pre-staged change-data
-    actions on a CDF-enabled table — the deleted-row set is identical
-    for the DV and rewrite paths, so delete_delta stages once and both
-    commits carry them. rowTracking note: the re-add below copies the
-    prior add verbatim, so baseRowId/defaultRowCommitVersion (and any
-    materialized row-id columns in the untouched data file) are
-    PRESERVED — a DV delete never re-stamps ids or bumps the mark."""
+    volume exceeds DV_WRITE_MAX and the caller should rewrite. The
+    commit forwards the snapshot's feature grants, so the commit-time
+    write gate agrees with the entry gate. ``change_df`` (a CDF-enabled
+    table's deleted rows — the same set the rewrite path would emit)
+    stages last, right before the commit. rowTracking note: the re-add
+    below copies the prior add verbatim, so baseRowId/
+    defaultRowCommitVersion (and any materialized row-id columns in the
+    untouched data file) are PRESERVED — a DV delete never re-stamps
+    ids or bumps the mark."""
     import numpy as np
     from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
 
     from sustainable_building_energy_benchmarking_pipeline_spark.sources.deletion_vectors import (
         deleted_row_indexes,
         write_dv_file,
     )
 
-    feats_w = set(proto.get("writerFeatures") or [])
-    feats_r = set(proto.get("readerFeatures") or [])
+    feats_w = set(snap.proto.get("writerFeatures") or [])
+    feats_r = set(snap.proto.get("readerFeatures") or [])
     if (
         "deletionVectors" not in feats_w
         or "deletionVectors" not in feats_r
-        or config.get("delta.enableDeletionVectors") != "true"
+        or snap.config.get("delta.enableDeletionVectors") != "true"
     ):
         raise ValueError(
             f"use_dv=True needs the Delta table at {path} to already "
@@ -5094,7 +5172,7 @@ def _delete_emit_dv(
     )
     if len(matches) > DV_WRITE_MAX:
         return None
-    key_of = _scanned_key_map(path, cand)
+    key_of = _scanned_key_map(path, hits)
     by_rel: dict[str, list[int]] = {}
     for r in matches:
         rel = key_of[os.path.abspath(unquote(urlparse(r["_f"]).path))]
@@ -5102,7 +5180,7 @@ def _delete_emit_dv(
     rels = sorted(by_rel)
     if (
         sum(
-            int((cand[rel].get("deletionVector") or {}).get("cardinality", 0))
+            int((hits[rel].get("deletionVector") or {}).get("cardinality", 0))
             for rel in rels
         )
         + len(matches)
@@ -5111,7 +5189,7 @@ def _delete_emit_dv(
         return None  # the UNION would exceed the bitmap budget
     bitmaps: list[np.ndarray] = []
     for rel in rels:
-        old = cand[rel].get("deletionVector")
+        old = hits[rel].get("deletionVector")
         prev = (
             deleted_row_indexes(path, old)
             if old
@@ -5124,9 +5202,9 @@ def _delete_emit_dv(
     now_ms = int(time.time() * 1000)
     actions: list[dict[str, Any]] = []
     for rel, bm, desc in zip(rels, bitmaps, descs):
-        actions.append(_remove_action(rel, cand[rel], now_ms))
+        actions.append(_remove_action(rel, hits[rel], now_ms))
         num_records = None
-        stats = cand[rel].get("stats")
+        stats = hits[rel].get("stats")
         if stats:
             try:
                 num_records = json.loads(stats).get("numRecords")
@@ -5134,12 +5212,15 @@ def _delete_emit_dv(
                 pass
         if num_records is not None and len(bm) >= int(num_records):
             continue  # bitmap covers the whole file — drop it outright
-        add = dict(cand[rel])
+        add = dict(hits[rel])
         add["deletionVector"] = desc
         add["dataChange"] = True
         add["modificationTime"] = now_ms
         actions.append({"add": add})
-    actions.extend(cdc_actions or [])
+    if change_df is not None:
+        actions += _stage_cdc_actions(
+            path, change_df, snap.schema, snap.partition_cols, snap.cm_mode
+        )
     actions.append(
         {
             "commitInfo": {
@@ -5154,11 +5235,10 @@ def _delete_emit_dv(
     )
     return _commit_with_retry(
         path,
-        latest + 1,
+        snap.version + 1,
         actions,
-        depends_on=set(rels),
         read_metadata=True,
-        extra_features=extra_features,
+        extra_features=snap.grants,
     )
 
 
@@ -5173,9 +5253,10 @@ def delete_delta(
     expression; NULL keeps the row, SQL WHERE semantics).
 
     Scale shape — the two-phase file-targeted rewrite real Delta runs:
-    phase 1 scans candidate files WITH ``input_file_name()`` and keeps
-    only files that actually contain a matching row (the predicate is
-    pushed into the parquet scan; the collect is ≤ one row per file);
+    phase 1 (``_find_hit_files``) scans candidate files with their
+    ``_metadata.file_path`` and keeps only files that actually contain
+    a matching row (the predicate is pushed into the parquet scan; the
+    collect is ≤ one row per file);
     phase 2 reads ONLY those files and rewrites them without the
     matching rows. A delete touching 1% of files rewrites 1% of the
     table. ``prune`` — an optional (col, op, value) the condition
@@ -5204,230 +5285,49 @@ def delete_delta(
     partition's files); survivors rewrite back into hive layout, and
     the DV path re-adds the same partitioned path unchanged."""
     from pyspark.sql import functions as F
-    from urllib.parse import urlparse
 
     versions = _list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no Delta log at {path}")
-    active, schema, partition_cols, _meta = _replay(path, versions[-1])
-    cm_mode = _column_mapping_mode(_meta)
-    cm = cm_mode in ("name", "id")
-    config = dict(_meta.get("configuration", {}))
-    proto = _latest_protocol(path, versions[-1])
-    cm_feats = frozenset({"columnMapping"}) if cm else frozenset()
-    rt_feats = _row_tracking_dml_features(proto)
-    # changeDataFeed is upheld by construction: when the feed is enabled
-    # this DELETE emits cdc actions below; when merely listed but off,
-    # nothing is required of the writer. generatedColumns and
-    # identityColumns are vacuous for DELETE: surviving rows are copied
-    # verbatim, so generated values still satisfy their expressions and
-    # identity values (and the high-water mark) are untouched.
-    grants = cm_feats | rt_feats | frozenset(
-        {"changeDataFeed", "generatedColumns", "identityColumns"}
-    )
-    _check_write_protocol(proto, path, extra_features=grants, meta=_meta)
-    if config.get("delta.appendOnly") == "true":
+    snap = _open_for_rewrite(spark, path, versions[-1])
+    if snap.config.get("delta.appendOnly") == "true":
         raise ValueError(
             f"Delta table at {path} is delta.appendOnly=true: DELETE is blocked"
         )
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    phys_of = {f.name: (_physical_name(f) if cm else f.name) for f in schema.fields}
     pred = F.coalesce(F.expr(condition), F.lit(False))
-    if prune and any(
-        f.name == prune[0] and _is_collated_string(f.dataType)
-        for f in schema.fields
-    ):
-        # binary footer bounds cannot prune collated comparisons —
-        # scan all candidates; the row predicate stays collation-aware
-        prune = None
-    phys_prune = (
-        (phys_of.get(prune[0], prune[0]), prune[1], prune[2]) if prune else None
-    )
-    cand = {
-        rel: a
-        for rel, a in active.items()
-        if phys_prune is None or _may_satisfy(a, phys_prune)
-    }
-    if not cand:
+    phase1, hits = _find_hit_files(spark, path, snap, pred, prune)
+    if not hits:
         return versions[-1]
-    cand_pvals = {
-        rel: a.get("partitionValues") or {} for rel, a in cand.items()
-    }
-    dv_cand = {
-        rel: a["deletionVector"]
-        for rel, a in cand.items()
-        if a.get("deletionVector")
-    }
-    # phase 1 must see the LOGICAL content: a predicate matching only
-    # DV-deleted rows must not flag the file (the rewrite would be a
-    # no-op that still resurrects nothing, but the version bump and IO
-    # are pure waste). `_metadata.file_path` instead of
-    # input_file_name() because the DV anti-join sits between the scan
-    # and the projection, and input_file_name is undefined after a join.
-    # Partition columns (hive dirs or, for shallow-clone absolute
-    # paths, action partitionValues) are present so the predicate may
-    # reference them — _may_satisfy already pruned non-matching
-    # partitions when `prune` names one.
-    phase1, pv_finish1 = _partitioned_scan(
-        spark,
-        path,
-        _reader_schema(schema, cm_mode),
-        sorted(cand),
-        cand_pvals,
-        schema,
-        partition_cols,
-        cm_mode,
-    )
-    phase1 = phase1.withColumn(
-        "_f", F.col("_metadata.file_path")
-    ).withColumn("_ridx", F.col("_metadata.row_index"))
-    if dv_cand:
-        phase1 = _apply_deletion_vectors(
-            spark, path, phase1, dv_cand, all_rels=list(cand)
-        )
-    phase1 = pv_finish1(phase1)
-    phase1 = _present_logical(phase1, schema, cm_mode, extras=("_f", "_ridx"))
-    hit_rows = (
-        phase1.filter(pred)
-        .select("_f")
-        .distinct()
-        .collect()  # bounded: ≤ one row per candidate file
-    )
-    key_of = _scanned_key_map(path, cand)
-    hit_files = {
-        key_of[os.path.abspath(unquote(urlparse(r["_f"]).path))] for r in hit_rows
-    }
-    if not hit_files:
-        return versions[-1]
-
-    cdc_actions: list[dict[str, Any]] = []
-    if _cdf_enabled(config):
+    change_df = None
+    if _cdf_enabled(snap.config):
         # CDF write contract: the deleted rows (identical for the DV and
         # rewrite paths — phase1 already excludes rows prior DVs hide)
         # ride in _change_data files; cost ∝ matched rows only
-        cdc_actions = _stage_cdc_actions(
-            path,
+        change_df = (
             phase1.filter(pred)
-            .select(*schema.fieldNames())
-            .withColumn("_change_type", F.lit("delete")),
-            schema,
-            partition_cols,
-            cm_mode,
+            .select(*snap.schema.fieldNames())
+            .withColumn("_change_type", F.lit("delete"))
         )
-
     if use_dv:
-        try:
-            committed = _delete_emit_dv(
-                spark,
-                path,
-                versions[-1],
-                cand,
-                phase1,
-                pred,
-                condition,
-                config,
-                proto,
-                extra_features=grants,
-                cdc_actions=cdc_actions,
-            )
-        except Exception:
-            _discard_cdc_files(path, cdc_actions)
-            raise
+        committed = _delete_emit_dv(
+            spark, path, snap, hits, phase1, pred, condition, change_df
+        )
         if committed is not None:
             return committed
         # fell through: too many matched rows for a bitmap — rewrite
 
-    rt_mat: tuple[str, str] | None = None
-    if rt_feats:
-        # rewrite-path only: the DV path above preserves each re-added
-        # file's baseRowId verbatim, so materialized row ids survive it
-        try:
-            rt_mat = _row_tracking_rewrite_mode(
-                path, config, hit_files, "DELETE"
-            )
-        except Exception:
-            _discard_cdc_files(path, cdc_actions)
-            raise
-    rels_sorted = sorted(hit_files)
-    keep_schema = _reader_schema(schema, cm_mode)
-    if rt_mat:
-        keep_schema = _rt_read_schema(keep_schema, rt_mat)
-    keep, pv_finish2 = _partitioned_scan(
-        spark,
+    # survivors are unmodified copies: with materialized row-tracking
+    # columns reserved they keep BOTH the stable row id and commit version
+    keep, rt_extras = _read_logical(spark, path, snap, hits, "DELETE")
+    return _stage_and_commit(
+        snap,
         path,
-        keep_schema,
-        rels_sorted,
-        cand_pvals,
-        schema,
-        partition_cols,
-        cm_mode,
-    )
-    if rt_mat:
-        rt_depth = _rt_suffix_depth(rels_sorted, path)
-        keep = _rt_capture(keep, rt_depth)
-    dv_hit = {rel: dv_cand[rel] for rel in hit_files if rel in dv_cand}
-    if dv_hit:
-        # apply-and-rewrite: survivors of a DV-bearing file exclude its
-        # bitmap's rows; the rewritten file carries NO deletion vector
-        keep = _apply_deletion_vectors(
-            spark, path, keep, dv_hit, all_rels=sorted(hit_files)
-        )
-    rt_extras: tuple = ()
-    if rt_mat:
-        # DELETE survivors are unmodified copies: preserve BOTH the
-        # stable row id and the stable commit version
-        keep = _rt_stamp_stable(
-            spark, keep, rels_sorted, cand, rt_mat, rt_depth
-        )
-        rt_extras = rt_mat
-    keep = pv_finish2(keep)
-    keep = _present_logical(
-        keep, schema, cm_mode, extras=rt_extras
-    ).filter(~pred)
-    keep = _physical_frame(keep, schema, cm_mode, extras=rt_extras)
-    now_ms = int(time.time() * 1000)
-    removes: list[dict[str, Any]] = [
-        _remove_action(rel, cand[rel], now_ms) for rel in sorted(hit_files)
-    ]
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    keep_writer = keep.write.mode("errorifexists")
-    if partition_cols:
-        keep_writer = keep_writer.partitionBy(
-            *[phys_of[p] for p in partition_cols]
-        )
-    keep_writer.parquet(staging)
-    adds = _move_staged_adds(
-        staging,
-        path,
-        now_ms,
-        skip_minmax=_collated_top_columns(schema, cm_mode),
-        stats_cols=_indexed_stats_columns(schema, config, cm_mode),
-    )
-    tail = cdc_actions + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": condition},
-            }
-        }
-    ]
-    if rt_feats:
-        # the new files still get fresh baseRowId/defaultRowCommitVersion
-        # (delta-spark does the same) — but when the table reserves the
-        # materialized columns, every surviving row carries its PRESERVED
-        # stable id/commit version in them, which coalesce-wins on read
-        return _commit_row_tracking(
-            path, removes, adds, tail, "mutate", 5, grants
-        )
-    return _commit_with_retry(
-        path,
-        versions[-1] + 1,
-        removes + adds + tail,
-        depends_on=set(hit_files),
-        read_metadata=True,  # delete enforced appendOnly/constraints from its snapshot
-        extra_features=grants,
+        keep.filter(~pred),
+        "DELETE",
+        {"predicate": condition},
+        removed=hits,
+        change_df=change_df,
+        extras=rt_extras,
     )
 
 
@@ -5459,30 +5359,14 @@ def update_delta(
     DV-free). CHECK constraints are enforced on the staged output, and
     ``delta.appendOnly`` blocks UPDATE like every file-rewriting op.
     Returns the committed version (unchanged when nothing matches)."""
-    from urllib.parse import urlparse
-
     from pyspark.sql import functions as F
 
     versions = _list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no Delta log at {path}")
-    active, schema, partition_cols, _meta = _replay(path, versions[-1])
-    cm_mode = _column_mapping_mode(_meta)
-    cm = cm_mode in ("name", "id")
-    config = dict(_meta.get("configuration", {}))
-    proto = _latest_protocol(path, versions[-1])
-    cm_feats = frozenset({"columnMapping"}) if cm else frozenset()
-    rt_feats = _row_tracking_dml_features(proto)
-    # generatedColumns: UPDATE recomputes generated columns the SET list
-    # leaves untouched (delta-spark behavior) and validates the staged
-    # output, so the grant is earned, not assumed. identityColumns: the
-    # SET-target check below refuses assignments to identity columns,
-    # so surviving values copy verbatim and the mark is untouched.
-    grants = cm_feats | rt_feats | frozenset(
-        {"changeDataFeed", "generatedColumns", "identityColumns"}
-    )
-    _check_write_protocol(proto, path, extra_features=grants, meta=_meta)
-    if config.get("delta.appendOnly") == "true":
+    snap = _open_for_rewrite(spark, path, versions[-1])
+    schema = snap.schema
+    if snap.config.get("delta.appendOnly") == "true":
         raise ValueError(
             f"Delta table at {path} is delta.appendOnly=true: UPDATE is blocked"
         )
@@ -5498,102 +5382,21 @@ def update_delta(
             "— identity values are writer-assigned (delta-spark raises "
             "the same way)"
         )
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    phys_of = {f.name: (_physical_name(f) if cm else f.name) for f in schema.fields}
     pred = F.coalesce(F.expr(condition), F.lit(False))
-    if prune and any(
-        f.name == prune[0] and _is_collated_string(f.dataType)
-        for f in schema.fields
-    ):
-        # binary footer bounds cannot prune collated comparisons —
-        # scan all candidates; the row predicate stays collation-aware
-        prune = None
-    phys_prune = (
-        (phys_of.get(prune[0], prune[0]), prune[1], prune[2]) if prune else None
-    )
-    cand = {
-        rel: a
-        for rel, a in active.items()
-        if phys_prune is None or _may_satisfy(a, phys_prune)
-    }
-    if not cand:
-        return versions[-1]
-    cand_pvals = {
-        rel: a.get("partitionValues") or {} for rel, a in cand.items()
-    }
-    dv_cand = {
-        rel: a["deletionVector"]
-        for rel, a in cand.items()
-        if a.get("deletionVector")
-    }
-    phase1, pv_finish1 = _partitioned_scan(
-        spark,
-        path,
-        _reader_schema(schema, cm_mode),
-        sorted(cand),
-        cand_pvals,
-        schema,
-        partition_cols,
-        cm_mode,
-    )
-    phase1 = phase1.withColumn("_f", F.col("_metadata.file_path"))
-    if dv_cand:
-        phase1 = _apply_deletion_vectors(
-            spark, path, phase1, dv_cand, all_rels=list(cand)
-        )
-    phase1 = pv_finish1(phase1)
-    phase1 = _present_logical(phase1, schema, cm_mode, extras=("_f",))
-    hit_rows = phase1.filter(pred).select("_f").distinct().collect()
-    key_of = _scanned_key_map(path, cand)
-    hit_files = {
-        key_of[os.path.abspath(unquote(urlparse(r["_f"]).path))] for r in hit_rows
-    }
-    if not hit_files:
+    _, hits = _find_hit_files(spark, path, snap, pred, prune)
+    if not hits:
         return versions[-1]
 
-    rt_mat = (
-        _row_tracking_rewrite_mode(path, config, hit_files, "UPDATE")
-        if rt_feats
-        else None
-    )
-    rels_sorted = sorted(hit_files)
-    rows_schema = _reader_schema(schema, cm_mode)
-    if rt_mat:
-        rows_schema = _rt_read_schema(rows_schema, rt_mat)
-    rows, pv_finish2 = _partitioned_scan(
-        spark,
-        path,
-        rows_schema,
-        rels_sorted,
-        cand_pvals,
-        schema,
-        partition_cols,
-        cm_mode,
-    )
-    if rt_mat:
-        rt_depth = _rt_suffix_depth(rels_sorted, path)
-        rows = _rt_capture(rows, rt_depth)
-    dv_hit = {rel: dv_cand[rel] for rel in hit_files if rel in dv_cand}
-    if dv_hit:
-        rows = _apply_deletion_vectors(
-            spark, path, rows, dv_hit, all_rels=sorted(hit_files)
-        )
-    rt_extras: tuple = ()
-    if rt_mat:
-        rows = _rt_stamp_stable(spark, rows, rels_sorted, cand, rt_mat, rt_depth)
-        rt_extras = rt_mat
-    rows = pv_finish2(rows)
-    rows = _present_logical(rows, schema, cm_mode, extras=rt_extras)
+    rows, rt_extras = _read_logical(spark, path, snap, hits, "UPDATE")
     by_field = {f.name: f for f in schema.fields}
     rt_cols = []
-    if rt_mat:
+    if rt_extras:
         # preservation split: EVERY surviving row keeps its stable row
         # id; only unmodified copies keep the stable commit version —
         # updated rows null it out so the new add's
         # defaultRowCommitVersion (the updating commit) applies, exactly
         # delta-spark's rewrite semantics
-        mid_c, mcv_c = rt_mat
+        mid_c, mcv_c = rt_extras
         rt_cols = [
             F.col(f"`{mid_c}`").alias(mid_c),
             F.when(pred, F.lit(None).cast("long"))
@@ -5631,39 +5434,8 @@ def update_delta(
             *[F.col(f"`{e}`") for e in extras],
         )
 
-    rewritten = _apply_regen(rewritten, extras=rt_extras)
-    rewritten = _physical_frame(rewritten, schema, cm_mode, extras=rt_extras)
-    now_ms = int(time.time() * 1000)
-    removes: list[dict[str, Any]] = [
-        _remove_action(rel, cand[rel], now_ms) for rel in sorted(hit_files)
-    ]
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    writer = rewritten.write.mode("errorifexists")
-    if partition_cols:
-        writer = writer.partitionBy(*[phys_of[p] for p in partition_cols])
-    writer.parquet(staging)
-    viol = _violated_constraint(spark, staging, schema, config, cm_mode)
-    if viol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"{viol[0]} ({viol[1]}) violated by UPDATE "
-            f"of Delta table at {path}"
-        )
-    gviol = _violated_generated(
-        spark, staging, schema, cm_mode, _generated_exprs(schema)
-    )
-    if gviol:
-        import shutil
-
-        shutil.rmtree(staging)
-        raise ValueError(
-            f"generated column {gviol[0]} must equal ({gviol[1]}): the "
-            f"UPDATE's SET list breaks it on Delta table at {path}"
-        )
-    cdc_actions: list[dict[str, Any]] = []
-    if _cdf_enabled(config):
+    change_df = None
+    if _cdf_enabled(snap.config):
         # CDF write contract: the matched rows ride in _change_data as
         # an update_preimage/update_postimage pair — the rendering a
         # file-granular derivation cannot produce; cost ∝ matched rows
@@ -5678,51 +5450,26 @@ def update_delta(
                 ]
             )
         )
-        cdc_actions = _stage_cdc_actions(
-            path,
+        change_df = (
             matched.select(*schema.fieldNames())
             .withColumn("_change_type", F.lit("update_preimage"))
             .unionByName(
                 post.withColumn("_change_type", F.lit("update_postimage"))
-            ),
-            schema,
-            partition_cols,
-            cm_mode,
+            )
         )
-    adds = _move_staged_adds(
-        staging,
+    return _stage_and_commit(
+        snap,
         path,
-        now_ms,
-        skip_minmax=_collated_top_columns(schema, cm_mode),
-        stats_cols=_indexed_stats_columns(schema, config, cm_mode),
-    )
-    tail = cdc_actions + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {
-                    "predicate": condition,
-                    "set": dict(sorted(set_exprs.items())),
-                },
-            }
-        }
-    ]
-    if rt_feats:
-        # new adds get fresh baseRowId/defaultRowCommitVersion; when the
-        # table reserves materialized columns the rows carry PRESERVED
-        # ids (and, for unmodified copies, commit versions) that
-        # coalesce-win over the fresh defaults on read
-        return _commit_row_tracking(
-            path, removes, adds, tail, "mutate", 5, grants
-        )
-    return _commit_with_retry(
-        path,
-        versions[-1] + 1,
-        removes + adds + tail,
-        depends_on=set(hit_files),
-        read_metadata=True,  # update enforced appendOnly/constraints from its snapshot
-        extra_features=grants,
+        _apply_regen(rewritten, extras=rt_extras),
+        "UPDATE",
+        {"predicate": condition, "set": dict(sorted(set_exprs.items()))},
+        removed=hits,
+        change_df=change_df,
+        refusal=(
+            f"UPDATE of Delta table at {path}",
+            f": the UPDATE's SET list breaks it on Delta table at {path}",
+        ),
+        extras=rt_extras,
     )
 
 
@@ -6703,36 +6450,20 @@ def optimize_delta(
     versions = _list_versions(path)
     if not versions:
         return None
-    active, schema, partition_cols, _meta = _replay(path, versions[-1])
-    cm_mode = _column_mapping_mode(_meta)
+    snap = _open_for_rewrite(spark, path, versions[-1])
+    schema, partition_cols, phys_of = snap.schema, snap.partition_cols, snap.phys_of
     if zorder_by is None:
         # clustered table (round-12): a plain OPTIMIZE of a table with a
         # live delta.clustering domain RE-CLUSTERS on those columns —
         # delta-spark's OPTIMIZE-means-clustering contract (full
         # rewrite; incremental clustering is a future refinement)
         cluster_cols = _clustering_columns(
-            path, versions[-1], schema, cm_mode, strict=True
+            path, versions[-1], schema, snap.cm_mode, strict=True
         )
         if cluster_cols:
             zorder_by = cluster_cols
-    cm = cm_mode in ("name", "id")
-    config = dict(_meta.get("configuration", {}))
-    proto = _latest_protocol(path, versions[-1])
-    cm_feats = frozenset({"columnMapping"}) if cm else frozenset()
-    rt_feats = _row_tracking_dml_features(proto)
-    # changeDataFeed is vacuous for OPTIMIZE (dataChange=false commits
-    # are skipped by CDF readers), and so are generatedColumns and
-    # identityColumns (pure copy — values and the identity high-water
-    # mark are untouched)
-    grants = cm_feats | rt_feats | frozenset(
-        {"changeDataFeed", "generatedColumns", "identityColumns"}
-    )
-    _check_write_protocol(proto, path, extra_features=grants, meta=_meta)
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    phys_of = {f.name: (_physical_name(f) if cm else f.name) for f in schema.fields}
     groups: dict[tuple, dict[str, dict]] = {}
-    for rel, a in active.items():
+    for rel, a in snap.active.items():
         gkey = tuple(sorted((a.get("partitionValues") or {}).items()))
         groups.setdefault(gkey, {})[rel] = a
     if where is not None:
@@ -6815,11 +6546,6 @@ def optimize_delta(
     if not work:
         return None
     rewrite = {rel: a for g in work.values() for rel, a in g.items()}
-    rt_mat = (
-        _row_tracking_rewrite_mode(path, config, set(rewrite), "OPTIMIZE")
-        if rt_feats
-        else None
-    )
     rels_sorted = sorted(rewrite)
     # byte-aware bin assignment: pack each partition's candidate files
     # into ceil(bytes / target) bins, largest-first onto the lightest
@@ -6846,26 +6572,8 @@ def optimize_delta(
                 bin_of_rel[rel] = bid
                 heapq.heappush(loads, (load + int(g[rel].get("size", 0)), bid))
             next_bin += n_bins
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        _remove_action(rel, a, now_ms, data_change=False)
-        for rel, a in rewrite.items()
-    ]
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    snap_schema = _reader_schema(schema, cm_mode)
-    if rt_mat:
-        snap_schema = _rt_read_schema(snap_schema, rt_mat)
-    snapshot, pv_finish = _partitioned_scan(
-        spark,
-        path,
-        snap_schema,
-        rels_sorted,
-        {r: rewrite[r].get("partitionValues") or {} for r in rels_sorted},
-        schema,
-        partition_cols,
-        cm_mode,
-    )
-    if use_bins:
+
+    def attach_bins(scan: DataFrame) -> DataFrame:
         if len(rels_sorted) <= 2048:
             # literal map: ≤2048 keys stays inside the analyzer comfort
             # bound (same trade as dedup's ≤4096 label attach)
@@ -6876,52 +6584,34 @@ def optimize_delta(
                     for x in (_dv_path_key(rel, bin_depth), bin_of_rel[rel])
                 ]
             )
-            snapshot = snapshot.withColumn(
+            return scan.withColumn(
                 "_optbin", _bin_map[_dv_file_key_col(bin_depth)]
             )
-        else:
-            # many small files is exactly the byte-aware target case —
-            # above the literal bound, attach via a broadcast hash join
-            # keyed the same way (the _rt_stamp_stable pattern)
-            bmap = spark.createDataFrame(
-                [(_dv_path_key(rel, bin_depth), bin_of_rel[rel]) for rel in rels_sorted],
-                "_optkey string, _optbin int",
-            )
-            snapshot = (
-                snapshot.withColumn("_optkey", _dv_file_key_col(bin_depth))
-                .join(F.broadcast(bmap), "_optkey")
-                .drop("_optkey")
-            )
-    if rt_mat:
-        rt_depth = _rt_suffix_depth(rels_sorted, path)
-        snapshot = _rt_capture(snapshot, rt_depth)
-    dv_active = {
-        rel: a["deletionVector"]
-        for rel, a in rewrite.items()
-        if a.get("deletionVector")
-    }
-    if dv_active:
-        # apply-and-rewrite: compaction materializes the DV deletes —
-        # logical content is unchanged (dataChange stays False), the
-        # bitmaps just stop existing
-        snapshot = _apply_deletion_vectors(
-            spark, path, snapshot, dv_active, all_rels=list(rewrite)
+        # many small files is exactly the byte-aware target case —
+        # above the literal bound, attach via a broadcast hash join
+        # keyed the same way (the _rt_stamp_stable pattern)
+        bmap = spark.createDataFrame(
+            [(_dv_path_key(rel, bin_depth), bin_of_rel[rel]) for rel in rels_sorted],
+            "_optkey string, _optbin int",
         )
-    rt_extras: tuple = ()
-    if rt_mat:
-        # compaction copies every row unmodified: preserve BOTH stable
-        # values — the spec's core rowTracking promise (OPTIMIZE must
-        # never change row identity)
-        snapshot = _rt_stamp_stable(
-            spark, snapshot, rels_sorted, rewrite, rt_mat, rt_depth
+        return (
+            scan.withColumn("_optkey", _dv_file_key_col(bin_depth))
+            .join(F.broadcast(bmap), "_optkey")
+            .drop("_optkey")
         )
-        rt_extras = rt_mat
-    snapshot = pv_finish(snapshot)
-    snapshot = _present_logical(
-        snapshot,
-        schema,
-        cm_mode,
-        extras=(*rt_extras, "_optbin") if use_bins else rt_extras,
+
+    # compaction copies every row unmodified: DV deletes materialize
+    # (logical content is unchanged, dataChange stays False) and, with
+    # materialized row-tracking columns reserved, every row keeps BOTH
+    # stable values — OPTIMIZE must never change row identity
+    snapshot, rt_extras = _read_logical(
+        spark,
+        path,
+        snap,
+        rewrite,
+        "OPTIMIZE",
+        on_scan=attach_bins if use_bins else None,
+        extras=("_optbin",) if use_bins else (),
     )
     n_out = max(1, target_files) * len(work)
     if zorder_by:
@@ -6938,7 +6628,7 @@ def optimize_delta(
         # one task per size-packed bin: range partitioning on the
         # globally-unique bin id separates bins exactly (a hash
         # repartition would merge ~1/e of them by collision); _optbin
-        # is projection-dropped by _physical_frame below
+        # is projection-dropped by _physical_frame at staging
         n_bins = len(set(bin_of_rel.values()))
         clustered = snapshot.repartitionByRange(n_bins, "_optbin")
     elif partition_cols:
@@ -6956,59 +6646,27 @@ def optimize_delta(
             clustered = snapshot.repartition(len(work), *partition_cols)
     else:
         clustered = snapshot.coalesce(target_files)
-    writer = _physical_frame(
-        clustered, schema, cm_mode, extras=rt_extras
-    ).write.mode("errorifexists")
-    if partition_cols:
-        writer = writer.partitionBy(*[phys_of[p] for p in partition_cols])
-    writer.parquet(staging)
-    adds = _move_staged_adds(
-        staging,
-        path,
-        now_ms,
-        data_change=False,
-        skip_minmax=_collated_top_columns(schema, cm_mode),
-        stats_cols=_indexed_stats_columns(schema, config, cm_mode),
-    )
-    tail = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetFiles": target_files,
-                    "zOrderBy": list(zorder_by or []),
-                    **(
-                        {"minFileSize": min_file_size}
-                        if min_file_size is not None
-                        else {}
-                    ),
-                    **(
-                        {"targetFileSize": target_file_size}
-                        if target_file_size is not None
-                        else {}
-                    ),
-                },
-            }
-        }
-    ]
-    if rt_feats:
-        # compacted adds get fresh defaults, but with materialized
-        # columns reserved every copied row carries its PRESERVED stable
-        # id+commit version (coalesce-wins on read); dataChange stays
-        # false on the stamped adds — _commit_row_tracking copies it
-        return _commit_row_tracking(
-            path, actions, adds, tail, "mutate", 5, grants
-        )
+    parameters: dict[str, Any] = {
+        "targetFiles": target_files,
+        "zOrderBy": list(zorder_by or []),
+    }
+    if min_file_size is not None:
+        parameters["minFileSize"] = min_file_size
+    if target_file_size is not None:
+        parameters["targetFileSize"] = target_file_size
     # OPTIMIZE reads the files it rewrites, so a rival removing any of
     # them conflicts; rival appends (and rewrites of untouched
     # partitions) retry cleanly — their files simply stay un-compacted
-    return _commit_with_retry(
+    return _stage_and_commit(
+        snap,
         path,
-        versions[-1] + 1,
-        actions + adds + tail,
-        depends_on=set(rewrite),
-        extra_features=grants,
+        clustered,
+        "OPTIMIZE",
+        parameters,
+        removed=rewrite,
+        extras=rt_extras,
+        data_change=False,
+        read_metadata=False,
     )
 
 

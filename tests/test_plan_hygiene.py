@@ -9,9 +9,12 @@ ONE task. Global aggregates and final LIMIT merges legitimately use
 SinglePartition (their reduced input is tiny); a Window over it is the
 anti-pattern.
 
-Two more gates ride along: ``/alerts/summary`` runs as one uncached
-action, and every package module must have an importer outside
-``tests/``, or an allowlisted reason to be kept.
+Three more gates ride along: ``/alerts/summary`` runs as one uncached
+action; every package module must have an importer outside
+``tests/``, or an allowlisted reason to be kept; and deltalog's
+copy-on-write rewrite stages (``_move_staged_adds``,
+``_rt_stamp_stable``, ``_row_tracking_rewrite_mode``) each have exactly
+one call site, so write/MERGE/DELETE/UPDATE/OPTIMIZE share one path.
 """
 
 from __future__ import annotations
@@ -400,9 +403,6 @@ _TEST_ONLY_MODULE_OK = {
     "streaming.state_stream",
     "streaming.events_stream",
     "streaming.hvac_stream",
-    # bucketed tables are a storage-layout option (write once, join
-    # without a shuffle) that no pipeline stage writes yet
-    "sources.bucketed",
 }
 
 
@@ -457,3 +457,41 @@ def test_every_package_module_has_a_non_test_importer():
     assert not orphans, f"package modules with no non-test importer: {orphans}"
     stale = sorted(m for m in allowed if importers[m])
     assert not stale, f"allowlisted modules that now have importers: {stale}"
+
+
+# ---------------------------------------------------------------------------
+# Structural gate: one copy-on-write rewrite path in deltalog
+# ---------------------------------------------------------------------------
+
+# Stages of the copy-on-write rewrite that write_delta, MERGE, DELETE,
+# UPDATE and OPTIMIZE share through one helper each; a second call site
+# means a writer grew its own copy of the stage again.
+_ONE_CALL_SITE = ("_move_staged_adds", "_rt_stamp_stable", "_row_tracking_rewrite_mode")
+
+
+def _call_sites(tree: ast.Module, names) -> dict[str, list[str]]:
+    """Each name in ``names`` mapped to the top-level functions of
+    ``tree`` that call it, once per call."""
+    sites: dict[str, list[str]] = {n: [] for n in names}
+    for top in tree.body:
+        if not isinstance(top, ast.FunctionDef):
+            continue
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id in sites
+            ):
+                sites[node.func.id].append(top.name)
+    return sites
+
+
+def test_deltalog_rewrite_stages_have_one_call_site():
+    """Staging walk, row-id preservation and the row-tracking rewrite
+    gate are each called from exactly one place in deltalog, so a fix
+    to one of them reaches every writer."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tree = ast.parse((root / _PKG / "sources" / "deltalog.py").read_text())
+    sites = _call_sites(tree, _ONE_CALL_SITE)
+    extra = {n: sorted(by) for n, by in sites.items() if len(by) != 1}
+    assert not extra, f"deltalog rewrite stages without exactly one call site: {extra}"
