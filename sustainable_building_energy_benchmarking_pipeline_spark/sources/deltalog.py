@@ -21,20 +21,19 @@ Supported subset (documented, test-asserted):
   instead of O(V) at long table histories;
 - append / overwrite writes, snapshot-isolated reads, time travel by
   version or timestamp, history listing;
-- an exactly-once streaming sink (``stream_to_delta`` /
-  ``write_delta_txn``) and incremental commit consumption
-  (``table_changes`` / ``delta_changes``);
+- an exactly-once streaming sink (``write_delta_txn`` under
+  ``foreachBatch``);
 - schema evolution (``write_delta(merge_schema=True)`` — Delta's
   mergeSchema: new columns append via a fresh metaData action, old
   files read back with typed nulls), log-only ``restore_delta``
   (RESTORE VERSION AS OF), TBLPROPERTIES (``set_table_properties``),
   CHECK constraints (``add_constraint`` / ``drop_constraint`` stored as
   ``delta.constraints.*`` with the protocol gate raised to writer v3,
-  enforced on every write/MERGE/UPDATE) and ``delta.appendOnly``;
-- file-targeted copy-on-write DML: ``merge_delta`` (MERGE upsert),
-  ``delete_delta`` (DELETE WHERE, or a deletion vector with
-  ``use_dv=True``), ``update_delta`` (UPDATE SET WHERE) and
-  ``optimize_delta`` (OPTIMIZE bin-packing / ZORDER BY / clustering).
+  enforced on every write/UPDATE) and ``delta.appendOnly``;
+- file-targeted copy-on-write DML: ``delete_delta`` (DELETE WHERE, or a
+  deletion vector with ``use_dv=True``), ``update_delta`` (UPDATE SET
+  WHERE) and ``optimize_delta`` (OPTIMIZE bin-packing / ZORDER BY /
+  clustering).
   They and ``write_delta`` share ONE rewrite path — ``_open_for_rewrite``
   (snapshot + write gate), ``_find_hit_files`` (DELETE/UPDATE phase 1),
   ``_read_logical`` (files → logical rows, DVs applied, row ids kept)
@@ -611,7 +610,7 @@ def write_checkpoint(path: str, version: int | None = None) -> int:
         # fully before the _last_checkpoint pointer flips.
         # Emitted ONLY when the protocol lists v2Checkpoint on BOTH
         # sides (ADVICE r10): a classic reader following _last_checkpoint
-        # cannot resolve a uuid-named file, and once cleanup_log drops
+        # cannot resolve a uuid-named file, and once log cleanup drops
         # the commits below it the table would become unreadable to it —
         # a config key without the feature falls back to classic format.
         head = [
@@ -842,7 +841,7 @@ _SUPPORTED_READER_FEATURES: frozenset[str] = frozenset(
 # ``writerFeatures``; we can commit iff every listed feature is one we
 # actually enforce. ``deletionVectors`` is upheld by APPLY-AND-REWRITE
 # (round-9): this writer never EMITS a DV, but every file-rewriting op
-# (DELETE/MERGE/OPTIMIZE) reads DV-bearing files through
+# (DELETE/UPDATE/OPTIMIZE) reads DV-bearing files through
 # ``_apply_deletion_vectors`` and commits the survivor rows WITHOUT a
 # DV — the spec-sanctioned materialization posture, so deleted rows can
 # never resurrect and appends stay trivially safe.
@@ -944,7 +943,7 @@ def _check_read_protocol(
 ) -> None:
     """Raise ``DeltaUnsupportedProtocol`` unless this reader can
     faithfully reconstruct the table — the spec-mandated refusal gate
-    every snapshot/CDF/streaming read passes through (``_replay``).
+    every snapshot read passes through (``_replay``).
     ``cm_mode`` is the table's column-mapping mode: "name" (physical→
     logical resolution via schema field metadata) and "id" (parquet
     field-id resolution through Spark's native
@@ -1272,8 +1271,8 @@ def _partitioned_scan(
     read precisely so those still see ``_metadata``.
 
     ``pvals_of`` maps each rel to its action's partitionValues (keys
-    are physical names; a logical-key fallback mirrors
-    ``_load_cdc_files``'s leniency for external writers)."""
+    are physical names; a logical-key fallback tolerates external
+    writers that key them by logical name)."""
     from pyspark.sql import functions as F
 
     files = [_data_file(path, r) for r in rels_sorted]
@@ -1506,26 +1505,10 @@ def _apply_deletion_vectors(
     return survivors.drop("__dv_fname", "__dv_ridx")
 
 
-def _to_logical_columns(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Map a physically-named DataFrame back to the logical schema:
-    top-level columns are selected by physical name and aliased; nested
-    struct field names are renamed via a same-shape cast (struct→struct
-    cast renames by POSITION, and physical/logical schemas are
-    identical modulo names)."""
-    from pyspark.sql import functions as F
-
-    return df.select(
-        *[
-            F.col(_physical_name(f)).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
-
-
 def _check_column_invariants_enforceable(path: str, version: int) -> None:
     """Column invariants (``delta.invariants`` in schema-field metadata,
     writer protocol v2) ARE enforced by this writer (round-12): every
-    row-adding path (write_delta / MERGE / UPDATE) evaluates them
+    row-adding path (write_delta / UPDATE) evaluates them
     against the staged files via ``_violated_constraint`` before
     committing, with the spec's stricter NULL semantics (PROTOCOL.md
     "Column Invariants": a row violates when the expression returns
@@ -1553,13 +1536,13 @@ def _check_write_protocol(
 ) -> None:
     """Raise ``DeltaUnsupportedProtocol`` unless this writer can uphold
     every invariant the table's protocol demands. Called at the commit
-    choke point (``_commit_with_retry``) so MERGE/DELETE/OPTIMIZE/
+    choke point (``_commit_with_retry``) so DELETE/UPDATE/OPTIMIZE/
     VACUUM/streaming sinks are all covered, and re-checked after losing
     a version race (a rival may have upgraded the protocol mid-retry).
 
     ``deletionVectors`` is allowed for EVERY operation since round 9:
     blind appends never touch existing files (the invariant is vacuous
-    for them), and each file-rewriting operation (MERGE/DELETE/
+    for them), and each file-rewriting operation (DELETE/UPDATE/
     OPTIMIZE) upholds the invariant by apply-and-rewrite — DV-bearing
     files are read through ``_apply_deletion_vectors`` and the
     survivor rows are committed WITHOUT a DV, so a rewrite can never
@@ -1574,7 +1557,7 @@ def _check_write_protocol(
     preserving materialized ids per ``_row_tracking_rewrite_mode``)
     and ``changeDataFeed`` (appends
     uphold it vacuously per the spec — add-only commits derive as
-    inserts — while overwrite/DELETE/UPDATE/MERGE emit ``cdc`` actions
+    inserts — while overwrite/DELETE/UPDATE emit ``cdc`` actions
     and ``_change_data`` files when the feed is enabled), so the gate
     stays per-operation. Legacy ``minWriterVersion`` 4/5/6 tables
     (pre-feature capability versions) are writable only when every
@@ -2017,7 +2000,7 @@ def _file_stats(
     ``stats_cols`` (round-12, ``delta.dataSkippingNumIndexedCols``):
     when set, min/max/nullCount are recorded for exactly those
     (physical, top-level) columns — numRecords always survives (the
-    zero-row skip and CDF accounting need it). None = all columns."""
+    zero-row skip of data and change data files needs it). None = all columns."""
     try:
         import pyarrow.parquet as pq
 
@@ -2030,7 +2013,7 @@ def _file_stats(
         # contributed min/max — a stats-less row group (e.g. NaN-bearing
         # doubles, undecodable binary) may hold values outside the range
         # of the groups that did report, and a falsely-narrow range makes
-        # data skipping (and MERGE's affected-file targeting) drop files
+        # data skipping (and DML's candidate-file pruning) drop files
         # that DO contain matching rows
         covered: dict[str, int] = {}
         for rg in range(md.num_row_groups):
@@ -2233,7 +2216,7 @@ def _assign_cm_fields(
     through _merge_schemas). New NESTED columns (round-12): every
     struct field at every depth gets its own fresh id + uuid
     physicalName, recursively — the spec assigns per StructField, and
-    the read path (``_to_logical_columns``) already resolves nested
+    the read path (``_present_logical``) already resolves nested
     physical names. Array elements and map keys/values are unnamed (no
     physicalName); struct fields INSIDE them stamp like any other."""
     tbl_names = {f.name for f in table_schema.fields}
@@ -2357,7 +2340,7 @@ def _violated_constraint(
         .parquet(staging)
     )
     if cm_mode in ("name", "id"):
-        staged = _to_logical_columns(staged, schema)
+        staged = _present_logical(staged, schema, cm_mode)
     for name, expr in constraints:
         bad = staged.filter(
             ~F.coalesce(F.expr(expr), F.lit(True))
@@ -2489,47 +2472,6 @@ def _identity_marks_from_adds(
     return marks
 
 
-def _merge_attach_identity(
-    updates: DataFrame,
-    old: DataFrame | None,
-    key: str,
-    omitted: list[tuple[str, int, int, int | None, bool]],
-    schema: T.StructType,
-) -> DataFrame:
-    """Materialize the identity columns a MERGE's updates frame omits
-    (round-12): matched rows INHERIT the target row's value via one
-    per-key aggregate over the affected files' rows (min() is the
-    deterministic pick when a key legally repeats in the target — the
-    same rule the rowTracking upsert uses for stable row ids),
-    unmatched rows get ASSIGNED ``base + step·monotonic-id`` values
-    strictly beyond the high-water mark, exactly write_delta's block
-    allocation (unique, lattice-aligned, gaps legal, zero extra jobs).
-    ``old=None`` = no files affected: every row is an insert, all
-    values fresh. Returns the frame in table-schema order."""
-    from pyspark.sql import functions as F
-
-    by_field = {f.name: f for f in schema.fields}
-    out = updates
-    if old is not None:
-        inherit = old.groupBy(key).agg(
-            *[F.min(F.col(f"`{n}`")).alias(n) for n, *_ in omitted]
-        )
-        out = out.join(inherit, on=key, how="left")
-    else:
-        for n, *_ in omitted:
-            out = out.withColumn(n, F.lit(None).cast(by_field[n].dataType))
-    for n, start, step, hwm, _allow in omitted:
-        base = _identity_next(start, step, hwm)
-        fresh = (
-            F.lit(base) + F.lit(step) * F.monotonically_increasing_id()
-        ).cast(by_field[n].dataType)
-        out = out.withColumn(
-            n,
-            F.coalesce(F.col(f"`{n}`").cast(by_field[n].dataType), fresh),
-        )
-    return out.select(*schema.fieldNames())
-
-
 def _violated_generated(
     spark: SparkSession,
     staging: str,
@@ -2553,7 +2495,7 @@ def _violated_generated(
         .parquet(staging)
     )
     if cm_mode in ("name", "id"):
-        staged = _to_logical_columns(staged, read_schema)
+        staged = _present_logical(staged, read_schema, cm_mode)
     for name, expr in gens:
         bad = (
             staged.filter(~F.expr(f"`{name}` <=> ({expr})"))
@@ -2563,21 +2505,6 @@ def _violated_generated(
         if bad:
             return name, expr
     return None
-
-
-def _dv_key(desc: dict[str, Any] | None) -> tuple | None:
-    """The identity of a deletion vector for change detection — the
-    spec's uniqueId fields (storageType + pathOrInlineDv + offset).
-    Content-addressed: two adds with the same key delete the same
-    row set; None = no DV."""
-    if not desc:
-        return None
-    off = desc.get("offset")
-    return (
-        desc.get("storageType"),
-        desc.get("pathOrInlineDv"),
-        int(off) if off is not None else None,
-    )
 
 
 def _remove_action(
@@ -2613,7 +2540,7 @@ def _move_staged_adds(
 ) -> list[dict[str, Any]]:
     """Move every staged parquet out of ``staging`` into the table root
     (preserving hive partition subdirectories) and return their add
-    actions — the one walk every writer (write/MERGE/DELETE/UPDATE/
+    actions — the one walk every writer (write/DELETE/UPDATE/
     OPTIMIZE) reaches through ``_stage_and_commit``. Hive dirs like
     ``lang=en`` become the add's
     ``partitionValues``: Spark %-escapes special chars in dir names
@@ -2686,8 +2613,8 @@ def _stage_cdc_actions(
     ``_change_type`` string column) as change data files under
     ``_change_data/`` and return the commit's ``cdc`` actions — the
     spec's Change Data Feed write contract for commits whose changes
-    cannot be derived from add/remove actions alone (UPDATE/MERGE/
-    DELETE/overwrite). Data columns ride in the files under the table's
+    cannot be derived from add/remove actions alone (UPDATE/DELETE/
+    overwrite). Data columns ride in the files under the table's
     PHYSICAL names (column mapping applies to change data files too,
     same as data files); ``_change_type`` is a metadata column and is
     stored verbatim; partition values ride on each ``cdc`` action
@@ -2697,9 +2624,10 @@ def _stage_cdc_actions(
     only — a DELETE touching 1% of a 100 TB table emits 1%-sized change
     files, never a table copy.
 
-    Reference precedent: the reference repo's medallion notebook relies
-    on delta-spark's CDF (notebooks/benchmarking_medallion.py) — this
-    is the write half our ``table_changes`` reader already consumes."""
+    Why: this engine reads no change feed, but a table that another
+    engine created with ``delta.enableChangeDataFeed=true`` obliges
+    every writer to emit these files — a commit without them would
+    leave that engine's change-feed readers with missing rows."""
     staging = os.path.join(path, f"_staging-cdc-{uuid.uuid4().hex}")
     _write_staged(
         change_df, staging, schema, partition_cols, cm_mode, ("_change_type",)
@@ -2749,14 +2677,13 @@ def _write_staged(
 
 
 # ---------------------------------------------------------------------------
-# The one copy-on-write rewrite path. write_delta, MERGE, DELETE, UPDATE and
-# OPTIMIZE share four stages, each behind one helper:
+# The one copy-on-write rewrite path. write_delta, DELETE, UPDATE and OPTIMIZE
+# share four stages, each behind one helper:
 #   _open_for_rewrite  snapshot + feature grants + fail-fast write gate
 #   _find_hit_files    DELETE/UPDATE phase 1: the files holding matched rows
 #   _read_logical      files -> logical rows (DVs applied, row ids kept)
 #   _stage_and_commit  stage parquet -> validate -> stage CDC -> adds -> commit
-# Each verb keeps only its own logic: MERGE its key-range targeting,
-# identity attach and anti-join/union; DELETE its deletion-vector arm;
+# Each verb keeps only its own logic: DELETE its deletion-vector arm;
 # UPDATE its SET projection; OPTIMIZE its bin packing and clustering.
 # ---------------------------------------------------------------------------
 
@@ -2790,7 +2717,7 @@ class _Snapshot(NamedTuple):
 
 def _open_for_rewrite(spark: SparkSession, path: str, version: int) -> _Snapshot:
     """Replay the log once at ``version`` and gate a file-rewriting verb
-    (MERGE/DELETE/UPDATE/OPTIMIZE) on the table's write protocol up
+    (DELETE/UPDATE/OPTIMIZE) on the table's write protocol up
     front — the commit gate re-checks after staging, but staging
     against a feature-gated table is wasted IO.
 
@@ -2800,13 +2727,12 @@ def _open_for_rewrite(spark: SparkSession, path: str, version: int) -> _Snapshot
     rowTracking (fresh ``baseRowId``/``defaultRowCommitVersion`` plus a
     high-water-mark bump via ``_commit_row_tracking``, materialized ids
     preserved per ``_row_tracking_rewrite_mode``); ``changeDataFeed``
-    (MERGE/DELETE/UPDATE emit ``cdc`` actions when the feed is on;
+    (DELETE/UPDATE emit ``cdc`` actions when the feed is on;
     OPTIMIZE's dataChange=false commits are skipped by CDF readers);
-    ``generatedColumns`` (MERGE/UPDATE validate the staged output,
-    UPDATE recomputes untouched generated columns; DELETE/OPTIMIZE copy
-    rows verbatim); ``identityColumns`` (MERGE assigns from the
-    high-water mark and advances it in the same commit, UPDATE refuses
-    SET on identity columns, DELETE/OPTIMIZE copy)."""
+    ``generatedColumns`` (UPDATE validates the staged output and
+    recomputes untouched generated columns; DELETE/OPTIMIZE copy rows
+    verbatim); ``identityColumns`` (UPDATE refuses SET on identity
+    columns, DELETE/OPTIMIZE copy)."""
     active, schema, partition_cols, meta = _replay(path, version)
     cm_mode = _column_mapping_mode(meta)
     proto = _latest_protocol(path, version)
@@ -3581,10 +3507,7 @@ def _stamp_in_commit_timestamp(
     ``inCommitTimestamp`` = max(now, previous commit's timestamp + 1).
     Re-invoked per retry attempt — after losing a version race the
     previous commit changed, so the stamp must be recomputed (a verbatim
-    re-commit could go backwards in time). A caller-preset
-    ``inCommitTimestamp`` that is still monotonic is preserved (the
-    enablement commit pins its own value so the
-    delta.inCommitTimestampEnablement* keys can equal it exactly).
+    re-commit could go backwards in time).
     The CALLER decides enablement (one metadata probe shared with the
     write gate — see _commit_with_retry's ict_on) so plain tables pay
     zero extra log scans per commit."""
@@ -3596,12 +3519,7 @@ def _stamp_in_commit_timestamp(
         "operationParameters": {},
     }
     prev = _prev_commit_timestamp(path, version - 1)
-    preset = info.get("inCommitTimestamp")
-    if preset is not None and int(preset) > prev:
-        ict = int(preset)
-    else:
-        ict = max(int(time.time() * 1000), prev + 1)
-    info["inCommitTimestamp"] = ict
+    info["inCommitTimestamp"] = max(int(time.time() * 1000), prev + 1)
     return [{"commitInfo": info}] + rest
 
 
@@ -4010,7 +3928,7 @@ def _may_satisfy(add: dict, where: tuple[str, str, Any]) -> bool:
     file) — it is checked against the add's ``partitionValues`` instead:
     the stored logical string parses to the probe value's type and the
     file's "range" is that single point. This is Delta's partition
-    pruning, and it makes DELETE/MERGE on a partition key touch only the
+    pruning, and it makes DELETE/UPDATE on a partition key touch only the
     matching partitions' files."""
     col, op, val = where
     pvals = add.get("partitionValues") or {}
@@ -4124,34 +4042,11 @@ def _adjusted_commit_timestamps(
     return adj
 
 
-def version_before_timestamp(path: str, ts: int | float | str) -> int:
-    """The exclusive version lower bound for a timestamp-addressed
-    change window: the version just BEFORE the first commit whose
-    monotonized clock is >= the target, so a (start, end] window begins
-    AT that commit: delta-spark's ``startingTimestamp`` rule behind
-    ``table_changes(since_timestamp=...)``. A target past the latest
-    commit raises like delta-spark (an empty window would read as "no
-    changes" and let a mistyped cursor silently skip real ones)."""
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no Delta log at {path}")
-    target = _ts_ms(ts)
-    adj = _adjusted_commit_timestamps(path, versions)
-    latest_clock = adj[versions[-1]]
-    if latest_clock >= 0 and target > latest_clock:
-        raise ValueError(
-            f"since_timestamp {target} is after the latest commit of {path} "
-            f"(version {versions[-1]} at {latest_clock})"
-        )
-    prior = [v for v in versions if 0 <= adj[v] < target]
-    return prior[-1] if prior else versions[0] - 1
-
-
 def version_at_timestamp(path: str, ts: int | float | str) -> int:
     """Delta's ``timestampAsOf`` resolution (round-10): the LATEST
     retained version whose commit clock is ≤ the target — per commit,
     ``inCommitTimestamp`` > ``commitInfo.timestamp`` > commit-file
-    mtime, the same precedence ``table_changes`` uses, monotonized
+    mtime (``_prev_commit_timestamp``'s precedence), monotonized
     across versions exactly like delta-spark (see
     ``_adjusted_commit_timestamps``). Raises when the target predates
     the first retained commit (delta-spark's before-earliest error)."""
@@ -4361,267 +4256,7 @@ def read_delta(
         )
         out = _present_logical(df, schema, cm_mode, extras=("_row_id",))
         return out
-    if cm:
-        return _to_logical_columns(df, schema)
-    return df.select(*schema.fieldNames())
-
-
-def merge_delta(
-    spark: SparkSession, path: str, updates: DataFrame, key: str
-) -> int:
-    """UPSERT (MERGE): rows in ``updates`` replace same-``key`` rows and
-    new keys append — Delta's ``MERGE WHEN MATCHED UPDATE / WHEN NOT
-    MATCHED INSERT`` for whole-row updates.
-
-    Scale shape — file-targeted rewrite, the real Delta optimization:
-    the updates' [min, max] key range (one tiny driver aggregate) is
-    checked against each active file's footer-stats range, and ONLY
-    intersecting files are read, anti-joined and rewritten; everything
-    else is untouched log-wise and data-wise. A merge touching 1% of
-    the key space rewrites ~1% of the table instead of all of it.
-    Commit = remove(affected) + add(rewritten ∪ updates), atomic like
-    any other commit. Returns the committed version.
-
-    Partitioned tables (round-9): affected files are found the same way
-    — and when ``key`` IS a partition column, ``_may_satisfy`` prunes on
-    ``partitionValues`` instead of footer stats, so only matching
-    partitions' files are read. Rewrites and inserted rows land back in
-    hive layout via ``partitionBy``; untouched partitions never appear
-    in the commit.
-
-    Identity columns (round-12): an updates frame that OMITS the
-    identity column(s) merges cleanly — matched rows inherit the target
-    row's value, WHEN-NOT-MATCHED inserts are assigned fresh
-    lattice-aligned values from the high-water mark, and the mark
-    advances in the same commit (``_merge_attach_identity`` /
-    ``_identity_marks_from_adds``). GENERATED ALWAYS columns refuse
-    explicit values (delta-spark parity); BY DEFAULT columns supplied
-    explicitly pass through with the mark advancing past them."""
-    from pyspark.sql import functions as F
-
-    versions = _list_versions(path)
-    if not versions:
-        return write_delta(updates, path, mode="append")
-    snap = _open_for_rewrite(spark, path, versions[-1])
-    active, schema = snap.active, snap.schema
-    idents = _identity_fields(schema)
-    upd_cols = set(updates.columns)
-    explicit_always = sorted(
-        n for n, _s, _st, _h, allow in idents
-        if n in upd_cols and not allow
-    )
-    if explicit_always:
-        # spec: GENERATED ALWAYS AS IDENTITY refuses explicit values on
-        # every write path, MERGE included (delta-spark raises the same
-        # way for its INSERT/UPDATE clauses)
-        raise ValueError(
-            f"column(s) {explicit_always} of Delta table at {path} are "
-            "GENERATED ALWAYS AS IDENTITY: MERGE updates must omit them "
-            "— matched rows keep the target's values, inserted rows are "
-            "assigned fresh ones"
-        )
-    # identity columns the updates frame OMITS (round-12): matched rows
-    # INHERIT the target row's value (identity is the row's identity —
-    # an upsert must not re-key it), unmatched rows get ASSIGNED values
-    # from the same base + step·monotonic-id block allocation
-    # write_delta uses, and the high-water mark advances from the
-    # staged footer stats in this very commit. BY DEFAULT columns
-    # supplied explicitly pass through verbatim (mark still advances
-    # past them).
-    omitted_idents = [i for i in idents if i[0] not in upd_cols]
-    if any(n == key for n, *_ in omitted_idents):
-        raise ValueError(
-            f"MERGE key {key!r} is an identity column the updates frame "
-            "omits — supply it (BY DEFAULT tables) or key on another "
-            "column"
-        )
-    ident_expect = T.StructType(
-        [
-            f
-            for f in schema.fields
-            if f.name not in {n for n, *_ in omitted_idents}
-        ]
-    )
-    # the same name+type enforcement write_delta applies: an updates
-    # frame whose schema drifts would otherwise be staged and committed
-    # VERBATIM (the no-affected-files arm writes it directly), leaving a
-    # metaData that disagrees with the new parquet — every later
-    # schema'd read then fails on type conversion. MERGE does not evolve
-    # schemas (align the frame first, or write_delta(merge_schema=True)).
-    if [(f.name, _plain_type(f.dataType)) for f in updates.schema.fields] != [
-        (f.name, _plain_type(f.dataType)) for f in ident_expect.fields
-    ]:
-        raise ValueError(
-            f"schema mismatch vs Delta table at {path}: "
-            f"table={ident_expect.simpleString()} "
-            f"updates={updates.schema.simpleString()} "
-            "(MERGE enforces the table schema; evolve via "
-            "write_delta(merge_schema=True) first)"
-        )
-    if any(_is_collated_string(f.dataType) for f in schema.fields):
-        # cast the source to the table's declared (collated) types —
-        # joining a plain string against a collated column is an
-        # INDETERMINATE_COLLATION analysis error; delta-spark casts the
-        # source to the target schema the same way
-        updates = updates.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-
-    n_upd, n_keyed, n_distinct, lo, hi = updates.agg(
-        F.count(F.lit(1)),
-        F.count(key),
-        F.countDistinct(key),
-        F.min(key),
-        F.max(key),
-    ).first()
-    # Delta MERGE raises when several source rows match one target row;
-    # here duplicate non-null keys would all survive the anti-join and
-    # land together — silent duplication, not replacement. Null keys are
-    # exempt (they never match; each is a WHEN NOT MATCHED insert).
-    if n_keyed != n_distinct:
-        raise ValueError(
-            f"updates contain duplicate values of merge key {key!r}: "
-            "each key must appear once (Delta's multiple-source-rows-"
-            "matched error) — pre-aggregate the updates frame"
-        )
-    if n_upd == 0:
-        # genuinely empty updates: nothing can match or insert — no-op,
-        # no spurious version
-        return versions[-1]
-    if lo is None:
-        # non-empty but ALL keys null: per Delta MERGE semantics a null
-        # key never matches an existing row, so every update row is a
-        # WHEN NOT MATCHED insert — no files affected, rows still land.
-        # (Without this arm the None range would either be treated as a
-        # no-op — silently dropping the rows, inconsistently with a
-        # mixed null/non-null batch whose null rows DO insert via the
-        # union below — or make _may_satisfy's TypeError handler mark
-        # every file affected.)
-        affected: dict[str, dict] = {}
-    elif any(
-        f.name == key and _is_collated_string(f.dataType)
-        for f in schema.fields
-    ):
-        # a collated merge key: binary [lo, hi] bounds cannot target
-        # files (collated equality crosses binary ranges) — every file
-        # is a candidate; the collation-aware equi-join below still
-        # rewrites only true matches' files
-        affected = dict(active)
-    else:
-        phys_key = snap.phys_of.get(key, key)
-        affected = {
-            rel: a
-            for rel, a in active.items()
-            if _may_satisfy(a, (phys_key, ">=", lo))
-            and _may_satisfy(a, (phys_key, "<=", hi))
-        }
-    if affected and snap.config.get("delta.appendOnly") == "true":
-        raise ValueError(
-            f"Delta table at {path} is delta.appendOnly=true: MERGE "
-            "would rewrite files holding matched keys; only pure-insert "
-            "merges (no key overlap) are allowed"
-        )
-
-    names = schema.fieldNames()
-    rt_extras: tuple = ()
-    if affected:
-        old, rt_extras = _read_logical(spark, path, snap, affected, "MERGE")
-        if omitted_idents:
-            updates = _merge_attach_identity(
-                updates, old, key, omitted_idents, schema
-            )
-        kept = old.join(updates.select(key), on=key, how="left_anti")
-        if rt_extras:
-            # identity across the upsert: a matched source row REPLACES
-            # its target row(s) and inherits the stable row id (min() of
-            # the replaced set — deterministic when a key legally repeats
-            # in the target); its commit version nulls out so the new
-            # add's defaultRowCommitVersion (this commit) applies.
-            # Unmatched source rows are true inserts: both null → fresh.
-            mid_c, mcv_c = rt_extras
-            surv_ids = old.groupBy(key).agg(
-                F.min(F.col(f"`{mid_c}`")).alias(mid_c)
-            )
-            upd = (
-                updates.select(*names)
-                .join(surv_ids, on=key, how="left")
-                .withColumn(mcv_c, F.lit(None).cast("long"))
-            )
-            new_data = kept.unionByName(
-                upd.select(*names, F.col(f"`{mid_c}`"), F.col(f"`{mcv_c}`"))
-            )
-        else:
-            new_data = kept.unionByName(updates.select(*names))
-    else:
-        if omitted_idents:
-            # no files affected = every update row is an insert: all
-            # identity values are fresh assignments
-            updates = _merge_attach_identity(
-                updates, None, key, omitted_idents, schema
-            )
-        new_data = updates
-
-    change_df = None
-    if _cdf_enabled(snap.config):
-        # CDF write contract: matched keys render as an update_preimage/
-        # update_postimage pair (every replaced target row is a
-        # preimage; the one source row its key maps to is the
-        # postimage), unmatched source rows as inserts — exactly the
-        # change classes delta-spark's MERGE emits; cost ∝ changed rows
-        if affected:
-            old_keys = old.select(key).distinct()
-            change_df = (
-                old.join(updates.select(key), on=key, how="left_semi")
-                .select(*names)
-                .withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    updates.join(old_keys, on=key, how="left_semi")
-                    .select(*names)
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-                .unionByName(
-                    updates.join(old_keys, on=key, how="left_anti")
-                    .select(*names)
-                    .withColumn("_change_type", F.lit("insert"))
-                )
-            )
-        else:
-            change_df = updates.select(*names).withColumn(
-                "_change_type", F.lit("insert")
-            )
-    # with materialized row-tracking columns reserved, kept rows carry
-    # their preserved id+version, updated rows a preserved id (version
-    # defaults to this commit), inserts derive fresh
-    return _stage_and_commit(
-        snap,
-        path,
-        new_data,
-        "MERGE",
-        {"key": key},
-        removed=affected,
-        change_df=change_df,
-        refusal=(
-            f"MERGE into Delta table at {path}",
-            f" on every row MERGEd into Delta table at {path}",
-        ),
-        extras=rt_extras,
-        idents=idents,
-    )
-
-
-def table_configuration(path: str, version: int | None = None) -> dict[str, str]:
-    """The table's configuration map (TBLPROPERTIES) at ``version``
-    (default latest) — where Delta keeps CHECK constraints
-    (``delta.constraints.<name>``) and behavior gates
-    (``delta.appendOnly``)."""
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no Delta log at {path}")
-    return dict(
-        _latest_metadata(path, versions[-1] if version is None else version).get(
-            "configuration", {}
-        )
-    )
+    return _present_logical(df, schema, cm_mode)
 
 
 def set_table_properties(
@@ -4654,21 +4289,20 @@ def set_table_properties(
         )
     if props.get("delta.enableInCommitTimestamps") == "true":
         # enabling ICT needs the protocol feature + the spec's
-        # enablement-version/-timestamp keys in the SAME commit — the
-        # dedicated helper does all three atomically
+        # enablement-version/-timestamp keys in the SAME commit; this
+        # engine only upholds ICT on tables created with it enabled
         raise ValueError(
             "cannot SET delta.enableInCommitTimestamps via table "
             "properties: the spec requires the inCommitTimestamp writer "
-            "feature and the enablement keys to land in the same commit "
-            "— use enable_in_commit_timestamps(path)"
+            "feature and the enablement keys to land in the same commit, "
+            "which this engine does not write"
         )
     if props.get("delta.checkpointPolicy") == "v2":
         # V2-format checkpoints are only legal once the protocol lists
         # the v2Checkpoint feature on BOTH sides (ADVICE r10): the key
         # alone would make write_checkpoint fall back to classic, but
         # accepting it here would leave the table claiming a policy its
-        # protocol cannot honor — the dedicated helper lands the
-        # protocol upgrade and the key in one commit
+        # protocol cannot honor
         vs = _list_versions(path)
         proto = _latest_protocol(path, vs[-1]) if vs else {}
         if "v2Checkpoint" not in (
@@ -4679,7 +4313,7 @@ def set_table_properties(
                 "cannot SET delta.checkpointPolicy=v2 via table "
                 "properties: the spec requires the v2Checkpoint reader+"
                 "writer feature before V2-format checkpoints are "
-                "written — use enable_v2_checkpoints(path)"
+                "written"
             )
     for _attempt in range(6):
         versions = _list_versions(path)
@@ -4736,150 +4370,6 @@ def set_table_properties(
     )
 
 
-def enable_in_commit_timestamps(path: str) -> int:
-    """ALTER TABLE ... SET delta.enableInCommitTimestamps=true, the
-    spec-complete way (round-10): ONE commit that (1) upgrades the
-    protocol to writer v7 + ``inCommitTimestamp`` (existing features and
-    reader version preserved — the explicit upgrade mechanism, like
-    ``add_constraint``'s v3 raise), (2) sets the config key, and (3)
-    records ``delta.inCommitTimestampEnablementVersion`` /
-    ``-Timestamp`` so external readers can map the pre-enablement clock.
-    The enablement commit pins its own ``inCommitTimestamp`` equal to
-    the enablement-timestamp key; later commits stamp monotonically at
-    the commit choke point. No-op if already enabled."""
-    for _attempt in range(6):
-        versions = _list_versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no Delta log at {path}")
-        meta = dict(_latest_metadata(path, versions[-1]))
-        config = dict(meta.get("configuration", {}))
-        if config.get("delta.enableInCommitTimestamps") == "true":
-            return versions[-1]
-        target = versions[-1] + 1
-        ict = max(
-            int(time.time() * 1000),
-            _prev_commit_timestamp(path, versions[-1]) + 1,
-        )
-        config["delta.enableInCommitTimestamps"] = "true"
-        config["delta.inCommitTimestampEnablementVersion"] = str(target)
-        config["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
-        meta["configuration"] = config
-        proto = dict(_latest_protocol(path, versions[-1]))
-        feats = set(proto.get("writerFeatures") or [])
-        v_now = int(proto.get("minWriterVersion", 2))
-        if v_now < 7:
-            # v7 requires EVERY capability the legacy version implied to
-            # be spelled out, cumulatively (spec's legacy→feature map) —
-            # dropping, say, a v5 table's columnMapping from the new
-            # writerFeatures would let a feature-aware writer corrupt it
-            legacy_by_version = [
-                (2, {"appendOnly", "invariants"}),
-                (3, {"checkConstraints"}),
-                (4, {"changeDataFeed", "generatedColumns"}),
-                (5, {"columnMapping"}),
-                (6, {"identityColumns"}),
-            ]
-            for lv, lf in legacy_by_version:
-                if v_now >= lv:
-                    feats |= lf
-        feats.add("inCommitTimestamp")
-        proto["minWriterVersion"] = 7
-        proto["writerFeatures"] = sorted(feats)
-        actions: list[dict[str, Any]] = [
-            {"protocol": proto},
-            {"metaData": meta},
-            {
-                "commitInfo": {
-                    "timestamp": ict,
-                    "inCommitTimestamp": ict,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": {
-                            "delta.enableInCommitTimestamps": "true"
-                        }
-                    },
-                }
-            },
-        ]
-        try:
-            return _commit_with_retry(path, target, actions, max_retries=0)
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentModification(
-        f"enable_in_commit_timestamps on {path}: lost 6 consecutive "
-        "version races"
-    )
-
-
-def enable_v2_checkpoints(path: str) -> int:
-    """ALTER TABLE ... SET delta.checkpointPolicy=v2 the spec-complete
-    way (round-11, ADVICE r10): ONE commit that (1) upgrades the
-    protocol to reader v3 / writer v7 with ``v2Checkpoint`` in BOTH
-    feature lists (legacy-implied capabilities spelled out cumulatively,
-    same map as ``enable_in_commit_timestamps``) and (2) sets the
-    config key — so ``write_checkpoint`` starts emitting uuid-named
-    V2-format checkpoints only once every reader is guaranteed to
-    understand them. No-op if already enabled."""
-    for _attempt in range(6):
-        versions = _list_versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no Delta log at {path}")
-        meta = dict(_latest_metadata(path, versions[-1]))
-        config = dict(meta.get("configuration", {}))
-        proto = dict(_latest_protocol(path, versions[-1]))
-        rfeats = set(proto.get("readerFeatures") or [])
-        wfeats = set(proto.get("writerFeatures") or [])
-        if (
-            config.get("delta.checkpointPolicy") == "v2"
-            and "v2Checkpoint" in (rfeats & wfeats)
-        ):
-            return versions[-1]
-        config["delta.checkpointPolicy"] = "v2"
-        meta["configuration"] = config
-        r_now = int(proto.get("minReaderVersion", 1))
-        w_now = int(proto.get("minWriterVersion", 2))
-        if r_now < 3 and r_now >= 2:
-            # legacy reader v2 implied columnMapping — spell it out
-            rfeats.add("columnMapping")
-        if w_now < 7:
-            legacy_by_version = [
-                (2, {"appendOnly", "invariants"}),
-                (3, {"checkConstraints"}),
-                (4, {"changeDataFeed", "generatedColumns"}),
-                (5, {"columnMapping"}),
-                (6, {"identityColumns"}),
-            ]
-            for lv, lf in legacy_by_version:
-                if w_now >= lv:
-                    wfeats |= lf
-        rfeats.add("v2Checkpoint")
-        wfeats.add("v2Checkpoint")
-        proto["minReaderVersion"] = 3
-        proto["minWriterVersion"] = 7
-        proto["readerFeatures"] = sorted(rfeats)
-        proto["writerFeatures"] = sorted(wfeats)
-        actions: list[dict[str, Any]] = [
-            {"protocol": proto},
-            {"metaData": meta},
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": {"delta.checkpointPolicy": "v2"}
-                    },
-                }
-            },
-        ]
-        try:
-            return _commit_with_retry(path, versions[-1] + 1, actions, max_retries=0)
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentModification(
-        f"enable_v2_checkpoints on {path}: lost 6 consecutive version races"
-    )
-
-
 def _clustering_columns(
     path: str,
     version: int,
@@ -4930,7 +4420,7 @@ def set_clustering_columns(path: str, columns: list[str]) -> int:
     (``columns=[]``), the spec-complete way (round-12): ONE commit that
     (1) upgrades the protocol to writer v7 with ``clustering`` +
     ``domainMetadata`` (legacy-implied capabilities spelled out
-    cumulatively, same map as ``enable_in_commit_timestamps``) and
+    cumulatively) and
     (2) lands the ``delta.clustering`` domainMetadata with the new
     column list — data is NOT rewritten (delta-spark's contract: the
     next OPTIMIZE applies the new clustering; ``optimize_delta`` picks
@@ -5025,7 +4515,7 @@ def add_constraint(
 ) -> int:
     """ALTER TABLE ADD CONSTRAINT name CHECK (expr) — stored as the
     ``delta.constraints.<name>`` table property exactly where real Delta
-    keeps it, enforced by every subsequent write/MERGE in this module.
+    keeps it, enforced by every subsequent write/UPDATE in this module.
     Existing data is validated first (one pushdown-friendly scan; SQL
     CHECK semantics — NULL passes, only FALSE violates), and the commit
     raises the protocol gate to minWriterVersion 3, the feature's
@@ -5339,7 +4829,7 @@ def update_delta(
     prune: tuple[str, str, Any] | None = None,
 ) -> int:
     """UPDATE table SET col = expr, ... WHERE ``condition`` — the last
-    Delta DML verb (DELETE and MERGE live above). ``set_exprs`` maps
+    Delta DML verb (DELETE lives above). ``set_exprs`` maps
     column name → Spark SQL expression (may reference any row columns,
     e.g. ``{"v": "v * 1.1", "status": "'adjusted'"}``); assigned values
     cast to the column's declared type so the table schema never drifts.
@@ -5960,22 +5450,6 @@ def write_delta_txn(
         raise
 
 
-def stream_to_delta(stream_df: DataFrame, path: str, app_id: str, **options: Any):
-    """Structured Streaming → Delta table: foreachBatch with the txn
-    idempotence above (each micro-batch commits once even if Spark
-    replays it). Returns the StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_delta_txn(batch_df, path, app_id, batch_id, mode="append")
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .options(**options)
-        .start()
-    )
-
-
 def vacuum_delta(
     path: str,
     retain_hours: float | None = None,
@@ -6058,7 +5532,7 @@ def vacuum_delta(
     # vacuum would delete an actively referenced file
     keep = {os.path.abspath(_data_file(path, rel)) for rel in active}
     # DV .bin sidecars referenced by the CURRENT snapshot must survive;
-    # once apply-and-rewrite (DELETE/MERGE/OPTIMIZE) materializes the
+    # once apply-and-rewrite (DELETE/UPDATE/OPTIMIZE) materializes the
     # deletes, the orphaned .bin becomes reclaimable like any other
     # unreferenced file. One .bin can hold frames for SEVERAL adds —
     # any surviving reference keeps the whole file.
@@ -6180,142 +5654,6 @@ def fsck_repair_delta(path: str, dry_run: bool = False) -> list[str]:
     )
     _commit_with_retry(path, latest + 1, actions)
     return broken
-
-
-def cleanup_log(path: str, retain_versions: int = 30) -> list[str]:
-    """Delta log retention: delete JSON commits (and superseded
-    checkpoint parquets) STRICTLY BELOW the newest checkpoint, keeping
-    at least ``retain_versions`` trailing commits — the metadata
-    counterpart of VACUUM. A 10⁵-commit streaming table's _delta_log
-    stays O(retain_versions + 1 checkpoint) instead of growing forever.
-
-    Safety invariants (test-asserted):
-    - never deletes at or above the newest checkpoint version — every
-      surviving read has a checkpoint base, so snapshots/time travel
-      inside the retention window are byte-identical;
-    - reads BELOW the cleaned boundary raise a descriptive error
-      (see ``_replay``'s truncation guard) rather than returning a
-      silently incomplete snapshot;
-    - a log with no checkpoint is never cleaned (nothing to replay
-      from). Like Delta, history/CDF windows older than retention are
-      gone — consume change feeds before cleaning. Returns deleted
-      file names.
-
-    ``delta.logRetentionDuration`` (round-11): when the table sets it,
-    commits younger than the duration are protected from the
-    count-based boundary — strictly conservative (never deletes more).
-    An ABSENT property keeps pure count semantics; callers wanting
-    delta-spark's 30-day default pass retain_versions sized for their
-    commit cadence or set the property explicitly."""
-    cp = _latest_checkpoint_version(path)
-    if cp is None:
-        return []
-    versions = _list_versions(path)
-    boundary = min(cp, (versions[-1] - retain_versions + 1) if versions else cp)
-    # delta.logRetentionDuration (delta-spark's TIME-based retention,
-    # round-11) acts as a protective FLOOR on top of the version count:
-    # a commit younger than the duration is never deleted even when the
-    # count-based boundary has passed it — strictly conservative, so an
-    # external expectation of "30 days of history" survives an
-    # aggressive retain_versions. Unparseable values are ignored.
-    try:
-        cfg = _latest_metadata(path, versions[-1]).get("configuration", {})
-        dur_ms = _parse_interval_ms(cfg.get("delta.logRetentionDuration"))
-    except Exception:
-        dur_ms = None
-    if dur_ms is not None:
-        cutoff = int(time.time() * 1000) - dur_ms
-        clocks = _adjusted_commit_timestamps(path, versions)
-        young = [v for v in versions if clocks[v] >= 0 and clocks[v] > cutoff]
-        if young:
-            boundary = min(boundary, young[0])
-    # every retained version must stay REPLAYABLE: version w replays
-    # from the newest checkpoint ≤ w plus the JSON commits after it, so
-    # the deletion floor is the newest checkpoint AT OR BELOW the
-    # boundary (`base`), not the boundary itself — deleting base's
-    # checkpoint (or the JSONs in (base, boundary)) would make every
-    # version in [boundary, next checkpoint) raise the truncation guard
-    # even though it sits inside the retention window.
-    d = _log_dir(path)
-
-    def _cp_version(name: str) -> int | None:
-        m = _CP_NAME_RE.match(name)  # single-file AND multi-part forms
-        if m:
-            return int(m.group(1))
-        m = _CP_V2_NAME_RE.match(name)  # uuid-named v2 form (round-10)
-        return int(m.group(1)) if m else None
-
-    cp_versions = sorted(
-        {
-            v
-            for name in os.listdir(d)
-            if (v := _cp_version(name)) is not None
-        }
-    )
-    bases = [v for v in cp_versions if v <= boundary]
-    if not bases:
-        return []  # no checkpoint at/below the boundary: nothing deletable
-    base = bases[-1]
-    deleted: list[str] = []
-    for v in versions:
-        # replay of any retained version starts at base's checkpoint, so
-        # JSONs at-or-below base are redundant — but never delete inside
-        # the retention window itself (v >= boundary keeps the version
-        # listing / history / CDF of retained commits intact)
-        if v <= base and v < boundary:
-            os.remove(_commit_file(path, v))
-            deleted.append(os.path.basename(_commit_file(path, v)))
-            # the version checksum describes a commit that no longer
-            # replays — it goes with its JSON
-            try:
-                os.remove(_checksum_file(path, v))
-                deleted.append(os.path.basename(_checksum_file(path, v)))
-            except OSError:
-                pass
-
-    def _sidecar_refs(fpath: str) -> set[str]:
-        """Bare names of the _sidecars/ files a v2 checkpoint references
-        (empty for classic files, whose schema has no sidecar column)."""
-        import pyarrow.parquet as pq
-
-        try:
-            if "sidecar" not in set(pq.read_schema(fpath).names):
-                return set()
-            col = pq.read_table(fpath, columns=["sidecar"]).to_pylist()
-        except OSError:
-            return set()
-        return {
-            os.path.basename(r["sidecar"]["path"])
-            for r in col
-            if r.get("sidecar") and r["sidecar"].get("path")
-        }
-
-    # superseded checkpoint files (classic parts AND v2 uuid files) go;
-    # a _sidecars/ parquet goes only when EVERY checkpoint referencing
-    # it is being deleted — the spec allows checkpoints to SHARE
-    # sidecars, and a concurrent checkpointer's fresh (not-yet-
-    # referenced) sidecars are never touched.
-    dead_refs: set[str] = set()
-    live_refs: set[str] = set()
-    for name in sorted(os.listdir(d)):
-        v = _cp_version(name)
-        if v is None:
-            continue
-        if v < base:
-            dead_refs |= _sidecar_refs(os.path.join(d, name))
-            os.remove(os.path.join(d, name))
-            deleted.append(name)
-        else:
-            live_refs |= _sidecar_refs(os.path.join(d, name))
-    side_dir = os.path.join(d, "_sidecars")
-    if os.path.isdir(side_dir):
-        for name in sorted(dead_refs - live_refs):
-            try:
-                os.remove(os.path.join(side_dir, name))
-                deleted.append(os.path.join("_sidecars", name))
-            except OSError:
-                pass
-    return deleted
 
 
 def _zorder_value(df: DataFrame, columns: list[str], bits: int = 4):
@@ -6668,446 +6006,6 @@ def optimize_delta(
         data_change=False,
         read_metadata=False,
     )
-
-
-def delta_changes(
-    spark: SparkSession, path: str, since_version: int, to_version: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Change-feed-lite between snapshots: ``(added_rows, removed_rows)``
-    across versions in ``(since_version, to_version]``. File-granular —
-    rows come from add/remove actions' files, so an updated row appears
-    in BOTH frames (its old file removed, its new file added), exactly
-    the +/- delta an incremental aggregate consumer needs. Actions with
-    ``dataChange: false`` (OPTIMIZE rewrites) are skipped per the Delta
-    CDF contract: they move bytes, not content.
-
-    Scale shape: reading only the commits' file lists, never replaying
-    table content — the cost is proportional to the CHANGED data, which
-    is the entire point of incremental maintenance at 100 TB. Files
-    removed by the window must not have been vacuumed yet (same
-    constraint as real CDF reads past retention).
-
-    Deletion-vector windows (round-9): a DV commit changes the CONTENT
-    of an existing path, which file-granular netting cannot see. When
-    the window touches a DV table, the feed switches to a CONTENT-state
-    diff: simulate only the window's dataChange actions from the
-    replayed start snapshot, then per path emit (a) full survivor sets
-    for appearing/disappearing files and (b) row-level diffs of the old
-    vs new bitmap for in-place DV updates — rows in (newDV − oldDV) are
-    deletes, (oldDV − newDV) are re-inserts (RESTORE). Cost stays
-    proportional to the changed rows: bitmaps are decoded per the
-    DV_DRIVER_DECODE_MAX locality gate and only the diffed files are
-    ever read."""
-    from pyspark.sql import functions as F
-
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no Delta log at {path}")
-    if to_version is None:
-        to_version = versions[-1]
-    if since_version + 1 < versions[0] and since_version != to_version:
-        # the window reaches below log retention (cleanup_log deleted
-        # those commits) — partial change feeds must error, not
-        # silently under-report, same contract as real CDF past retention
-        raise ValueError(
-            f"change window ({since_version}, {to_version}] predates the "
-            f"retained log (oldest commit {versions[0]}) at {path}"
-        )
-    _, schema, cdf_pcols, cdf_meta = _replay(path, to_version)
-    window: list[list[dict[str, Any]]] = []
-    has_dv_action = False
-    for v in versions:
-        if v <= since_version or v > to_version:
-            continue
-        acts = _read_actions(path, v)
-        window.append(acts)
-        for action in acts:
-            payload = action.get("add") or action.get("remove")
-            if payload and payload.get("deletionVector"):
-                has_dv_action = True
-
-    cm_mode = _column_mapping_mode(cdf_meta)
-    cm = cm_mode in ("name", "id")
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
-    def _load_survivors(
-        files_dv: dict[str, dict | None], pvals_of: dict[str, dict]
-    ) -> DataFrame:
-        """Full logical content of the given files: each file minus its
-        deletion vector (None = whole file). Partition columns come from
-        the hive dir names (basePath) or, for shallow-clone absolute
-        paths, the actions' partitionValues (``pvals_of``)."""
-        if not files_dv:
-            return spark.createDataFrame([], schema)
-        rels = sorted(files_dv)
-        df, pv_finish = _partitioned_scan(
-            spark,
-            path,
-            _reader_schema(schema, cm_mode),
-            rels,
-            pvals_of,
-            schema,
-            cdf_pcols,
-            cm_mode,
-        )
-        dv_by_rel = {r: d for r, d in files_dv.items() if d}
-        if dv_by_rel:
-            df = _apply_deletion_vectors(spark, path, df, dv_by_rel, all_rels=rels)
-        df = pv_finish(df)
-        return _to_logical_columns(df, schema) if cm else df.select(
-            *schema.fieldNames()
-        )
-
-    proto_feats = set(
-        _latest_protocol(path, to_version).get("readerFeatures") or []
-    )
-    if not has_dv_action and "deletionVectors" not in proto_feats:
-        # NET add/remove count per path (not set intersection):
-        # Delta-legal logs can remove then RE-ADD the same path
-        # (RESTORE, stats-refresh commits), which set-cancellation
-        # would wrongly net to "no change", and an idempotent duplicate
-        # add must not double-read the file. A path's file content is
-        # immutable in Delta, so net > 0 ⇒ its rows were added once;
-        # net < 0 ⇒ removed once; net 0 ⇒ no content change.
-        from collections import Counter
-
-        net: Counter = Counter()
-        pvals_of: dict[str, dict] = {}
-        for acts in window:
-            for action in acts:
-                if "add" in action and action["add"].get("dataChange", True):
-                    net[action["add"]["path"]] += 1
-                    pvals_of[action["add"]["path"]] = (
-                        action["add"].get("partitionValues") or {}
-                    )
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    net[action["remove"]["path"]] -= 1
-                    # spec marks remove.partitionValues optional; this
-                    # engine (and real writers) copy it from the add —
-                    # only needed for absolute-path (clone) layouts
-                    pv = action["remove"].get("partitionValues")
-                    if pv is not None:
-                        pvals_of[action["remove"]["path"]] = pv
-        return (
-            _load_survivors(
-                {p: None for p, n in net.items() if n > 0}, pvals_of
-            ),
-            _load_survivors(
-                {p: None for p, n in net.items() if n < 0}, pvals_of
-            ),
-        )
-
-    # --- DV-aware content-state diff ---
-    # Start from the replayed snapshot at since_version and fold ONLY
-    # the window's dataChange actions (dataChange:false moves bytes,
-    # not content — an OPTIMIZE that compacts or materializes a DV
-    # must read as "no change", which a raw end-snapshot replay could
-    # not distinguish). Removes before adds, same reconciliation rule
-    # as _replay.
-    if since_version < 0:
-        start_active: dict[str, dict] = {}
-    else:
-        try:
-            start_active, _, _, _ = _replay(path, since_version)
-        except ValueError as e:
-            raise ValueError(
-                f"DV-aware change feed needs the start snapshot at "
-                f"version {since_version} of {path}: {e}"
-            ) from e
-    end_active: dict[str, dict] = dict(start_active)
-    for acts in window:
-        for action in acts:
-            if "remove" in action and action["remove"].get("dataChange", True):
-                end_active.pop(action["remove"]["path"], None)
-        for action in acts:
-            if "add" in action and action["add"].get("dataChange", True):
-                end_active[action["add"]["path"]] = action["add"]
-
-    added_full: dict[str, dict | None] = {}
-    removed_full: dict[str, dict | None] = {}
-    dv_pairs: dict[str, tuple[dict | None, dict | None]] = {}
-    snapshot_pvals = {
-        rel: a.get("partitionValues") or {}
-        for active_map in (start_active, end_active)
-        for rel, a in active_map.items()
-    }
-    for rel in set(start_active) | set(end_active):
-        a0, a1 = start_active.get(rel), end_active.get(rel)
-        d0 = a0.get("deletionVector") if a0 else None
-        d1 = a1.get("deletionVector") if a1 else None
-        if a0 is not None and a1 is not None:
-            if _dv_key(d0) != _dv_key(d1):
-                dv_pairs[rel] = (d0, d1)
-        elif a1 is not None:
-            added_full[rel] = d1
-        else:
-            removed_full[rel] = d0
-
-    def _diff_rows(
-        grow: dict[str, dict], shrink: dict[str, dict]
-    ) -> DataFrame | None:
-        """Rows of each file whose index is in its ``grow`` DV but not
-        its ``shrink`` DV (bitmap set difference, joined back to the
-        file's rows by (path suffix, _metadata.row_index) — same keying
-        as _apply_deletion_vectors, so partitioned tables that repeat a
-        part basename across hive dirs match unambiguously)."""
-        if not grow:
-            return None
-        rels = sorted(grow)
-        depth = _dv_suffix_depth(rels)
-        if depth is None:
-            depth = 1
-            basenames = [os.path.basename(r) for r in rels]
-            if len(set(basenames)) != len(basenames):
-                raise ValueError(
-                    f"files of {path} share a basename across "
-                    "directories at mixed depths in a DV change window "
-                    "— row matching would be ambiguous; refusing "
-                    "rather than misreport changes"
-                )
-        idx = _deleted_rows_frame(spark, path, grow, depth)
-        shrink = {r: d for r, d in shrink.items() if d and r in grow}
-        if shrink:
-            idx = idx.join(
-                _deleted_rows_frame(spark, path, shrink, depth),
-                ["dv_fname", "dv_ridx"],
-                "left_anti",
-            )
-        df, pv_finish = _partitioned_scan(
-            spark,
-            path,
-            _reader_schema(schema, cm_mode),
-            rels,
-            snapshot_pvals,
-            schema,
-            cdf_pcols,
-            cm_mode,
-        )
-        keyed = df.withColumn(
-            "dv_fname", _dv_file_key_col(depth)
-        ).withColumn("dv_ridx", F.col("_metadata.row_index"))
-        hit = keyed.join(idx, ["dv_fname", "dv_ridx"], "inner")
-        hit = pv_finish(hit)
-        return _to_logical_columns(hit, schema) if cm else hit.select(
-            *schema.fieldNames()
-        )
-
-    deletes_rows = _diff_rows(
-        {r: d1 for r, (d0, d1) in dv_pairs.items() if d1},
-        {r: d0 for r, (d0, d1) in dv_pairs.items() if d0},
-    )
-    inserts_rows = _diff_rows(
-        {r: d0 for r, (d0, d1) in dv_pairs.items() if d0},
-        {r: d1 for r, (d0, d1) in dv_pairs.items() if d1},
-    )
-    added_df = _load_survivors(added_full, snapshot_pvals)
-    removed_df = _load_survivors(removed_full, snapshot_pvals)
-    if inserts_rows is not None:
-        added_df = added_df.unionByName(inserts_rows)
-    if deletes_rows is not None:
-        removed_df = removed_df.unionByName(deletes_rows)
-    return added_df, removed_df
-
-
-def _load_cdc_files(
-    spark: SparkSession,
-    path: str,
-    cdc_actions: list[dict[str, Any]],
-    schema: T.StructType,
-    partition_cols: list[str],
-    cm_mode: str = "none",
-) -> DataFrame:
-    """Rows of a commit's ``cdc`` actions (delta-spark's ``_change_data``
-    files): data columns + ``_change_type`` live in the files, partition
-    values come from each action's ``partitionValues`` (authoritative
-    per the spec — the files are not required to sit in hive dirs).
-    Column mapping applies to change data files exactly as to data
-    files (round-10): the files carry PHYSICAL names (and field ids in
-    id mode) and are presented logically; action partitionValues are
-    keyed by physical partition-column name, with a logical-key
-    fallback for lenient external writers."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    cm = cm_mode in ("name", "id")
-    if cm_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name not in partition_cols]
-    )
-    file_schema = T.StructType(
-        list(_reader_schema(data_schema, cm_mode).fields)
-        + [T.StructField("_change_type", T.StringType(), True)]
-    )
-    by_field = {f.name: f for f in schema.fields}
-    phys_of = {
-        f.name: (_physical_name(f) if cm else f.name) for f in schema.fields
-    }
-    groups: dict[tuple, list[str]] = {}
-    for a in cdc_actions:
-        key = tuple(sorted((a.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(_data_file(path, a["path"]))
-    frames = []
-    for key, files in sorted(groups.items()):
-        df = spark.read.schema(file_schema).parquet(*sorted(files))
-        df = _present_logical(
-            df, data_schema, cm_mode, extras=("_change_type",)
-        )
-        pv = dict(key)
-        for col in partition_cols:
-            raw = pv.get(phys_of[col], pv.get(col))
-            df = df.withColumn(col, F.lit(raw).cast(by_field[col].dataType))
-        frames.append(df.select(*schema.fieldNames(), "_change_type"))
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def table_changes(
-    spark: SparkSession,
-    path: str,
-    since_version: int | None = None,
-    to_version: int | None = None,
-    since_timestamp: int | float | str | None = None,
-    to_timestamp: int | float | str | None = None,
-) -> DataFrame:
-    """delta-spark's ``table_changes`` surface: ONE frame of row-level
-    changes across versions in ``(since_version, to_version]``, each row
-    tagged ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``
-    — the exact columns delta-spark's CDF reader emits.
-
-    Per-commit source of truth, per the CDF spec: a commit carrying ANY
-    ``cdc`` action describes its changes EXCLUSIVELY through those
-    actions (delta-spark writes them under ``_change_data/`` when
-    ``delta.enableChangeDataFeed=true`` — including the
-    ``update_preimage``/``update_postimage`` pairs a file-granular
-    derivation cannot produce; using the commit's add/remove actions too
-    would double-count). Commits without cdc actions derive through
-    ``delta_changes``'s netting/DV machinery: adds → ``insert`` rows,
-    removes → ``delete`` rows, an UPDATE appearing as its delete+insert
-    pair — the honest file-granular rendering, and what delta-spark
-    itself cannot provide at all without CDF enabled.
-
-    ``_commit_timestamp`` prefers ``commitInfo.inCommitTimestamp`` (the
-    authoritative clock on ICT tables) over ``commitInfo.timestamp``.
-    Cost ∝ changed data: per-commit file lists and cdc files only, plus
-    one log-only replay per DV-touching commit."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no Delta log at {path}")
-    if (since_version is None) == (since_timestamp is None):
-        raise ValueError(
-            "pass exactly one of since_version / since_timestamp"
-        )
-    if since_timestamp is not None:
-        # delta-spark's startingTimestamp rule — see
-        # version_before_timestamp
-        since_version = version_before_timestamp(path, since_timestamp)
-    if to_timestamp is not None:
-        if to_version is not None:
-            raise ValueError("pass to_version OR to_timestamp, not both")
-        to_version = version_at_timestamp(path, to_timestamp)
-    if to_version is None:
-        to_version = versions[-1]
-    if since_version + 1 < versions[0] and since_version != to_version:
-        raise ValueError(
-            f"change window ({since_version}, {to_version}] predates the "
-            f"retained log (oldest commit {versions[0]}) at {path}"
-        )
-    _, schema, pcols, _meta = _replay(path, to_version)
-    frames: list[DataFrame] = []
-    for v in versions:
-        if v <= since_version or v > to_version:
-            continue
-        acts = _read_actions(path, v)
-        # one shared clock (ICT > commitInfo.timestamp > file mtime):
-        # _prev_commit_timestamp, the same precedence timestampAsOf and
-        # the streaming CDF source resolve with; -1 = unavailable
-        t = _prev_commit_timestamp(path, v)
-        ts = t if t >= 0 else None
-        cdc_actions = [a["cdc"] for a in acts if "cdc" in a]
-        if cdc_actions:
-            part = _load_cdc_files(
-                spark, path, cdc_actions, schema, pcols,
-                _column_mapping_mode(_meta),
-            )
-        else:
-            added, removed = delta_changes(spark, path, v - 1, v)
-            part = added.withColumn(
-                "_change_type", F.lit("insert")
-            ).unionByName(removed.withColumn("_change_type", F.lit("delete")))
-        frames.append(
-            part.withColumn("_commit_version", F.lit(v).cast("long"))
-            .withColumn(
-                "_commit_timestamp",
-                F.timestamp_millis(F.lit(int(ts)))
-                if ts is not None
-                else F.lit(None).cast("timestamp"),
-            )
-        )
-    if not frames:
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_change_type", T.StringType(), True),
-                T.StructField("_commit_version", T.LongType(), True),
-                T.StructField("_commit_timestamp", T.TimestampType(), True),
-            ]
-        )
-        return spark.createDataFrame([], out_schema)
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def refresh_aggregate(
-    spark: SparkSession,
-    path: str,
-    state: DataFrame | None,
-    keys: list[str],
-    sums: dict[str, str],
-    since_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Incrementally maintain a SUM/COUNT group-by over a Delta table —
-    materialized-view maintenance without recomputing the base table:
-    ``new_state = state ⊕ agg(added) ⊖ agg(removed)`` using the change
-    feed above. ``sums`` maps output column → source column to SUM
-    (COUNT rides along as ``_n``); groups whose count reaches zero drop
-    out. ``state=None`` starts from scratch (since_version=-1).
-
-    Only the changed files are read and the combine shuffles the GROUP
-    key space of the CHANGES, so a 1%-churn refresh costs ~1% of the
-    full recompute — the incremental-view shape every warehouse ETL
-    needs at scale. SUM/COUNT (and AVG as their ratio) are the
-    self-maintainable aggregates; MIN/MAX need a full per-group rescan
-    on deletes and are deliberately out of scope."""
-    from pyspark.sql import functions as F
-
-    added, removed = delta_changes(spark, path, since_version, to_version)
-    signed = added.withColumn("_sign", F.lit(1)).unionByName(
-        removed.withColumn("_sign", F.lit(-1))
-    )
-    delta = signed.groupBy(*keys).agg(
-        *[F.sum(F.col(src) * F.col("_sign")).alias(out) for out, src in sums.items()],
-        F.sum("_sign").alias("_n"),
-    )
-    if state is None:
-        merged = delta
-    else:
-        merged = (
-            state.unionByName(delta)
-            .groupBy(*keys)
-            .agg(
-                *[F.sum(out).alias(out) for out in sums],
-                F.sum("_n").alias("_n"),
-            )
-        )
-    return merged.filter(F.col("_n") > 0)
 
 
 def delta_detail(path: str) -> dict[str, Any]:

@@ -27,6 +27,21 @@ long_suite = pytest.mark.skipif(
 )
 
 
+def clean_delta_log_below(path: str, base: int) -> list[str]:
+    """Delete what a Delta log cleanup (delta-spark's metadata cleanup)
+    removes below the checkpoint at ``base``: the JSON commits, their
+    ``.crc`` checksums and every older checkpoint file. Returns the
+    deleted file names, sorted."""
+    log = os.path.join(path, "_delta_log")
+    gone = []
+    for name in sorted(os.listdir(log)):
+        head = name.split(".", 1)[0]
+        if len(head) == 20 and head.isdigit() and int(head) < base:
+            os.remove(os.path.join(log, name))
+            gone.append(name)
+    return gone
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -354,3 +354,46 @@ def test_if_model_roundtrip(spark, features, tmp_path):
     a = det.detect(features).count()
     b = det2.detect(features).count()
     assert a == b and a > 0
+
+
+def test_paper_scale_anomaly_counts_pinned(spark):
+    """The reference's own 1x run (30 days x 10 zones, seed 42): the
+    injected fault rows match HVAC_README.md:112-113 exactly, and each
+    detector's count is pinned so any generator, ETL or rule change
+    shows up as a diff.
+
+    oscillating_control fires on ~89% of rows by construction: the
+    generator's zone temperature carries i.i.d. noise per
+    tick, and consecutive differences of i.i.d. noise change sign with
+    probability 2/3. A 12-row window has 11 transitions, so it expects
+    about 7.3 sign changes, above the rule's threshold of 6; most windows
+    fire and the non-overlapping scan flags whole 12-row blocks. That is
+    why the total (80,212) is 25x the published ~3,209."""
+    from sustainable_building_energy_benchmarking_pipeline_spark.ml.isolation_forest import (
+        IsolationForestDetector,
+    )
+
+    raw = generators.generate_hvac_data(spark, days=30, n_zones=10, seed=42)
+    faults = {r[0]: r[1] for r in raw.groupBy("fault_type").count().collect()}
+    assert faults == {
+        "none": 84_944,
+        "temp_drift": 484,
+        "clogged_filter": 388,
+        "oscillating_control": 292,
+        "compressor_failure": 292,
+    }
+    feats = hvac.run_feature_pipeline(raw).cache()
+    try:
+        rules = detection.run_rule_detection(feats)
+        counts = {r[0]: r[1] for r in rules.groupBy("rule_name").count().collect()}
+        assert counts == {
+            "temp_drift": 570,
+            "clogged_filter": 380,
+            "compressor_failure": 211,
+            "oscillating_control": 77_124,
+        }
+        # identical at 1 and 4 local cores
+        det = IsolationForestDetector().train(feats)
+        assert det.detect(feats).count() == 1_927
+    finally:
+        feats.unpersist()

