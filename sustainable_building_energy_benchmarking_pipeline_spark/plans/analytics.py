@@ -18,6 +18,9 @@ Two kinds of ``fn``:
   ``sql_frontend.SPARK_SQL`` translation of the DuckDB dialect. The
   text is ``QUERIES[name].fn.args[0]``.
 
+A query has one of the two, never both: ``SPARK_SQL`` holds only texts
+their registry entry runs (``tests/test_sql_surface.py``).
+
 Determinism rules (driver hash-compares values order-insensitively):
 - every LIMIT/top-k has a unique tiebreaker in its ordering;
 - every float column is rounded identically on both sides;

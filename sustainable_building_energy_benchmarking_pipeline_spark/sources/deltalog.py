@@ -5656,18 +5656,22 @@ def fsck_repair_delta(path: str, dry_run: bool = False) -> list[str]:
     return broken
 
 
-def _zorder_value(df: DataFrame, columns: list[str], bits: int = 4):
+# z-value bits per column: 2^4 quantile buckets, enough to separate
+# ``target_files`` files on every dimension
+_ZORDER_BITS = 4
+
+
+def _zorder_value(df: DataFrame, columns: list[str]):
     """Z-value column: interleave the bits of each column's quantile-bucket
-    rank. Bucketing uses sampled quantile boundaries (approxQuantile — the
-    same sampled-range mechanism repartitionByRange uses), so skew cannot
-    collapse the clustering; numeric columns keep range locality, string
-    columns are xxhash64'd first (equality skipping only — a documented
-    Z-ORDER property for high-cardinality strings in real lakehouses).
-    ``bits`` per column: 2^bits buckets — enough to separate
-    ``target_files`` files on every dimension."""
+    rank (``_ZORDER_BITS`` per column). Bucketing uses sampled quantile
+    boundaries (approxQuantile — the same sampled-range mechanism
+    repartitionByRange uses), so skew cannot collapse the clustering;
+    numeric columns keep range locality, string columns are xxhash64'd
+    first (equality skipping only — a documented Z-ORDER property for
+    high-cardinality strings in real lakehouses)."""
     from pyspark.sql import functions as F
 
-    n_buckets = 1 << bits
+    n_buckets = 1 << _ZORDER_BITS
     qs = [i / n_buckets for i in range(1, n_buckets)]
     work = df
     tmp_cols = []
@@ -5711,7 +5715,7 @@ def _zorder_value(df: DataFrame, columns: list[str], bits: int = 4):
                 lambda b: b <= F.coalesce(F.col(key), F.lit(float("-inf"))),
             )
         ).cast("long")
-        for bit in range(bits):
+        for bit in range(_ZORDER_BITS):
             z = z.bitwiseOR(
                 F.shiftleft(
                     F.shiftrightunsigned(bucket, bit).bitwiseAND(F.lit(1)),

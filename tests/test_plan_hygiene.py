@@ -28,8 +28,6 @@ import re
 import pytest
 
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import QUERIES
-from sustainable_building_energy_benchmarking_pipeline_spark.plans.sql_frontend import SPARK_SQL
-from sustainable_building_energy_benchmarking_pipeline_spark.session import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -305,18 +303,10 @@ _OPERATOR_PLANS = {
 }
 
 
-@pytest.mark.parametrize(
-    "name", [*sorted(QUERIES), *_OPERATOR_PLANS, *(f"sql:{n}" for n in sorted(SPARK_SQL))]
-)
+@pytest.mark.parametrize("name", [*sorted(QUERIES), *_OPERATOR_PLANS])
 def test_no_unbounded_following_row_frame(spark, name):
     if name in _OPERATOR_PLANS:
         df = _OPERATOR_PLANS[name](spark)
-    elif name.startswith("sql:"):
-        text = SPARK_SQL[name[4:]]
-        if getattr(QUERIES[name[4:]].fn, "args", (None,))[0] is text:
-            return  # the registry runs this very text: its QUERIES case plans it
-        load_tables(spark, SF_DIR)
-        df = spark.sql(text)
     else:
         df = QUERIES[name].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
