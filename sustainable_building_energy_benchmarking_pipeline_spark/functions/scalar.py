@@ -12,21 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def clip(col: Column, lo: float | None = None, hi: float | None = None) -> Column:
-    """P15: clamp to [lo, hi] (pandas ``.clip``, src/generate_hvac_data.py:215-218).
-
-    NULL passes through (pandas .clip preserves NaN): greatest/least
-    SKIP nulls, so the bare chain would fabricate the bound itself from
-    a missing reading — a null sensor value must stay null, not become
-    0.0 (or worse, the cap)."""
-    c = col
-    if lo is not None:
-        c = F.greatest(c, F.lit(float(lo)))
-    if hi is not None:
-        c = F.least(c, F.lit(float(hi)))
-    return F.when(col.isNull(), col).otherwise(c)
-
-
 def coalesce_aliases(
     df: DataFrame, aliases: Sequence[str], default: object = None
 ) -> Column:
@@ -47,8 +32,3 @@ def split_trim(col: Column, sep: str = ",") -> Column:
     return F.transform(F.split(col, sep), lambda x: F.trim(x))
 
 
-def weekday(ts: Column) -> Column:
-    """F2: Monday=0 day-of-week, matching pandas ``dt.dayofweek``
-    (src/generate_hvac_data.py:49; SURVEY flags Spark's dayofweek
-    Sunday=1 offset trap — use this instead)."""
-    return F.weekday(ts)

@@ -67,12 +67,12 @@ def quality_score_from_tokens(
 
     Takes MATERIALIZED token arrays (raw-case ``toks``, lowercase
     ``ltoks`` — each its own projection, see shingles_from_tokens):
-    Catalyst does not CSE across lambda boundaries, so the
-    single-expression ``quality_score`` convenience form re-runs the
+    Catalyst does not CSE across lambda boundaries, so a
+    single-expression form that tokenizes inline would re-run the
     whitespace tokenizer once per component on every row of a
-    corpus-scale scan. Hot paths select the two arrays first and call
-    this form (the module's materialize-the-token-array convention;
-    the q30 oracle builds the same two arrays).
+    corpus-scale scan. Callers select the two arrays first (the
+    module's materialize-the-token-array convention; the q30 oracle
+    builds the same two arrays).
     """
     n_tok = F.size(toks).cast("bigint")
     len_ok = (n_tok >= 10) & (n_tok <= 100000)
@@ -92,15 +92,6 @@ def quality_score_from_tokens(
         + awl_ok.cast("double") * 0.3
         + punct_ok.cast("double") * 0.2
         + stop_ok.cast("double") * 0.2
-    )
-
-
-def quality_score(text: Column) -> Column:
-    """Single-expression convenience form of
-    ``quality_score_from_tokens`` — tokenizes inline (≈4 tokenizer runs
-    per row; prefer the two-projection form on hot paths)."""
-    return quality_score_from_tokens(
-        ws_tokens(text), ws_tokens(F.lower(text)), text
     )
 
 
@@ -252,15 +243,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Single-expression convenience form of ``shingles_from_tokens``.
-
-    Prefer the two-projection form (materialize ``ws_tokens(lower(text))``
-    first) on hot paths — see shingles_from_tokens for why.
-    """
-    return shingles_from_tokens(ws_tokens(F.lower(text)), k)
-
-
 # --- PII detection / redaction -------------------------------------------
 #
 # The standard pre-training scrub (emails, phone numbers, IPv4) as plain
@@ -304,15 +286,18 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def add_winnowing_fingerprints(
-    df, tokens_col: str, out_col: str = "fps", k: int = 4, w: int = 5
+def winnowing_postings(
+    df, text_col: str = "text", id_col: str = "doc_id", k: int = 4, w: int = 5
 ):
     """Winnowing document fingerprints (Schleimer–Wilkerson–Aiken, the
-    MOSS local-fingerprinting algorithm): hash every k-token gram, slide
-    a w-hash window, keep each window's MINIMUM hash, dedupe. Guarantee:
-    two documents sharing any run of ≥ k+w−1 tokens share a fingerprint
-    — the rolling-hash fingerprint family, robust to local edits where
-    whole-document sha256 (q26/q31) is all-or-nothing.
+    MOSS local-fingerprinting algorithm) as an EXPLODED posting frame
+    ``(id_col, fp)``: hash every k-token gram, slide a w-hash window,
+    keep each window's MINIMUM hash, dedupe. Guarantee: two documents
+    sharing any run of ≥ k+w−1 tokens share a fingerprint — the
+    rolling-hash fingerprint family, robust to local edits where
+    whole-document sha256 (q26/q31) is all-or-nothing. A document with
+    fewer than k tokens has no fingerprint; one with fewer than w grams
+    keeps its single minimum.
 
     Engine-portable by construction (the q34 trick): the "hash" is the
     first 12 hex chars of sha256(gram) compared as STRINGS — fixed-width
@@ -320,62 +305,21 @@ def add_winnowing_fingerprints(
     it encodes, and every engine computes the identical digest, so
     fingerprints (and the DuckDB oracle) agree bit-for-bit.
 
-    One Arrow-vectorized Pandas UDF per row-batch (the repo's dense-
-    kernel exception, same rationale as ``similarity.normalized``): the
-    expression form (nested ``transform``/``slice``/``array_min``) is
-    interpreted per element AND gets re-inlined per reference when a
-    ``Generate`` (explode) sits above it — CollapseProject + column
-    pruning through the Generate duplicated the gram transform 11× in
-    the optimized plan, measured 24 s for 500 docs vs <1 s here. The
-    UDF is partition-preserving (no shuffle), per-row work
-    O(tokens·k + windows·w), and immune to plan-rewrite duplication.
-    Output fingerprints are sorted for determinism."""
-    import hashlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _winnow(tok_series: pd.Series) -> pd.Series:
-        out = []
-        for toks in tok_series:
-            toks = list(toks) if toks is not None else []
-            n = len(toks)
-            if n < k:
-                out.append([])
-                continue
-            hs = [
-                hashlib.sha256(
-                    " ".join(toks[i : i + k]).encode("utf-8")
-                ).hexdigest()[:12]
-                for i in range(n - k + 1)
-            ]
-            if len(hs) >= w:
-                fps = {min(hs[j : j + w]) for j in range(len(hs) - w + 1)}
-            else:
-                fps = {min(hs)}
-            out.append(sorted(fps))
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _winnow(F.col(tokens_col)))
-
-
-def winnowing_postings(
-    df, text_col: str = "text", id_col: str = "doc_id", k: int = 4, w: int = 5
-):
-    """Winnowing fingerprints as an EXPLODED posting frame
-    ``(id_col, fp)`` — ``add_winnowing_fingerprints`` fused with both
-    whitespace tokenization and the posting explode inside one
-    ``mapInPandas`` kernel. Three measured wins over the
-    tokens-array → pandas_udf → ``F.explode`` pipeline (z10 at sf0.1,
-    3.3 s → 1.5 s end-to-end):
+    Tokenization, hashing and the posting explode run inside one
+    ``mapInPandas`` kernel. The expression form (nested
+    ``transform``/``slice``/``array_min``) is interpreted per element
+    AND gets re-inlined per reference when a ``Generate`` (explode)
+    sits above it — CollapseProject + column pruning duplicated the
+    gram transform 11× in the optimized plan (24 s for 500 docs). Three
+    measured wins over a tokens-array → pandas_udf → ``F.explode``
+    pipeline (z10 at sf0.1, 3.3 s → 1.5 s end-to-end):
 
     1. Arrow ships ONE text string per input row instead of a boxed
        ``array<string>`` (list<utf8> child-array assembly dominated
-       the old kernel's serde cost);
+       that kernel's serde cost);
     2. rows leave Python already exploded, so no JVM ``Generate``
        sits above the UDF output (the Generate leg alone measured
-       ~1 s — the same plan-shape trap ``add_winnowing_fingerprints``
-       documents);
+       ~1 s);
     3. a per-TASK digest memo skips re-hashing grams repeated across
        documents (boilerplate), not just within one row batch.
 

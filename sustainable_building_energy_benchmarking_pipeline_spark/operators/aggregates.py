@@ -57,14 +57,3 @@ def multi_dim_summary(
     return gs.agg(F.grouping_id().alias(grouping_id_col), *measures)
 
 
-def grouped_top_n(
-    df: DataFrame, group_col: str, n: int, count_alias: str = "n"
-) -> DataFrame:
-    """A6: value_counts-with-limit (`GROUP BY … ORDER BY count DESC LIMIT n`,
-    src/db.py:222-229). Deterministic: ties broken by group value."""
-    return (
-        df.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias(count_alias))
-        .orderBy(F.desc(count_alias), F.col(group_col))
-        .limit(n)
-    )

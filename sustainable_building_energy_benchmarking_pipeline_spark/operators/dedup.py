@@ -1,9 +1,8 @@
 """Deduplication operators for training-data pipelines (BASELINE.json
-north-star): exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine
-near-dup.
+north-star): MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine
+near-dup. Exact dedup is q26's SQL text (``sql_frontend.SPARK_SQL``).
 
 Scale design — the whole point of these shapes at 100 TB:
-- exact dedup shuffles 32-byte digests, never documents;
 - MinHash/LSH shuffles fixed-size signatures; candidate pairs come from
   band-bucket equi-joins (each bucket small), never a global cross join;
 - n-gram Jaccard is only ever computed on candidate pairs (LSH buckets) or
@@ -29,9 +28,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sustainable_building_energy_benchmarking_pipeline_spark.functions.text import (
-    content_fingerprint,
-)
 from sustainable_building_energy_benchmarking_pipeline_spark.operators.partitioning import (
     ensure_min_partitions,
     pin_shuffle_width,
@@ -41,99 +37,6 @@ from sustainable_building_energy_benchmarking_pipeline_spark.session import (
     GRAM_FRAMES,
     register_query_cache,
 )
-
-
-def _hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int,
-    extra: list | None = None,
-) -> DataFrame:
-    """(id, *extra, sh: array<bigint>): distinct k-token shingles of the
-    lowercased whitespace-tokenized text, each hashed to a stable 64-bit
-    int, via ONE vectorized Pandas UDF.
-
-    Why a UDF on a text hot path: the expression form (tokens → per-
-    position slice/array_join transform → per-shingle xxhash64) runs
-    entirely in interpreted higher-order functions — Spark does not
-    codegen lambda bodies — measured 3.5 s for the sf0.1 corpus vs
-    ~0.4 s for this Arrow-batched version (the same documented exception
-    as simhash64's bit-vote). Hashing is blake2b-8 (process-independent,
-    unlike Python's salted str hash — workers must agree on every hash).
-    The functions.text expression forms remain for one-off columns.
-
-    Token semantics match ws_tokens / the DuckDB oracles: ASCII ``\\s+``
-    split, empties dropped. With ≤10⁴ distinct shingles per doc the
-    64-bit collision probability (~n²/2⁶⁵) is negligible, so set sizes
-    equal the string-set sizes the oracle computes.
-
-    ``extra`` is a list of (Column, name) pairs carried through. The
-    leading ``ensure_min_partitions`` parallelizes the UDF stage when
-    the input arrives as a handful of small files (one ~5 MB parquet
-    file = one task otherwise) while costing nothing when the corpus
-    already has enough partitions (the 100 TB path — no blanket
-    shuffle); downstream pair joins reshuffle on their own keys
-    anyway."""
-    import hashlib
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    ws = re.compile(r"\s+", re.ASCII)
-    k = shingle_k
-
-    @pandas_udf("array<long>")
-    def _sh(texts: pd.Series) -> pd.Series:
-        def hashed(text: str | None) -> list[int]:
-            if text is None:
-                return []
-            toks = [t for t in ws.split(text.strip().lower()) if t]
-            if len(toks) >= k:
-                shs = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
-            elif toks:
-                shs = {" ".join(toks)}
-            else:
-                return []
-            return [
-                int.from_bytes(
-                    hashlib.blake2b(s.encode(), digest_size=8).digest(),
-                    "big",
-                    signed=True,
-                )
-                for s in shs
-            ]
-
-        return pd.Series([hashed(t) for t in texts])
-
-    df = ensure_min_partitions(df)
-    return df.select(
-        F.col(id_col).alias("id"),
-        *[c.alias(name) for c, name in (extra or [])],
-        _sh(F.col(text_col)).alias("sh"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact dedup
-# ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative per normalized content fingerprint.
-
-    NULL text has no content to match on: sha2(NULL) is NULL, and an
-    unguarded partition key would pool every null-text row into ONE
-    window partition — a skewed single task at corpus scale that drops
-    all but one of them, deleting distinct (merely text-less) documents.
-    Null rows are keyed by their own id instead: unique group ⇒ always
-    kept, and the non-hex prefix cannot collide with a real digest."""
-    fp = content_fingerprint(F.col(text_col))
-    key = F.coalesce(
-        fp, F.concat(F.lit("null:"), F.col(id_col).cast("string"))
-    )
-    return (
-        df.withColumn("_fp", key)
-        .withColumn("_keep", F.min(id_col).over(Window.partitionBy("_fp")))
-        .filter(F.col(id_col) == F.col("_keep"))
-        .drop("_fp", "_keep")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -150,48 +53,6 @@ def _splitmix64(z: "np.ndarray") -> "np.ndarray":
     return z ^ (z >> np.uint64(31))
 
 
-def minhash_band_hashes(
-    num_hashes: int = 64, bands: int = 32, seed: int = 42
-):
-    """Pandas-UDF factory: hashed-shingle array → array of ``bands`` LSH
-    band hashes (the per-band hash of r = num_hashes/bands consecutive
-    MinHash signature values).
-
-    One vectorized kernel per Arrow batch: (num_hashes × n_shingles)
-    salted SplitMix64 matrix → column-min → reshape (bands, r) → fold
-    each band with a mix step. The expression-tree form (num_hashes
-    array_min/transform arms + ``bands`` slice/array_join/xxhash64
-    combines) is interpreted per element — ~14 M lambda evaluations at
-    sf0.1 — and dominates the whole near-dup pipeline; this kernel is
-    the same documented exception as simhash64's bit-vote. Empty/null
-    shingle sets yield NULL (posexplode then drops the row, so shingle-
-    less docs never become candidates)."""
-    from pyspark.sql.functions import pandas_udf
-
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    rng = np.random.RandomState(seed)
-    salts = rng.randint(0, 2**63, size=num_hashes, dtype=np.int64).astype(np.uint64)
-
-    @pandas_udf("array<long>")
-    def _bands(sh_arrays: pd.Series) -> pd.Series:
-        out: list[list[int] | None] = []
-        for hs in sh_arrays:
-            if hs is None or len(hs) == 0:
-                out.append(None)
-                continue
-            x = np.asarray(hs, dtype=np.int64).view(np.uint64)
-            sig = _splitmix64(x[None, :] ^ salts[:, None]).min(axis=1)  # (num_hashes,)
-            band_vals = sig.reshape(bands, r)
-            h = band_vals[:, 0]
-            for j in range(1, r):
-                h = _splitmix64(h ^ band_vals[:, j])
-            out.append(h.astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return _bands
-
-
 def _shingle_postings(
     df: DataFrame,
     text_col: str,
@@ -199,16 +60,18 @@ def _shingle_postings(
     shingle_k: int,
     extra: list | None = None,
 ) -> DataFrame:
-    """``_hashed_shingles`` fused with the posting explode into one
-    mapInPandas pass: (id, *extra, sz, s) rows leave Python already
+    """Distinct k-token shingles of the lowercased whitespace-tokenized
+    text, each hashed to a stable 64-bit int and exploded to postings in
+    one mapInPandas pass: (id, *extra, sz, s) rows leave Python already
     exploded — no JVM Generate over a UDF array output (the z10
     plan-shape lesson; measured ~0.4 s of q32's cost at sf0.1) and no
-    list<int64> Arrow assembly. Hashing/tokenization bit-identical to
-    ``_hashed_shingles`` (blake2b-8 over ASCII-\\s+ lowercased
-    k-grams), with a per-task digest memo. ``sz`` is the document's
-    DISTINCT shingle count (the Jaccard denominator piece), repeated on
-    each posting so no sizes join is needed downstream. Shingle-less
-    docs emit nothing, exactly like exploding an empty array."""
+    list<int64> Arrow assembly. Hashing/tokenization is the same as
+    ``_hashed_shingles_with_bands`` (blake2b-8 over ASCII-\\s+
+    lowercased k-grams), with a per-task digest memo. ``sz`` is the
+    document's DISTINCT shingle count (the Jaccard denominator piece),
+    repeated on each posting so no sizes join is needed downstream.
+    Shingle-less docs emit nothing, exactly like exploding an empty
+    array."""
     import hashlib
     import re
 
@@ -285,17 +148,29 @@ def _hashed_shingles_with_bands(
     bands: int,
     seed: int,
 ) -> DataFrame:
-    """``_hashed_shingles`` fused with ``minhash_band_hashes`` into ONE
-    mapInPandas pass returning (id, sh, _bh) — the z10 kernel lesson
-    applied to MinHash: chaining two pandas UDFs pays two Arrow
-    round-trips and two Python dispatches per batch, and the shingle
-    stage dominated q33's cost (measured 2.2 s → 1.6 s end-to-end at
-    sf0.1). Hashing, tokenization and band folding are BIT-IDENTICAL to
-    the unfused helpers (same blake2b-8, same splitmix64 salts), plus a
-    per-task shingle-digest memo for boilerplate repeated across
-    documents. Shingle-less/NULL docs get sh=[] and _bh=NULL (so
-    posexplode drops them from banding, exactly as the unfused band UDF
-    does)."""
+    """Hashed shingles and their MinHash LSH band hashes in ONE
+    mapInPandas pass returning (id, sh, _bh).
+
+    ``sh`` is the sorted distinct k-token shingles of the lowercased
+    ASCII-\\s+-tokenized text (empties dropped; a doc shorter than k
+    is one shingle), each hashed with blake2b-8 — process-independent,
+    unlike Python's salted str hash, so workers agree on every hash.
+    Token semantics match ws_tokens / the DuckDB oracles, and with
+    ≤10⁴ distinct shingles per doc the 64-bit collision probability
+    (~n²/2⁶⁵) is negligible, so set sizes equal the string-set sizes
+    the oracle computes. ``_bh`` is ``bands`` band hashes: the
+    (num_hashes × n_shingles) salted SplitMix64 matrix → column-min →
+    reshape (bands, r) → fold each band with a mix step.
+
+    Why Python on a text hot path: the expression form (per-position
+    slice/array_join transforms, num_hashes array_min arms) runs in
+    interpreted higher-order functions — Spark does not codegen lambda
+    bodies — and dominates the near-dup pipeline; fusing shingling and
+    banding saves a second Arrow round-trip (q33 measured 2.2 s → 1.6 s
+    end-to-end at sf0.1 against two chained pandas UDFs). A per-task
+    shingle-digest memo absorbs boilerplate repeated across documents.
+    Shingle-less/NULL docs get sh=[] and _bh=NULL, so posexplode drops
+    them from banding."""
     import hashlib
     import re
 
@@ -402,12 +277,11 @@ def _chunked_bucket(xs_col: str, cap: int):
     )
 
 
-def _lsh_candidates_from_shingles(
-    hs_df: DataFrame, num_hashes: int, bands: int, seed: int,
-    min_band_collisions: int = 1, bucket_cap: int = 256,
+def _lsh_candidates_from_banded(
+    banded: DataFrame, min_band_collisions: int = 1, bucket_cap: int = 256
 ) -> DataFrame:
-    """Distinct (id_a < id_b) band-collision pairs from a hashed-shingle
-    DataFrame (``_hashed_shingles`` output).
+    """Distinct (id_a < id_b) band-collision pairs from an exploded
+    (id, band_idx, band_hash) frame.
 
     ``min_band_collisions`` > 1 turns the candidate rule into collision
     *counting*: a pair qualifies only when it agrees on that many bands.
@@ -430,21 +304,6 @@ def _lsh_candidates_from_shingles(
     overlapping windows (see _chunked_bucket) so one adversarial
     mega-bucket emits O(n·cap) pairs, not O(n²), while staying one
     connected component for clustering."""
-    band_udf = minhash_band_hashes(num_hashes, bands, seed)
-    banded = hs_df.select("id", band_udf(F.col("sh")).alias("_bh")).select(
-        "id", F.posexplode("_bh").alias("band_idx", "band_hash")
-    )
-    return _lsh_candidates_from_banded(banded, min_band_collisions, bucket_cap)
-
-
-def _lsh_candidates_from_banded(
-    banded: DataFrame, min_band_collisions: int = 1, bucket_cap: int = 256
-) -> DataFrame:
-    """Bucket-grouped pair emission from an exploded (id, band_idx,
-    band_hash) frame — the shared tail of ``_lsh_candidates_from_shingles``
-    split out so callers that already carry band hashes on a combined
-    shingle frame (``minhash_near_duplicates``'s single-shot posture)
-    skip the second band-UDF evaluation."""
     # pin_shuffle_width: the bucket stage's cost is pair EMISSION
     # (explode² over collected buckets), not the few bytes of band
     # hashes — size-first coalescing would run every bucket's pair
@@ -467,34 +326,6 @@ def _lsh_candidates_from_banded(
         .agg(F.count(F.lit(1)).alias("_nc"))
         .filter(F.col("_nc") >= min_band_collisions)
         .drop("_nc")
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 32,
-    shingle_k: int = 3,
-    seed: int = 42,
-    bucket_cap: int = 256,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash LSH.
-
-    hashed shingles → ``bands`` band hashes (one vectorized UDF, see
-    minhash_band_hashes) → posexplode → self-join on (band_idx,
-    band_hash). Returns distinct (id_a < id_b) candidate pairs. Two
-    documents collide in some band with probability 1−(1−J^r)^b (the
-    classic S-curve). Default 32 bands × r=2 gives ≈100% recall at
-    J≥0.5; the exact-Jaccard verify step removes the extra false
-    candidates r=2 admits. Buckets above ``bucket_cap`` members are
-    chunk-split (see _chunked_bucket) so adversarial mega-buckets emit
-    O(n·cap) pairs instead of O(n²).
-    """
-    hs_df = _hashed_shingles(df, text_col, id_col, shingle_k)
-    return _lsh_candidates_from_shingles(
-        hs_df, num_hashes, bands, seed, bucket_cap=bucket_cap
     )
 
 
@@ -773,7 +604,7 @@ def simhash64(
     )
     # round-robin only when under-partitioned: single-file corpora
     # otherwise run the tokenize + UDF stages in one task (see
-    # _hashed_shingles); already-partitioned corpora pay no shuffle
+    # _shingle_postings); already-partitioned corpora pay no shuffle
     return ensure_min_partitions(df).select(
         F.col(id_col).alias("id"), _bit_vote(tok_hashes).alias("simhash")
     )

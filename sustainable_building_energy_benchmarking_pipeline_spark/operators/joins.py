@@ -1,54 +1,13 @@
 """Join strategies beyond what AQE picks automatically.
 
-AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime; ``salted_join`` is the explicit form for when the skew is known
-ahead of time (one mega-key dominating a fact table) or when running
-without AQE — the classic salt-and-replicate decomposition, expressed as
-plain DataFrame ops so Catalyst still plans each side.
+AQE's skew-join splitting (enabled in session.py) handles skew at
+runtime; the operators here are the shapes it cannot pick for you.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the (big, skewed) left side into
-    ``salt_buckets`` sub-keys and replicate the right side once per
-    bucket, so one hot key's rows spread over ``salt_buckets`` tasks
-    instead of hammering a single reducer.
-
-    Semantically identical to ``left.join(right, on, how)`` for inner
-    and left joins (each left row meets each matching right row exactly
-    once: the row's salt picks one replica). Cost: right side ×
-    ``salt_buckets`` — use when right is the small-but-not-broadcastable
-    side and left's key distribution is heavy-tailed; broadcast beats
-    salting whenever the right side fits (Spark then does not shuffle
-    left at all).
-
-    The salt is ``pmod(xxhash64(monotonically_increasing_id()), b)`` —
-    row-unique, so even a single key's rows spread evenly; deterministic
-    per task attempt is NOT required since any bucket is correct.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner and left joins")
-    salted_left = left.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)).cast(
-            "int"
-        ),
-    )
-    replicated_right = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    return salted_left.join(replicated_right, [on, "_salt"], how).drop("_salt")
 
 
 def latest_state_per_key(

@@ -2,183 +2,21 @@
 
 Images/audio/video are opaque ``binary`` columns with a typed metadata
 struct — the lakehouse-native representation (what e.g. the open
-image-dataset parquet layouts do). The Spark-side plumbing here — schema,
-partition sizing, Arrow batch shape, mapInPandas signatures — is real and
-tested; the actual codec calls are STUBBED (this container has no
-image/audio libraries): ``decode_*`` raise ``NotImplementedError`` unless
-``fake=True``, which substitutes a deterministic hash-derived payload so
-the distributed pipeline can be exercised end-to-end.
-
-Scale notes: binary payloads make row size the partition-sizing driver —
-``media_repartition`` targets bytes per partition, not rows. Feature
-extraction is mapInPandas with small Arrow batches (payloads are big;
-10k-row default batches would OOM — set
-``spark.sql.execution.arrow.maxRecordsPerBatch`` accordingly).
+image-dataset parquet layouts do). The Spark-side plumbing here is the
+row-expansion shape a decoder would consume; the engine ships no
+image/audio codec, so no payload is decoded.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),        # image | audio | video
-    T.StructField("content", T.BinaryType(), True),       # opaque encoded bytes
-    T.StructField("meta", T.StructType([
-        T.StructField("format", T.StringType(), True),    # png/jpeg/wav/mp4…
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]), True),
-])
-
-IMAGE_FEATURES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("n_bytes", T.LongType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("mean_pixel", T.DoubleType(), True),
-    T.StructField("feature_vec", T.ArrayType(T.FloatType()), True),
-])
-
-
-def synthesize_media_table(spark, n: int = 100, seed: int = 42) -> DataFrame:
-    """Deterministic fake media corpus: payload bytes derived from
-    sha2(media_id) — real binary columns, stable across runs/partitions."""
-    kinds = F.array(F.lit("image"), F.lit("audio"), F.lit("video"))
-    i = F.col("id")
-    payload = F.repeat(F.sha2(i.cast("string"), 256), 8).cast("binary")
-    return spark.range(n).select(
-        i.alias("media_id"),
-        kinds[(i % 3).cast("int")].alias("kind"),
-        payload.alias("content"),
-        F.struct(
-            F.lit("png").alias("format"),
-            ((i % 16) * 64 + 64).cast("int").alias("width"),
-            ((i % 9) * 64 + 64).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
-
-
-def media_repartition(df: DataFrame, target_mb_per_partition: int = 64,
-                      avg_row_bytes: int = 1 << 20) -> DataFrame:
-    """Partition by payload bytes, not rows: binary rows are huge, so the
-    PARTITION COUNT is bytes-derived — ceil(rows/rows_per_part), floored
-    at defaultParallelism (extra partitions only shrink the byte load;
-    too few starve the cluster). The count() is a columnar row count,
-    trivial next to moving the binary payloads it sizes. A fixed
-    defaultParallelism count (the previous form) breaks the contract the
-    moment the corpus outgrows target·parallelism bytes — 100 GB on 8
-    cores is 12.5 GB per task and the downstream mapInPandas decode
-    OOMs. (At read time prefer spark.sql.files.maxPartitionBytes; this
-    is the post-transform form.) Round-robin distribution: media ids
-    carry no locality worth preserving, and it is the tightest row
-    balance."""
-    rows_per_part = max(1, (target_mb_per_partition << 20) // avg_row_bytes)
-    total = df.count()
-    n = max(
-        df.sparkSession.sparkContext.defaultParallelism,
-        -(-total // rows_per_part),
-        1,
-    )
-    return df.repartition(n)
-
-
-try:  # import-guarded real codec: present on full deployments, absent here
-    from PIL import Image as _PILImage  # type: ignore
-
-    HAS_IMAGE_CODEC = True
-except ImportError:  # pragma: no cover - sandbox has no image libs
-    _PILImage = None
-    HAS_IMAGE_CODEC = False
-
-
-def _decode_image_real(content: bytes, meta) -> "object":
-    """Decode encoded image bytes to a grayscale float array via PIL when
-    the codec is installed; otherwise raise with the fake-mode pointer.
-    The executors re-import this module, so the guard resolves per-worker
-    — a cluster where some nodes lack PIL fails loudly, not silently."""
-    if _PILImage is None:
-        raise NotImplementedError(
-            "image codecs are not available in this runtime; call with fake=True "
-            "to exercise the pipeline with deterministic hash-derived pixels"
-        )
-    import io
-
-    import numpy as np
-
-    img = _PILImage.open(io.BytesIO(content))
-    return np.asarray(img.convert("L"), dtype=np.float64)
-
-
-def extract_image_features(
-    df: DataFrame, fake: bool = False, feature_dim: int = 8
-) -> DataFrame:
-    """Decode → feature-extract over Arrow batches (mapInPandas).
-
-    The batch loop, column pruning (only image rows; only needed columns),
-    schema, and output contract are the real engine pieces. The decode is
-    the stubbed codec call.
-    """
-    import hashlib
-
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            rows = []
-            for _, r in pdf.iterrows():
-                content = r["content"]
-                meta = r["meta"]
-                if not fake:
-                    if content is None or len(content) == 0:
-                        # failed-ingest rows carry NULL/empty content; PIL
-                        # would die with an opaque TypeError for the whole
-                        # stage — treat as a zero-pixel image instead,
-                        # mirroring the fake path's `content or b""` guard
-                        arr = np.zeros(1)
-                    else:
-                        # real decode path (raises when no codec is installed)
-                        pixels = _decode_image_real(content, meta).ravel()
-                        arr = pixels if pixels.size else np.zeros(1)
-                else:
-                    # deterministic fake decode: pixels from payload digest
-                    digest = hashlib.sha256(bytes(content or b"")).digest()
-                    arr = np.frombuffer(digest, dtype=np.uint8).astype(np.float64)
-                vec = (arr[:feature_dim] / 255.0).astype(np.float32)
-                if vec.size < feature_dim:
-                    vec = np.pad(vec, (0, feature_dim - vec.size))
-                rows.append(
-                    {
-                        "media_id": r["media_id"],
-                        "n_bytes": len(content or b""),
-                        "width": meta["width"] if meta is not None else None,
-                        "height": meta["height"] if meta is not None else None,
-                        "mean_pixel": float(arr.mean() / 255.0),
-                        "feature_vec": vec.tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    pruned = df.filter(F.col("kind") == "image").select("media_id", "content", "meta")
-    return pruned.mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
 
 
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling *plan*: expands each video row into frame
     timestamps (sequence+explode) that a decoder would materialize. The
-    expansion — the Spark-side shape — is real; the pixel decode is the
-    stub above."""
+    expansion — the Spark-side shape — is real; no pixel is decoded."""
     vids = df.filter(F.col("kind") == "video")
     dur = F.coalesce(F.col("meta.duration_ms"), F.lit(3000))
     # zero/negative-duration media have no frames — and F.sequence raises
@@ -186,80 +24,4 @@ def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     return vids.filter(dur > 0).select(
         "media_id",
         F.explode(F.sequence(F.lit(0), dur - 1, F.lit(every_ms))).alias("frame_ts_ms"),
-    )
-
-
-# file-extension → (kind, meta.format) for the binaryFile ingest path;
-# anything else lands as kind="binary" with the bare extension
-_EXT_KINDS = {
-    "png": ("image", "png"), "jpg": ("image", "jpeg"),
-    "jpeg": ("image", "jpeg"), "gif": ("image", "gif"),
-    "bmp": ("image", "bmp"), "webp": ("image", "webp"),
-    "wav": ("audio", "wav"), "mp3": ("audio", "mp3"),
-    "flac": ("audio", "flac"), "ogg": ("audio", "ogg"),
-    "mp4": ("video", "mp4"), "mkv": ("video", "mkv"),
-    "webm": ("video", "webm"), "avi": ("video", "avi"),
-}
-
-
-def read_media_dir(
-    spark,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Ingest a directory of raw media files into the MEDIA_SCHEMA
-    frame via Spark's built-in ``binaryFile`` source — the real input
-    path for the image/audio feature operators below (the synthetic
-    generator is the test double). media_id is the xxhash64 of the file
-    path (stable across re-ingests, collision-safe at catalog scale),
-    kind/meta.format derive from the extension, and the decode-time
-    fields (width/height/duration/sample_rate) stay NULL until
-    ``extract_image_features``/``media_metadata`` fill them — this
-    reader deliberately opens no payload.
-
-    Scale shape: ``binaryFile`` is a first-class FileFormat — Catalyst
-    prunes on the (path, modificationTime, length) columns WITHOUT
-    reading content (predicate pushdown on file metadata), files >
-    ``spark.sql.sources.binaryFile.maxLength`` refuse loudly, and each
-    file is one row in one task — compose with ``media_repartition``
-    to even out payload-byte skew before any decode kernel."""
-    reader = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true" if recursive else "false")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    ext = F.lower(
-        F.regexp_extract(F.col("path"), r"\.([A-Za-z0-9]+)$", 1)
-    )
-    kind_map = F.create_map(
-        *[
-            F.lit(x)
-            for e, (k, _f) in sorted(_EXT_KINDS.items())
-            for x in (e, k)
-        ]
-    )
-    fmt_map = F.create_map(
-        *[
-            F.lit(x)
-            for e, (_k, fm) in sorted(_EXT_KINDS.items())
-            for x in (e, fm)
-        ]
-    )
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.coalesce(kind_map[ext], F.lit("binary")).alias("kind"),
-        F.col("content"),
-        F.struct(
-            F.coalesce(fmt_map[ext], ext).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-        F.col("path").alias("source_path"),
-        F.col("length").alias("n_bytes"),
-        F.col("modificationTime").alias("ingested_mtime"),
     )

@@ -99,34 +99,16 @@ def bloom_params(expected_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
     return m, k
 
 
-def bloom_union(a: BloomFilter, b: BloomFilter) -> BloomFilter:
-    """OR-merge two filters built with the SAME (m, k) — the incremental
-    ledger update: fold a new batch's filter into the running one. Set
-    semantics, so re-folding a replayed batch is idempotent."""
-    if (a.m, a.k) != (b.m, b.k):
-        raise ValueError(
-            f"bloom_union needs identical params: ({a.m},{a.k}) vs ({b.m},{b.k})"
-        )
-    merged = (
-        np.frombuffer(a.bits, dtype=np.uint8)
-        | np.frombuffer(b.bits, dtype=np.uint8)
-    )
-    return BloomFilter(bits=merged.tobytes(), m=a.m, k=a.k)
-
-
 def build_bloom(
     df: DataFrame,
     col: str,
     expected_items: int | None = None,
     fp_rate: float = 0.01,
     tree_combine: bool | None = None,
-    params: tuple[int, int] | None = None,
 ) -> BloomFilter:
     """One-pass distributed Bloom filter over ``df[col]``.
 
-    Sizing: ``bloom_params`` (the textbook optimum), or pass ``params``
-    =(m, k) to build union-compatible filters for an incremental ledger
-    (``bloom_union`` requires identical params).
+    Sizing: ``bloom_params`` (the textbook optimum).
     Each partition builds a local m-bit bitmap from JVM-computed hash
     pairs (Python only does vectorized modular arithmetic) and yields
     one binary row; the bitmaps then TREE-combine — an executor-side
@@ -137,12 +119,9 @@ def build_bloom(
     associative; add combine levels if 64 groups ever overwhelm one
     executor's task.
     """
-    if params is not None:
-        m, k = params
-    else:
-        if expected_items is None:
-            expected_items = df.count()
-        m, k = bloom_params(expected_items, fp_rate)
+    if expected_items is None:
+        expected_items = df.count()
+    m, k = bloom_params(expected_items, fp_rate)
     m8 = m // 8
     mm = np.uint64(m)
     kk = k

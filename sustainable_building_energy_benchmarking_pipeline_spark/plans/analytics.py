@@ -561,7 +561,12 @@ ORDER BY lang
 
 
 # Exact dedup via content hash (F20 + P14): the exchange carries sha256
-# digests, not documents.
+# digests, not documents. NULL text hashes to NULL in both engines
+# (DuckDB sha256, Spark sha2), so every NULL-text row lands in ONE hash
+# group: k NULL-text docs count as one unique and k-1 removed. Both
+# engines agree on that (tests/test_operator_edges.py::
+# test_q26_null_text_rows_match_oracle); a text-less document is not
+# keyed apart by its id here.
 Q26_SQL = """
 WITH h AS (
   SELECT sha256(text) AS content_hash, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
@@ -1075,10 +1080,11 @@ FROM r WHERE rn <= 3
 
 
 def _media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → MEDIA_SCHEMA shape: text bytes as the opaque binary
-    payload, kind from doc_id, metadata struct derived from n_chars. The
-    deterministic stand-in corpus for the multimodal plumbing queries
-    (this container has no codecs — see operators.multimodal)."""
+    """documents → media rows (media_id, kind, content, meta struct):
+    text bytes as the opaque binary payload, kind from doc_id, metadata
+    struct derived from n_chars. The deterministic stand-in corpus for
+    the multimodal plumbing queries (the engine ships no codecs — see
+    operators.multimodal)."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").alias("media_id"),
@@ -1247,8 +1253,7 @@ ORDER BY entity, name
 """
 
 
-# Per-(user, session) start/end/size with a 30-minute gap: the batch form of
-# streaming/events_stream.py's watermarked session_window.
+# Per-(user, session) start/end/size with a 30-minute gap.
 Q43_SQL = """
 WITH g AS (
   SELECT user_id, ts, value,

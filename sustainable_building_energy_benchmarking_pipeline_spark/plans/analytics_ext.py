@@ -2377,8 +2377,7 @@ def z17_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is a free projection. Round-11: the split lives in
     ``operators.dedup.leakage_safe_split``, which accepts PRECOMPUTED
     cluster labels so a pipeline that already ran q50 never pays for
-    the LSH twice (``plans.curation.curate_and_split`` is that
-    composition)."""
+    the LSH twice."""
     from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
         leakage_safe_split,
     )

@@ -22,7 +22,7 @@ from sustainable_building_energy_benchmarking_pipeline_spark.functions.text impo
 
 def text_fingerprint(text_col: str = "text") -> Column:
     """Normalization + digest shared by every curation surface (batch
-    plan, streaming sink, z09 oracle): sha256 of lower/trimmed text."""
+    plan, z09 oracle): sha256 of lower/trimmed text."""
     return F.sha2(F.lower(F.trim(F.col(text_col))), 256)
 
 
@@ -98,153 +98,3 @@ def curate_documents(
     )
 
 
-def curate_and_split(
-    docs: DataFrame,
-    dup_frac_max: float = 0.55,
-    source_cap: int = 15,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 16,
-    train_frac_tenths: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
-    """The full pre-training front half in one pass: curate (exact
-    dedup → repetition filter → source cap), NEAR-dup collapse (keep
-    only cluster representatives), and a leakage-safe train/holdout
-    split — with the MinHash-LSH + connected-components pipeline
-    running EXACTLY ONCE (round-11, VERDICT r10 #2): the same
-    ``dedup_clusters`` labels drive both the representative filter and
-    the split, via ``leakage_safe_split(clusters=...)``.
-
-    Output: the curated representative corpus with a ``split`` column.
-    Scale shape: ``dedup_clusters``' small path materializes the pair
-    graph at call time and returns a map-literal projection, so
-    consuming its labels twice re-runs a projection, never the LSH."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.operators.dedup import (
-        dedup_clusters,
-        leakage_safe_split,
-    )
-
-    clusters = dedup_clusters(
-        docs,
-        threshold=threshold,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-    )
-    # split only the REPRESENTATIVE rows (round-12, VERDICT r11
-    # advisory): the split is a pure function of cluster_rep, and only
-    # representatives survive the collapse — projecting it over the
-    # full cluster frame and dropping most rows was equivalent but
-    # wasteful, and cost one extra join
-    split = leakage_safe_split(
-        docs,
-        clusters=clusters.filter(F.col("is_rep")),
-        train_frac_tenths=train_frac_tenths,
-    )
-    curated = curate_documents(
-        docs,
-        dup_frac_max=dup_frac_max,
-        source_cap=source_cap,
-        text_col=text_col,
-        id_col=id_col,
-        source_col=source_col,
-    )
-    return curated.join(
-        split.select(F.col("doc_id").alias(id_col), "split"), id_col
-    )
-
-
-def unimax_allocation(
-    docs: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    epoch_cap: int = 1,
-    budget_num: int = 3,
-    budget_den: int = 4,
-) -> DataFrame:
-    """UniMax language-budget allocation (Chung et al. 2023, "UniMax:
-    Fairer and More Effective Language Sampling for Large-Scale
-    Multilingual Pretraining"): distribute a total token budget across
-    languages as uniformly as possible subject to a per-language repeat
-    cap — small languages get their full ``epoch_cap`` epochs, large
-    ones split the remaining budget evenly, avoiding both
-    proportional-sampling's head-language domination and uniform
-    sampling's tail over-repetition.
-
-    Closed form of the paper's greedy waterfall, exact in integers:
-    order languages ASCENDING by token count t_i (ties by name), let
-    cum_i = Σ_{j≤i} cap·t_j and share_i = (B − cum_{i−1}) div (L−i+1).
-    The PIVOT is the first i whose cap allocation exceeds its running
-    uniform share (cap·t_i > share_i); languages before it are capped
-    (alloc = cap·t_i), the pivot and everything after split the
-    remaining budget evenly (alloc = share_pivot, floor division —
-    deterministic, so the DuckDB oracle replays it bit-for-bit).
-    B = total · budget_num div budget_den.
-
-    Scale shape: the corpus is consumed by ONE map-side-combined
-    aggregate (group_col → Σ tokens); everything after operates on the
-    #languages-row frame — the global windows and the two single-row
-    broadcast attaches (total budget, pivot) are bounded by language
-    cardinality, never by corpus size. Output (per language):
-    n_tokens, alloc_tokens, epochs_bp (basis points of an epoch,
-    exact integer 10000·alloc div t) and the capped flag."""
-    cap = F.lit(int(epoch_cap))
-    per_lang = (
-        docs.where(F.length(F.trim(F.col(text_col))) > 0)
-        .select(
-            F.col(group_col),
-            F.size(ws_tokens(F.col(text_col))).cast("bigint").alias("_nt"),
-        )
-        .groupBy(group_col)
-        .agg(F.sum("_nt").alias("n_tokens"))
-    )
-    total = per_lang.agg(
-        F.expr(
-            "(sum(n_tokens) * {n}) div {d}".format(
-                n=int(budget_num), d=int(budget_den)
-            )
-        )
-        .cast("bigint")
-        .alias("_budget")
-    )
-    w = Window.orderBy("n_tokens", group_col)
-    ranked = (
-        per_lang.crossJoin(F.broadcast(total))
-        .withColumn("_i", F.row_number().over(w).cast("bigint"))
-        .withColumn("_l", F.count(F.lit(1)).over(Window.partitionBy()))
-        .withColumn("_cum", F.sum(cap * F.col("n_tokens")).over(w))
-    )
-    shared = ranked.withColumn(
-        "_share",
-        F.expr("(_budget - (_cum - {c} * n_tokens)) div (_l - _i + 1)".format(c=int(epoch_cap))),
-    ).withColumn("capped", cap * F.col("n_tokens") <= F.col("_share"))
-    pivot = shared.agg(
-        F.min(F.when(~F.col("capped"), F.struct("_i", "_share"))).alias("_p")
-    ).select(
-        F.col("_p._i").alias("_pi"), F.col("_p._share").alias("_pshare")
-    )
-    alloc = F.when(
-        F.col("_pi").isNull() | (F.col("_i") < F.col("_pi")),
-        cap * F.col("n_tokens"),
-    ).otherwise(F.col("_pshare"))
-    return (
-        shared.crossJoin(F.broadcast(pivot))
-        .withColumn("alloc_tokens", alloc.cast("bigint"))
-        .withColumn(
-            "epochs_bp",
-            F.expr("(10000 * alloc_tokens) div n_tokens").cast("bigint"),
-        )
-        # re-derive capped from the FINAL allocation (a post-pivot
-        # language whose even share happens to equal its cap is capped
-        # in substance; the provisional per-row flag is not)
-        .withColumn(
-            "capped", F.col("alloc_tokens") == cap * F.col("n_tokens")
-        )
-        .select(
-            group_col, "n_tokens", "alloc_tokens", "epochs_bp", "capped"
-        )
-    )

@@ -133,7 +133,7 @@ def stat_tiles(
     One grouping-sets pass over the filtered table (reusing anomaly_summary's
     single-scan design) instead of the reference's four cached queries; the
     top-1 picks are driver-side over the already-small per-dimension maps.
-    Ties break by name ascending, matching grouped_top_n's determinism rule.
+    Ties break by name ascending.
     Callers that already hold the ``anomaly_summary`` dict pass it via
     ``summary`` to skip the second Spark pass (the /dashboard endpoint
     renders both and must not pay twice).

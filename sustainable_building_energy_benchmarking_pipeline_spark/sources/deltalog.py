@@ -21,8 +21,6 @@ Supported subset (documented, test-asserted):
   instead of O(V) at long table histories;
 - append / overwrite writes, snapshot-isolated reads, time travel by
   version or timestamp, history listing;
-- an exactly-once streaming sink (``write_delta_txn`` under
-  ``foreachBatch``);
 - schema evolution (``write_delta(merge_schema=True)`` — Delta's
   mergeSchema: new columns append via a fresh metaData action, old
   files read back with typed nulls), log-only ``restore_delta``
@@ -2890,7 +2888,6 @@ def _stage_and_commit(
     removed: dict[str, dict] | None = None,
     *,
     head: list[dict[str, Any]] | None = None,
-    extra_actions: list[dict[str, Any]] | None = None,
     change_df: DataFrame | None = None,
     refusal: tuple[str, str] | None = None,
     extras: tuple = (),
@@ -2915,9 +2912,9 @@ def _stage_and_commit(
 
     The commit is ``head`` + metaData (``evolved_meta``, with the
     identity high-water marks of ``idents`` advanced from the staged
-    footer stats) + removes + adds + ``extra_actions`` + cdc +
-    commitInfo. On a rowTracking table ``_commit_row_tracking`` stamps
-    the adds and re-stamps on a lost race; otherwise
+    footer stats) + removes + adds + cdc + commitInfo. On a rowTracking
+    table ``_commit_row_tracking`` stamps the adds and re-stamps on a
+    lost race; otherwise
     ``_commit_with_retry`` retries disjoint races — a rival removing a
     file this commit removes (which it read) raises
     ``DeltaConcurrentModification``, as does a rival metaData/protocol
@@ -2973,7 +2970,7 @@ def _stage_and_commit(
         _remove_action(rel, a, now_ms, data_change)
         for rel, a in (removed or {}).items()
     ]
-    tail = list(extra_actions or []) + cdc_actions
+    tail = cdc_actions
     tail.append(
         {
             "commitInfo": {
@@ -3004,7 +3001,6 @@ def write_delta(
     df: DataFrame,
     path: str,
     mode: str = "append",
-    extra_actions: list[dict[str, Any]] | None = None,
     partition_by: list[str] | None = None,
     max_retries: int = 5,
     merge_schema: bool = False,
@@ -3351,7 +3347,6 @@ def write_delta(
         {"mode": mode.upper()},
         removed=active if mode == "overwrite" else None,
         head=actions,
-        extra_actions=extra_actions,
         change_df=change_df,
         refusal=(
             f"write to Delta table at {path}",
@@ -3388,12 +3383,9 @@ def _commit_row_tracking(
     (reused row ids would collide, a stale defaultRowCommitVersion
     would lie): this loop re-reads the mark and re-stamps per attempt,
     with the rival analysis _commit_with_retry would have done —
-    metaData/protocol rivals, remove-set conflicts and rival
-    SetTransactions for our own appId (the zombie-writer double-commit
-    guard) raise for re-derivation; disjoint appends just re-stamp and
-    land."""
+    metaData/protocol rivals and remove-set conflicts raise for
+    re-derivation; disjoint appends just re-stamp and land."""
     our_removes = {a["remove"]["path"] for a in head if "remove" in a}
-    own_txn_apps = {a["txn"]["appId"] for a in tail if "txn" in a}
     for attempt in range(max_retries + 1):
         versions = _list_versions(path)
         target = versions[-1] + 1
@@ -3455,13 +3447,6 @@ def _commit_row_tracking(
                             f"concurrent commit at version {v} removed "
                             "files this overwrite also removes — stale "
                             "snapshot, re-derive"
-                        ) from None
-                    if "txn" in a and a["txn"].get("appId") in own_txn_apps:
-                        raise DeltaConcurrentModification(
-                            f"concurrent txn commit for appId "
-                            f"{a['txn'].get('appId')!r} at version {v}: "
-                            "idempotence state is stale — re-check "
-                            "last_txn_version and retry"
                         ) from None
     raise AssertionError("unreachable")
 
@@ -3778,7 +3763,6 @@ def _commit_with_retry(
         a["remove"]["path"] for a in actions if "remove" in a
     }
     own_meta = any("metaData" in a or "protocol" in a for a in actions)
-    own_txn_apps = {a["txn"]["appId"] for a in actions if "txn" in a}
     read_set = set(depends_on) | our_removes
     # inCommitTimestamp enablement: the commit's OWN metaData (creation /
     # ALTER / enablement commits) wins, else the snapshot's — probed
@@ -3862,18 +3846,6 @@ def _commit_with_retry(
                         rival_removed.add(a["remove"]["path"])
                     if "metaData" in a or "protocol" in a:
                         rival_meta = True
-                    if "txn" in a and a["txn"].get("appId") in own_txn_apps:
-                        # a rival SetTransaction for the same appId: this
-                        # transaction's idempotence check (last_txn_version,
-                        # read pre-race) is stale — retrying as a blind
-                        # append would commit the same batch twice. Real
-                        # Delta: ConcurrentTransactionException.
-                        raise DeltaConcurrentModification(
-                            f"concurrent txn commit for appId "
-                            f"{a['txn'].get('appId')!r} at version {v}: "
-                            "idempotence state is stale — re-check "
-                            "last_txn_version and retry"
-                        ) from None
             if rival_meta and (own_meta or read_metadata):
                 raise DeltaConcurrentModification(
                     f"concurrent metaData/protocol commit(s) up to version "
@@ -5386,19 +5358,6 @@ def restore_delta(
     )
 
 
-def last_txn_version(path: str, app_id: str) -> int:
-    """Highest committed ``txn`` version for ``app_id`` (-1 if none) —
-    the Delta protocol's idempotent-writer bookkeeping: a streaming
-    sink records {txn: {appId, version=batchId}} with each commit and
-    skips batches at or below this watermark on retry. Checkpoint-
-    accelerated: only post-checkpoint commits are parsed, so a long-lived
-    stream's per-batch watermark probe stays O(CHECKPOINT_INTERVAL)."""
-    versions = _list_versions(path)
-    if not versions:
-        return -1
-    return _collect_txns(path, versions[-1]).get(app_id, -1)
-
-
 def reorg_delta(spark: SparkSession, path: str) -> int | None:
     """REORG TABLE ... APPLY (PURGE) (round-12): rewrite ONLY the files
     carrying deletion vectors, materializing their soft deletes into
@@ -5413,41 +5372,6 @@ def reorg_delta(spark: SparkSession, path: str) -> int | None:
     untouched log- and data-wise. Returns the commit version, or None
     when no active file carries a deletion vector."""
     return optimize_delta(spark, path, min_file_size=0, zorder_by=[])
-
-
-def write_delta_txn(
-    df: DataFrame, path: str, app_id: str, txn_version: int, mode: str = "append"
-) -> int | None:
-    """Idempotent transactional write — the Delta streaming-sink
-    primitive: the commit carries a ``txn`` action binding (app_id,
-    txn_version), and a replayed batch (txn_version ≤ the table's last
-    recorded version for app_id) is a no-op. Structured Streaming's
-    foreachBatch may re-deliver a batch after a failure; this is
-    exactly-once at the table level without any sink-side state.
-
-    Returns the committed Delta version, or None when skipped. The txn
-    action rides IN the data commit (one atomic log entry), so a crash
-    can never record data without its idempotence marker or vice versa.
-
-    Zombie-writer race: when a stale attempt and its restarted
-    replacement both pass the pre-commit idempotence check, the loser's
-    retry loop sees the winner's txn action for this appId and raises
-    (``_commit_with_retry``'s ConcurrentTransaction arm) instead of
-    re-committing the batch as a blind append — the re-check below then
-    resolves to the idempotent no-op, preserving exactly-once."""
-    if txn_version <= last_txn_version(path, app_id):
-        return None
-    try:
-        return write_delta(
-            df,
-            path,
-            mode=mode,
-            extra_actions=[{"txn": {"appId": app_id, "version": int(txn_version)}}],
-        )
-    except DeltaConcurrentModification:
-        if txn_version <= last_txn_version(path, app_id):
-            return None  # the rival WAS this batch — already committed once
-        raise
 
 
 def vacuum_delta(

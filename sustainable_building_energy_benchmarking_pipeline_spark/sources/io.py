@@ -2,26 +2,18 @@
 
 Every source/sink the reference uses, Spark-first: explicit schemas
 (never inference on the hot path), format dispatch, the reference's
-fallback-directory discovery and alias-coalescing behaviors as reusable
-helpers, ingestion metadata, metadata sidecars, and content-hash write
-skipping.
+alias-coalescing behavior as a reusable helper, and the JDBC scan and
+sink of its PostgreSQL layer.
 
 | Here | SURVEY | Reference behavior |
 |---|---|---|
 | read_table / write_table    | S1,S2,S7-S9,S11 | csv/parquet/json scans+sinks |
-| fallback_scan               | S6  | first readable glob under processed→sample dirs (src/export_json.py:73-88) |
 | coalesce_aliases            | P16 | first present non-null of aliased columns w/ default (src/export_json.py:91-121) |
-| with_ingestion_metadata     | S13 | _ingested_at, _source_file (notebooks/benchmarking_medallion.py:92-95) |
-| write_with_sidecar          | S14 | parquet footer key-value metadata → sidecar JSON (scripts/export_gold_parquet.py:95-110) |
-| content_hash / write_if_changed | S15 | SHA-256 diff-skip publish (scripts/push_to_huggingface.py:30-86) |
 | read_jdbc / write_jdbc      | S4,S12 | parameterized SELECT scan; 1000-row batched append (src/db.py:65-110,166) |
 """
 
 from __future__ import annotations
 
-import json
-import os
-from glob import glob
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -87,34 +79,6 @@ def _infer_fmt(path: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# S6: fallback-directory glob discovery
-# ---------------------------------------------------------------------------
-
-def fallback_scan(
-    spark: SparkSession,
-    search_dirs: list[str],
-    patterns: tuple[str, ...] = ("*.parquet", "*.csv"),
-    schema: T.StructType | None = None,
-    **options: str,
-) -> DataFrame:
-    """First readable match wins: try each directory in priority order,
-    each pattern within it (the reference's processed→sample fallback,
-    src/export_json.py:73-88). Spark globs natively once a match level is
-    chosen — the directory *priority* is the part Spark doesn't do."""
-    for d in search_dirs:
-        for pat in patterns:
-            matches = sorted(glob(os.path.join(d, pat)))
-            if matches:
-                fmt = _infer_fmt(matches[0])
-                return read_table(
-                    spark, os.path.join(d, pat), schema=schema, fmt=fmt, **options
-                )
-    raise FileNotFoundError(
-        f"no {patterns} under any of {search_dirs}"
-    )
-
-
-# ---------------------------------------------------------------------------
 # P16: column-alias coalescing
 # ---------------------------------------------------------------------------
 
@@ -148,98 +112,6 @@ def coalesce_aliases(
         claimed = {n for names in aliases.values() for n in names}
         out_cols = [F.col(c) for c in df.columns if c not in claimed] + out_cols
     return df.select(*out_cols)
-
-
-# ---------------------------------------------------------------------------
-# S13: ingestion metadata
-# ---------------------------------------------------------------------------
-
-def with_ingestion_metadata(df: DataFrame) -> DataFrame:
-    """Bronze-layer lineage columns (notebooks/benchmarking_medallion.py:92-95)."""
-    return df.withColumns(
-        {
-            "_ingested_at": F.current_timestamp(),
-            "_source_file": F.input_file_name(),
-        }
-    )
-
-
-# ---------------------------------------------------------------------------
-# S14: metadata sidecar  /  S15: content-hash diff skip
-# ---------------------------------------------------------------------------
-
-SIDECAR_NAME = "_sidecar.json"  # never "_metadata*" — see write_with_sidecar
-
-def write_with_sidecar(
-    df: DataFrame,
-    path: str,
-    metadata: dict[str, Any],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Write the table plus a ``_sidecar.json`` carrying the
-    pipeline/layer/generated-at key-values the reference embeds in
-    parquet footers (scripts/export_gold_parquet.py:95-110). A sidecar —
-    not footer metadata — so it survives format changes and is readable
-    without a parquet reader; Delta would use TBLPROPERTIES.
-
-    The file must NOT be named ``_metadata*``: Spark's parquet reader
-    treats that prefix as a summary file and tries to parse its FOOTER
-    during schema inference — a JSON file there fails every schemaless
-    re-read of the table with CANNOT_READ_FILE_FOOTER (found by the
-    compact_table partition-roundtrip test). ``_sidecar.json`` falls
-    under the ordinary hidden-file filter and is ignored by scans."""
-    write_table(df, path, fmt=fmt, mode=mode)
-    with open(os.path.join(path, SIDECAR_NAME), "w") as f:
-        json.dump(metadata, f, indent=2, sort_keys=True, default=str)
-
-
-def content_hash(df: DataFrame) -> str:
-    """Order-insensitive SHA-256 of the full content: per-row sha2 over
-    the canonical JSON of a sorted-field struct, SUM-aggregated (into
-    decimal, overflow-free) so the hash is partition- and order-
-    independent but multiplicity-sensitive. SUM, not bit_xor: under XOR
-    any dataset in which every row appears an even number of times
-    cancels to 0 ({a,a,b,b} and {c,c,d,d} collide — a silent skipped
-    write); an order-insensitive sum keeps each duplicate's
-    contribution. Two independent hash lanes + the row count make
-    engineered collisions impractical. Distributed — no collect of
-    data, one aggregate row."""
-    import hashlib
-
-    cols = sorted(df.columns)
-    row_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
-    agg = df.agg(
-        F.sum(F.xxhash64(row_json).cast("decimal(38,0)")).alias("l0"),
-        F.sum(F.xxhash64(row_json, F.lit("lane-2")).cast("decimal(38,0)")).alias("l1"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    payload = json.dumps([agg["n"], str(agg["l0"]), str(agg["l1"])])
-    return hashlib.sha256(payload.encode()).hexdigest()
-
-
-def write_if_changed(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    metadata: dict[str, Any] | None = None,
-) -> bool:
-    """Skip the write when content is unchanged (S15: the reference's
-    SHA-256 publish gate, scripts/push_to_huggingface.py:76-86). Returns
-    True when a write happened. The previous hash rides in the sidecar."""
-    new_hash = content_hash(df)
-    sidecar = os.path.join(path, SIDECAR_NAME)
-    if not os.path.exists(sidecar):  # pre-rename tables: legacy name
-        legacy = os.path.join(path, "_metadata.json")
-        sidecar = legacy if os.path.exists(legacy) else sidecar
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            if json.load(f).get("content_sha256") == new_hash:
-                return False
-    meta = dict(metadata or {})
-    meta["content_sha256"] = new_hash
-    write_with_sidecar(df, path, meta, fmt=fmt)
-    return True
 
 
 # ---------------------------------------------------------------------------
@@ -315,87 +187,3 @@ def write_jdbc(
         writer = writer.option(k, v)
     writer.save()
 
-
-# ---------------------------------------------------------------------------
-# Small-files compaction (the maintenance pass a 100 TB lake needs)
-# ---------------------------------------------------------------------------
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-) -> int:
-    """Rewrite a table directory into ~``target_file_bytes`` files —
-    the OPTIMIZE/compaction pass that keeps scan task counts sane after
-    many small incremental writes (a thousand 1 MB files cost a
-    thousand tasks + footer reads; one 128 MB file costs one).
-
-    File count comes from the table's actual on-disk size (filesystem
-    stat, no data scan), then one shuffle-free coalesce rewrite when
-    shrinking, or repartition when growing parallelism. Hive-partition
-    layouts (``key=value`` directories) are PRESERVED — the rewrite
-    re-``partitionBy``s the discovered keys, so partition pruning
-    survives compaction — and root-level ``_*`` sidecars (e.g. the
-    ``write_with_sidecar`` metadata) are carried over.
-
-    Swap protocol: write to a temp sibling, rename the live directory
-    aside, rename the temp in, delete the old copy. The instant between
-    the two renames is NOT atomic — a concurrently-listing reader can
-    catch a missing directory; run compaction in the maintenance window
-    (real lakes solve this with a transaction log — that is what the
-    Delta path's OPTIMIZE is for). Crash-safe: a stale temp from a
-    crashed run is rebuilt; a stale ``._compact_old`` alongside a live
-    table is a superseded copy and is removed; ``._compact_old``
-    WITHOUT a live table means a crash mid-swap — the data is intact
-    there, and this raises with the recovery step instead of guessing.
-    Returns the new file count."""
-    import re
-    import shutil
-
-    base = path.rstrip("/")
-    tmp, old = base + "._compact_tmp", base + "._compact_old"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # partial rewrite from a crashed run: rebuilt below
-    if os.path.exists(old):
-        if os.path.isdir(base):
-            shutil.rmtree(old)  # superseded copy (crash after the swap)
-        else:
-            raise RuntimeError(
-                f"found {old} but no live table: a previous compaction "
-                f"crashed mid-swap. Recover with: mv {old} {base}"
-            )
-
-    total = 0
-    key_at_depth: dict[int, str] = {}  # nesting depth → partition key
-    hive = re.compile(r"^[^=/]+=[^=/]*$")
-    for root, dirs, files in os.walk(base):
-        rel = os.path.relpath(root, base)
-        depth = 0 if rel == "." else len(rel.split(os.sep))
-        for d in dirs:
-            if hive.match(d):
-                key_at_depth.setdefault(depth, d.split("=", 1)[0])
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    part_keys = [key_at_depth[i] for i in sorted(key_at_depth)]
-    n_files = max(1, -(-total // target_file_bytes))  # ceil
-    df = read_table(spark, base, fmt=fmt)
-    current = df.rdd.getNumPartitions()
-    out = df.coalesce(n_files) if n_files < current else df.repartition(n_files)
-    writer = out.write.mode("overwrite").format(fmt)
-    if part_keys:
-        writer = writer.partitionBy(*part_keys)
-    writer.save(tmp)
-    for f in os.listdir(base):  # carry root-level sidecars (_sidecar.json …)
-        src = os.path.join(base, f)
-        if f.startswith("_") and os.path.isfile(src) and f != "_SUCCESS":
-            # legacy sidecars migrate to the safe name — carrying
-            # "_metadata.json" verbatim would re-poison the rewritten
-            # table's schema inference (see write_with_sidecar)
-            dst = SIDECAR_NAME if f == "_metadata.json" else f
-            shutil.copy2(src, os.path.join(tmp, dst))
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
-    return n_files

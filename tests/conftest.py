@@ -42,6 +42,17 @@ def clean_delta_log_below(path: str, base: int) -> list[str]:
     return gone
 
 
+def txn_versions(path: str) -> dict[str, int]:
+    """Latest ``txn`` version per appId in the table's current snapshot:
+    the SetTransaction watermarks an external idempotent writer reads
+    back (deltalog writes none, but carries them through checkpoints)."""
+    from sustainable_building_energy_benchmarking_pipeline_spark.sources import (
+        deltalog as dl,
+    )
+
+    return dl._collect_txns(path, dl._list_versions(path)[-1])
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

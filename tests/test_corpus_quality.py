@@ -261,30 +261,21 @@ def test_chunk_overlap_covers_and_reconstructs(spark):
     assert len(hs) == 1
 
 
-def test_unimax_allocation_invariants(spark):
-    """The waterfall's contracts on a hand-built corpus: capped
-    languages get exactly cap·t, uncapped ones share the remaining
-    budget evenly (equal allocs, floor division), the total never
-    exceeds the budget and undershoots by less than the number of
-    uncapped languages (floor loss only)."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.plans.curation import (
-        unimax_allocation,
-    )
-
-    rows = []
+def test_unimax_allocation_invariants(spark, tmp_path):
+    """z21's waterfall contracts on a hand-built corpus (epoch cap 1,
+    budget 3/4 of all tokens): capped languages get exactly cap·t,
+    uncapped ones share the remaining budget evenly (equal allocs,
+    floor division), the total never exceeds the budget and undershoots
+    by less than the number of uncapped languages (floor loss only)."""
     sizes = {"aa": 10, "bb": 20, "cc": 400, "dd": 700}
-    doc_id = 0
-    for lang, n in sizes.items():
-        rows.append((doc_id, lang, " ".join("t" for _ in range(n))))
-        doc_id += 1
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    text = {lang: " ".join("t" for _ in range(n)) for lang, n in sizes.items()}
+    sf = _write_docs(
+        spark,
+        tmp_path,
+        [(i, text[lang], lang, "s", len(text[lang])) for i, lang in enumerate(sizes)],
+    )
     # budget = 3/4 of 1130 = 847; ascending aa,bb,cc,dd
-    out = {
-        r.lang: r
-        for r in unimax_allocation(
-            docs, epoch_cap=1, budget_num=3, budget_den=4
-        ).collect()
-    }
+    out = {r.lang: r for r in QUERIES["z21_unimax_budget"].fn(spark, sf).collect()}
     assert out["aa"].capped and out["aa"].alloc_tokens == 10
     assert out["bb"].capped and out["bb"].alloc_tokens == 20
     # cc's full epoch (400) fits under its running even share
@@ -299,20 +290,10 @@ def test_unimax_allocation_invariants(spark):
     # epoch cap truly binds: no language exceeds cap·t
     for lang, n in sizes.items():
         assert out[lang].alloc_tokens <= n
-    # degenerate: budget ≥ cap·total → everyone capped, pivot never fires
-    all_cap = {
-        r.lang: r
-        for r in unimax_allocation(
-            docs, epoch_cap=1, budget_num=2, budget_den=1
-        ).collect()
-    }
-    assert all(r.capped for r in all_cap.values())
-    assert all(all_cap[lg].alloc_tokens == n for lg, n in sizes.items())
 
 
 def _unimax_closed_form(tokens, cap, budget):
-    """Pure-Python mirror of plans/curation.unimax_allocation's closed
-    form: ascending sizes, pivot = first i with cap·t_i > running even
+    """Pure-Python mirror of z21's closed form: ascending sizes, pivot = first i with cap·t_i > running even
     share (computed under the all-capped-prior assumption), caps before
     the pivot, the pivot's even share for everyone after."""
     ts = sorted(tokens)

@@ -27,7 +27,7 @@ import os
 
 import pytest
 
-from tests.conftest import long_suite
+from tests.conftest import long_suite, txn_versions
 
 pytestmark = long_suite
 
@@ -54,8 +54,9 @@ def test_golden_time_travel_and_partition_filter(spark):
 
 
 def test_golden_txn_and_history(spark):
-    assert dl.last_txn_version(GOLDEN, "golden-app") == 7
-    assert dl.last_txn_version(GOLDEN, "other-app") == -1
+    txns = txn_versions(GOLDEN)
+    assert txns["golden-app"] == 7
+    assert "other-app" not in txns
     ops = [h["operation"] for h in dl.delta_history(GOLDEN)]
     assert ops == ["WRITE", "MERGE"]
 
@@ -92,7 +93,7 @@ def _actions(path: str, version: int) -> list[dict]:
 def test_written_table_spec_checklist(spark, tmp_path):
     """Field-by-field protocol conformance of a table our writer
     produced: commit naming, protocol/metaData requirements, add/remove
-    shape, txn shape — everything a spec-conformant reader keys on."""
+    shape — everything a spec-conformant reader keys on."""
     path = str(tmp_path / "spec")
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, s string")
     dl.write_delta(df, path)
@@ -100,7 +101,6 @@ def test_written_table_spec_checklist(spark, tmp_path):
         spark.createDataFrame([(3, "z")], "id long, s string"),
         path,
         mode="append",
-        extra_actions=[{"txn": {"appId": "spec-app", "version": 1}}],
     )
 
     log_dir = os.path.join(path, "_delta_log")
@@ -144,10 +144,6 @@ def test_written_table_spec_checklist(spark, tmp_path):
             )
             stats = json.loads(add["stats"])
             assert set(stats) >= {"numRecords", "minValues", "maxValues", "nullCount"}
-
-    v1 = _actions(path, 1)
-    txns = [a["txn"] for a in v1 if "txn" in a]
-    assert txns == [{"appId": "spec-app", "version": 1}]
 
     # overwrite emits spec-shaped remove actions
     dl.write_delta(df, path, mode="overwrite")
@@ -1206,7 +1202,7 @@ def test_external_checkpoint_layout_replay(spark):
     rows = sorted((r["id"], r["v"]) for r in df.collect())
     assert rows == [(1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]  # 99 removed
     # txn watermark survives the checkpoint round-trip
-    assert dl.last_txn_version(GOLDEN_CKPT, "ckpt-app") == 3
+    assert txn_versions(GOLDEN_CKPT)["ckpt-app"] == 3
     # time travel to the checkpointed version itself
     v2 = dl.read_delta(spark, GOLDEN_CKPT, version=2)
     assert v2.count() == 4
@@ -1223,7 +1219,7 @@ def test_v2_checkpoint_sidecar_replay(spark, tmp_path):
     df = dl.read_delta(spark, GOLDEN_V2CP)
     ids = sorted(r["id"] for r in df.collect())
     assert ids == [1, 2, 3, 4]  # 99 removed via the sidecar tombstone
-    assert dl.last_txn_version(GOLDEN_V2CP, "v2cp-app") == 5
+    assert txn_versions(GOLDEN_V2CP)["v2cp-app"] == 5
     # version pin replays checkpoint + the retained JSON
     assert dl.read_delta(spark, GOLDEN_V2CP, version=2).count() == 4
     import shutil

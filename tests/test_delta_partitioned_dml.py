@@ -446,16 +446,15 @@ def test_update_duckdb_oracle(spark, tmp_path):
     assert got == want
 
 
-def test_append_adopts_table_partitioning_txn_sink(spark, tmp_path):
-    """write_delta_txn (the streaming-sink primitive) appends into a
-    PARTITIONED table without naming its partition columns — the write
-    adopts the table's partitioning, like delta-spark appends do."""
+def test_append_adopts_table_partitioning(spark, tmp_path):
+    """An append into a PARTITIONED table that does not name its
+    partition columns adopts the table's partitioning, like delta-spark
+    appends do."""
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a", 1.0)], "id bigint, p string, v double")
     dl.write_delta(df, path, partition_by=["p"])
     df2 = spark.createDataFrame([(2, "b", 2.0)], "id bigint, p string, v double")
-    assert dl.write_delta_txn(df2, path, "app", 0) == 1
-    assert dl.write_delta_txn(df2, path, "app", 0) is None  # replay no-op
+    assert dl.write_delta(df2, path, mode="append") == 1
     active = _active(path)
     assert any(rel.startswith("p=b/") for rel in active)
     got = dl.read_delta(spark, path, partition_filter={"p": "b"})

@@ -1,5 +1,5 @@
-"""IO layer tests (SURVEY §2.1): round-trips, fallback discovery, alias
-coalescing, ingestion metadata, sidecar + content-hash write skipping."""
+"""IO layer tests (SURVEY §2.1): round-trips, alias coalescing, JDBC,
+and the Delta transaction-log protocol (sources/deltalog.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 
 import pytest
 
-from tests.conftest import clean_delta_log_below, long_suite
+from tests.conftest import clean_delta_log_below, long_suite, txn_versions
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,22 +57,6 @@ def test_partitioned_write_prunes(spark, small_df, tmp_path):
         assert "Filter (bucket" not in physical
 
 
-def test_fallback_scan_priority(spark, small_df, tmp_path):
-    primary, fallback = tmp_path / "processed", tmp_path / "sample"
-    fallback.mkdir()
-    sio.write_table(small_df, str(fallback / "data.parquet"))
-    # primary missing → falls back
-    got = sio.fallback_scan(spark, [str(primary), str(fallback)])
-    assert got.count() == 3
-    # primary present → wins
-    primary.mkdir(exist_ok=True)
-    sio.write_table(small_df.limit(1), str(primary / "data.parquet"))
-    got2 = sio.fallback_scan(spark, [str(primary), str(fallback)])
-    assert got2.count() == 1
-    with pytest.raises(FileNotFoundError):
-        sio.fallback_scan(spark, [str(tmp_path / "nope")])
-
-
 def test_coalesce_aliases(spark):
     df = spark.createDataFrame(
         [(1, None, 10.0), (2, "n2", None)],
@@ -93,44 +77,6 @@ def test_coalesce_aliases(spark):
     assert rows[1]["name"] is None and rows[2]["name"] == "n2"
     assert rows[2]["energy"] == 0.0  # null → default
     assert rows[1]["rating"] == "unknown"  # absent column → default
-
-
-def test_ingestion_metadata(spark, small_df, tmp_path):
-    path = str(tmp_path / "in.parquet")
-    sio.write_table(small_df, path)
-    got = sio.with_ingestion_metadata(sio.read_table(spark, path))
-    r = got.first()
-    assert r["_ingested_at"] is not None
-    assert "in.parquet" in r["_source_file"]
-
-
-def test_sidecar_and_hash_skip(spark, small_df, tmp_path):
-    path = str(tmp_path / "gold.parquet")
-    wrote = sio.write_if_changed(small_df, path, metadata={"layer": "gold"})
-    assert wrote is True
-    with open(os.path.join(path, sio.SIDECAR_NAME)) as f:
-        meta = json.load(f)
-    assert meta["layer"] == "gold" and len(meta["content_sha256"]) == 64
-    # the sidecar must not break a bare re-read of the table (a
-    # "_metadata*" name is treated as a parquet summary file and fails
-    # schema inference with CANNOT_READ_FILE_FOOTER)
-    assert spark.read.parquet(path).count() == small_df.count()
-
-    # same content (different row order) → skip
-    assert sio.write_if_changed(small_df.orderBy(F.desc("id")), path) is False
-    # changed content → rewrite
-    assert sio.write_if_changed(small_df.filter("id < 3"), path) is True
-
-
-def test_content_hash_properties(spark, small_df):
-    h1 = sio.content_hash(small_df)
-    h2 = sio.content_hash(small_df.orderBy(F.desc("id")))
-    h3 = sio.content_hash(small_df.repartition(7))
-    assert h1 == h2 == h3  # order/partition-insensitive
-    assert sio.content_hash(small_df.limit(2)) != h1
-    # row-multiplicity must change the hash (xor alone would cancel)
-    doubled = small_df.unionByName(small_df)
-    assert sio.content_hash(doubled) != h1
 
 
 def test_union_missing_columns_pads_null(spark):
@@ -213,21 +159,6 @@ def test_orc_roundtrip(spark, tmp_path, small_df):
     sio.write_table(small_df, p)
     back = sio.read_table(spark, p)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in small_df.collect()}
-
-
-def test_compact_table(spark, tmp_path):
-    """Compaction rewrites a many-small-files table into few files and
-    preserves content through the atomic directory swap."""
-    import glob as _glob
-
-    p = str(tmp_path / "frag")
-    spark.range(10_000).repartition(64).write.parquet(p)
-    before = len(_glob.glob(os.path.join(p, "*.parquet")))
-    assert before >= 32
-    n = sio.compact_table(spark, p, target_file_bytes=10**9)
-    after = len(_glob.glob(os.path.join(p, "*.parquet")))
-    assert n == 1 and after == 1
-    assert spark.read.parquet(p).count() == 10_000
 
 
 def test_csv_malformed_row_handling(spark, tmp_path_factory):
@@ -513,7 +444,7 @@ def test_deltalog_log_cleanup_retention(spark, tmp_path):
 
 def test_deltalog_checkpoint_txn_and_partitions(spark, tmp_path):
     """Checkpoint rows carry txn watermarks and partitionValues (incl.
-    null partitions) faithfully — idempotent streaming sinks and
+    null partitions) faithfully — another engine's idempotent writer and
     partition pruning survive a checkpoint boundary."""
     from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
 
@@ -521,12 +452,19 @@ def test_deltalog_checkpoint_txn_and_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "en"), (2, None), (3, "fr")], "id long, lang string"
     )
-    dl.write_delta_txn(df, path, "appX", 7, mode="append")
-    dl.write_checkpoint(path)  # manual checkpoint at version 0
+    dl.write_delta(df, path)
+    # version 1: an external writer's SetTransaction, as raw log bytes
+    with open(os.path.join(path, "_delta_log", f"{1:020d}.json"), "w") as f:
+        for action in (
+            {"txn": {"appId": "appX", "version": 7, "lastUpdated": 1700000000000}},
+            {"commitInfo": {"timestamp": 1700000000000, "operation": "STREAMING UPDATE"}},
+        ):
+            f.write(json.dumps(action) + "\n")
+    dl.write_checkpoint(path)  # manual checkpoint at version 1
     # cold cache: watermark must come from the checkpoint rows
     DELTA_ACTIONS.clear()
-    assert dl.last_txn_version(path, "appX") == 7
-    assert dl.last_txn_version(path, "other") == -1
+    assert txn_versions(path) == {"appX": 7}
+    assert dl.read_delta(spark, path).count() == 3
 
     path2 = str(tmp_path / "dckpt3")
     dl.write_delta(df, path2, partition_by=["lang"])
@@ -536,58 +474,6 @@ def test_deltalog_checkpoint_txn_and_partitions(spark, tmp_path):
     assert got == {1}
     got_null = {r.id for r in dl.read_delta(spark, path2, partition_filter={"lang": None}).collect()}
     assert got_null == {2}
-
-
-def test_deltalog_txn_idempotent_replay(spark, tmp_path):
-    """Delta's txn action: a replayed (appId, version) write is a no-op,
-    and the marker rides in the same atomic commit as the data."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
-
-    path = str(tmp_path / "dtxn")
-    df = spark.createDataFrame([(1,)], "id long")
-    assert dl.write_delta_txn(df, path, "app", 0) == 0
-    assert dl.write_delta_txn(df, path, "app", 0) is None  # replay skipped
-    assert dl.write_delta_txn(df, path, "app", 1) == 1
-    assert dl.read_delta(spark, path).count() == 2
-    assert dl.last_txn_version(path, "app") == 1
-    # another app's txn sequence is independent
-    assert dl.write_delta_txn(df, path, "other", 0) == 2
-
-
-def test_deltalog_streaming_sink(spark, tmp_path):
-    """Structured Streaming micro-batches land as Delta commits through
-    the txn-idempotent foreachBatch sink."""
-    import time as _time
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources import deltalog as dl
-
-    path = str(tmp_path / "dstream")
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "50").load()
-        .selectExpr("value AS id")
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda batch, batch_id: dl.write_delta_txn(
-                batch, path, "stream-app", batch_id, mode="append"
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        deadline = _time.time() + 60
-        while _time.time() < deadline and not dl._list_versions(path):
-            _time.sleep(0.25)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    versions = dl._list_versions(path)
-    assert versions, "no Delta commit landed from the stream"
-    assert dl.last_txn_version(path, "stream-app") >= 0
-    ids = [r.id for r in dl.read_delta(spark, path).collect()]
-    assert len(ids) == len(set(ids)), "txn idempotence must prevent duplicates"
 
 
 def test_deltalog_partitioned_pruning(spark, tmp_path):

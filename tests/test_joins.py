@@ -1,48 +1,10 @@
-"""operators.joins: salted skew join equivalence + CDC latest-state."""
+"""operators.joins: CDC latest-state, binned range joins, fuzzy joins."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators import joins as J
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # one mega-key (0) holding 90% of rows, plus a long tail
-    left = spark.range(10_000).select(
-        F.when(F.col("id") < 9_000, 0).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("lv"),
-    )
-    right = spark.range(50).select(
-        F.col("id").alias("k"), (F.col("id") * 100).alias("rv")
-    )
-    return left, right
-
-
-def test_salted_join_matches_plain_inner(skewed):
-    left, right = skewed
-    plain = {(r.k, r.lv, r.rv) for r in left.join(right, "k").collect()}
-    salted = {(r.k, r.lv, r.rv) for r in J.salted_join(left, right, "k", 8).collect()}
-    assert salted == plain
-
-
-def test_salted_join_matches_plain_left(skewed):
-    left, right = skewed
-    right_partial = right.filter(F.col("k") < 10)  # unmatched left keys exist
-    plain = {(r.k, r.lv, r.rv) for r in left.join(right_partial, "k", "left").collect()}
-    salted = {
-        (r.k, r.lv, r.rv)
-        for r in J.salted_join(left, right_partial, "k", 8, how="left").collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_rejects_unsupported_how(skewed):
-    left, right = skewed
-    with pytest.raises(ValueError):
-        J.salted_join(left, right, "k", how="full")
 
 
 def test_latest_state_forms_agree(spark):

@@ -1,7 +1,7 @@
 """Edge-semantics regressions from the round-6 operator review:
 null-condition runs, zero-norm cosine under ANSI, reserved scratch
-columns, string-id label maps, long-diameter components, byte-targeted
-media repartition, AQE-safe partition probes, forward as-of tiebreaks."""
+columns, string-id label maps, long-diameter components, AQE-safe
+partition probes, forward as-of tiebreaks."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from sustainable_building_energy_benchmarking_pipeline_spark.operators import (
     dedup,
-    multimodal,
     similarity,
     windows as W,
 )
@@ -131,38 +130,42 @@ def test_connected_components_raises_at_cap(spark):
 
 
 # ---------------------------------------------------------------------------
-# exact_dedup: NULL-text rows are not duplicates of each other
+# q26 exact dedup: NULL-text rows, Spark vs its DuckDB oracle
 # ---------------------------------------------------------------------------
 
-def test_exact_dedup_keeps_all_null_text_rows(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, None), (4, None), (5, None)],
-        "doc_id LONG, text STRING",
-    )
-    kept = sorted(r.doc_id for r in dedup.exact_dedup(df).collect())
-    # the real duplicate pair collapses; the three text-less docs all stay
-    assert kept == [1, 3, 4, 5]
+def test_q26_null_text_rows_match_oracle(spark, tmp_path):
+    """Both engines hash NULL text to NULL, so every NULL-text document
+    lands in ONE hash group (see ``Q26_SQL``): Spark and the DuckDB
+    oracle agree on a corpus with two NULL texts and one duplicate."""
+    import duckdb
 
+    from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics import (
+        QUERIES,
+    )
+    from tests.oracle import normalize_result
 
-# ---------------------------------------------------------------------------
-# media_repartition: partition count honors the byte target
-# ---------------------------------------------------------------------------
-
-def test_media_repartition_honors_byte_target(spark):
-    media = multimodal.synthesize_media_table(spark, n=100)
-    # 1 MB target at 1 MB/row → 1 row per partition → 100 partitions
-    out = multimodal.media_repartition(
-        media, target_mb_per_partition=1, avg_row_bytes=1 << 20
-    )
-    assert out.rdd.getNumPartitions() == 100
-    # generous target: floor at defaultParallelism, not 1
-    out2 = multimodal.media_repartition(
-        media, target_mb_per_partition=1 << 10, avg_row_bytes=1
-    )
-    assert (
-        out2.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
+    docs = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        [
+            (i, t, "en", "web", len(t or ""))
+            for i, t in [
+                (1, "same text"), (2, "same text"), (3, None), (4, None), (5, "other"),
+            ]
+        ],
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars INT",
+    ).coalesce(1).write.parquet(docs)
+    spec = QUERIES["q26_exact_dedup"]
+    got = spec.fn(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'")
+        cur = con.execute(spec.sql)
+        want = normalize_result([d[0] for d in cur.description], cur.fetchall())
+    finally:
+        con.close()
+    assert normalize_result(list(got[0].asDict()), [tuple(r) for r in got]) == want
+    # three hash groups (the duplicate, the NULLs, "other"), two removed
+    assert (got[0].n_unique, got[0].n_duplicates_removed) == (3, 2)
 
 
 # ---------------------------------------------------------------------------
@@ -201,20 +204,6 @@ def test_phone_pattern_spares_dates_keeps_phones(spark):
 
 
 # ---------------------------------------------------------------------------
-# clip: NULL passes through (pandas parity), never fabricates a bound
-# ---------------------------------------------------------------------------
-
-def test_clip_preserves_null(spark):
-    from sustainable_building_energy_benchmarking_pipeline_spark.functions.scalar import clip
-
-    df = spark.createDataFrame([(None,), (-5.0,), (150.0,)], "v double")
-    got = [
-        r.c for r in df.select(clip(F.col("v"), 0.0, 100.0).alias("c")).collect()
-    ]
-    assert got == [None, 0.0, 100.0]
-
-
-# ---------------------------------------------------------------------------
 # isolation forest: psi=1 degenerate sub-forests stay finite / get dropped
 # ---------------------------------------------------------------------------
 
@@ -248,87 +237,6 @@ def test_train_distributed_survives_singleton_partitions(spark):
     df = spark.createDataFrame(rows, "f1 double, f2 double")
     det.train_distributed(df, normal_only=False, num_partitions=8)
     assert np.isfinite(det.model.threshold_)
-
-
-# ---------------------------------------------------------------------------
-# streaming state helpers: DDL parsing + null ordering keys
-# ---------------------------------------------------------------------------
-
-def test_ddl_field_names_nested_types(spark):
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.state_stream import (
-        _ddl_field_names,
-    )
-
-    ddl = (
-        "id long, ts timestamp, amount decimal(10,2), "
-        "tags array<string>, meta struct<a:int,b:string>"
-    )
-    assert _ddl_field_names(ddl) == ["id", "ts", "amount", "tags", "meta"]
-
-
-def test_ord_key_null_tolerant():
-    import pandas as pd
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.state_stream import (
-        _ord_key,
-    )
-
-    ts = pd.Timestamp("2024-01-01")
-    real = {"ts": ts, "v": 1}
-    null_row = {"ts": None, "v": 2}
-    nat_row = {"ts": pd.NaT, "v": 3}
-    cols = ["ts"]
-    assert _ord_key(real, cols) > _ord_key(null_row, cols)
-    assert _ord_key(real, cols) > _ord_key(nat_row, cols)
-    # two nulls tie — comparable, no TypeError
-    assert not (_ord_key(null_row, cols) > _ord_key(nat_row, cols))
-    assert not (_ord_key(nat_row, cols) > _ord_key(null_row, cols))
-
-
-# ---------------------------------------------------------------------------
-# compact_table: partition layout + sidecar survive; crash residue handled
-# ---------------------------------------------------------------------------
-
-def test_compact_table_preserves_partitions_and_sidecar(spark, tmp_path):
-    import json
-    import os
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources import io as sio
-
-    p = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(i, f"d{i % 3}", float(i)) for i in range(60)], "id LONG, date STRING, v DOUBLE"
-    )
-    df.write.partitionBy("date").parquet(p)
-    with open(os.path.join(p, sio.SIDECAR_NAME), "w") as f:
-        json.dump({"content_sha256": "abc"}, f)
-    n = sio.compact_table(spark, p, target_file_bytes=10**9)
-    assert n == 1
-    # hive layout preserved → partition pruning still possible
-    assert sorted(
-        d for d in os.listdir(p) if d.startswith("date=")
-    ) == ["date=d0", "date=d1", "date=d2"]
-    # sidecar carried over
-    assert json.load(open(os.path.join(p, sio.SIDECAR_NAME)))["content_sha256"] == "abc"
-    # data intact
-    assert spark.read.parquet(p).count() == 60
-
-
-def test_compact_table_crash_residue(spark, tmp_path):
-    import os
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.sources import io as sio
-
-    p = str(tmp_path / "t2")
-    spark.range(10).write.parquet(p)
-    os.makedirs(p + "._compact_old")
-    # live table + stale old → superseded copy removed, compaction proceeds
-    sio.compact_table(spark, p, target_file_bytes=10**9)
-    assert not os.path.exists(p + "._compact_old")
-    # old WITHOUT live table → data lives in old: refuse with recovery hint
-    os.rename(p, p + "._compact_old")
-    with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        sio.compact_table(spark, p, target_file_bytes=10**9)
 
 
 # ---------------------------------------------------------------------------
@@ -424,34 +332,6 @@ def test_cleanup_log_keeps_replay_base(spark, tmp_path):
     # versions below the boundary are cleaned (descriptive error)
     with pytest.raises(ValueError, match="not in table history|predates|cleaned"):
         dl.read_delta(spark, path, version=3).count()
-
-
-def test_commit_retry_detects_rival_txn(spark, tmp_path):
-    dl = _dl()
-    path = str(tmp_path / "t")
-    dl.write_delta_txn(spark.range(5), path, "app", 1)  # v0 carries txn(app,1)
-    with pytest.raises(dl.DeltaConcurrentModification, match="appId"):
-        # a loser that raced this commit with the SAME appId must not
-        # retry as a blind append (that would double-commit the batch)
-        dl._commit_with_retry(path, 0, [{"txn": {"appId": "app", "version": 1}}])
-
-
-def test_write_delta_txn_zombie_race_is_noop(spark, tmp_path, monkeypatch):
-    dl = _dl()
-    path = str(tmp_path / "t")
-    dl.write_delta(spark.range(3).selectExpr("id"), path)
-    real_write = dl.write_delta
-
-    def zombie(df, p, mode="append", extra_actions=None, **kw):
-        # the rival (restarted writer) lands the batch first, then this
-        # stale attempt loses the race
-        real_write(df, p, mode=mode, extra_actions=extra_actions, **kw)
-        raise dl.DeltaConcurrentModification("simulated lost race")
-
-    monkeypatch.setattr(dl, "write_delta", zombie)
-    assert dl.write_delta_txn(spark.range(3).selectExpr("id"), path, "app", 7) is None
-    monkeypatch.undo()
-    assert dl.read_delta(spark, path).count() == 6  # batch landed exactly once
 
 
 def test_optimize_zorder_date_column(spark, tmp_path):

@@ -11,12 +11,12 @@ anti-pattern.
 
 Four more gates ride along: ``/alerts/summary`` runs as one uncached
 action; every package module must have an importer outside
-``tests/``, or an allowlisted reason to be kept; every public deltalog
-function must be reached from code outside ``tests/``, or have an
-allowlisted reason to be kept; and deltalog's copy-on-write rewrite
-stages (``_move_staged_adds``, ``_rt_stamp_stable``,
-``_row_tracking_rewrite_mode``) each have exactly one call site, so
-write/DELETE/UPDATE/OPTIMIZE share one path.
+``tests/``, or an allowlisted reason to be kept; every top-level
+package function and class must be reached from code outside
+``tests/``, or have an allowlisted reason to be kept; and deltalog's
+copy-on-write rewrite stages (``_move_staged_adds``,
+``_rt_stamp_stable``, ``_row_tracking_rewrite_mode``) each have exactly
+one call site, so write/DELETE/UPDATE/OPTIMIZE share one path.
 """
 
 from __future__ import annotations
@@ -388,12 +388,8 @@ _PKG = "sustainable_building_energy_benchmarking_pipeline_spark"
 # Modules kept without a non-test importer, each with its reason.
 _TEST_ONLY_MODULE_OK = {
     # PAPER.md: the reference has no streams and Structured Streaming is
-    # an extension, so the streaming modules are library surface that
-    # no batch entry point calls: curation, stateful operators, the
-    # watermarked event sessions and the streaming HVAC detector
-    "streaming.curation_stream",
-    "streaming.state_stream",
-    "streaming.events_stream",
+    # an extension; the streaming HVAC detector waits for the
+    # detection-latency workload (ROADMAP item 5) that will call it
     "streaming.hvac_stream",
 }
 
@@ -457,21 +453,62 @@ def test_every_package_module_has_a_non_test_importer():
 
 
 # ---------------------------------------------------------------------------
-# Structural gate: no public deltalog function that only tests reach
+# Structural gate: no package function or class that only tests reach
 # ---------------------------------------------------------------------------
 
-# Public deltalog functions kept without a non-test caller, each with
-# its reason.
-_TEST_ONLY_DELTA_OK = {
-    # safety code: the check on the .crc checksum every commit writes
-    # (``_publish_version_checksum``); tests run it after every random
-    # operation to prove the stored table state matches a fresh replay
-    "verify_version_checksum",
+_HVAC_STREAM_REASON = (
+    "streaming HVAC detector: ROADMAP item 5's detection-latency workload "
+    "is its planned caller"
+)
+
+# Top-level package definitions ("<module>:<name>", module relative to
+# the package) kept without a non-test caller, each with its reason.
+_TEST_ONLY_OK = {
+    "sources.deltalog:verify_version_checksum": (
+        "safety code: the check on the .crc checksum every commit writes; "
+        "tests run it after every random operation to prove the stored "
+        "table state matches a fresh replay"
+    ),
+    "functions.text:language_scores": (
+        "the expression reference the q29 language kernel is compared "
+        "against (tests/test_language_kernel.py)"
+    ),
+    "functions.text:language_argmax": (
+        "the expression reference the q29 language kernel is compared "
+        "against (tests/test_language_kernel.py)"
+    ),
+    "operators.similarity:brute_force_topk": (
+        "the exact top-k the ANN recall tests measure against"
+    ),
+    "sources.io:read_jdbc": (
+        "parity with the reference's PostgreSQL layer (src/db.py, "
+        "MIGRATION.md)"
+    ),
+    "sources.io:write_jdbc": (
+        "parity with the reference's PostgreSQL sink (src/db.py, "
+        "MIGRATION.md)"
+    ),
+    "plans.benchmarking:portfolio_totals": (
+        "paper surface: medallion A4 portfolio totals "
+        "(notebooks/benchmarking_medallion.py:256-261)"
+    ),
+    "plans.benchmarking:benchmark_buildings_df": (
+        "paper surface: batch scoring of a buildings frame"
+    ),
+    "plans.export:validate_export_document": (
+        "paper surface: the export document's schema check"
+    ),
+    "streaming.hvac_stream:read_sensor_stream": _HVAC_STREAM_REASON,
+    "streaming.hvac_stream:windowed_zone_stats": _HVAC_STREAM_REASON,
+    "streaming.hvac_stream:_compute_features": _HVAC_STREAM_REASON,
+    "streaming.hvac_stream:stateful_anomaly_stream": _HVAC_STREAM_REASON,
+    "streaming.hvac_stream:write_anomaly_stream": _HVAC_STREAM_REASON,
 }
 
-
 def _referenced_names(tree: ast.AST) -> set[str]:
-    """Every name ``tree`` loads, reads as an attribute or imports."""
+    """Every name ``tree`` loads, reads as an attribute or imports, and
+    every string constant that is an identifier (names looked up by
+    string: ``getattr``, registry keys)."""
     out = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
@@ -480,48 +517,62 @@ def _referenced_names(tree: ast.AST) -> set[str]:
             out.add(node.attr)
         elif isinstance(node, ast.alias):
             out.add(node.name.rsplit(".", 1)[-1])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.isidentifier():
+                out.add(node.value)
     return out
 
 
-def _deltalog_unreached() -> set[str]:
-    """deltalog's top-level functions and classes that no non-test code
-    reaches: seeded from every deltalog name the other entry-point
-    files reference (plus deltalog's own module-level statements), then
-    closed over the names each reached definition references."""
+def _package_unreached() -> set[str]:
+    """``module:name`` of every top-level function and class in the
+    package that no entry point reaches.
+
+    Seeds: the names referenced by each package module's top-level
+    statements other than definitions and imports (an import names a
+    definition without using it), plus every name the entry-point files
+    outside the package reference. Closure: the names each reached
+    definition references. Names resolve by identifier across modules,
+    so a definition is reached as soon as reached code names it."""
     root = pathlib.Path(__file__).resolve().parent.parent
-    path = root / _PKG / "sources" / "deltalog.py"
-    tree = ast.parse(path.read_text())
-    defs = {
-        n.name: n
-        for n in tree.body
-        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
-    }
-    todo = set()
+    pkg = root / _PKG
+    defs: dict[str, ast.AST] = {}
+    by_name: dict[str, set[str]] = {}
+    seeds: set[str] = set()
+    for path in pkg.rglob("*.py"):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{mod}:{node.name}"] = node
+                by_name.setdefault(node.name, set()).add(f"{mod}:{node.name}")
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                seeds |= _referenced_names(node)
     for src in _non_test_sources(root):
-        if src.resolve() != path.resolve():
-            todo |= _referenced_names(ast.parse(src.read_text())) & defs.keys()
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-            todo |= _referenced_names(node) & defs.keys()
-    reached: set[str] = set()
+        if not src.resolve().is_relative_to(pkg):
+            seeds |= _referenced_names(ast.parse(src.read_text()))
+
+    def named(names: set[str]) -> set[str]:
+        return {key for n in names for key in by_name.get(n, ())}
+
+    todo, reached = named(seeds), set()
     while todo:
-        name = todo.pop()
-        reached.add(name)
-        todo |= (_referenced_names(defs[name]) & defs.keys()) - reached
+        key = todo.pop()
+        reached.add(key)
+        todo |= named(_referenced_names(defs[key])) - reached
     return defs.keys() - reached
 
 
-def test_every_deltalog_public_function_is_reached_from_non_test_code():
-    """A public Delta function that only tests reach is a feature no
-    entry point uses: it costs reading, upkeep and test time. Delete
-    it, give it a caller, or allowlist it with a reason."""
-    unreached = _deltalog_unreached()
-    orphans = sorted(
-        n for n in unreached if not n.startswith("_") and n not in _TEST_ONLY_DELTA_OK
-    )
-    assert not orphans, f"public deltalog functions only tests reach: {orphans}"
-    stale = sorted(_TEST_ONLY_DELTA_OK - unreached)
-    assert not stale, f"allowlisted deltalog names now reached or gone: {stale}"
+def test_every_package_function_is_reached_from_non_test_code():
+    """A package function or class that only tests reach is a feature
+    no entry point (the package's registry and CLI, bench.py,
+    __spark_entry__, scripts/, perfbench/) uses: it costs reading,
+    upkeep and test time. Delete it, give it a caller, or allowlist it
+    with a reason."""
+    unreached = _package_unreached()
+    assert all(_TEST_ONLY_OK.values()), "every allowlist entry needs a reason"
+    orphans = sorted(unreached - _TEST_ONLY_OK.keys())
+    assert not orphans, f"package definitions only tests reach: {orphans}"
+    stale = sorted(_TEST_ONLY_OK.keys() - unreached)
+    assert not stale, f"allowlisted definitions now reached or gone: {stale}"
 
 
 # ---------------------------------------------------------------------------

@@ -189,258 +189,3 @@ def test_windowed_zone_stats_subset_of_batch(spark, hvac_input_dir, tmp_path_fac
         )
 
     assert rounded(got).exceptAll(rounded(expected)).count() == 0
-
-
-# ---------------------------------------------------------------------------
-# events: session_window streaming vs batch
-# ---------------------------------------------------------------------------
-
-def test_session_stream_matches_batch_closed_sessions(spark, tmp_path_factory):
-    """Streamed (watermark-closed) sessions must be exactly the batch
-    session_window rows whose close precedes the final watermark."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.session import load_table
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.events_stream import (
-        event_stream,
-        session_stats_stream,
-    )
-
-    base = tmp_path_factory.mktemp("events_stream")
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    input_dir = str(base / "input")
-    # two in-order files so sessions span micro-batches
-    mid = events.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    events.filter(F.col("ts").cast("double") <= mid).coalesce(1).write.parquet(input_dir)
-    events.filter(F.col("ts").cast("double") > mid).coalesce(1).write.mode("append").parquet(input_dir)
-
-    sink, ckpt = str(base / "sink"), str(base / "ckpt")
-    q = (
-        session_stats_stream(event_stream(spark, input_dir, max_files_per_trigger=1))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(sink)
-    assert got.count() > 0
-
-    batch = (
-        events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    # every emitted session matches a batch session exactly
-    assert got.exceptAll(batch).count() == 0
-    # and the stream emitted every session that closed before the final
-    # watermark (max event time - 1h watermark delay)
-    max_ts = events.agg(F.max("ts")).first()[0]
-    closed = batch.filter(
-        F.col("session_end") < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
-    )
-    assert closed.exceptAll(got).count() == 0
-
-
-# ---------------------------------------------------------------------------
-# events: streaming dedup vs batch distinct
-# ---------------------------------------------------------------------------
-
-def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path_factory):
-    """Duplicates injected into a LATER micro-batch must be dropped by the
-    keyed dedup state; output key set == batch-distinct key set. The
-    watermark delay exceeds the corpus time span, so no state is evicted
-    and the check is exact."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.session import load_table
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.events_stream import (
-        dedup_stream,
-        event_stream,
-    )
-
-    base = tmp_path_factory.mktemp("events_dedup")
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    mid = events.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    first_half = events.filter(F.col("ts").cast("double") <= mid)
-    dups = first_half.orderBy("event_id").limit(100)  # re-arrive in batch 2
-    input_dir = str(base / "input")
-    first_half.coalesce(1).write.parquet(input_dir)
-    (
-        events.filter(F.col("ts").cast("double") > mid)
-        .unionByName(dups)
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(input_dir)
-    )
-
-    sink, ckpt = str(base / "sink"), str(base / "ckpt")
-    q = (
-        dedup_stream(
-            event_stream(spark, input_dir, max_files_per_trigger=1),
-            keys=["event_id"],
-            within_watermark="60 days",
-        )
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(sink)
-    assert got.count() == events.count()  # every duplicate dropped, nothing else
-    assert got.select("event_id").distinct().count() == events.count()
-
-
-def test_latest_state_stream_matches_batch(spark, tmp_path_factory):
-    """applyInPandasWithState latest-state: after availableNow over 3
-    micro-batch files (the middle one arriving out of order), the final
-    emission per user equals the batch latest_state_per_key compaction
-    (q55 semantics) — late rows older than the held state are ignored."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from sustainable_building_energy_benchmarking_pipeline_spark.operators.joins import (
-        latest_state_per_key,
-    )
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.state_stream import (
-        latest_state_stream,
-    )
-
-    base = tmp_path_factory.mktemp("tws")
-    input_dir = str(base / "in")
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        {
-            "user_id": u,
-            "ts": t0 + dt.timedelta(minutes=m),
-            "event_id": u * 1000 + m,
-            "value": float(u * 100 + m),
-        }
-        for u in range(6)
-        for m in range(30)
-    ]
-    full = spark.createDataFrame(pd.DataFrame(rows))
-    # minute ranges per file: the 10-19 slice lands in the LAST file, so
-    # one whole micro-batch is late relative to already-held state
-    for i, lo in enumerate([0, 20, 10]):
-        (
-            full.filter((F.col("ts") >= t0 + dt.timedelta(minutes=lo))
-                        & (F.col("ts") < t0 + dt.timedelta(minutes=lo + 10)))
-            .coalesce(1)
-            .write.mode("append" if i else "overwrite")
-            .parquet(input_dir)
-        )
-
-    schema = "user_id bigint, ts timestamp, event_id bigint, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    out = latest_state_stream(
-        stream, "user_id", ["ts", "event_id"], schema
-    )
-    sink = str(base / "sink")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(base / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    emitted = spark.read.parquet(sink)
-    # the LAST emission per user is that user's final state
-    final_stream = {
-        r.user_id: (r.ts, r.event_id, r.value)
-        for r in latest_state_per_key(emitted, "user_id", ["ts", "event_id"]).collect()
-    }
-    batch = {
-        r.user_id: (r.ts, r.event_id, r.value)
-        for r in latest_state_per_key(
-            full.select("user_id", "ts", "event_id", "value"),
-            "user_id",
-            ["ts", "event_id"],
-        ).collect()
-    }
-    assert final_stream == batch
-    # bounded emissions: at most one row per (user, micro-batch)
-    assert emitted.count() <= 6 * 3
-
-
-# ---------------------------------------------------------------------------
-# events: stream-stream range join vs batch range join
-# ---------------------------------------------------------------------------
-
-def test_attribution_join_stream_matches_batch(spark, tmp_path_factory):
-    """Stream-stream inner range join over a finite availableNow run must
-    emit exactly the batch range join of the same rows, across
-    micro-batch boundaries (trigger and outcome in different files)."""
-    from sustainable_building_energy_benchmarking_pipeline_spark.session import load_table
-    from sustainable_building_energy_benchmarking_pipeline_spark.streaming.events_stream import (
-        attribution_join_stream,
-        event_stream,
-    )
-
-    base = tmp_path_factory.mktemp("attr_join_stream")
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    input_dir = str(base / "input")
-    mid = events.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    events.filter(F.col("ts").cast("double") <= mid).coalesce(1).write.parquet(input_dir)
-    events.filter(F.col("ts").cast("double") > mid).coalesce(1).write.mode("append").parquet(input_dir)
-
-    sink, ckpt = str(base / "sink"), str(base / "ckpt")
-    q = (
-        attribution_join_stream(event_stream(spark, input_dir, max_files_per_trigger=1))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(sink)
-
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("trigger_id"), "user_id", F.col("ts").alias("trigger_ts")
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("outcome_id"),
-        F.col("user_id").alias("o_user_id"),
-        F.col("ts").alias("outcome_ts"),
-        F.col("value").alias("outcome_value"),
-    )
-    batch = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("o_user_id"))
-        & (F.col("trigger_ts") < F.col("outcome_ts"))
-        & (F.col("trigger_ts") >= F.col("outcome_ts") - F.expr("INTERVAL 1 HOUR")),
-    ).select(
-        "user_id", "trigger_id", "outcome_id", "trigger_ts", "outcome_ts",
-        "outcome_value",
-    )
-    assert batch.count() > 0, "fixture must produce at least one attributed pair"
-    assert got.count() == batch.count()
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0

@@ -1,5 +1,6 @@
 """PII detection/redaction (functions.text): pattern coverage and
-mask-order invariants."""
+mask-order invariants; winnowing fingerprints against a pure-Python
+reference."""
 
 from __future__ import annotations
 
@@ -34,12 +35,14 @@ def test_redact_pii_clean_text_untouched(spark):
 
 
 def test_winnowing_fingerprint_guarantee(spark):
-    """Winnowing invariants (k=4, w=5): (a) two docs sharing a run of
-    ≥ k+w−1 = 8 tokens share ≥1 fingerprint; (b) a doc shorter than k
-    tokens gets an empty set; (c) a doc with ≥k tokens but fewer than w
-    grams still gets exactly one fingerprint (the global min); (d) the
-    kernel matches a pure-Python reference implementation."""
+    """Winnowing invariants of ``winnowing_postings`` (z10's kernel,
+    k=4, w=5): (a) two docs sharing a run of ≥ k+w−1 = 8 tokens share
+    ≥1 fingerprint; (b) a doc shorter than k tokens, an empty text and
+    a NULL text get no fingerprint; (c) a doc with ≥k tokens but fewer
+    than w grams still gets exactly one fingerprint (the global min);
+    (d) the kernel matches a pure-Python reference implementation."""
     import hashlib
+    from collections import defaultdict
 
     shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     rows = [
@@ -47,19 +50,19 @@ def test_winnowing_fingerprint_guarantee(spark):
         (2, shared + " qq rr ss tt uu vv ww"),
         (3, "one two three"),  # < k tokens
         (4, "p q r s t"),  # 5 tokens → 2 grams < w
+        (5, ""),
+        (6, None),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    toks = df.select("doc_id", T.ws_tokens(F.col("text")).alias("_t"))
-    out = {
-        r["doc_id"]: set(r["fps"])
-        for r in T.add_winnowing_fingerprints(toks, "_t", k=4, w=5).collect()
-    }
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = defaultdict(set)
+    for r in T.winnowing_postings(df, "text", "doc_id", k=4, w=5).collect():
+        out[r["doc_id"]].add(r["fp"])
     assert out[1] & out[2], "docs sharing an 8-token run must share a fp"
-    assert out[3] == set()
+    assert out[3] == out[5] == out[6] == set()
     assert len(out[4]) == 1
 
     def ref_fps(text, k=4, w=5):
-        t = text.split()
+        t = (text or "").split()
         if len(t) < k:
             return set()
         hs = [
